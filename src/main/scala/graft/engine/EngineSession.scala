@@ -62,17 +62,11 @@ object EngineSession {
       .withExtensions(e => e.injectResolutionRule(_ => graft.plans.DisableTzCasts))
       // reference STRUCT/LIST/MAP ::VARIANT casts -> to_variant_object
       .withExtensions(e => e.injectResolutionRule(_ => graft.plans.StructCastToVariant))
-      // reference list `+` = list_concat (graft.plans.ListPlusToConcat);
-      // SPARK_GRAFT_NOLISTPLUS=1 is the perf A/B handle
-      .withExtensions(e =>
-        if (sys.env.get("SPARK_GRAFT_NOLISTPLUS").isEmpty)
-          e.injectResolutionRule(_ => graft.plans.ListPlusToConcat))
+      // reference list `+` = list_concat (graft.plans.ListPlusToConcat)
+      .withExtensions(e => e.injectResolutionRule(_ => graft.plans.ListPlusToConcat))
       // reference SELECT-alias binder extensions: aliases in WHERE +
-      // the explicit `alias.x` qualifier (graft.plans.AliasResolution);
-      // SPARK_GRAFT_NOALIASRULE=1 disables for analysis-cost A/B
-      .withExtensions(e =>
-        if (!sys.env.contains("SPARK_GRAFT_NOALIASRULE"))
-          e.injectResolutionRule(_ => graft.plans.AliasResolution))
+      // the explicit `alias.x` qualifier (graft.plans.AliasResolution)
+      .withExtensions(e => e.injectResolutionRule(_ => graft.plans.AliasResolution))
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
@@ -137,7 +131,7 @@ object EngineSession {
   }
 
   /** Idempotent per-session setup usable on a session we didn't build
-    * (the driver's Verify/Bench create their own): runtime confs +
+    * (Verify creates its own): runtime confs +
     * SQL-function registration. A conf marker makes repeat calls free —
     * every query entry point calls configure, and re-registering functions
     * per query costs real time and floods the log with
@@ -153,18 +147,13 @@ object EngineSession {
       }
       graft.functions.Registry.registerAll(spark)
       // terminal-ORDER-BY single-partition rewrite (graft.plans.SmallTopSort,
-      // stats-gated): registered post-hoc so driver-created sessions (Verify/
-      // Bench build their own) get it too; SPARK_GRAFT_NOSMALLSORT=1 is the
-      // perf A/B handle
-      if (!sys.env.contains("SPARK_GRAFT_NOSMALLSORT"))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.SmallTopSort
-      // stats-driven shuffled-hash dispatch for equi joins above the
-      // broadcast threshold (graft.plans.AutoHashJoin, bounded build);
-      // SPARK_GRAFT_NOAUTOSHJ=1 is the perf A/B handle
-      if (!sys.env.contains("SPARK_GRAFT_NOAUTOSHJ"))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.AutoHashJoin
+      // stats-gated) and stats-driven shuffled-hash dispatch for equi joins
+      // above the broadcast threshold (graft.plans.AutoHashJoin, bounded
+      // build): registered post-hoc so sessions built elsewhere (Verify
+      // builds its own) get them too
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.SmallTopSort :+
+          graft.plans.AutoHashJoin
       spark.conf.set(MARKER, "true")
     }
     spark

@@ -69,20 +69,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Scatter a small-but-compute-heavy input across all cores. A single
-    * parquet row group scans as ONE task, so per-row CPU-bound stages
-    * (minhash signatures, text metrics) would otherwise run
-    * single-threaded no matter the cluster; one tiny round-robin shuffle
-    * buys full parallelism for the expensive expression that follows.
-    * Use ONLY before compute-bound stages — scan-bound queries would pay
-    * the shuffle for nothing. Measured at sf0.1: the exchange barrier +
-    * task startup COSTS more than it saves below ~1s of single-task
-    * compute, so none of the fixture queries use it; it is the tool for
-    * genuinely heavy single-split inputs (e.g. one large document shard).
-    */
-  def scatter(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
   /** Buffer pool: pin the fixture tables in the session's in-memory
     * columnar cache — the Spark analogue of the reference's buffer manager
     * (`/root/reference/src/storage/buffer_manager.cpp`) and of its own
@@ -132,12 +118,6 @@ object Tables {
   // broadcast-side tables stay single-partition: scattering a ≤300 KB
   // table means every broadcast build collects N near-empty tasks
   private val dims = Set("region", "nation", "customer", "supplier", "part")
-
-  /** Drop a session's cached plans — for services that retire sessions on
-    * a long-lived context (automatic eviction only fires at application
-    * end).
-    */
-  def invalidate(spark: SparkSession): Unit = cache.drop(spark)
 
   /** Register every fixture as a temp view so spark.sql(...) can be used. */
   def registerAll(spark: SparkSession, dir: String): Unit =

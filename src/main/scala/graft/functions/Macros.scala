@@ -1090,11 +1090,6 @@ private[graft] final class SessionScoped[V <: AnyRef](mk: () => V) {
     })
     mk()
   })
-
-  /** Explicit eviction for services that churn sessions on one long-lived
-    * context (the listener only fires when the whole application ends).
-    */
-  def drop(spark: SparkSession): Unit = m.remove(spark)
 }
 
 private[graft] object SessionScoped {

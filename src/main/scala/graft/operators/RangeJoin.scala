@@ -122,18 +122,14 @@ object RangeJoin {
     // scale signal: a cluster-scale probe side is already partitioned
     // wider than the fanout and never pays the extra exchange. The sweep
     // path repartitions by band anyway and needs no scatter.
-    // spark.graft.rangejoin.scatterProbe=false is the A/B kill switch.
-    // compute-bound stage → target CORES, not the data-sized shuffle
-    // fanout (Tables.scatter's contract): the per-candidate evaluation,
-    // not the row bytes, is what needs spreading
+    // Compute-bound stage → the fanout is at least the core count, not
+    // only the data-sized shuffle partition count: the per-candidate
+    // evaluation, not the row bytes, is what needs spreading.
     val fanout = math.max(
       left.sparkSession.sessionState.conf.numShufflePartitions,
       left.sparkSession.sparkContext.defaultParallelism)
-    val scatterOn =
-      left.sparkSession.conf
-        .get("spark.graft.rangejoin.scatterProbe", "true") != "false"
     val lp =
-      if (!useSweep && scatterOn && l.rdd.getNumPartitions < fanout)
+      if (!useSweep && l.rdd.getNumPartitions < fanout)
         l.repartition(fanout)
       else l
 

@@ -23,8 +23,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * For each hint-free equi join where the smaller side's size estimate is
   *   - ABOVE the session broadcast threshold (else the planner's
   *     broadcast pick stands — strictly better), and
-  *   - AT MOST `spark.graft.shufflehash.maxBuildBytes` (default 256 MB —
-  *     a couple of guide-sized partitions; the whole build side bounds
+  *   - AT MOST `spark.graft.shufflehash.maxBuildBytes` (default 128 MB —
+  *     one guide-sized reduce partition; the whole build side bounds
   *     any single partition's hash map, so the cluster-scale failure mode
   *     — a build partition that cannot fit — cannot fire),
   * tag that side with the SHUFFLE_HASH hint. Catalyst's JoinSelection
@@ -35,9 +35,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * still terminates in its deterministic ORDER BY.
   *
   * Registered through ExperimentalMethods (EngineSession.configure), so
-  * it sees final post-pushdown stats. SPARK_GRAFT_NOAUTOSHJ=1 keeps it
-  * out of the session; spark.graft.shufflehash.maxBuildBytes=0 disables
-  * per-query.
+  * it sees final post-pushdown stats. spark.graft.shufflehash.maxBuildBytes=0
+  * disables it per-query.
   */
 object AutoHashJoin extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -77,10 +77,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   *
   * Registered through ExperimentalMethods (EngineSession.configure), which
   * runs in the optimizer's final user batch: after pushdown/collapse, with
-  * final stats. SPARK_GRAFT_NOSMALLSORT=1 keeps it out of the session for
-  * A/B; spark.graft.smallsort.maxBytes=0 disables it per-query, and
-  * spark.graft.smallsort.maxRows=0 disables the row bound alone (the r14
-  * gate) for A/B.
+  * final stats. spark.graft.smallsort.maxBytes=0 disables it per-query,
+  * and spark.graft.smallsort.maxRows=0 disables the row bound alone (the
+  * byte gate only).
   */
 object SmallTopSort extends Rule[LogicalPlan] {
 

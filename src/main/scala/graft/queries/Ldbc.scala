@@ -361,7 +361,7 @@ object Ldbc extends Pack {
     // two full scans of the fact table). localCheckpoint pins the
     // 100-row result once, the way the reference materializes CTEs
     // (physical_cte.cpp).
-    val top100base = forumPerson(s, dir)
+    val top100 = forumPerson(s, dir)
       .join(broadcast(person(s, dir).select("p_personid", "p_placeid")),
         col("fp_personid") === col("p_personid"))
       .join(broadcast(euro), col("p_placeid") === col("pl_placeid"))
@@ -370,28 +370,7 @@ object Ldbc extends Pack {
       .orderBy(col("members").desc, col("forumid"))
       .limit(100)
       .select("forumid")
-    if (s.conf.get("spark.graft.bi4.inlist", "false") == "true") {
-      // A/B variant (r14 "examined", re-measured r15): collect the ≤100
-      // ids (bounded by the LIMIT by construction — the SkewJoin hot-key
-      // pattern) and push them as literal IN-list scan filters on both
-      // consumers, saving the checkpoint job + two broadcast builds.
-      val ids = top100base.collect().map(_.getLong(0)).toSeq
-      val posts = message(s, dir)
-        .where(col("m_c_replyof").isNull &&
-          col("m_ps_forumid").isin(ids: _*))
-        .select(col("m_creatorid"), col("m_messageid"))
-      forumPerson(s, dir)
-        .where(col("fp_forumid").isin(ids: _*))
-        .join(person(s, dir), col("fp_personid") === col("p_personid"))
-        .join(posts, col("p_personid") === col("m_creatorid"), "left")
-        .groupBy(col("p_personid").as("person_id"),
-          col("p_firstname").as("person_firstname"),
-          col("p_lastname").as("person_lastname"), col("p_creationdate"))
-        .agg(countDistinct(col("m_messageid")).as("postCount"))
-        .orderBy(col("postCount").desc, col("person_id"))
-        .limit(100)
-    } else {
-    val top100 = top100base.localCheckpoint(true)
+      .localCheckpoint(true)
     val posts = message(s, dir)
       .where(col("m_c_replyof").isNull)
       .join(broadcast(top100.select(col("forumid").as("pf_"))),
@@ -407,7 +386,6 @@ object Ldbc extends Pack {
       .agg(countDistinct(col("m_messageid")).as("postCount"))
       .orderBy(col("postCount").desc, col("person_id"))
       .limit(100)
-    }
   }
 
   // bi-5: most active posters of a topic — message left-joined to its
