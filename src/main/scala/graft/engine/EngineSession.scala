@@ -130,8 +130,8 @@ object EngineSession {
     Option(d.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
   }
 
-  /** Idempotent per-session setup usable on a session we didn't build
-    * (Verify creates its own): runtime confs +
+  /** Idempotent per-session setup, also usable on a session built
+    * without [[builder]]: runtime confs (none of them static) +
     * SQL-function registration. A conf marker makes repeat calls free —
     * every query entry point calls configure, and re-registering functions
     * per query costs real time and floods the log with
@@ -141,16 +141,13 @@ object EngineSession {
 
   def configure(spark: SparkSession): SparkSession = {
     if (spark.conf.getOption(MARKER).isEmpty) {
-      tunings.foreach { case (k, v) =>
-        try spark.conf.set(k, v)
-        catch { case _: Throwable => () } // static confs on a live session
-      }
+      tunings.foreach { case (k, v) => spark.conf.set(k, v) }
       graft.functions.Registry.registerAll(spark)
       // terminal-ORDER-BY single-partition rewrite (graft.plans.SmallTopSort,
       // stats-gated) and stats-driven shuffled-hash dispatch for equi joins
       // above the broadcast threshold (graft.plans.AutoHashJoin, bounded
-      // build): registered post-hoc so sessions built elsewhere (Verify
-      // builds its own) get them too
+      // build): registered post-hoc so sessions built elsewhere get
+      // them too
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.SmallTopSort :+
           graft.plans.AutoHashJoin

@@ -1,0 +1,79 @@
+package graft.engine
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions._
+
+/** The statement front door: every SQL statement enters the engine here,
+  * the way every reference statement enters through
+  * `Connection::Query` → `ClientContext` (client_context.cpp:471-529).
+  *
+  * Statements the engine implements itself (macros, sequences,
+  * constraint DDL, ATTACH, EXPORT/IMPORT, COPY, DML, ALTER, SET,
+  * ANALYZE, DESCRIBE, PREPARE) route to their `graft.functions` module;
+  * everything else runs through spark.sql after the dialect pipeline
+  * (macro expansion is a no-op when no macros are defined). Branch
+  * order matters: earlier patterns shadow later ones.
+  */
+object Sql {
+
+  private val MacroDdl =
+    """(?is)\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?(?:MACRO|FUNCTION)\b.*""".r
+  private val MacroDrop = """(?is)\s*DROP\s+(?:MACRO|FUNCTION)\b.*""".r
+
+  /** Run one statement. Engine-implemented statements execute eagerly;
+    * a query returns its (lazy) result. */
+  def execute(spark: SparkSession, sql: String): DataFrame = sql match {
+    case MacroDdl() =>
+      Macros.defineAny(spark, sql); spark.emptyDataFrame
+    case MacroDrop() =>
+      Macros.drop(spark, sql); spark.emptyDataFrame
+    case s if Sequences.isSequenceDdl(s) =>
+      Sequences.execute(spark, s); spark.emptyDataFrame
+    case s if Constraints.matchesDdl(s) =>
+      // constraint-bearing CREATE TABLE: register + run stripped DDL
+      Constraints.executeDdl(spark, s)
+    case s if Constraints.matchesIndexDdl(s) =>
+      // CREATE UNIQUE INDEX = a uniqueness constraint (art_index.cpp)
+      Constraints.executeIndexDdl(spark, s)
+    case s if Attach.matches(s) =>
+      // ATTACH/DETACH → Spark databases (graft.functions.Attach)
+      Attach.execute(spark, s)
+    case s if ExportDb.matches(s) =>
+      // EXPORT/IMPORT DATABASE (graft.functions.ExportDb)
+      ExportDb.execute(spark, s)
+    case s if Copy.matches(s) =>
+      // COPY ... TO / FROM (graft.functions.Copy)
+      Copy.execute(spark, s)
+    case s if Dml.matches(spark, s) =>
+      // copy-on-write UPDATE/DELETE/TRUNCATE/MERGE/upsert + verified
+      // inserts (graft.functions.Dml / Constraints)
+      Dml.execute(spark, s)
+    case s if Alter.matches(s) =>
+      // ALTER TABLE column surface (graft.functions.Alter)
+      Alter.execute(spark, s)
+    case s if Attach.matchesSetSchema(s) =>
+      // SET schema = x -> current database switch
+      Attach.executeSetSchema(spark, s)
+    case s if Variables.matches(s) =>
+      // SET/RESET VARIABLE (graft.functions.Variables)
+      Variables.execute(spark, s)
+    case s if Timezone.matchesSet(s) =>
+      // SET TimeZone / Calendar -> session zone (graft.functions.Timezone)
+      Timezone.executeSet(spark, s)
+    case s if Analyze.matches(s) =>
+      // ANALYZE/VACUUM -> Spark table/column statistics (CBO feed)
+      Analyze.execute(spark, s)
+    case s if Describe.matches(s) =>
+      // DESCRIBE / SHOW / SUMMARIZE statements (graft.functions.Describe)
+      Describe.execute(spark, s)
+    case s if Constraints.matchesTableDdl(s) =>
+      // unregister stale constraint entries on DROP / plain re-CREATE
+      Constraints.intercept(spark, s)
+      Dml.gsql(spark, s)
+    case s if Prepared.matches(s) =>
+      // TRUE parameter binding (spark.sql(text, args)), re-bound per
+      // EXECUTE — reference client_context.cpp:535-627 protocol
+      Prepared.execute(spark, s)
+    case _ => Dml.gsql(spark, sql)
+  }
+}

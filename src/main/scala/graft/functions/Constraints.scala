@@ -172,10 +172,18 @@ object Constraints {
     case None => false
   }
 
-  /** Runner-side hook: handles constraint-bearing CREATE TABLE fully
-    * (returns Some); unregisters stale entries on DROP TABLE / plain
-    * CREATE TABLE and returns None so the default path executes. */
-  def intercept(spark: SparkSession, sql: String): Option[DataFrame] = {
+  private val TableDdlHead =
+    """(?is)^\s*(DROP\s+TABLE|CREATE\s+(OR\s+REPLACE\s+)?TABLE)\b""".r
+
+  /** True for DROP TABLE and any CREATE TABLE: statements after which a
+    * registration under the table's name is stale. */
+  def matchesTableDdl(sql: String): Boolean = TableDdlHead.findFirstIn(sql).isDefined
+
+  /** Statement-path hook for DROP TABLE / plain CREATE TABLE (a
+    * constraint-bearing CREATE goes to executeDdl instead): guards FK
+    * parents against DROP and unregisters stale entries; the statement
+    * itself still runs on the default path. */
+  def intercept(spark: SparkSession, sql: String): Unit = {
     DropHead.findFirstMatchIn(sql).foreach { m =>
       // FK dependency: a referenced parent cannot drop while a child
       // holds a FOREIGN KEY to it — but only if the table still exists
@@ -184,13 +192,7 @@ object Constraints {
         rejectDropIfParent(spark, m.group(1))
       unregister(spark, m.group(1))
     }
-    CreateHead.findFirstMatchIn(sql) match {
-      case Some(m) =>
-        if (ConstraintKw.findFirstIn(sql.substring(m.end - 1)).isDefined)
-          Some(executeDdl(spark, sql))
-        else { unregister(spark, m.group(3)); None }
-      case None => None
-    }
+    CreateHead.findFirstMatchIn(sql).foreach(m => unregister(spark, m.group(3)))
   }
 
   // ------------------------------------------------------------------

@@ -194,7 +194,7 @@ object Dml {
   /** All SQL built here runs through the engine's dialect pipeline
     * (macro expansion, builtin-catalog strip, chaining, sampling) so
     * user expression text inside DML keeps full dialect support. */
-  private[functions] def gsql(spark: SparkSession, text: String): DataFrame =
+  private[graft] def gsql(spark: SparkSession, text: String): DataFrame =
     spark.sql(Macros.expandAll(spark, text))
 
   /** Merge a user `WITH a AS (...)` prefix with our own CTE list. */

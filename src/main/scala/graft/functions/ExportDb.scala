@@ -13,9 +13,8 @@ import java.nio.file.{Files, Paths}
   * schema.sql, load.sql). The data write is the engine's parallel
   * DataFrame writer — at 100 TB each table export is one distributed
   * write job, no driver bottleneck; schema.sql/load.sql are O(#tables)
-  * driver-side metadata. IMPORT executes our own emitted scripts:
-  * CREATE TABLE through the constraint-registering DDL path
-  * (graft.functions.Constraints) and one read-back per data file.
+  * driver-side metadata. IMPORT executes our own emitted scripts
+  * statement by statement (graft.engine.Sql).
   *
   * Scope: tables of the CURRENT database (the reference exports the
   * attached catalog it is pointed at). Views/macros/sequences are
@@ -130,39 +129,18 @@ object ExportDb {
     spark.emptyDataFrame
   }
 
-  private val CopyFromRe =
-    """(?is)^\s*COPY\s+(`[^`]+`|[\w$]+)\s+FROM\s+'([^']*)'\s*\(\s*FORMAT\s+'(\w+)'\s*\)\s*$""".r
-
+  /** Replays our own emitted scripts through the statement front door:
+    * schema.sql's CREATE TABLEs register their constraints, load.sql's
+    * COPY FROMs append through the verified COPY path. */
   private def importDb(spark: SparkSession, path: String): DataFrame = {
     val dir = Paths.get(path)
     val schemaFile = dir.resolve("schema.sql")
     if (!Files.isRegularFile(schemaFile))
       throw new IllegalArgumentException(
         s"IO Error: cannot import database: $path/schema.sql not found")
-    for (stmt <- Files.readString(schemaFile).split(";\n").map(_.trim)
-         if stmt.nonEmpty) {
-      if (Constraints.matchesDdl(stmt)) Constraints.executeDdl(spark, stmt)
-      else spark.sql(stmt).collect()
-    }
-    val loadFile = dir.resolve("load.sql")
-    if (Files.isRegularFile(loadFile)) {
-      for (stmt <- Files.readString(loadFile).split(";\n").map(_.trim)
-           if stmt.nonEmpty) {
-        val m = CopyFromRe.findFirstMatchIn(stmt).getOrElse(
-          throw new IllegalArgumentException(
-            s"Parser Error: cannot parse load statement: $stmt"))
-        val (tbl, dataPath, fmt) = (Dml.unq(m.group(1)), m.group(2), m.group(3))
-        val target = spark.table(tbl)
-        val r = spark.read
-        val df = fmt match {
-          case "csv" => r.schema(target.schema).option("header", "true").csv(dataPath)
-          case "json" => r.schema(target.schema).json(dataPath)
-          case _ => r.parquet(dataPath)
-        }
-        df.createOrReplaceTempView(Dml.G + "import_src")
-        spark.sql(s"INSERT INTO ${q(tbl)} SELECT * FROM ${Dml.G}import_src").collect()
-      }
-    }
+    for (file <- Seq(schemaFile, dir.resolve("load.sql")) if Files.isRegularFile(file);
+         stmt <- Files.readString(file).split(";\n").map(_.trim) if stmt.nonEmpty)
+      graft.engine.Sql.execute(spark, stmt).collect()
     spark.emptyDataFrame
   }
 }

@@ -1,8 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import graft.engine.Tables
-import graft.functions.{Attach, ExportDb}
+import graft.engine.{Sql, Tables}
 
 /** ATTACH/DETACH + EXPORT/IMPORT DATABASE driver rows (SURVEY §2.1,
   * §2.9; reference physical_attach.cpp / physical_export.cpp).
@@ -22,16 +20,6 @@ import graft.functions.{Attach, ExportDb}
   */
 object CatalogOps extends Pack {
 
-  private def exec(s: SparkSession, sql: String): Unit = {
-    if (Attach.matches(sql)) Attach.execute(s, sql)
-    else if (ExportDb.matches(sql)) ExportDb.execute(s, sql)
-    else if (graft.functions.Copy.matches(sql)) graft.functions.Copy.execute(s, sql)
-    else if (graft.functions.Constraints.matchesDdl(sql))
-      graft.functions.Constraints.executeDdl(s, sql)
-    else s.sql(sql).collect()
-    (): Unit
-  }
-
   // COPY (query) TO parquet → read the files back through the SQL
   // file-relation surface (FileTables) — the statement-level spelling of
   // the §2.1 COPY roundtrips; oracle = the same query over the base table
@@ -44,10 +32,10 @@ object CatalogOps extends Pack {
     exec(s,
       s"""COPY (SELECT o_orderpriority, o_orderkey FROM orders
          |      WHERE o_custkey % 7 = 0) TO '$out/o.parquet'""".stripMargin)
-    s.sql(graft.functions.Macros.expandAll(s,
+    Sql.execute(s,
       s"""SELECT o_orderpriority AS pri, count(*) AS n, CAST(sum(o_orderkey) AS BIGINT) AS sp
          |FROM '$out/o.parquet'
-         |GROUP BY o_orderpriority ORDER BY pri""".stripMargin))
+         |GROUP BY o_orderpriority ORDER BY pri""".stripMargin)
   }
 
   q("q_attach_query",
@@ -72,27 +60,18 @@ object CatalogOps extends Pack {
     exec(s, "DETACH DATABASE IF EXISTS graft_expdb")
     // a crashed prior run can leave an orphan warehouse dir that blocks
     // the managed-table create — purge the database location first
-    locally {
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:").stripPrefix("//")
-      val dbDir = new java.io.File(wh, "graft_expdb.db")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      if (dbDir.exists()) rm(dbDir)
-    }
+    purgeWarehouse(s, "graft_expdb.db")
     exec(s, "ATTACH ':memory:' AS graft_expdb")
     s.catalog.setCurrentDatabase("graft_expdb")
     try {
       exec(s,
         """CREATE TABLE exp_nation(k INT PRIMARY KEY, name STRING, rk INT)""")
-      s.sql("""INSERT INTO exp_nation
-              |SELECT CAST(n_nationkey AS INT), CAST(n_name AS STRING),
-              |       CAST(n_regionkey AS INT) FROM nation""".stripMargin)
-        .collect()
+      exec(s,
+        """INSERT INTO exp_nation
+          |SELECT CAST(n_nationkey AS INT), CAST(n_name AS STRING),
+          |       CAST(n_regionkey AS INT) FROM nation""".stripMargin)
       exec(s, s"EXPORT DATABASE '$out' (FORMAT 'parquet')")
-      s.sql("DROP TABLE exp_nation").collect()
+      exec(s, "DROP TABLE exp_nation")
       exec(s, s"IMPORT DATABASE '$out'")
       s.sql("SELECT k, name, rk FROM exp_nation ORDER BY k")
         .localCheckpoint(true)

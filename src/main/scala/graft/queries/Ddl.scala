@@ -1,51 +1,28 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
-import graft.engine.Tables
-import graft.functions.{Alter, Constraints, Dml}
+import graft.engine.{Sql, Tables}
+import graft.functions.Constraints
 
 /** Driver-gated ALTER TABLE / generated-column / FOREIGN KEY rows
   * (SURVEY §2.9; reference test/sql/alter/, generated_columns/virtual/,
   * constraints/foreignkey/).
   *
   * Each row builds a scratch MANAGED table from the fixtures, runs the
-  * DDL/DML through the engine's statement surface (graft.functions.
-  * Alter / Constraints / Dml), and returns the final contents; the
-  * DuckDB oracle expresses the same final state as a pure SELECT over
-  * the untouched fixtures — so the gate checks the imperative
-  * ALTER/verify execution against its declarative specification
-  * hash-exactly.
+  * DDL/DML through the engine's statement front door (graft.engine.Sql),
+  * and returns the final contents; the DuckDB oracle expresses the same
+  * final state as a pure SELECT over the untouched fixtures — so the
+  * gate checks the imperative ALTER/verify execution against its
+  * declarative specification hash-exactly.
   */
 object Ddl extends Pack {
 
-  private def run(s: SparkSession, stmts: String*): Unit =
-    stmts.foreach { st =>
-      if (Alter.matches(st)) Alter.execute(s, st)
-      else if (Constraints.matchesDdl(st)) Constraints.executeDdl(s, st)
-      else if (Dml.matches(s, st)) Dml.execute(s, st)
-      else s.sql(st).collect()
-      (): Unit
-    }
-
-  /** DROP + purge the managed location: a prior driver round's session
-    * (fresh in-memory metastore) leaves the warehouse DIRECTORY behind
-    * even though the catalog entry is gone, and the next CREATE fails
-    * with LOCATION_ALREADY_EXISTS (same purge CatalogOps does for its
-    * scratch database). */
-  private def fresh(s: SparkSession, tables: String*): Unit = {
+  /** DROP (which unregisters constraints) + purge the managed location. */
+  private def fresh(s: SparkSession, tables: String*): Unit =
     tables.foreach { t =>
-      Constraints.unregister(s, t)
-      s.sql(s"DROP TABLE IF EXISTS $t").collect()
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:").stripPrefix("//")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      val dir = new java.io.File(wh, t)
-      if (dir.exists()) rm(dir)
+      exec(s, s"DROP TABLE IF EXISTS $t")
+      purgeWarehouse(s, t)
     }
-  }
 
   // RENAME COLUMN → ADD COLUMN DEFAULT → ALTER TYPE → DROP COLUMN →
   // SET DEFAULT → insert relying on the new default; final contents
@@ -57,7 +34,7 @@ object Ddl extends Pack {
       |) ORDER BY k, name""") { (s, dir) =>
     Tables.registerAll(s, dir)
     fresh(s, "ddl_alter_t")
-    run(s,
+    exec(s,
       """CREATE TABLE ddl_alter_t AS
         |SELECT CAST(n_nationkey AS INT) AS nid, CAST(n_name AS STRING) AS nm,
         |       CAST(n_regionkey AS INT) AS rk
@@ -86,7 +63,7 @@ object Ddl extends Pack {
       |) ORDER BY k""") { (s, dir) =>
     Tables.registerAll(s, dir)
     fresh(s, "ddl_gen_t")
-    run(s,
+    exec(s,
       """CREATE TABLE ddl_gen_t(k INT, base INT,
         |  pop2 BIGINT GENERATED ALWAYS AS (base * 2) VIRTUAL)""".stripMargin,
       """INSERT INTO ddl_gen_t (k, base)
@@ -108,26 +85,26 @@ object Ddl extends Pack {
       |ORDER BY k""") { (s, dir) =>
     Tables.registerAll(s, dir)
     fresh(s, "ddl_fk_child", "ddl_fk_parent")
-    run(s,
+    exec(s,
       "CREATE TABLE ddl_fk_parent(r INT PRIMARY KEY)",
       "INSERT INTO ddl_fk_parent SELECT CAST(r_regionkey AS INT) FROM region",
       """CREATE TABLE ddl_fk_child(k INT, r INT,
         |  FOREIGN KEY (r) REFERENCES ddl_fk_parent(r))""".stripMargin)
     // a batch with an unknown parent key is rejected atomically
     val rejected =
-      try { run(s, "INSERT INTO ddl_fk_child VALUES (900, 123456)"); false }
+      try { exec(s, "INSERT INTO ddl_fk_child VALUES (900, 123456)"); false }
       catch { case e: Exception => e.getMessage.contains("foreign key") }
     require(rejected, "FK violation must reject the insert")
-    run(s,
+    exec(s,
       """INSERT INTO ddl_fk_child
         |SELECT CAST(n_nationkey AS INT), CAST(n_regionkey AS INT)
         |FROM nation""".stripMargin)
     // deleting a referenced parent key rejects; an unreferenced one is fine
     val blocked =
-      try { run(s, "DELETE FROM ddl_fk_parent WHERE r = 0"); false }
+      try { exec(s, "DELETE FROM ddl_fk_parent WHERE r = 0"); false }
       catch { case e: Exception => e.getMessage.contains("foreign key") }
     require(blocked, "referenced parent delete must reject")
-    run(s,
+    exec(s,
       "DELETE FROM ddl_fk_child WHERE r = 4",
       "DELETE FROM ddl_fk_parent WHERE r = 4")
     Constraints.unregister(s, "ddl_fk_child")
@@ -146,7 +123,7 @@ object Ddl extends Pack {
       |             ('c', 'DECIMAL(6,2)', 'YES', NULL, NULL))
       |  v(col, t, n, k, d)""") { (s, dir) =>
     fresh(s, "ddl_desc_t")
-    run(s,
+    exec(s,
       """CREATE TABLE ddl_desc_t(a INT PRIMARY KEY, b STRING DEFAULT 'x',
         |  c DECIMAL(6,2))""".stripMargin)
     val out = graft.functions.Describe.execute(s, "DESCRIBE ddl_desc_t")
@@ -163,12 +140,12 @@ object Ddl extends Pack {
       |  v(col, idx, t)
       |ORDER BY idx""") { (s, dir) =>
     fresh(s, "ddl_cat_t")
-    run(s, "CREATE TABLE ddl_cat_t(a INT, b STRING, c DECIMAL(4,2))")
-    s.sql(graft.functions.Macros.expandAll(s,
+    exec(s, "CREATE TABLE ddl_cat_t(a INT, b STRING, c DECIMAL(4,2))")
+    Sql.execute(s,
       """SELECT table_name, column_name, column_index, data_type
         |FROM duckdb_columns()
         |WHERE table_name = 'ddl_cat_t'
-        |ORDER BY column_index""".stripMargin))
+        |ORDER BY column_index""".stripMargin)
   }
 
   // pg_catalog compatibility views (reference default_views.cpp:35-160,
@@ -184,13 +161,13 @@ object Ddl extends Pack {
       |  v(relname, relkind, attname, attnum, attnotnull, atttypmod)
       |ORDER BY attnum""") { (s, dir) =>
     fresh(s, "ddl_pg_t")
-    run(s, "CREATE TABLE ddl_pg_t(a INT PRIMARY KEY, b DECIMAL(6,2), c STRING)")
-    val out = s.sql(graft.functions.Macros.expandAll(s,
+    exec(s, "CREATE TABLE ddl_pg_t(a INT PRIMARY KEY, b DECIMAL(6,2), c STRING)")
+    val out = Sql.execute(s,
       """SELECT relname, relkind, attname, attnum, attnotnull, atttypmod
         |FROM pg_catalog.pg_attribute
         |JOIN pg_class ON (pg_attribute.attrelid = pg_class.oid)
         |WHERE relname = 'ddl_pg_t'
-        |ORDER BY attnum""".stripMargin))
+        |ORDER BY attnum""".stripMargin)
     graft.functions.Constraints.unregister(s, "ddl_pg_t")
     out
   }

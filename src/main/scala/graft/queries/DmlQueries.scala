@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.Tables
 
 /** Driver-gated DML + sampling rows (SURVEY §2.9, §2.6).
@@ -22,12 +21,6 @@ import graft.engine.Tables
   */
 object DmlQueries extends Pack {
 
-  private def run(s: SparkSession, stmts: String*): Unit =
-    stmts.foreach { st =>
-      if (graft.functions.Dml.matches(s, st)) graft.functions.Dml.execute(s, st)
-      else s.sql(st).collect()
-    }
-
   // UPDATE .. FROM (unique-key join) + predicate DELETE, verified against
   // the declarative LEFT JOIN + filter spelling
   q("q_dml_update_from",
@@ -40,7 +33,7 @@ object DmlQueries extends Pack {
       |WHERE c_nationkey < 20
       |ORDER BY k""") { (s, dir) =>
     Tables.registerAll(s, dir)
-    run(s,
+    exec(s,
       """CREATE OR REPLACE TEMPORARY VIEW dml_drv_bal AS
         |SELECT c_custkey AS k, c_acctbal AS bal, c_nationkey AS nk FROM customer""".stripMargin,
       """UPDATE dml_drv_bal SET bal = bal + d.delta
@@ -69,7 +62,7 @@ object DmlQueries extends Pack {
       |  WHERE src.k NOT IN (SELECT k FROM t)
       |) f ORDER BY k""") { (s, dir) =>
     Tables.registerAll(s, dir)
-    run(s,
+    exec(s,
       """CREATE OR REPLACE TEMPORARY VIEW dml_drv_m AS
         |SELECT n_nationkey AS k, n_name AS name, CAST(0.0 AS DOUBLE) AS total
         |FROM nation WHERE n_nationkey < 15""".stripMargin,
@@ -111,7 +104,7 @@ object DmlQueries extends Pack {
       graft.functions.Constraints.TableConstraints("dml_drv_ups",
         notNull = Seq("k"), checks = Nil,
         uniques = Seq(graft.functions.Constraints.UniqueSet(Seq("k"), isPk = true))))
-    run(s,
+    exec(s,
       """INSERT INTO dml_drv_ups
         |SELECT c_nationkey, 'ingested', count(*) FROM customer
         |GROUP BY c_nationkey

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Sql, Tables}
 import graft.functions.{StringFunctions => SF}
 import Q._
 
@@ -620,7 +620,7 @@ object Functions extends Pack {
       |FROM orders WHERE o_orderkey < 2000 ORDER BY k""") { (s, dir) =>
     Tables.registerAll(s, dir)
     graft.engine.EngineSession.configure(s)
-    s.sql(graft.functions.Macros.expandAll(s,
+    Sql.execute(s,
       """SELECT o_orderkey AS k,
         |  unix_micros((CAST(o_orderdate AS TIMESTAMP_NTZ)
         |               + make_interval(0,0,0,0, CAST(o_orderkey % 24 AS INT)))
@@ -635,6 +635,6 @@ object Functions extends Pack {
         |                            WHEN 1 THEN 'Asia/Kolkata'
         |                            ELSE 'Asia/Tokyo' END)) AS rowtz_us,
         |  CAST(o_orderdate AS TIMESTAMP) AT TIME ZONE 'America/Denver' AS inst_wall
-        |FROM orders WHERE o_orderkey < 2000 ORDER BY k""".stripMargin))
+        |FROM orders WHERE o_orderkey < 2000 ORDER BY k""".stripMargin)
   }
 }

@@ -17,6 +17,24 @@ abstract class Pack {
   protected def qRowsOnly(name: String)(fn: QueryFn): Unit =
     items += ((name, fn, None))
 
+  /** Run statements through the engine's front door (graft.engine.Sql). */
+  protected def exec(s: SparkSession, stmts: String*): Unit =
+    stmts.foreach(graft.engine.Sql.execute(s, _).collect())
+
+  /** Delete a managed location left under the warehouse: a prior driver
+    * round's session (fresh in-memory metastore) leaves the DIRECTORY
+    * behind even though the catalog entry is gone, and the next CREATE
+    * fails with LOCATION_ALREADY_EXISTS. */
+  protected def purgeWarehouse(s: SparkSession, name: String): Unit = {
+    val wh = s.conf.get("spark.sql.warehouse.dir")
+      .stripPrefix("file:").stripPrefix("//")
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    rm(new java.io.File(wh, name))
+  }
+
   final def defs: Map[String, QueryFn] = items.map(i => (i._1, i._2)).toMap
   final def oracle: Map[String, String] =
     items.collect { case (n, _, Some(s)) => (n, s) }.toMap

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Sql, Tables}
 import Q._
 
 /** Window-function coverage (SURVEY §2.5; reference
@@ -438,11 +438,11 @@ object Windows extends Pack {
       |  ORDER BY o_totalprice DESC, o_orderkey) = 1
       |ORDER BY o_custkey LIMIT 100""") { (s, dir) =>
     Tables.orders(s, dir).createOrReplaceTempView("orders")
-    s.sql(graft.functions.Macros.expandAll(s,
+    Sql.execute(s,
       """SELECT o_custkey, o_orderkey, o_totalprice
         |FROM orders
         |QUALIFY row_number() OVER (PARTITION BY o_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey) = 1
-        |ORDER BY o_custkey LIMIT 100""".stripMargin))
+        |ORDER BY o_custkey LIMIT 100""".stripMargin)
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{Alter, Constraints, Dml, Sequences}
+import graft.engine.Sql
+import graft.functions.{Constraints, Sequences}
 
 /** ALTER TABLE column surface, pinned by the reference suites
   * (test/sql/alter/rename_col/test_rename_col.test, add_col/test_add_col
@@ -13,11 +14,7 @@ class AlterSpec extends AnyFunSuite {
   private lazy val spark = GraftTest.spark
 
   private def sql(s: String) = spark.sql(s).collect()
-  private def exec(s: String) =
-    if (Alter.matches(s)) Alter.execute(spark, s)
-    else if (Constraints.matchesDdl(s)) Constraints.executeDdl(spark, s)
-    else if (Dml.matches(spark, s)) Dml.execute(spark, s)
-    else spark.sql(s)
+  private def exec(s: String) = Sql.execute(spark, s)
   private def rows(s: String): Seq[Seq[Any]] =
     spark.sql(s).collect().toSeq.map(_.toSeq)
   private def err(s: String): String =

@@ -54,8 +54,8 @@ class CatalogOpsSpec extends AnyFunSuite {
   test("duckdb_databases() lists attached catalogs") {
     cleanup()
     Attach.execute(spark, "ATTACH ':memory:' AS listme")
-    val rows = spark.sql(graft.functions.Macros.expandAll(spark,
-      "SELECT database_name FROM duckdb_databases() ORDER BY database_name"))
+    val rows = graft.engine.Sql.execute(spark,
+      "SELECT database_name FROM duckdb_databases() ORDER BY database_name")
       .collect().map(_.getString(0)).toSeq
     assert(rows.contains("listme") && rows.contains("default"))
     Attach.execute(spark, "DETACH listme")

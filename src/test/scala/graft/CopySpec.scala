@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{Copy, FileTables, Macros}
+import graft.engine.Sql
+import graft.functions.{Copy, FileTables}
 
 /** COPY ... TO/FROM (graft.functions.Copy) + file-path relations and the
   * read_csv family (graft.functions.FileTables), pinned to the reference
@@ -10,7 +11,7 @@ import graft.functions.{Copy, FileTables, Macros}
 class CopySpec extends AnyFunSuite {
   private lazy val spark = GraftTest.spark
 
-  private def sql(s: String) = spark.sql(Macros.expandAll(spark, s)).collect()
+  private def sql(s: String) = Sql.execute(spark, s).collect()
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_copy_spec").toString
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.Macros
+import graft.engine.Sql
 
 /** Round-11 dialect surface: function chaining, reference
   * regexp_replace semantics, icu_sort_key, list `+` concatenation.
@@ -10,7 +10,7 @@ import graft.functions.Macros
 class DialectSpec extends AnyFunSuite {
   private lazy val spark = GraftTest.spark
   private def one(s: String): Any =
-    spark.sql(Macros.expandAll(spark, s)).head.get(0)
+    Sql.execute(spark, s).head.get(0)
 
   test("function chaining desugars: v.f(args) = f(v, args), composed") {
     assert(one("SELECT 'Hello'.lower()") == "hello")
@@ -20,8 +20,8 @@ class DialectSpec extends AnyFunSuite {
     // qualified function calls do NOT desugar
     spark.sql("CREATE SCHEMA IF NOT EXISTS fc_s1")
     assert(one("SELECT abs(-1)") == 1) // sanity
-    val viaAlias = spark.sql(Macros.expandAll(spark,
-      "SELECT t.v.lower() FROM (SELECT 'X' AS v) t")).head.getString(0)
+    val viaAlias = Sql.execute(spark,
+      "SELECT t.v.lower() FROM (SELECT 'X' AS v) t").head.getString(0)
     assert(viaAlias == "x")
   }
 

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{Alter, Constraints, Dml}
+import graft.engine.Sql
+import graft.functions.Constraints
 
 /** FOREIGN KEY enforcement + generated-column registry behaviors,
   * pinned by the reference suites (test/sql/constraints/foreignkey/
@@ -10,18 +11,7 @@ import graft.functions.{Alter, Constraints, Dml}
 class FkGeneratedSpec extends AnyFunSuite {
   private lazy val spark = GraftTest.spark
 
-  private def exec(s: String) = {
-    val df =
-      if (Alter.matches(s)) Alter.execute(spark, s)
-      else if (Constraints.matchesDdl(s)) Constraints.executeDdl(spark, s)
-      else if (Dml.matches(spark, s)) Dml.execute(spark, s)
-      else if ("""(?is)^\s*(DROP\s+TABLE|CREATE\s+TABLE)\b""".r.findFirstIn(s).isDefined)
-        // same runner hook SqlLogicSpec uses: FK drop guard + stale
-        // registration cleanup
-        Constraints.intercept(spark, s).getOrElse(spark.sql(s))
-      else spark.sql(s)
-    df.collect()
-  }
+  private def exec(s: String) = Sql.execute(spark, s).collect()
   private def err(s: String): String =
     intercept[Exception](exec(s)).getMessage
   private def fresh(names: String*): Unit = names.foreach { n =>

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PgCatalogSpec extends AnyFunSuite {
   lazy val spark = GraftTest.spark
 
-  private def rows(sql: String) =
-    spark.sql(graft.functions.Macros.expandAll(spark, sql)).collect()
+  private def rows(sql: String) = graft.engine.Sql.execute(spark, sql).collect()
 
   test("pg_am / pg_tablespace constants") {
     val am = rows("SELECT * FROM pg_am")
@@ -55,13 +54,7 @@ class PgCatalogSpec extends AnyFunSuite {
 
   test("pg_constraint renders PK + implied NOT NULL + FK (pg_constraint.test)") {
     val S = graft.GraftTest // shared session
-    def exec(sql: String) = {
-      if (graft.functions.Constraints.matchesDdl(sql))
-        graft.functions.Constraints.executeDdl(spark, sql)
-      else if (graft.functions.Dml.matches(spark, sql))
-        graft.functions.Dml.execute(spark, sql)
-      else spark.sql(graft.functions.Macros.expandAll(spark, sql))
-    }
+    def exec(sql: String) = graft.engine.Sql.execute(spark, sql)
     graft.functions.Constraints.clear(spark)
     exec("DROP TABLE IF EXISTS pgc_b"); exec("DROP TABLE IF EXISTS pgc_a")
     exec("create table pgc_a (id int , primary key (id))")

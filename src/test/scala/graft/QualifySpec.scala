@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.Macros
+import graft.engine.Sql
 
 /** QUALIFY clause lowering (graft.functions.QualifyRewrite): the
   * reference plans QUALIFY as a filter over the window-computed
@@ -12,7 +12,7 @@ class QualifySpec extends AnyFunSuite {
   lazy val spark = GraftTest.spark
 
   private def run(sql: String) =
-    spark.sql(Macros.expandAll(spark, sql)).collect()
+    Sql.execute(spark, sql).collect()
 
   private def setup(): Unit = {
     import spark.implicits._

@@ -1,14 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.Macros
+import graft.engine.Sql
 
 /** Reference sampling dialect -> Spark TABLESAMPLE (SampleRewrite),
   * pinned against test/sql/sample/test_system_rows.test and
   * test_sample_too_big.test semantics. */
 class SampleRewriteSpec extends AnyFunSuite {
   private lazy val spark = GraftTest.spark
-  private def sql(s: String) = spark.sql(Macros.expandAll(spark, s))
+  private def sql(s: String) = Sql.execute(spark, s)
 
   test("USING SAMPLE n ROWS (method[, seed]) returns exactly n rows") {
     spark.sql("CREATE OR REPLACE TEMP VIEW smp AS SELECT id AS i FROM range(10000)")

@@ -149,8 +149,8 @@ class SequencesSpec extends AnyFunSuite {
   test("duckdb_sequences() escapes quotes inside identifiers") {
     Sequences.clear(spark)
     ddl("""CREATE SEQUENCE "se'q" START 3""")
-    val rows = spark.sql(graft.functions.Macros.expandAll(spark,
-        "SELECT sequence_name, start_value FROM duckdb_sequences()"))
+    val rows = graft.engine.Sql.execute(spark,
+        "SELECT sequence_name, start_value FROM duckdb_sequences()")
       .collect()
     assert(rows.length == 1)
     assert(rows.head.getString(0) == "se'q")

@@ -310,69 +310,8 @@ class SqlLogicSpec extends AnyFunSuite {
   private def rowsMatch(got: Vector[String], exp: Vector[String]): Boolean =
     got.length == exp.length && got.lazyZip(exp).forall(tokenMatches)
 
-  private val MacroDdl =
-    """(?is)\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?(?:MACRO|FUNCTION)\b.*""".r
-  private val MacroDrop = """(?is)\s*DROP\s+(?:MACRO|FUNCTION)\b.*""".r
-
-  /** SQL entry point: CREATE/DROP MACRO handled by the engine's macro
-    * registry (graft.functions.Macros — the reference's bind-time
-    * inliner); everything else runs through spark.sql after macro
-    * expansion (a no-op when no macros are defined). */
-  private def exec(sql: String): org.apache.spark.sql.DataFrame = sql match {
-    case MacroDdl() =>
-      graft.functions.Macros.defineAny(spark, sql); spark.emptyDataFrame
-    case MacroDrop() =>
-      graft.functions.Macros.drop(spark, sql); spark.emptyDataFrame
-    case s if graft.functions.Sequences.isSequenceDdl(s) =>
-      graft.functions.Sequences.execute(spark, s); spark.emptyDataFrame
-    case s if graft.functions.Constraints.matchesDdl(s) =>
-      // constraint-bearing CREATE TABLE: register + run stripped DDL
-      graft.functions.Constraints.executeDdl(spark, s)
-    case s if graft.functions.Constraints.matchesIndexDdl(s) =>
-      // CREATE UNIQUE INDEX = a uniqueness constraint (art_index.cpp)
-      graft.functions.Constraints.executeIndexDdl(spark, s)
-    case s if graft.functions.Attach.matches(s) =>
-      // ATTACH/DETACH → Spark databases (graft.functions.Attach)
-      graft.functions.Attach.execute(spark, s)
-    case s if graft.functions.ExportDb.matches(s) =>
-      // EXPORT/IMPORT DATABASE (graft.functions.ExportDb)
-      graft.functions.ExportDb.execute(spark, s)
-    case s if graft.functions.Copy.matches(s) =>
-      // COPY ... TO / FROM (graft.functions.Copy)
-      graft.functions.Copy.execute(spark, s)
-    case s if graft.functions.Dml.matches(spark, s) =>
-      // copy-on-write UPDATE/DELETE/TRUNCATE/MERGE/upsert + verified
-      // inserts (graft.functions.Dml / Constraints)
-      graft.functions.Dml.execute(spark, s)
-    case s if graft.functions.Alter.matches(s) =>
-      // ALTER TABLE column surface (graft.functions.Alter)
-      graft.functions.Alter.execute(spark, s)
-    case s if graft.functions.Attach.matchesSetSchema(s) =>
-      // SET schema = x -> current database switch
-      graft.functions.Attach.executeSetSchema(spark, s)
-    case s if graft.functions.Variables.matches(s) =>
-      // SET/RESET VARIABLE (graft.functions.Variables)
-      graft.functions.Variables.execute(spark, s)
-    case s if graft.functions.Timezone.matchesSet(s) =>
-      // SET TimeZone / Calendar -> session zone (graft.functions.Timezone)
-      graft.functions.Timezone.executeSet(spark, s)
-    case s if graft.functions.Analyze.matches(s) =>
-      // ANALYZE/VACUUM -> Spark table/column statistics (CBO feed)
-      graft.functions.Analyze.execute(spark, s)
-    case s if graft.functions.Describe.matches(s) =>
-      // DESCRIBE / SHOW / SUMMARIZE statements (graft.functions.Describe)
-      graft.functions.Describe.execute(spark, s)
-    case s if """(?is)^\s*(DROP\s+TABLE|CREATE\s+(OR\s+REPLACE\s+)?TABLE)\b""".r
-        .findFirstIn(s).isDefined =>
-      // unregister stale constraint entries on DROP / plain re-CREATE
-      graft.functions.Constraints.intercept(spark, s)
-        .getOrElse(spark.sql(graft.functions.Macros.expandAll(spark, s)))
-    case s if graft.functions.Prepared.matches(s) =>
-      // TRUE parameter binding (spark.sql(text, args)), re-bound per
-      // EXECUTE — reference client_context.cpp:535-627 protocol
-      graft.functions.Prepared.execute(spark, s)
-    case _ => spark.sql(graft.functions.Macros.expandAll(spark, sql))
-  }
+  /** SQL entry point: the engine's statement front door. */
+  private def exec(sql: String) = graft.engine.Sql.execute(spark, sql)
 
   private def runFile(name: String, text0: String, imported: Boolean,
       sqliteMode: Boolean, tzMode: Boolean = false): Unit = {

@@ -9,7 +9,7 @@ class TimezoneSpec extends AnyFunSuite {
   lazy val spark = GraftTest.spark
 
   private def one(sql: String): Any = {
-    val df = spark.sql(graft.functions.Macros.expandAll(spark, sql))
+    val df = graft.engine.Sql.execute(spark, sql)
     df.collect().head.get(0)
   }
   private def s1(sql: String): String = String.valueOf(one(sql))
@@ -51,11 +51,11 @@ class TimezoneSpec extends AnyFunSuite {
   }
 
   test("per-row zone column") {
-    val rows = spark.sql(graft.functions.Macros.expandAll(spark,
+    val rows = graft.engine.Sql.execute(spark,
       """SELECT CAST(ts AS TIMESTAMP_NTZ) AT TIME ZONE tz FROM VALUES
         |  ('2001-02-16 20:38:40', 'America/Phoenix'),
         |  ('2001-02-16 20:38:40', 'UTC'),
-        |  ('2001-02-16 20:38:40', CAST(NULL AS STRING)) AS t(ts, tz)""".stripMargin))
+        |  ('2001-02-16 20:38:40', CAST(NULL AS STRING)) AS t(ts, tz)""".stripMargin)
       .collect().map(r => String.valueOf(r.get(0)))
     assert(rows.toSeq == Seq(
       "2001-02-17 03:38:40.0", "2001-02-16 20:38:40.0", "null"))

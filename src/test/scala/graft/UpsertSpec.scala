@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.Sql
 import graft.functions.{Constraints, Dml}
 
 /** Constraint enforcement + INSERT ... ON CONFLICT upsert, pinned by the
@@ -19,9 +20,7 @@ class UpsertSpec extends AnyFunSuite {
   private def rows(s: String): Seq[Seq[Any]] =
     spark.sql(s).collect().toSeq.map(_.toSeq)
   private def err(s: String): String =
-    intercept[Exception] {
-      if (Dml.matches(spark, s)) dml(s) else sql(s)
-    }.getMessage
+    intercept[Exception](Sql.execute(spark, s).collect()).getMessage
 
   private def fresh(name: String, createBody: String): Unit = {
     sql(s"DROP TABLE IF EXISTS $name")
