@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
-import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField}
+import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField, StructType}
 
 /** ALTER TABLE column surface — RENAME/ADD/DROP COLUMN, ALTER TYPE
   * (incl. USING), SET/DROP DEFAULT, SET/DROP NOT NULL, ADD PRIMARY KEY,
@@ -21,11 +21,11 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField}
   *    movement at any scale;
   *  - actions Spark's v1 tables cannot express (RENAME COLUMN, DROP
   *    COLUMN, ALTER TYPE, and non-foldable defaults Spark's DDL
-  *    analyzer rejects) rebuild through a temp table + filesystem
-  *    rename — one sequential write of the data, the same cost class as
-  *    the reference's in-place column rewrite. On a v2 lakehouse
-  *    catalog these become metadata-only too; the rebuild is the v1
-  *    fallback.
+  *    analyzer rejects) rebuild through Dml.replaceFiles: one
+  *    sequential write of the data to a fresh directory, then a catalog
+  *    swap — the same cost class as the reference's in-place column
+  *    rewrite. On a v2 lakehouse catalog these become metadata-only too;
+  *    the rebuild is the v1 fallback.
   *  - constraint-registry actions (SET/DROP NOT NULL, ADD PRIMARY KEY)
   *    verify existing contents with one aggregate probe, then update
   *    the session registry graft.functions.Constraints reads at DML
@@ -123,14 +123,6 @@ object Alter {
     }
   }
 
-  private[functions] def rebuildFor(spark: SparkSession, table: String,
-      df: DataFrame): Unit = rebuild(spark, table, df)
-  private[functions] def fieldsFor(spark: SparkSession, table: String) =
-    fieldsOf(spark, table)
-  private[functions] def colsFor(fs: Array[StructField]) = cols(fs)
-  private[functions] def typeFor(spark: SparkSession, tpe: String) =
-    typeOf(spark, tpe)
-
   /** ALTER VIEW v RENAME TO v2 (reference rename_view suite): view
     * entries only — a base-table target is a binder error. */
   private def executeView(spark: SparkSession, ifExists: Boolean,
@@ -168,7 +160,7 @@ object Alter {
   // shared plumbing
   // ------------------------------------------------------------------
 
-  private def fieldsOf(spark: SparkSession, table: String): Array[StructField] =
+  private[functions] def fieldsOf(spark: SparkSession, table: String): Array[StructField] =
     spark.table(table).schema.fields
 
   private def findCol(spark: SparkSession, table: String, c: String): Option[StructField] =
@@ -178,36 +170,15 @@ object Alter {
     findCol(spark, table, c).getOrElse(throw new IllegalArgumentException(
       s"""Binder Error: Table "${Dml.unq(table.split('.').last)}" does not have a column with name "$c""""))
 
-  /** Replace the table's contents AND schema: write the new shape to a
-    * temp table first (the projection reads the old one), then swap via
-    * a catalog rename — the data is written exactly once. */
-  private def rebuild(spark: SparkSession, table: String, newDf: DataFrame): Unit = {
-    if (Dml.isTempView(spark, table)) {
-      newDf.localCheckpoint(true)
-        .createOrReplaceTempView(Dml.unq(table.split('.').last))
-    } else {
-      val parts = table.split('.').map(_.trim)
-      // unique suffix: two sessions sharing a catalog must not collide
-      val uniq = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val base = Dml.G + "alter_" + Dml.unq(parts.last).replaceAll("[^\\w]", "_")
-      val tmpBare = base + "_" + uniq
-      val bakBare = base + "_bak_" + uniq
-      def qual(bare: String) = (parts.dropRight(1) :+ s"`$bare`").mkString(".")
-      val tmp = qual(tmpBare); val bak = qual(bakBare)
-      newDf.write.saveAsTable(tmp)
-      // swap via rename-aside so a failure never leaves the user table
-      // missing: old -> bak, tmp -> table, drop bak (and restore old on
-      // a mid-swap failure)
-      spark.sql(s"ALTER TABLE $table RENAME TO $bak").collect()
-      try spark.sql(s"ALTER TABLE $tmp RENAME TO $table").collect()
-      catch { case e: Throwable =>
-        try spark.sql(s"ALTER TABLE $bak RENAME TO $table").collect()
-        catch { case _: Throwable => () }
-        throw e
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $bak").collect()
-    }
-  }
+  /** Replace the table's contents AND schema with `newDf` (the
+    * projection reads the old files): the same write-once commit as DML,
+    * so the data is written exactly once and the table's other metadata
+    * (TBLPROPERTIES, provider) stays. */
+  private[functions] def rebuild(spark: SparkSession, table: String, newDf: DataFrame): Unit =
+    if (Dml.isTempView(spark, table))
+      newDf.localCheckpoint(true).createOrReplaceTempView(Dml.unq(table.split('.').last))
+    else Dml.replaceFiles(spark, table, newDf,
+      Some(StructType(newDf.schema.map(_.copy(nullable = true)))))(_ => ())
 
   /** All columns as Columns, preserving per-field metadata (DEFAULTs). */
   private def cols(fs: Array[StructField]): Array[Column] =
@@ -482,7 +453,7 @@ object Alter {
     }
   }
 
-  private def typeOf(spark: SparkSession, tpe: String): org.apache.spark.sql.types.DataType =
+  private[functions] def typeOf(spark: SparkSession, tpe: String): org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.StructType.fromDDL(s"`x` ${Dml.normType(tpe)}").head.dataType
 
   private def alterType(spark: SparkSession, table: String, name: String,

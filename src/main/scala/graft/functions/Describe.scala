@@ -72,11 +72,10 @@ object Describe {
       val lower = rest.toLowerCase
       if (rest.isEmpty || lower == "all tables") describeAll(spark)
       else if (lower == "tables") showTables(spark) // SHOW/DESCRIBE TABLES
-      else if (lower == "databases") spark.sql(
-        Macros.expandAll(spark, "SELECT database_name FROM duckdb_databases()"))
-      else if (lower == "variables") spark.sql(
-        Macros.expandAll(spark,
-          "SELECT name, value, type FROM duckdb_variables() ORDER BY name"))
+      else if (lower == "databases")
+        Dml.gsql(spark, "SELECT database_name FROM duckdb_databases()")
+      else if (lower == "variables")
+        Dml.gsql(spark, "SELECT name, value, type FROM duckdb_variables() ORDER BY name")
       else describeRelation(spark, rest, cte)
     case _ => throw new IllegalArgumentException(
       s"Parser Error: not a DESCRIBE/SHOW/SUMMARIZE statement: $sql0")
@@ -141,7 +140,7 @@ object Describe {
   /** database | schema | name | column_names | column_types | temporary —
     * bare DESCRIBE / SHOW ALL TABLES (test_describe_all.test). */
   private def describeAll(spark: SparkSession): DataFrame =
-    spark.sql(Macros.expandAll(spark,
+    Dml.gsql(spark,
       """SELECT t.database_name AS database, t.schema_name AS schema,
         |       t.table_name AS name,
         |       c.column_names, c.column_types, t.temporary
@@ -153,7 +152,7 @@ object Describe {
         |            ORDER BY table_name, column_index)
         |      GROUP BY table_name, database_name) c
         |  ON t.table_name = c.table_name AND t.database_name = c.database_name
-        |ORDER BY name""".stripMargin))
+        |ORDER BY name""".stripMargin)
 
   private def showTables(spark: SparkSession): DataFrame = {
     // SHOW TABLES lists the CURRENT schema plus session temp entries
@@ -164,11 +163,11 @@ object Describe {
     val db = if (cur == "default") "memory" else cur
     // DISTINCT: a session temp view satisfies both the table and the
     // view listing (the importer materializes base tables as temp views)
-    spark.sql(Macros.expandAll(spark,
+    Dml.gsql(spark,
       s"SELECT DISTINCT name FROM (" +
         s"  SELECT table_name AS name, database_name FROM duckdb_tables()" +
         s"  UNION ALL SELECT view_name, database_name FROM duckdb_views()) " +
-        s"WHERE database_name IN ('$db', 'temp') ORDER BY name"))
+        s"WHERE database_name IN ('$db', 'temp') ORDER BY name")
   }
 
   // ------------------------------------------------------------------

@@ -1,7 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructField
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Copy-on-write DML over catalog tables: UPDATE / DELETE / TRUNCATE /
   * MERGE INTO.
@@ -10,14 +16,14 @@ import org.apache.spark.sql.types.StructField
   * .cpp`, `physical_delete.cpp`, `physical_merge_into.cpp` and the
   * `test/sql/update`, `/delete`, `/merge` suites. The reference mutates row
   * versions inside its MVCC storage layer; Spark's immutable-files model
-  * instead RECOMPUTES the table's new contents as one declarative plan and
-  * swaps them in — the same copy-on-write shape Delta/Iceberg use. The
-  * distributed part (and the 100 TB shape) is the plan that computes the
-  * new rows: a narrow map for predicate-only UPDATE/DELETE, one shuffled
-  * join for UPDATE..FROM / DELETE..USING / MERGE. The swap itself writes
-  * the whole (corpus-scale) table; a cluster-scale deployment would prune
-  * the rewrite to the files whose rows changed — the plan side is
-  * unchanged by that.
+  * instead RECOMPUTES the table's new contents as one declarative plan —
+  * a narrow map for predicate-only UPDATE/DELETE, one shuffled join for
+  * UPDATE..FROM / DELETE..USING / MERGE — and `commit` writes them once to
+  * a fresh directory and moves the catalog entry there last, the
+  * copy-on-write shape Delta/Iceberg use; a failed statement leaves the
+  * table as it was. The commit writes the whole (corpus-scale) table; a
+  * cluster-scale deployment would prune the rewrite to the files whose
+  * rows changed — the plan side is unchanged by that.
   *
   * Row identity: predicate-free matching uses the parquet metadata columns
   * (`_metadata.file_path` + `_metadata.row_index`) as a STABLE row id — no
@@ -236,19 +242,20 @@ object Dml {
     * into base tables"). TEMPORARY views are ALLOWED as targets: the
     * corpus importer fuses CREATE TABLE + INSERT into temp views, so a
     * temp view is how an imported base table materializes here —
-    * swapIn replaces its contents in place. */
-  private def rejectView(spark: SparkSession, table: String, verb: String): Unit = {
-    val bare = unq(table.split('.').last)
-    val isView =
-      try spark.catalog.getTable(bare).tableType == "VIEW"
-      catch { case _: Throwable => false }
-    if (isView) throw new IllegalArgumentException(
+    * commit replaces its contents in place. */
+  private def rejectView(spark: SparkSession, table: String, verb: String): Unit =
+    if (tableType(spark, table).contains("VIEW")) throw new IllegalArgumentException(
       s"Binder Error: Can only $verb base tables!")
-  }
 
   private[functions] def isTempView(spark: SparkSession, table: String): Boolean =
-    try spark.catalog.getTable(unq(table.split('.').last)).tableType == "TEMPORARY"
-    catch { case _: Throwable => false }
+    tableType(spark, table).contains("TEMPORARY")
+
+  /** Catalog type of the bare name's entry; None when there is none. */
+  private def tableType(spark: SparkSession, table: String): Option[String] =
+    try Some(spark.catalog.getTable(q(unq(table.split('.').last))).tableType)
+    catch {
+      case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => None
+    }
 
   private[functions] def schemaOf(spark: SparkSession, table: String): Seq[StructField] =
     spark.table(table).schema.fields.toSeq
@@ -335,31 +342,101 @@ object Dml {
     }
   }
 
-  /** Materialize the table's new contents and swap them in (tmp managed
-    * table + INSERT OVERWRITE: metadata-preserving two-phase COW). */
-  private[functions] def swapIn(spark: SparkSession, table: String, newSql: String): Unit = {
+  /** Commit a statement's new contents, built once and written once.
+    * `newSql` yields the table's columns plus flags: `__graft_aff` (1 per
+    * affected row) and, where needed, `__graft_keep` (false for a deleted
+    * row) and `__graft_nact` (MERGE: matched actions per target row). The
+    * written plan observes the affected count and MERGE's cardinality
+    * verdict; declared constraints (reference data_table.cpp:914
+    * VerifyAppendConstraints) and a referenced parent's keys (RESTRICT,
+    * test_fk_chain.test) verify the written rows before the table
+    * changes. Returns the affected-row count. */
+  private[functions] def commit(spark: SparkSession, table: String, newSql: String): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, max, sum}
     val df0 = gsql(spark, newSql)
     val tcOpt = Constraints.of(spark, table)
-    // generated columns recompute from the rewritten row values before
-    // any verification or write (they are never directly assignable)
-    val df = tcOpt.filter(_.generated.nonEmpty)
+    // generated columns recompute from the rewritten rows; their strict-
+    // cast probe is a job of its own, so observe only the plan written
+    val df1 = tcOpt.filter(_.generated.nonEmpty)
       .map(tc => Constraints.applyGenerated(spark, tc, df0)).getOrElse(df0)
-    // declared constraints verify on the FULL new contents before any
-    // write (reference data_table.cpp:914 VerifyAppendConstraints /
-    // art.cpp:839 duplicate-key diagnostics)
-    tcOpt.foreach(tc => Constraints.verifyContents(spark, tc, df, table))
-    // parent-side FOREIGN KEY enforcement: removing a referenced key is
-    // rejected (RESTRICT default, test_fk_chain.test)
-    Constraints.verifyParentRewrite(spark, table, df)
-    if (isTempView(spark, table)) {
-      // importer-fused "table": materialize the new contents (they read
-      // the old view) and replace the view definition
-      df.localCheckpoint(true).createOrReplaceTempView(unq(table.split('.').last))
+    def flag(name: String, absent: Any) =
+      if (df1.columns.contains(G + name)) col(G + name) else lit(absent)
+    val obsName = G + "commit_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val df = df1
+      .observe(obsName, coalesce(sum(col(G + "aff")), lit(0L)),
+        coalesce(max(flag("nact", 0L)), lit(0L)))
+      .where(flag("keep", true))
+      .select(schemaOf(spark, table).map(f => col(q(f.name))): _*)
+    // a listener for this statement only (Spark's Observation listener
+    // stays on the session and re-analyzes every later failed query)
+    val metrics = scala.concurrent.Promise[Row]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.exists { case c: CollectMetrics => c.name == obsName; case _ => false })
+          qe.observedMetrics.get(obsName).foreach(metrics.trySuccess)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    lazy val m = scala.concurrent.Await.result(metrics.future,
+      scala.concurrent.duration.Duration(2, "min"))
+    def verify(written: DataFrame): Unit = {
+      if (m.getLong(1) > 1) throw new RuntimeException(
+        "Merge error: MERGE INTO cannot affect the same target row more than once")
+      tcOpt.foreach(tc => Constraints.verifyContents(spark, tc, written, table))
+      Constraints.verifyParentRewrite(spark, table, written)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      if (isTempView(spark, table)) {
+        // importer-fused "table": materialize the new contents (they
+        // read the old view), verify them and replace the view
+        val written = df.localCheckpoint(true)
+        verify(written)
+        written.createOrReplaceTempView(unq(table.split('.').last))
+      } else replaceFiles(spark, table, df)(verify)
+    } finally spark.listenerManager.unregister(listener)
+    m.getLong(0)
+  }
+
+  /** Replace a catalog table's files (and, for ALTER, its schema) with
+    * `df`, written once to a fresh sibling directory through an external
+    * staging entry. `check` runs on the written files; only then does the
+    * table's entry move to the new directory and the old one go, the
+    * pointer-swap commit of Delta and Iceberg. A failure before that drops
+    * the stage and its files. A directory that must not move (a user
+    * LOCATION, catalog-tracked partitions) takes the checked rows by
+    * overwrite instead. */
+  private[functions] def replaceFiles(spark: SparkSession, table: String, df: DataFrame,
+      schema: Option[StructType] = None)(check: DataFrame => Unit): Unit = {
+    val cat = spark.sessionState.catalog
+    val parts = spark.sessionState.sqlParser.parseMultipartIdentifier(table.replace("\"", "`"))
+    val meta = cat.getTableMetadata(TableIdentifier(parts.last, parts.init.lastOption))
+    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
+    val fresh = new Path(meta.location.toString.stripSuffix("/")
+      .replaceAll(s"${G}v\\w+$$", "") + s"${G}v$uid")
+    val next = meta.copy(schema = schema.getOrElse(meta.schema), stats = None,
+      storage = meta.storage.copy(locationUri = Some(fresh.toUri)))
+    val stage = meta.identifier.copy(table = s"${G}stage_$uid")
+    val fs = fresh.getFileSystem(spark.sessionState.newHadoopConf())
+    def dropStage(): Unit = {
+      cat.dropTable(stage, ignoreIfNotExists = true, purge = false)
+      fs.delete(fresh, true): Unit
+    }
+    try {
+      fs.mkdirs(fresh)
+      cat.createTable(next.copy(identifier = stage, tableType = CatalogTableType.EXTERNAL),
+        ignoreIfExists = false)
+      df.write.insertInto(stage.quotedString)
+      check(spark.table(stage.quotedString))
+    } catch { case e: Throwable => dropStage(); throw e }
+    if (meta.tableType == CatalogTableType.EXTERNAL || meta.partitionColumnNames.nonEmpty) {
+      if (schema.isDefined) cat.alterTable(next.copy(storage = meta.storage))
+      spark.table(stage.quotedString).write.mode("overwrite").insertInto(meta.identifier.quotedString)
+      dropStage()
     } else {
-      val tmp = table.replaceAll("[^\\w]", "_") + s"${G}dml_tmp"
-      df.write.mode("overwrite").saveAsTable(tmp)
-      try { spark.sql(s"INSERT OVERWRITE TABLE $table SELECT * FROM $tmp").collect(): Unit }
-      finally { spark.sql(s"DROP TABLE IF EXISTS $tmp").collect(): Unit }
+      cat.alterTable(next)
+      cat.dropTable(stage, ignoreIfNotExists = false, purge = false)
+      spark.catalog.refreshTable(meta.identifier.quotedString)
+      fs.delete(new Path(meta.location), true): Unit
     }
   }
 
@@ -497,7 +574,7 @@ object Dml {
     rejectAggregates(retText)
     val assigns = parseAssigns(setText, tr.name, fields)
     // generated columns are not assignable (generated_columns/virtual/
-    // update.test); they recompute from the new row in swapIn
+    // update.test); they recompute from the new row in commit
     Constraints.of(spark, tr.name).foreach { tc =>
       val gen = tc.generated.map(_.name.toLowerCase).toSet
       assigns.find(a => gen(a.col.toLowerCase)).foreach(a =>
@@ -518,10 +595,8 @@ object Dml {
         }
       }
       val rel = s"${tr.name} AS ${q(tr.alias)}"
-      val newSql = cteify(cte, s"SELECT ${cols.mkString(", ")} FROM $rel")
-      val cnt = gsql(spark, cteify(cte,
-        s"SELECT count(*) FROM $rel" +
-          (if (whereText.isEmpty) "" else s" WHERE $whereText"))).head().getLong(0)
+      val aff = if (whereText.isEmpty) "1" else s"CASE WHEN ($whereText) THEN 1 ELSE 0 END"
+      val newSql = cteify(cte, s"SELECT ${cols.mkString(", ")}, $aff AS ${G}aff FROM $rel")
       val ret =
         if (retText.isEmpty) null
         else freeze(spark, gsql(spark, cteify(cte,
@@ -529,7 +604,7 @@ object Dml {
             (if (whereText.isEmpty) "" else s" WHERE $whereText") +
             s") AS ${q(tr.alias)}")))
       checkRetSchema(ret)
-      swapIn(spark, tr.name, newSql)
+      val cnt = commit(spark, tr.name, newSql)
       if (ret != null) ret else countDf(spark, cnt)
     } else {
       // join path (UPDATE .. FROM and/or subquery predicates): stable
@@ -556,10 +631,10 @@ object Dml {
         }
       }
       val newSql = cteify(cte,
-        s"""SELECT ${outCols.mkString(", ")}
+        s"""SELECT ${outCols.mkString(", ")},
+           |       CASE WHEN ${G}m.${G}mgid IS NOT NULL THEN 1 ELSE 0 END AS ${G}aff
            |FROM $base AS ${G}t LEFT JOIN ($matches) AS ${G}m
            |  ON ${G}t.${G}gid = ${G}m.${G}mgid""".stripMargin)
-      val cnt = gsql(spark, cteify(cte, s"SELECT count(*) FROM ($matches)")).head().getLong(0)
       val ret =
         if (retText.isEmpty) null
         else {
@@ -576,7 +651,7 @@ object Dml {
                |    ON ${G}t.${G}gid = ${G}m.${G}mgid) AS ${q(tr.alias)}""".stripMargin)))
         }
       checkRetSchema(ret)
-      swapIn(spark, tr.name, newSql)
+      val cnt = commit(spark, tr.name, newSql)
       if (ret != null) ret else countDf(spark, cnt)
     }
   }
@@ -612,12 +687,9 @@ object Dml {
 
     if (usingText.isEmpty && (whereText.isEmpty || !hasSubquery(whereText))) {
       val rel = s"${tr.name} AS ${q(tr.alias)}"
-      val newSql = cteify(cte,
-        if (whereText.isEmpty) s"SELECT $colList FROM $rel WHERE false"
-        else s"SELECT $colList FROM $rel WHERE ($whereText) IS NOT TRUE")
-      val cnt = gsql(spark, cteify(cte,
-        s"SELECT count(*) FROM $rel" +
-          (if (whereText.isEmpty) "" else s" WHERE ($whereText) IS TRUE"))).head().getLong(0)
+      val hit = if (whereText.isEmpty) "true" else s"($whereText) IS TRUE"
+      val newSql = cteify(cte, s"SELECT $colList, CASE WHEN $hit THEN 1 ELSE 0 END AS ${G}aff, " +
+        s"NOT $hit AS ${G}keep FROM $rel")
       val ret =
         if (retText.isEmpty) null
         else freeze(spark, gsql(spark, cteify(cte,
@@ -625,7 +697,7 @@ object Dml {
             (if (whereText.isEmpty) "" else s" WHERE ($whereText) IS TRUE") +
             s") AS ${q(tr.alias)}")))
       checkRetSchema(ret)
-      swapIn(spark, tr.name, newSql)
+      val cnt = commit(spark, tr.name, newSql)
       if (ret != null) ret else countDf(spark, cnt)
     } else {
       val base = gidRelation(spark, tr.name)
@@ -636,9 +708,10 @@ object Dml {
            |FROM $base AS ${q(tr.alias)}$usingPart$wherePart""".stripMargin
       val tcols = fields.map(f => s"${G}t.${q(f.name)} AS ${q(f.name)}").mkString(", ")
       val newSql = cteify(cte,
-        s"""SELECT $tcols FROM $base AS ${G}t
-           |LEFT ANTI JOIN ($matched) AS ${G}m ON ${G}t.${G}gid = ${G}m.${G}mgid""".stripMargin)
-      val cnt = gsql(spark, cteify(cte, s"SELECT count(*) FROM ($matched)")).head().getLong(0)
+        s"""SELECT $tcols, CASE WHEN ${G}m.${G}mgid IS NULL THEN 0 ELSE 1 END AS ${G}aff,
+           |       ${G}m.${G}mgid IS NULL AS ${G}keep
+           |FROM $base AS ${G}t
+           |LEFT JOIN ($matched) AS ${G}m ON ${G}t.${G}gid = ${G}m.${G}mgid""".stripMargin)
       val ret =
         if (retText.isEmpty) null
         else freeze(spark, gsql(spark, cteify(cte,
@@ -647,7 +720,7 @@ object Dml {
              |  LEFT SEMI JOIN ($matched) AS ${G}m ON ${G}t.${G}gid = ${G}m.${G}mgid
              |) AS ${q(tr.alias)}""".stripMargin)))
       checkRetSchema(ret)
-      swapIn(spark, tr.name, newSql)
+      val cnt = commit(spark, tr.name, newSql)
       if (ret != null) ret else countDf(spark, cnt)
     }
   }
@@ -1014,24 +1087,22 @@ object Dml {
             s"CAST(($rhs) AS ${f.dataType.sql})"
           case None => s"${G}t.${q(f.name)}"
         }
+        val hit = s"${G}i.${G}rid IS NOT NULL AND ($wh)"
         val updCols = fields.map { f =>
-          s"CASE WHEN ${G}i.${G}rid IS NOT NULL AND ($wh) THEN ${newValue(f)} " +
-            s"ELSE ${G}t.${q(f.name)} END AS ${q(f.name)}"
+          s"CASE WHEN $hit THEN ${newValue(f)} ELSE ${G}t.${q(f.name)} END AS ${q(f.name)}"
         }
-        val matchedSql =
-          s"""SELECT ${updCols.mkString(", ")}
-             |FROM ${tr.name} AS ${G}t LEFT JOIN $insDV AS ${G}i ON $eq""".stripMargin
         val freshSql =
           s"""SELECT $colList FROM $insDV AS ${G}i
              |WHERE NOT EXISTS (SELECT 1 FROM ${tr.name} AS ${G}t WHERE $eq)""".stripMargin
-        val newSql = s"($matchedSql) UNION ALL ($freshSql)"
-        val affected =
-          s"""(SELECT ${fields.map(f => s"${newValue(f)} AS ${q(f.name)}").mkString(", ")}
+        val newSql =
+          s"""(SELECT ${updCols.mkString(", ")}, CASE WHEN $hit THEN 1 ELSE 0 END AS ${G}aff
+             | FROM ${tr.name} AS ${G}t LEFT JOIN $insDV AS ${G}i ON $eq)
+             |UNION ALL (SELECT *, 1 AS ${G}aff FROM ($freshSql))""".stripMargin
+        val ret = if (retText.isEmpty) null else returning(
+          s"""((SELECT ${fields.map(f => s"${newValue(f)} AS ${q(f.name)}").mkString(", ")}
              | FROM ${tr.name} AS ${G}t JOIN $insDV AS ${G}i ON $eq WHERE ($wh))
-             |UNION ALL ($freshSql)""".stripMargin
-        val cnt = gsql(spark, s"SELECT count(*) FROM ($affected)").head().getLong(0)
-        val ret = if (retText.isEmpty) null else returning(s"($affected)")
-        swapIn(spark, tr.name, newSql)
+             |UNION ALL ($freshSql))""".stripMargin)
+        val cnt = commit(spark, tr.name, newSql)
         if (ret != null) ret else countDf(spark, cnt)
     }
   }
@@ -1572,34 +1643,30 @@ object Dml {
          |       $actExpr, $errExpr, $ta.${G}gid AS ${G}gid
          |FROM $targetRel $joinType $sourceRel $joinSpec""".stripMargin
 
+    // nact: MATCHED actions per target row (commit's cardinality check)
     val ourCtes =
       s"""${G}j AS ($joined),
          |${G}tg AS (
          |  SELECT *, row_number() OVER (PARTITION BY ${G}gid
-         |            ORDER BY ${G}acted DESC, ${G}act) AS ${G}rn
+         |            ORDER BY ${G}acted DESC, ${G}act) AS ${G}rn,
+         |         sum(${G}acted) OVER (PARTITION BY ${G}gid) AS ${G}nact
          |  FROM ${G}j WHERE ${G}gid IS NOT NULL),
          |${G}fin AS (
          |  SELECT * FROM (SELECT ${tfields.map(f => q(f.name)).mkString(", ")},
-         |         ${G}keep, ${G}cnt FROM ${G}tg WHERE ${G}rn = 1)
+         |         ${G}keep, ${G}cnt, ${G}nact FROM ${G}tg WHERE ${G}rn = 1)
          |  UNION ALL
          |  SELECT ${tfields.map(f => q(f.name)).mkString(", ")},
-         |         ${G}keep, ${G}cnt FROM ${G}j WHERE ${G}gid IS NULL AND ${G}cnt = 1)""".stripMargin
+         |         ${G}keep, ${G}cnt, 0 FROM ${G}j WHERE ${G}gid IS NULL AND ${G}cnt = 1)""".stripMargin
     val pfx = mergeCte(cte, ourCtes)
 
-    // 1) per-row ERROR actions fire first (reference: abort before any write)
-    val err = gsql(spark, s"$pfx SELECT ${G}err FROM ${G}j WHERE ${G}err IS NOT NULL LIMIT 1")
-      .collect()
-    if (err.nonEmpty) throw new RuntimeException("Merge error: " + err.head.getString(0))
-    // 2) cardinality check: a MATCHED action may affect a target row once
-    val dup = gsql(spark,
-      s"""$pfx SELECT ${G}gid FROM ${G}j WHERE ${G}acted = 1 AND ${G}gid IS NOT NULL
-         |GROUP BY ${G}gid HAVING count(*) > 1 LIMIT 1""".stripMargin).collect()
-    if (dup.nonEmpty) throw new RuntimeException(
-      "Merge error: MERGE INTO cannot affect the same target row more than once")
-    val cnt = gsql(spark, s"$pfx SELECT coalesce(sum(${G}cnt), 0) FROM ${G}fin")
-      .head().getLong(0)
-    val newSql =
-      s"$pfx SELECT ${tfields.map(f => q(f.name)).mkString(", ")} FROM ${G}fin WHERE ${G}keep"
+    // per-row ERROR actions fire first (reference: abort before any write)
+    if (clauses.exists(_.action.isInstanceOf[ActError])) {
+      val err = gsql(spark, s"$pfx SELECT ${G}err FROM ${G}j WHERE ${G}err IS NOT NULL LIMIT 1")
+        .collect()
+      if (err.nonEmpty) throw new RuntimeException("Merge error: " + err.head.getString(0))
+    }
+    val newSql = s"""$pfx SELECT ${tfields.map(f => q(f.name)).mkString(", ")},
+                    |  ${G}cnt AS ${G}aff, ${G}keep, ${G}nact FROM ${G}fin""".stripMargin
     // RETURNING: one row per affected row with the merge_action pseudo-
     // column — new values for INSERT/UPDATE, old values for DELETE
     // (first-match colExprs above guarantee that)
@@ -1624,12 +1691,12 @@ object Dml {
              |       CASE ${G}act ${actionName.mkString(" ")} ELSE NULL END AS merge_action
              |FROM (SELECT * FROM ${G}tg WHERE ${G}rn = 1 AND ${G}cnt = 1
              |      UNION ALL
-             |      SELECT *, 0 AS ${G}rn FROM ${G}j
+             |      SELECT *, 0 AS ${G}rn, 0 AS ${G}nact FROM ${G}j
              |      WHERE ${G}gid IS NULL AND ${G}cnt = 1)""".stripMargin
         freeze(spark, gsql(spark,
           s"$pfx SELECT $retExprs FROM ($affected) AS ${q(tr.alias)}"))
       }
-    swapIn(spark, tr.name, newSql)
+    val cnt = commit(spark, tr.name, newSql)
     if (ret != null) ret else countDf(spark, cnt)
   }
 }

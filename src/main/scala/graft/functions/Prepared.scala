@@ -147,7 +147,7 @@ object Prepared {
       // evaluates to a value via a driver-side scalar query and binds as
       // a typed Literal — arrays/structs/NULL included.
       def evalArg(v: String): Column = {
-        val df = spark.sql(Macros.expandAll(spark, s"SELECT ($v)"))
+        val df = Dml.gsql(spark, s"SELECT ($v)")
         val dt = df.schema.head.dataType
         org.apache.spark.sql.graft.Bridge.column(
           org.apache.spark.sql.catalyst.expressions.Literal.create(

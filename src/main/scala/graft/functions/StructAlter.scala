@@ -86,18 +86,18 @@ private[functions] object StructAlter {
 
   private def topField(spark: SparkSession, table: String,
       name: String): StructField =
-    Alter.fieldsFor(spark, table).find(_.name.equalsIgnoreCase(name)).getOrElse(
+    Alter.fieldsOf(spark, table).find(_.name.equalsIgnoreCase(name)).getOrElse(
       err(s"""Binder Error: Table "${Dml.unq(table.split('.').last)}" does not have a column with name "$name""""))
 
   /** Rebuild the table with ONE top-level column replaced. */
   private def applyEdit(spark: SparkSession, table: String, topName: String,
       newCol: Column): Unit = {
-    val fs = Alter.fieldsFor(spark, table)
+    val fs = Alter.fieldsOf(spark, table)
     val projected = spark.table(table).select(fs.map { g =>
       if (g.name.equalsIgnoreCase(topName)) newCol.as(g.name, g.metadata)
       else col(s"`${g.name}`").as(g.name, g.metadata)
     }.toIndexedSeq: _*)
-    Alter.rebuildFor(spark, table, projected)
+    Alter.rebuild(spark, table, projected)
   }
 
   def add(spark: SparkSession, table: String, ifNotExists: Boolean,
@@ -117,7 +117,7 @@ private[functions] object StructAlter {
       case _ => (rest.trim, None)
     }
     val value = defTxt.map(d => expr(d)).getOrElse(lit(null))
-      .cast(Alter.typeFor(spark, tpe))
+      .cast(Alter.typeOf(spark, tpe))
     val edited = editAt(topF.name, topF.name, col(s"`${topF.name}`"),
       topF.dataType, navigate,
       (c, st) => rebuildStruct(c, st,

@@ -37,6 +37,26 @@ class AlterSpec extends AnyFunSuite {
       .contains("already has a column"))
   }
 
+  test("a column rebuild keeps TBLPROPERTIES and VARCHAR(n) and leaves no staging entry") {
+    sql("DROP TABLE IF EXISTS alt_md")
+    sql("CREATE TABLE alt_md(a VARCHAR(3), b INT, c INT) USING parquet TBLPROPERTIES ('purpose' = 'etl')")
+    sql("INSERT INTO alt_md VALUES ('ab', 1, 2)")
+    val cat = spark.sessionState.catalog
+    def meta = cat.getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("alt_md"))
+    val loc0 = meta.location
+    exec("ALTER TABLE alt_md RENAME COLUMN b TO bb")
+    exec("ALTER TABLE alt_md DROP COLUMN c")
+    assert(meta.properties.get("purpose") == Some("etl"))
+    assert(rows("SELECT a, bb FROM alt_md") == Seq(Seq("ab", 1)))
+    assert(intercept[Exception](sql("INSERT INTO alt_md VALUES ('abcd', 1)"))
+      .getMessage.contains("EXCEED_LIMIT_LENGTH"))
+    assert(cat.listTables("default", "__graft_stage_*").isEmpty)
+    assert(!new java.io.File(loc0).exists())
+    sql("DROP TABLE alt_md")
+    // DROP removes the rebuilt directory: nothing of the table is left
+    assert(!new java.io.File(loc0).getParentFile.list().exists(_.startsWith("alt_md")))
+  }
+
   test("RENAME COLUMN follows into CHECK and key sets (test_rename_col_check)") {
     fresh("alt_rcc", "i INT CHECK(i < 10), j INT NOT NULL, UNIQUE(i, j)")
     exec("INSERT INTO alt_rcc VALUES (1, 2)")

@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.Dml
+import org.apache.spark.sql.catalyst.TableIdentifier
+import graft.engine.Sql
+import graft.functions.{Constraints, Dml}
 
 /** Copy-on-write DML (graft.functions.Dml): UPDATE / DELETE / TRUNCATE /
   * MERGE INTO semantics pinned by the reference suites
@@ -259,5 +261,179 @@ class DmlSpec extends AnyFunSuite {
     sql("INSERT INTO dml_tr VALUES (1), (2)")
     dml("TRUNCATE dml_tr")
     assert(rows("SELECT count(*) FROM dml_tr") == Seq(Seq(0L)))
+  }
+
+  // ---- write-once commit: staged write, checks on the written files,
+  // catalog swap last ----
+
+  private def meta(t: String) =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+
+  /** What a commit could leave behind for table `t`: staging catalog
+    * entries and directories beside the table's own (its earlier or
+    * unswapped versions). */
+  private def leftovers(t: String): Seq[String] = {
+    val loc = new java.io.File(meta(t).location)
+    val base = loc.getName.replaceAll("__graft_v\\w+$", "")
+    spark.sessionState.catalog.listTables("default", "__graft_stage_*").map(_.table) ++
+      loc.getParentFile.listFiles().toSeq.map(_.getName)
+        .filter(n => n != loc.getName && (n == base || n.startsWith(base + "__graft_v")))
+  }
+
+  private def fresh(names: String*): Unit = names.foreach { n =>
+    Constraints.unregister(spark, n)
+    sql(s"DROP TABLE IF EXISTS $n")
+  }
+
+  private def exec(s: String) = Sql.execute(spark, s).collect()
+
+  test("commit: a statement moves the table to a fresh directory and removes the old one") {
+    fresh("dml_mv")
+    sql("CREATE TABLE dml_mv(a INT) USING parquet")
+    sql("INSERT INTO dml_mv VALUES (1), (2)")
+    val loc0 = meta("dml_mv").location
+    assert(dml("UPDATE dml_mv SET a = a + 1 WHERE a = 2").head().getLong(0) == 1)
+    val loc1 = meta("dml_mv").location
+    assert(loc1 != loc0)
+    assert(!new java.io.File(loc0).exists())
+    assert(leftovers("dml_mv").isEmpty)
+    assert(dml("DELETE FROM dml_mv WHERE a = 1").head().getLong(0) == 1)
+    assert(!new java.io.File(loc1).exists())
+    assert(leftovers("dml_mv").isEmpty)
+    assert(rows("SELECT a FROM dml_mv") == Seq(Seq(3)))
+  }
+
+  test("commit: a statement rejected after its staged write leaves the table as it was") {
+    def unchanged(t: String, order: String)(stmt: => Unit): Unit = {
+      val before = rows(s"SELECT * FROM $t ORDER BY $order")
+      val loc = meta(t).location
+      stmt
+      assert(rows(s"SELECT * FROM $t ORDER BY $order") == before)
+      assert(meta(t).location == loc)
+      assert(leftovers(t).isEmpty)
+    }
+    // UPDATE creating a duplicate PRIMARY KEY
+    fresh("dml_rj_pk")
+    exec("CREATE TABLE dml_rj_pk(k INT PRIMARY KEY, v INT)")
+    exec("INSERT INTO dml_rj_pk VALUES (1, 10), (2, 20)")
+    exec("UPDATE dml_rj_pk SET v = v + 1 WHERE k = 1") // the table now lives in a versioned directory
+    unchanged("dml_rj_pk", "k") {
+      val e = intercept[IllegalArgumentException](exec("UPDATE dml_rj_pk SET k = 1"))
+      assert(e.getMessage.contains("violates primary key constraint"))
+    }
+    // MERGE cardinality error
+    fresh("dml_rj_t", "dml_rj_s")
+    sql("CREATE TABLE dml_rj_t(k INT, v INT) USING parquet")
+    sql("INSERT INTO dml_rj_t VALUES (1, 10), (2, 20)")
+    sql("CREATE TABLE dml_rj_s(k INT, v INT) USING parquet")
+    sql("INSERT INTO dml_rj_s VALUES (1, 100), (1, 200)")
+    unchanged("dml_rj_t", "k") {
+      val e = intercept[RuntimeException](dml(
+        "MERGE INTO dml_rj_t USING dml_rj_s ON dml_rj_t.k = dml_rj_s.k " +
+          "WHEN MATCHED THEN UPDATE SET v = dml_rj_s.v WHEN NOT MATCHED THEN INSERT VALUES (9, 9)"))
+      assert(e.getMessage.contains("cannot affect the same target row more than once"))
+    }
+    // DELETE of a parent key a FOREIGN KEY still references
+    fresh("dml_rj_c", "dml_rj_p")
+    exec("CREATE TABLE dml_rj_p(k INT PRIMARY KEY)")
+    exec("INSERT INTO dml_rj_p VALUES (1), (2)")
+    exec("CREATE TABLE dml_rj_c(r INT, FOREIGN KEY (r) REFERENCES dml_rj_p(k))")
+    exec("INSERT INTO dml_rj_c VALUES (1)")
+    unchanged("dml_rj_p", "k") {
+      val e = intercept[IllegalArgumentException](exec("DELETE FROM dml_rj_p WHERE k = 1"))
+      assert(e.getMessage.contains("still referenced"))
+    }
+    fresh("dml_rj_c", "dml_rj_p")
+  }
+
+  test("commit: affected-row counts (NULL predicates, constant predicates, empty tables)") {
+    fresh("dml_cnt")
+    sql("CREATE TABLE dml_cnt(a INT, b INT) USING parquet")
+    sql("INSERT INTO dml_cnt VALUES (1, 1), (2, NULL), (3, 3)")
+    // the NULL-predicate row is neither updated nor counted
+    assert(dml("UPDATE dml_cnt SET a = a + 10 WHERE b > 1").head().getLong(0) == 1)
+    assert(dml("UPDATE dml_cnt SET a = a + 100 WHERE b IN (SELECT 1)").head().getLong(0) == 1)
+    // ... nor deleted
+    assert(dml("DELETE FROM dml_cnt WHERE b < 2").head().getLong(0) == 1)
+    assert(rows("SELECT a, b FROM dml_cnt ORDER BY a") == Seq(Seq(2, null), Seq(13, 3)))
+    assert(dml("DELETE FROM dml_cnt WHERE false").head().getLong(0) == 0)
+    assert(dml("DELETE FROM dml_cnt WHERE 1 = 1").head().getLong(0) == 2)
+    assert(dml("UPDATE dml_cnt SET a = 0").head().getLong(0) == 0)
+    assert(dml("DELETE FROM dml_cnt").head().getLong(0) == 0)
+    assert(rows("SELECT count(*) FROM dml_cnt") == Seq(Seq(0L)))
+  }
+
+  test("commit: UPDATE of a table with a generated column counts and recomputes") {
+    fresh("dml_gen")
+    exec("CREATE TABLE dml_gen(a INT, b INT GENERATED ALWAYS AS (a * 2) VIRTUAL)")
+    exec("INSERT INTO dml_gen (a) VALUES (1), (2), (3)")
+    assert(dml("UPDATE dml_gen SET a = a + 10 WHERE a >= 2").head().getLong(0) == 2)
+    assert(rows("SELECT a, b FROM dml_gen ORDER BY a") ==
+      Seq(Seq(1, 2), Seq(12, 24), Seq(13, 26)))
+    fresh("dml_gen")
+  }
+
+  test("commit: UPDATE keeps DEFAULT, VARCHAR(n) and TBLPROPERTIES; DROP then CREATE reuses the name") {
+    fresh("dml_md")
+    sql("CREATE TABLE dml_md(a VARCHAR(3), b INT DEFAULT 7) USING parquet TBLPROPERTIES ('purpose' = 'etl')")
+    sql("INSERT INTO dml_md VALUES ('ab', 1)")
+    assert(dml("UPDATE dml_md SET b = 2").head().getLong(0) == 1)
+    assert(meta("dml_md").properties.get("purpose") == Some("etl"))
+    sql("INSERT INTO dml_md (a) VALUES ('cd')")
+    assert(rows("SELECT a, b FROM dml_md ORDER BY a") == Seq(Seq("ab", 2), Seq("cd", 7)))
+    val e = intercept[Exception](sql("INSERT INTO dml_md VALUES ('abcd', 1)"))
+    assert(e.getMessage.contains("EXCEED_LIMIT_LENGTH"))
+    sql("DROP TABLE dml_md")
+    sql("CREATE TABLE dml_md(x INT) USING parquet")
+    sql("INSERT INTO dml_md VALUES (5)")
+    assert(rows("SELECT * FROM dml_md") == Seq(Seq(5)))
+  }
+
+  test("commit: an EXTERNAL table keeps its LOCATION, which holds the new rows") {
+    fresh("dml_ext", "dml_ext_s")
+    val dir = java.nio.file.Files.createTempDirectory("dml_ext").toString
+    sql(s"CREATE TABLE dml_ext(k INT, v INT) USING parquet LOCATION '$dir'")
+    sql("INSERT INTO dml_ext VALUES (1, 1), (2, 2)")
+    val loc = meta("dml_ext").location
+    def files = spark.read.parquet(dir).collect().toSeq.map(_.toSeq).sortBy(_.head.toString)
+    assert(dml("UPDATE dml_ext SET v = 10 WHERE k = 1").head().getLong(0) == 1)
+    assert(meta("dml_ext").location == loc)
+    assert(files == Seq(Seq(1, 10), Seq(2, 2)))
+    assert(leftovers("dml_ext").isEmpty)
+    // a rejected statement does not touch the directory
+    sql("CREATE TABLE dml_ext_s(k INT, v INT) USING parquet")
+    sql("INSERT INTO dml_ext_s VALUES (2, 100), (2, 200)")
+    intercept[RuntimeException](dml("MERGE INTO dml_ext USING dml_ext_s ON dml_ext.k = dml_ext_s.k " +
+      "WHEN MATCHED THEN UPDATE SET v = dml_ext_s.v"))
+    assert(meta("dml_ext").location == loc)
+    assert(files == Seq(Seq(1, 10), Seq(2, 2)))
+    assert(leftovers("dml_ext").isEmpty)
+    fresh("dml_ext", "dml_ext_s")
+    assert(new java.io.File(dir).exists()) // DROP of an EXTERNAL table keeps its files
+  }
+
+  test("commit: a partitioned table keeps its directory and partitions") {
+    fresh("dml_part")
+    sql("CREATE TABLE dml_part(a INT, b INT) USING parquet PARTITIONED BY (b)")
+    sql("INSERT INTO dml_part VALUES (1, 1), (2, 2), (3, 2)")
+    val loc = meta("dml_part").location
+    assert(dml("UPDATE dml_part SET a = a * 10 WHERE b = 2").head().getLong(0) == 2)
+    assert(dml("DELETE FROM dml_part WHERE a = 1").head().getLong(0) == 1)
+    assert(meta("dml_part").location == loc)
+    assert(rows("SELECT a, b FROM dml_part ORDER BY a") == Seq(Seq(20, 2), Seq(30, 2)))
+    assert(leftovers("dml_part").isEmpty)
+    fresh("dml_part")
+  }
+
+  test("commit: a cached table reads its new rows after UPDATE") {
+    fresh("dml_cached")
+    sql("CREATE TABLE dml_cached(a INT) USING parquet")
+    sql("INSERT INTO dml_cached VALUES (1), (2)")
+    sql("CACHE TABLE dml_cached")
+    assert(rows("SELECT sum(a) FROM dml_cached") == Seq(Seq(3L)))
+    dml("UPDATE dml_cached SET a = a * 10")
+    assert(rows("SELECT sum(a) FROM dml_cached") == Seq(Seq(30L)))
+    sql("UNCACHE TABLE dml_cached")
+    fresh("dml_cached")
   }
 }

@@ -137,9 +137,20 @@ class UpsertSpec extends AnyFunSuite {
   test("DO UPDATE ... WHERE filters conflicts into DO NOTHING (upsert_partial_update)") {
     fresh("ups_w", "a INT PRIMARY KEY, b INT")
     dml("INSERT INTO ups_w VALUES (1,3), (2,2), (3,10), (4,3)")
-    dml("INSERT INTO ups_w VALUES (3,8), (2,2) ON CONFLICT (a) DO UPDATE SET b = b*2 WHERE b == excluded.b")
+    val c = dml("INSERT INTO ups_w VALUES (3,8), (2,2) ON CONFLICT (a) DO UPDATE SET b = b*2 WHERE b == excluded.b")
+      .head().getLong(0)
+    assert(c == 1) // the filtered conflict (a = 3) is not counted
     assert(rows("SELECT a, b FROM ups_w ORDER BY a") ==
       Seq(Seq(1, 3), Seq(2, 4), Seq(3, 10), Seq(4, 3)))
+  }
+
+  test("DO UPDATE ... WHERE: the count covers updated and inserted rows only") {
+    fresh("ups_cnt", "k INT PRIMARY KEY, v INT")
+    dml("INSERT INTO ups_cnt VALUES (1, 1), (2, 2)")
+    val c = dml("INSERT INTO ups_cnt VALUES (1, 10), (2, 20), (3, 30) " +
+      "ON CONFLICT (k) DO UPDATE SET v = excluded.v WHERE excluded.v > 15").head().getLong(0)
+    assert(c == 2)
+    assert(rows("SELECT k, v FROM ups_cnt ORDER BY k") == Seq(Seq(1, 1), Seq(2, 20), Seq(3, 30)))
   }
 
   test("shorthand: OR IGNORE / OR REPLACE; mixing with ON CONFLICT errors") {
