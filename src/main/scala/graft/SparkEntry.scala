@@ -3,11 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query contract (SURVEY.md §7).
   *
   * Every implemented operator from SURVEY §2 appears here as a named query
-  * (Spark side) plus, where the semantics are SQL-expressible, a DuckDB
-  * oracle SQL run by the driver on the same parquet tables.
+  * over the fixture tables. Most queries are their DuckDB oracle text run
+  * through the engine's front door (graft.engine.Sql); the oracle gate
+  * (`graft.Verify` + `tools/check.py`) runs the same text on DuckDB over
+  * the same parquet files. A query the text
+  * cannot express as well keeps a hand-built body (`builtQueries`), and
+  * approximate operators have no oracle (rows-only check).
   */
 object SparkEntry {
 
@@ -36,4 +40,8 @@ object SparkEntry {
     * approximate ops (driver records a rows-only check).
     */
   def oracleSql: Map[String, String] = packs.flatMap(_.oracle).toMap
+
+  /** Oracle-gated queries that run a hand-built body instead of their
+    * oracle text (see [[graft.queries.Pack]]). */
+  def builtQueries: Set[String] = packs.flatMap(_.builtNames).toSet
 }

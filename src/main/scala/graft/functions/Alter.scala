@@ -77,8 +77,7 @@ object Alter {
     // column-ALTER targets — a table named in ALTER TABLE is excluded
     // from view folding.
     locally {
-      val tt = try spark.catalog.getTable(Dml.unq(table.split('.').last)).tableType
-               catch { case _: Throwable => "MANAGED" }
+      val tt = Dml.tableType(spark, table).getOrElse("MANAGED")
       val isRenameTable =
         """(?is)^RENAME\s+TO\b""".r.findFirstIn(action).isDefined
       if ((tt == "VIEW" || tt == "TEMPORARY") && !isRenameTable)
@@ -133,8 +132,7 @@ object Alter {
       throw new IllegalArgumentException(
         s"Catalog Error: View with name $bare does not exist!")
     }
-    val tt = try spark.catalog.getTable(bare).tableType
-             catch { case _: Throwable => "MANAGED" }
+    val tt = Dml.tableType(spark, view).getOrElse("MANAGED")
     if (tt != "VIEW" && tt != "TEMPORARY")
       throw new IllegalArgumentException(
         s"Binder Error: Existing object $bare is of type Table, not View — use ALTER TABLE")

@@ -251,7 +251,7 @@ object Dml {
     tableType(spark, table).contains("TEMPORARY")
 
   /** Catalog type of the bare name's entry; None when there is none. */
-  private def tableType(spark: SparkSession, table: String): Option[String] =
+  private[functions] def tableType(spark: SparkSession, table: String): Option[String] =
     try Some(spark.catalog.getTable(q(unq(table.split('.').last))).tableType)
     catch {
       case e: AnalysisException if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => None

@@ -29,9 +29,6 @@ object Geo {
   def stDistance(a: Column, b: Column): Column =
     sqrt(pow(stX(a) - stX(b), 2) + pow(stY(a) - stY(b), 2))
 
-  def stDWithin(a: Column, b: Column, d: Column): Column =
-    stDistance(a, b) <= d
-
   /** Shoelace area of a closed ring (absolute value, planar). */
   def stArea(ring: Column): Column =
     abs(aggregate(

@@ -32,24 +32,7 @@ object Aggregates extends Pack {
        |FROM lineitem
        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
        |GROUP BY l_returnflag, l_linestatus
-       |ORDER BY l_returnflag, l_linestatus""") { (s, dir) =>
-    val priceC = fx(col("l_extendedprice"), 2)
-    val discC = lit(100) - fx(col("l_discount"), 2)
-    val taxC = lit(100) + fx(col("l_tax"), 2)
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") <= ts("1998-09-02"))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        fsum(col("l_quantity"), 2).as("sum_qty"),
-        fsum(col("l_extendedprice"), 2).as("sum_base_price"),
-        (sum(priceC * discC).cast("double") / 10000.0).as("sum_disc_price"),
-        (sum(priceC * discC * taxC).cast("double") / 1000000.0).as("sum_charge"),
-        favg(col("l_quantity"), 2).as("avg_qty"),
-        favg(col("l_extendedprice"), 2).as("avg_price"),
-        favg(col("l_discount"), 2).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
+       |ORDER BY l_returnflag, l_linestatus""")
 
   // TPC-H Q6 shape (reference q06.sql): pure filter + ungrouped sum —
   // the forecast-revenue microbenchmark. All three filters push to the
@@ -60,26 +43,14 @@ object Aggregates extends Pack {
        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
        |  AND l_shipdate < TIMESTAMP '1998-01-01'
        |  AND l_discount BETWEEN 0.05 AND 0.07
-       |  AND l_quantity < 24""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01")
-        && col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-      .agg((sum(fx(col("l_extendedprice"), 2) * fx(col("l_discount"), 2))
-        .cast("double") / 10000.0).as("revenue"))
-  }
+       |  AND l_quantity < 24""")
 
   // global (ungrouped) aggregate — reference physical_ungrouped_aggregate.cpp
   q("q_agg_global",
     s"""SELECT count(*) AS n, ${dsumSql("l_quantity")} AS total_qty,
        |  min(l_shipdate) AS first_ship, max(l_shipdate) AS last_ship,
        |  min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-       |FROM lineitem""") { (s, dir) =>
-    Tables.lineitem(s, dir).agg(
-      count(lit(1)).as("n"),
-      dsum(col("l_quantity")).as("total_qty"),
-      min("l_shipdate").as("first_ship"), max("l_shipdate").as("last_ship"),
-      min("l_extendedprice").as("min_price"), max("l_extendedprice").as("max_price"))
-  }
+       |FROM lineitem""")
 
   // DISTINCT aggregates (reference distinct_aggregate_data.cpp)
   // Multiple DISTINCT aggregates: Spark's native plan Expands the fact
@@ -89,7 +60,7 @@ object Aggregates extends Pack {
   // one column-pruned branch per DISTINCT (map-side dedup shrinks each
   // shuffle below the Expand volume), joined on the tiny group key —
   // ~1.5x faster at sf0.1 and strictly less shuffle I/O at scale.
-  q("q_agg_distinct",
+  built("q_agg_distinct",
     """SELECT l_returnflag,
       |  count(DISTINCT l_suppkey) AS n_supp,
       |  count(DISTINCT l_partkey) AS n_part,
@@ -123,18 +94,10 @@ object Aggregates extends Pack {
        |  count(*) FILTER (WHERE o_totalprice > 200000) AS n_big,
        |  ${dsumSql("o_totalprice")} AS total,
        |  count(*) FILTER (WHERE year(o_orderdate) = 1997) AS n_1997
-       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .groupBy("o_orderstatus")
-      .agg(
-        count(when(col("o_totalprice") > 200000, 1)).as("n_big"),
-        dsum(col("o_totalprice")).as("total"),
-        count(when(year(col("o_orderdate")) === 1997, 1)).as("n_1997"))
-      .orderBy("o_orderstatus")
-  }
+       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""")
 
   // GROUPING SETS + GROUPING() disambiguation (reference bind_select_node.cpp:547)
-  q("q_grouping_sets",
+  built("q_grouping_sets",
     s"""SELECT l_returnflag, l_linestatus,
        |  GROUPING(l_returnflag) AS g_rf, GROUPING(l_linestatus) AS g_ls,
        |  ${fsumSql("l_quantity", 2)} AS sum_qty
@@ -167,14 +130,7 @@ object Aggregates extends Pack {
        |  GROUPING(l_returnflag) AS g_rf, GROUPING(l_linestatus) AS g_ls,
        |  count(*) AS n
        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-       |ORDER BY g_rf, g_ls, l_returnflag NULLS LAST, l_linestatus NULLS LAST""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .cube("l_returnflag", "l_linestatus")
-      .agg(grouping("l_returnflag").as("g_rf"), grouping("l_linestatus").as("g_ls"),
-        count(lit(1)).as("n"))
-      .orderBy(col("g_rf"), col("g_ls"),
-        col("l_returnflag").asc_nulls_last, col("l_linestatus").asc_nulls_last)
-  }
+       |ORDER BY g_rf, g_ls, l_returnflag NULLS LAST, l_linestatus NULLS LAST""")
 
   // ROLLUP
   q("q_rollup",
@@ -182,24 +138,12 @@ object Aggregates extends Pack {
        |  GROUPING(o_orderstatus) AS g_st, GROUPING(o_orderpriority) AS g_pr,
        |  ${dsumSql("o_totalprice")} AS total
        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-       |ORDER BY g_st, g_pr, o_orderstatus NULLS LAST, o_orderpriority NULLS LAST""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .rollup("o_orderstatus", "o_orderpriority")
-      .agg(grouping("o_orderstatus").as("g_st"), grouping("o_orderpriority").as("g_pr"),
-        dsum(col("o_totalprice")).as("total"))
-      .orderBy(col("g_st"), col("g_pr"),
-        col("o_orderstatus").asc_nulls_last, col("o_orderpriority").asc_nulls_last)
-  }
+       |ORDER BY g_st, g_pr, o_orderstatus NULLS LAST, o_orderpriority NULLS LAST""")
 
   // DISTINCT (reference plan_distinct.cpp)
   q("q_distinct",
     """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-      |ORDER BY l_returnflag, l_linestatus""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .select("l_returnflag", "l_linestatus")
-      .distinct()
-      .orderBy("l_returnflag", "l_linestatus")
-  }
+      |ORDER BY l_returnflag, l_linestatus""")
 
   // DISTINCT ON with ORDER BY — exact reference semantics (first row per key
   // by the ORDER BY) via row_number()=1 rewrite (SURVEY §2.4)
@@ -209,18 +153,10 @@ object Aggregates extends Pack {
       |    row_number() OVER (PARTITION BY o_custkey
       |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
       |  FROM orders) WHERE rn = 1
-      |ORDER BY o_custkey""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(s, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("o_custkey", "o_orderkey", "o_totalprice")
-      .orderBy("o_custkey")
-  }
+      |ORDER BY o_custkey""")
 
   // string_agg / listagg w/ ORDER BY (reference sorted_aggregate_function.cpp)
-  q("q_string_agg",
+  built("q_string_agg",
     """SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS names
       |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""") { (s, dir) =>
     Tables.nation(s, dir)
@@ -232,7 +168,7 @@ object Aggregates extends Pack {
   // list/array_agg with ORDER BY
   // list() output serialized to a ','-joined string: the driver's checker
   // can't sort rows on array-typed cells.
-  q("q_list_agg",
+  built("q_list_agg",
     """SELECT l_orderkey,
       |  array_to_string(list(l_linenumber ORDER BY l_linenumber), ',') AS lines
       |FROM lineitem WHERE l_orderkey < 100 GROUP BY l_orderkey ORDER BY l_orderkey""") { (s, dir) =>
@@ -250,15 +186,7 @@ object Aggregates extends Pack {
       |  arg_max(o_orderkey, o_totalprice) AS best_order,
       |  arg_min(o_orderkey, o_totalprice) AS worst_order,
       |  max(o_totalprice) AS best_price
-      |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .groupBy("o_orderstatus")
-      .agg(
-        max_by(col("o_orderkey"), col("o_totalprice")).as("best_order"),
-        min_by(col("o_orderkey"), col("o_totalprice")).as("worst_order"),
-        max(col("o_totalprice")).as("best_price"))
-      .orderBy("o_orderstatus")
-  }
+      |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""")
 
   // bool_and/bool_or/count_if (reference distributive/*.cpp)
   q("q_bool_agg",
@@ -266,30 +194,14 @@ object Aggregates extends Pack {
       |  bool_and(l_quantity > 0) AS all_pos,
       |  bool_or(l_discount > 0.09) AS any_big_disc,
       |  CAST(count_if(l_tax = 0) AS BIGINT) AS n_no_tax
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy("l_returnflag")
-      .agg(
-        bool_and(col("l_quantity") > 0).as("all_pos"),
-        bool_or(col("l_discount") > 0.09).as("any_big_disc"),
-        count_if(col("l_tax") === 0).as("n_no_tax"))
-      .orderBy("l_returnflag")
-  }
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // bit_and/bit_or/bit_xor
   q("q_bit_agg",
     """SELECT l_returnflag,
       |  bit_and(l_linenumber) AS band, bit_or(l_linenumber) AS bor,
       |  bit_xor(l_linenumber) AS bxor
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy("l_returnflag")
-      .agg(
-        bit_and(col("l_linenumber")).as("band"),
-        bit_or(col("l_linenumber")).as("bor"),
-        bit_xor(col("l_linenumber")).as("bxor"))
-      .orderBy("l_returnflag")
-  }
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // statistical aggregates (reference algebraic/*.cpp) — rounded: stddev etc.
   // are not exactly associative, so cross-engine bit-equality needs a tolerance
@@ -300,16 +212,7 @@ object Aggregates extends Pack {
       |  round(var_pop(l_quantity), 6) AS var_qty,
       |  round(corr(l_quantity, l_extendedprice), 6) AS corr_qe,
       |  round(covar_samp(l_quantity, l_extendedprice), 4) AS covar_qe
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy("l_returnflag")
-      .agg(
-        round(stddev_samp(col("l_quantity")), 6).as("sd_qty"),
-        round(var_pop(col("l_quantity")), 6).as("var_qty"),
-        round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qe"),
-        round(covar_samp(col("l_quantity"), col("l_extendedprice")), 4).as("covar_qe"))
-      .orderBy("l_returnflag")
-  }
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // skewness / kurtosis — the reference uses raw power sums with sample
   // bias corrections (skew.cpp:74-77, kurtosis.cpp G2 branch), which is NOT
@@ -319,32 +222,7 @@ object Aggregates extends Pack {
     """SELECT l_returnflag,
       |  round(skewness(l_quantity), 6) AS skew_qty,
       |  round(kurtosis(l_quantity), 6) AS kurt_qty
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    val x = col("l_quantity")
-    val sums = Tables.lineitem(s, dir)
-      .groupBy("l_returnflag")
-      .agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(x.cast(S)).cast("double").as("s1"),
-        sum((x * x).cast(S)).cast("double").as("s2"),
-        sum((x * x * x).cast(S)).cast("double").as("s3"),
-        sum((x * x * x * x).cast(S)).cast("double").as("s4"))
-    val n = col("n"); val s1 = col("s1"); val s2 = col("s2")
-    val s3 = col("s3"); val s4 = col("s4")
-    val temp = lit(1.0) / n
-    val rawM2 = s2 - s1 * s1 * temp
-    val variance = temp * rawM2
-    val skew = sqrt(n * (n - 1)) / (n - 2) * temp *
-      (s3 - lit(3) * s2 * s1 * temp + lit(2) * pow(s1, 3) * temp * temp) /
-      sqrt(pow(variance, 3))
-    val m4 = temp * (s4 - lit(4) * s3 * s1 * temp +
-      lit(6) * s2 * s1 * s1 * temp * temp - lit(3) * pow(s1, 4) * pow(temp, 3))
-    val kurt = (n - 1) * ((n + 1) * m4 / (variance * variance) - lit(3) * (n - 1)) /
-      ((n - 2) * (n - 3))
-    sums.select(col("l_returnflag"),
-        round(skew, 6).as("skew_qty"), round(kurt, 6).as("kurt_qty"))
-      .orderBy("l_returnflag")
-  }
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // regression aggregates (reference regression/*.cpp → Spark regr_*)
   q("q_regr_agg",
@@ -353,16 +231,7 @@ object Aggregates extends Pack {
       |  round(regr_intercept(o_totalprice, o_custkey), 4) AS icept,
       |  round(regr_r2(o_totalprice, o_custkey), 6) AS r2,
       |  regr_count(o_totalprice, o_custkey) AS n
-      |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .groupBy("o_orderstatus")
-      .agg(
-        round(regr_slope(col("o_totalprice"), col("o_custkey")), 6).as("slope"),
-        round(regr_intercept(col("o_totalprice"), col("o_custkey")), 4).as("icept"),
-        round(regr_r2(col("o_totalprice"), col("o_custkey")), 6).as("r2"),
-        regr_count(col("o_totalprice"), col("o_custkey")).as("n"))
-      .orderBy("o_orderstatus")
-  }
+      |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""")
 
   // ordered-set / holistic: median, quantiles (reference holistic/*.cpp)
   q("q_quantiles",
@@ -371,26 +240,12 @@ object Aggregates extends Pack {
       |  quantile_cont(l_quantity, 0.25) AS q25,
       |  quantile_cont(l_quantity, 0.75) AS q75,
       |  quantile_disc(l_quantity, 0.5) AS med_disc
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(
-      """SELECT l_returnflag,
-        |  median(l_quantity) AS med_qty,
-        |  percentile_cont(0.25) WITHIN GROUP (ORDER BY l_quantity) AS q25,
-        |  percentile_cont(0.75) WITHIN GROUP (ORDER BY l_quantity) AS q75,
-        |  percentile_disc(0.5) WITHIN GROUP (ORDER BY l_quantity) AS med_disc
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-  }
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // mode (reference holistic/mode.cpp)
   q("q_mode",
     """SELECT l_returnflag, mode(l_linenumber) AS mode_line
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy("l_returnflag")
-      .agg(mode(col("l_linenumber")).as("mode_line"))
-      .orderBy("l_returnflag")
-  }
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // approx_count_distinct (HLL — reference hyperloglog.cpp): sketches differ
   // across engines by design → rows-only check; exactness covered by
@@ -406,39 +261,18 @@ object Aggregates extends Pack {
   // result is deterministic: top-k frequent event types.
   q("q_top_k_frequent",
     """SELECT event_type, count(*) AS n FROM events
-      |GROUP BY event_type ORDER BY n DESC, event_type LIMIT 3""") { (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("event_type"))
-      .limit(3)
-  }
+      |GROUP BY event_type ORDER BY n DESC, event_type LIMIT 3""")
 
   // histogram (reference nested/histogram.cpp) — binned variant as rows
   // (map-typed results hash differently across engines; the row form is the
   // scale-friendly shape anyway)
   q("q_histogram",
     s"""SELECT CAST(floor(l_quantity / 10) AS BIGINT) AS bucket, count(*) AS n
-       |FROM lineitem GROUP BY 1 ORDER BY bucket""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy(floor(col("l_quantity") / 10).cast("bigint").as("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("bucket")
-  }
+       |FROM lineitem GROUP BY 1 ORDER BY bucket""")
 
   // entropy (reference distributive/entropy.cpp) — no native Spark; computed
   // as -Σ p·log2(p) over group counts (two-level aggregation, still one shuffle)
   q("q_entropy",
     """SELECT l_returnflag, round(entropy(l_linenumber), 6) AS ent
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val counts = Tables.lineitem(s, dir)
-      .groupBy("l_returnflag", "l_linenumber")
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("total", sum(col("cnt")).over(Window.partitionBy("l_returnflag")))
-    counts
-      .groupBy("l_returnflag")
-      .agg(round(-sum((col("cnt") / col("total")) * log2(col("cnt") / col("total"))), 6).as("ent"))
-      .orderBy("l_returnflag")
-  }
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 }

@@ -23,7 +23,7 @@ object CatalogOps extends Pack {
   // COPY (query) TO parquet → read the files back through the SQL
   // file-relation surface (FileTables) — the statement-level spelling of
   // the §2.1 COPY roundtrips; oracle = the same query over the base table
-  q("q_copy_roundtrip",
+  built("q_copy_roundtrip",
     """SELECT o_orderpriority AS pri, count(*) AS n, CAST(sum(o_orderkey) AS BIGINT) AS sp
       |FROM orders WHERE o_custkey % 7 = 0
       |GROUP BY o_orderpriority ORDER BY pri""") { (s, dir) =>
@@ -38,7 +38,7 @@ object CatalogOps extends Pack {
          |GROUP BY o_orderpriority ORDER BY pri""".stripMargin)
   }
 
-  q("q_attach_query",
+  built("q_attach_query",
     """SELECT n.n_name AS name, count(*) AS custs
       |FROM nation n JOIN customer c ON n.n_nationkey = c.c_nationkey
       |GROUP BY n.n_name ORDER BY name""") { (s, dir) =>
@@ -51,7 +51,7 @@ object CatalogOps extends Pack {
             |GROUP BY n.n_name ORDER BY name""".stripMargin)
   }
 
-  q("q_export_roundtrip",
+  built("q_export_roundtrip",
     """SELECT n_nationkey AS k, n_name AS name, n_regionkey AS rk
       |FROM nation ORDER BY k""") { (s, dir) =>
     Tables.registerAll(s, dir)

@@ -9,7 +9,11 @@ import graft.engine.Tables
   * re-created as a deterministic derived projection of `events`
   * (WatchID/UserID/URL/SearchPhrase/... below); every derivation is
   * pure integer/string arithmetic so the DuckDB oracle computes the
-  * exact same values and each query is gated oracle-exact.
+  * exact same values and each query is gated oracle-exact. Each query is
+  * one text, a WITH defining `hits` over `events` and then the query,
+  * which the engine's front door runs as is. q_cb28 alone keeps a
+  * hand-built body (its `'\1'` backreference reads differently in
+  * Spark's string literals).
   *
   * Paraphrase liberties, applied identically on both engines:
   *  - constants (UserID = 435090932899640449, CounterID = 62, the 2013
@@ -35,9 +39,9 @@ import graft.engine.Tables
   */
 object ClickBench extends Pack {
 
-  /** hits columns as (shared) SQL over events; `@JSON@` is the dialect
-    * hole: get_json_object (Spark) vs json_extract (DuckDB), both
-    * yielding the BIGINT `$.k` property.
+  /** hits columns as SQL over events; `@JSON@` is the JSON accessor:
+    * json_extract in the query text, get_json_object in q_cb28's
+    * hand-built view, both yielding the BIGINT `$.k` property.
     */
   private val K = "CAST(@JSON@(props, '$.k') AS BIGINT)"
   private val hitsCols: Seq[String] = Seq(
@@ -70,8 +74,8 @@ object ClickBench extends Pack {
     "((event_id * 37) % 256) AS URLHash",
     "((event_id * 37 + 11) % 8) AS RefererHash")
 
-  /** Spark-side hits: derived projection over the events scan. */
-  def hits(s: SparkSession, dir: String): DataFrame =
+  /** hits as a DataFrame over the events scan, for q_cb28's body. */
+  private def hits(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).selectExpr(
       hitsCols.map(_.replace("@JSON@", "get_json_object")): _*)
 
@@ -79,16 +83,10 @@ object ClickBench extends Pack {
     "SELECT " + hitsCols.map(_.replace("@JSON@", "json_extract"))
       .mkString(", ") + " FROM events"
 
-  /** Register one ClickBench shape: `body` is engine-shared SQL over a
-    * relation named `hits`. Spark runs it over a dir-keyed temp view of
-    * the derived projection; the oracle wraps it in a WITH over events.
-    */
+  /** Register one ClickBench shape: `body` is SQL over a relation named
+    * `hits`, which a WITH over events defines. */
   private def cb(name: String)(body: String): Unit =
-    q(name, s"WITH hits AS ($hitsCte)\n${body.stripMargin.trim}") { (s, dir) =>
-      val view = s"cb_hits_${Integer.toHexString(dir.hashCode).replace('-', 'm')}"
-      hits(s, dir).createOrReplaceTempView(view)
-      s.sql(body.stripMargin.trim.replace("FROM hits", s"FROM $view"))
-    }
+    q(name, s"WITH hits AS ($hitsCte)\n${body.stripMargin.trim}")
 
   private val avgWidth = "(CAST(SUM(ResolutionWidth) AS DOUBLE) / COUNT(*))"
 
@@ -276,14 +274,15 @@ object ClickBench extends Pack {
       |  AND DontCountHits = 0
       |GROUP BY M ORDER BY M LIMIT 10 OFFSET 5""")
 
-  // q28's regexp differs per dialect (backreference spelling: \1 vs $1)
-  // — registered directly, not through cb()
+  // q28 keeps a hand-built body: Spark unescapes backslashes in string
+  // literals, so the text's '\1' would reach REGEXP_REPLACE as "1"
+  // (DuckDB keeps the backslash); the body doubles it.
   private val q28Tail =
     """, (CAST(SUM(length(Referer)) AS DOUBLE) / COUNT(*)) AS l,
       |  CAST(COUNT(*) AS BIGINT) AS c, MIN(Referer) AS mr
       |FROM hits WHERE Referer <> '' GROUP BY k
       |HAVING COUNT(*) > 60 ORDER BY l DESC, k LIMIT 25""".stripMargin
-  q("q_cb28",
+  built("q_cb28",
     s"""WITH hits AS ($hitsCte)
        |SELECT REGEXP_REPLACE(Referer,
        |  '^https?://(?:www\\.)?([^/]+)/.*$$', '\\1') AS k$q28Tail""") {

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import Q._
@@ -24,7 +23,7 @@ object Conformance extends Pack {
   // native inequality join; graft.operators.RangeJoin restores a banded
   // shuffle plan — neither side broadcasts, band-parallel NLJ — with the
   // second inequality as the in-band residual.
-  q("q_join_iejoin",
+  built("q_join_iejoin",
     """SELECT a.s_suppkey, count(*) AS n_dominated
       |FROM supplier a JOIN supplier b
       |  ON a.s_acctbal < b.s_acctbal AND a.s_nationkey > b.s_nationkey
@@ -46,7 +45,7 @@ object Conformance extends Pack {
   // DECIMAL sum keeps both engines order-independent (see Q). The global
   // ORDER BY frame runs chunk-parallel (graft.operators.ChunkedWindow) —
   // a bare Window.orderBy would single-task the whole table.
-  q("q_window_exclude",
+  built("q_window_exclude",
     """SELECT s_suppkey,
       |  CAST(sum(CAST(s_acctbal AS DECIMAL(18,6)))
       |    OVER (ORDER BY s_suppkey ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING
@@ -63,7 +62,7 @@ object Conformance extends Pack {
   // Spark rejects count(DISTINCT) OVER; rewrite as the cardinality of the
   // de-duplicated collected frame (exact, frame-local memory only). Global
   // order frame → ChunkedWindow, same as q_window_exclude.
-  q("q_window_distinct_count",
+  built("q_window_distinct_count",
     """SELECT s_suppkey,
       |  count(DISTINCT s_nationkey)
       |    OVER (ORDER BY s_suppkey ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
@@ -79,7 +78,7 @@ object Conformance extends Pack {
   // ---- §2.6: LIMIT PERCENT (physical_limit_percent.cpp) ------------------
   // No native percent-limit; the count is one cheap job, then the ordered
   // prefix — same two-phase plan DuckDB runs internally.
-  q("q_limit_percent",
+  built("q_limit_percent",
     """SELECT o_orderkey, o_totalprice FROM orders
       |ORDER BY o_orderkey LIMIT 1%""") { (s, dir) =>
     val o = Tables.orders(s, dir)
@@ -97,18 +96,10 @@ object Conformance extends Pack {
   q("q_sample_reservoir",
     """SELECT o_orderkey, o_totalprice FROM orders
       |ORDER BY (o_orderkey % 100000007 * 2654435761) % 4294967296, o_orderkey
-      |LIMIT 100""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .orderBy((col("o_orderkey") % 100000007L * 2654435761L) % 4294967296L,
-        col("o_orderkey"))
-      .limit(100)
-      .select("o_orderkey", "o_totalprice")
-  }
+      |LIMIT 100""")
 
   // ---- §2.4: remaining aggregates ---------------------------------------
   // count_if / any_value / median / mad / product in one grouped pass.
-  // mad = median(abs(x - median(x))): the inner median is a same-key
-  // window so both aggregations share one shuffle partitioning.
   // product stays exact: integral doubles < 2^53 multiply associatively.
   q("q_agg_misc",
     """SELECT n_regionkey,
@@ -117,18 +108,7 @@ object Conformance extends Pack {
       |  median(n_nationkey) AS med,
       |  mad(n_nationkey) AS mad_v,
       |  product(CAST(n_nationkey + 1 AS DOUBLE)) AS prod
-      |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""") { (s, dir) =>
-    Tables.nation(s, dir)
-      .withColumn("med_w", expr("median(n_nationkey) OVER (PARTITION BY n_regionkey)"))
-      .groupBy("n_regionkey")
-      .agg(
-        expr("count_if(n_nationkey % 2 = 0)").cast("bigint").as("n_even"),
-        any_value(col("n_regionkey")).as("rk"),
-        median(col("n_nationkey")).as("med"),
-        median(abs(col("n_nationkey") - col("med_w"))).as("mad_v"),
-        expr("aggregate(collect_list(CAST(n_nationkey + 1 AS DOUBLE)), CAST(1.0 AS DOUBLE), (acc, v) -> acc * v)").as("prod"))
-      .orderBy("n_regionkey")
-  }
+      |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""")
 
   // ---- §2.8: string/unicode/path/format gaps -----------------------------
   // strip_accents + nfc_normalize are custom Catalyst expressions
@@ -137,7 +117,7 @@ object Conformance extends Pack {
   // parse_filename/dirpath/path rebuild the reference's path splitting
   // from split/filter/regexp primitives. (url_encode/uuidv7 are absent
   // from the reference build — no parity target.)
-  q("q_fn_string2",
+  built("q_fn_string2",
     """SELECT s_suppkey,
       |  strip_accents(s_name) AS plain,
       |  nfc_normalize(s_name) AS nfc,
@@ -168,7 +148,7 @@ object Conformance extends Pack {
   // ---- §2.6: case-insensitive collation ordering -------------------------
   // reference collation_binding.cpp (NOCASE) ↔ Spark 4 UTF8_LCASE
   // collation; tie-broken on the key so both engines produce one order.
-  q("q_orderby_collate",
+  built("q_orderby_collate",
     """SELECT CASE WHEN n_nationkey % 2 = 0 THEN lower(n_name) ELSE n_name END AS mixed,
       |  n_nationkey
       |FROM nation
@@ -197,28 +177,14 @@ object Conformance extends Pack {
       |         n_nationkey
       |  FROM nation)
       |SELECT nm, n_nationkey, rank() OVER (ORDER BY nm COLLATE de) AS r
-      |FROM t ORDER BY n_nationkey""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    // global-order rank is safe here at any SF: nation is a fixed 25-row
-    // dimension. A full-table collated rank would route through
-    // operators.ChunkedWindow instead.
-    Tables.nation(s, dir)
-      .select(
-        when(col("n_nationkey") % 3 === 0,
-            translate(col("n_name"), "AEOU", "ÄÉÖÜ"))
-          .when(col("n_nationkey") % 3 === 1, lower(col("n_name")))
-          .otherwise(col("n_name")).as("nm"),
-        col("n_nationkey"))
-      .withColumn("r", rank().over(Window.orderBy(expr("collate(nm, 'de')"))))
-      .orderBy("n_nationkey")
-  }
+      |FROM t ORDER BY n_nationkey""")
 
   // Accent+case-insensitive equality: Spark UNICODE_CI_AI (ICU primary
   // strength) ↔ duckdb NOACCENT.NOCASE (strip-accents then fold). Counts
   // per nation how many supplier names match the accent-mangled lowercase
   // variant of themselves — equality survives both transforms on both
   // engines, so each name matches itself exactly once.
-  q("q_collate_accent_ci",
+  built("q_collate_accent_ci",
     """WITH t AS (
       |  SELECT s_suppkey, s_name,
       |         translate(lower(s_name), 'aeou', 'äéöü') AS mangled
@@ -236,7 +202,7 @@ object Conformance extends Pack {
   // reference distributive/bitstring_agg.cpp: set-bit positions over a
   // bounded int domain. Spark rebuild: '1'/'0' per domain position from
   // the collected distinct set (rendered as VARCHAR both sides).
-  q("q_bitstring_agg",
+  built("q_bitstring_agg",
     """SELECT n_regionkey, CAST(bitstring_agg(n_nationkey % 8, 0, 7) AS VARCHAR) AS bits
       |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""") { (s, dir) =>
     Tables.nation(s, dir)
@@ -254,7 +220,7 @@ object Conformance extends Pack {
   // co-located buckets and skips BOTH shuffles (PlanSpec asserts the
   // exchange-free join). The oracle runs the plain join — bucketing is a
   // physical layout choice, results are identical.
-  q("q_bucketed_join",
+  built("q_bucketed_join",
     """SELECT o_orderstatus,
       |  count(*) AS n_lines,
       |  CAST(sum(CAST(round(l_quantity*100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_qty
@@ -301,7 +267,7 @@ object Conformance extends Pack {
   // The reference's prepared statements (client_context.cpp:535-579) map
   // to Spark's named-parameter SQL: the statement is planned with
   // placeholders and executed with bound literals.
-  q("q_prepared_params",
+  built("q_prepared_params",
     """SELECT o_orderstatus, count(*) AS n
       |FROM orders WHERE o_totalprice > 400000 AND o_orderstatus = 'F'
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""") { (s, dir) =>
@@ -355,7 +321,7 @@ object Conformance extends Pack {
   }
 
   // ---- §2.1: generate_series over timestamps (interval stepping) ---------
-  q("q_range_timestamps",
+  built("q_range_timestamps",
     """SELECT generate_series AS ts
       |FROM generate_series(TIMESTAMP '1995-01-01', TIMESTAMP '1995-12-01', INTERVAL 1 MONTH)
       |ORDER BY ts""") { (s, _) =>
@@ -370,7 +336,7 @@ object Conformance extends Pack {
   // ILIKE maps to Spark's ilike; SIMILAR TO's implicitly-anchored regex
   // maps to rlike with explicit anchors; GLOB's */? wildcards rewrite to
   // LIKE's %/_ (after escaping LIKE metacharacters — none in this pattern).
-  q("q_fn_patterns",
+  built("q_fn_patterns",
     """SELECT p_partkey,
       |  p_name LIKE '%green%' AS l,
       |  p_name ILIKE '%GREEN%' AS il,
@@ -389,7 +355,7 @@ object Conformance extends Pack {
   // ---- §2.1: whole-file reads (read_text / read_blob) --------------------
   // Engine writes a deterministic single text file then reads it whole;
   // oracle rebuilds the identical content relationally.
-  q("q_read_text",
+  built("q_read_text",
     """SELECT concat(string_agg(n_name, chr(10) ORDER BY n_nationkey), chr(10)) AS value
       |FROM nation""") { (s, dir) =>
     val out = "/tmp/graft_io/nation_text"
@@ -398,7 +364,7 @@ object Conformance extends Pack {
     s.read.option("wholetext", "true").text(out).select("value")
   }
 
-  q("q_read_blob",
+  built("q_read_blob",
     """SELECT octet_length(CAST(concat(string_agg(n_name, chr(10) ORDER BY n_nationkey), chr(10)) AS BLOB)) AS len,
       |  md5(concat(string_agg(n_name, chr(10) ORDER BY n_nationkey), chr(10))) AS digest
       |FROM nation""") { (s, dir) =>
@@ -409,21 +375,15 @@ object Conformance extends Pack {
       .select(col("length").as("len"), md5(col("content")).as("digest"))
   }
 
-  // Dialect sugar parity: GROUP BY ALL / ORDER BY ALL run as the SAME
-  // text on both engines (reference binder sugar, Spark 3.4+ native)
-  private val dialectAllSql =
+  // Dialect sugar parity: GROUP BY ALL / ORDER BY ALL (reference binder
+  // sugar, Spark 3.4+ native)
+  q("q_dialect_group_all",
     """SELECT l_returnflag, l_linestatus, count(*) AS n
-      |FROM lineitem GROUP BY ALL ORDER BY ALL""".stripMargin
-  q("q_dialect_group_all", dialectAllSql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(dialectAllSql)
-  }
+      |FROM lineitem GROUP BY ALL ORDER BY ALL""")
 
   // star-minus-columns projection: the reference spells it `* EXCLUDE
-  // (…)`, Spark `* EXCEPT (…)` — same binder expansion
+  // (…)`, Spark `* EXCEPT (…)`; the front door's dialect pass maps one to
+  // the other
   q("q_select_exclude",
-    """SELECT * EXCLUDE (n_regionkey) FROM nation ORDER BY n_nationkey""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql("SELECT * EXCEPT (n_regionkey) FROM nation ORDER BY n_nationkey")
-  }
+    """SELECT * EXCLUDE (n_regionkey) FROM nation ORDER BY n_nationkey""")
 }

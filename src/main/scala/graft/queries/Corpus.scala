@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import Q._
 
 /** Corpus-preparation operators for LLM training-data pipelines, beyond
   * the dedup/similarity/text-analysis families in Pipeline.scala:
@@ -28,7 +26,7 @@ object Corpus extends Pack {
   // ---- sliding-window chunking: width 16 tokens, stride 12 ---------------
   // chunk count = 1 + ceil((n-16)/12) for n>16 else 1, via integer math
   // (identical both engines; float ceil would invite ulp drift)
-  q("q_text_chunk",
+  built("q_text_chunk",
     """WITH t AS (
       |  SELECT doc_id, string_split_regex(text, '\s+') AS toks
       |  FROM documents WHERE doc_id < 50),
@@ -55,7 +53,7 @@ object Corpus extends Pack {
   }
 
   // ---- corpus vocabulary: token counts, top 50 ---------------------------
-  q("q_text_vocab",
+  built("q_text_vocab",
     """SELECT tok, count(*) AS n FROM (
       |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS tok
       |  FROM documents)
@@ -71,7 +69,7 @@ object Corpus extends Pack {
   }
 
   // ---- per-label embedding centroids (order-independent float sums) ------
-  q("q_embed_centroid",
+  built("q_embed_centroid",
     """SELECT label, i AS pos,
       |  (CAST(sum(CAST(round(CAST(embedding[i+1] AS DOUBLE) * 1000000) AS BIGINT))
       |        AS DOUBLE) / count(*)) / 1000000.0 AS centroid
@@ -96,21 +94,13 @@ object Corpus extends Pack {
       |    row_number() OVER (PARTITION BY source
       |                       ORDER BY (doc_id * 2654435761) % 4294967296, doc_id) AS slot
       |  FROM documents)
-      |WHERE slot <= 5 ORDER BY source, slot""") { (s, dir) =>
-    val w = Window.partitionBy("source")
-      .orderBy((col("doc_id") * 2654435761L) % 4294967296L, col("doc_id"))
-    Tables.documents(s, dir)
-      .select(col("source"), col("doc_id"), row_number().over(w).as("slot"))
-      .filter(col("slot") <= 5)
-      .select("source", "slot", "doc_id")
-      .orderBy("source", "slot")
-  }
+      |WHERE slot <= 5 ORDER BY source, slot""")
 
   // ---- contamination check: normalized-hash semi-join vs a blocklist -----
   // (blocklist = every 25th doc, standing in for a benchmark test set;
   // exact-normalized match is the first pass of decontamination — the
   // n-gram overlap pass is q_dedup_ngram_jaccard's machinery)
-  q("q_contamination",
+  built("q_contamination",
     """WITH block AS (
       |  SELECT DISTINCT md5(lower(trim(text))) AS h
       |  FROM documents WHERE doc_id % 25 = 0)
@@ -148,23 +138,7 @@ object Corpus extends Pack {
       |             / list_max(list_transform(embedding, y -> abs(CAST(y AS DOUBLE))))
       |           + 0.5) AS INTEGER)) END AS q
       |  FROM embeddings)
-      |ORDER BY vec_id""") { (s, dir) =>
-    val dbl = expr("transform(embedding, x -> abs(CAST(x AS DOUBLE)))")
-    val scale = array_max(dbl)
-    val qArr = when(scale === 0, expr("transform(embedding, x -> 0)"))
-      .otherwise(expr(
-        """transform(embedding, x -> CAST(floor(
-          |  CAST(x AS DOUBLE) * 127
-          |    / array_max(transform(embedding, y -> abs(CAST(y AS DOUBLE))))
-          |  + 0.5) AS INT))""".stripMargin))
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), scale.as("scale"), qArr.as("q"))
-      .select(col("vec_id"), col("label"), col("scale"),
-        expr("CAST(aggregate(q, 0L, (a, b) -> a + b) AS BIGINT)").as("q_sum"),
-        expr("CAST(array_min(q) AS INT)").as("q_min"),
-        expr("CAST(array_max(q) AS INT)").as("q_max"))
-      .orderBy("vec_id")
-  }
+      |ORDER BY vec_id""")
 
   // ---- sequence packing: contiguous fill into context windows ------------
   // Docs concatenate per language in doc_id order; a doc lands in the bin
@@ -176,7 +150,7 @@ object Corpus extends Pack {
   // frame — so a 90%-one-language corpus still spreads across every task
   // (PlanSpec asserts >1 task on a single-language input). All arithmetic
   // is exact integers.
-  q("q_pack_sequences",
+  built("q_pack_sequences",
     """WITH t AS (
       |  SELECT lang, doc_id,
       |    len(string_split_regex(lower(text), '\s+')) AS n_tok,

@@ -27,7 +27,7 @@ object Ddl extends Pack {
   // RENAME COLUMN → ADD COLUMN DEFAULT → ALTER TYPE → DROP COLUMN →
   // SET DEFAULT → insert relying on the new default; final contents
   // reproduce declaratively over the untouched fixture
-  q("q_ddl_alter",
+  built("q_ddl_alter",
     """SELECT CAST(k AS BIGINT) AS k, name, CAST(tag AS BIGINT) AS tag FROM (
       |  SELECT n_nationkey AS k, n_name AS name, 7 AS tag FROM nation
       |  UNION ALL SELECT 99, 'zzz_new', 42
@@ -53,7 +53,7 @@ object Ddl extends Pack {
   // VIRTUAL generated column: computed on insert (bulk + defaulted row),
   // recomputed by UPDATE, not directly insertable — final contents match
   // the declarative projection over the fixture
-  q("q_ddl_generated",
+  built("q_ddl_generated",
     """SELECT CAST(k AS BIGINT) AS k, CAST(pop2 AS BIGINT) AS pop2 FROM (
       |  SELECT r_regionkey AS k,
       |         CASE WHEN r_regionkey = 0 THEN (r_regionkey + 10) * 3
@@ -78,7 +78,7 @@ object Ddl extends Pack {
   // FOREIGN KEY: child inserts verify against the parent (the rejected
   // batch writes nothing), parent deletes verify against children —
   // the surviving contents reproduce declaratively
-  q("q_ddl_fk",
+  built("q_ddl_fk",
     """SELECT CAST(n_nationkey AS BIGINT) AS k, CAST(n_regionkey AS BIGINT) AS r
       |FROM nation
       |WHERE n_regionkey IN (SELECT r_regionkey FROM region WHERE r_regionkey <> 4)
@@ -115,7 +115,7 @@ object Ddl extends Pack {
   // DESCRIBE statement: the reference's six-column shape
   // (test_show_select.test) over a scratch table with constraints —
   // null/key/default columns populated from the registry
-  q("q_describe",
+  built("q_describe",
     """SELECT col AS column_name, t AS column_type, n AS "null",
       |       k AS "key", d AS "default"
       |FROM (VALUES ('a', 'INTEGER', 'NO', 'PRI', NULL),
@@ -134,7 +134,7 @@ object Ddl extends Pack {
 
   // catalog introspection TVFs over a scratch table: duckdb_columns()
   // column/type/index rows (reference duckdb_columns.cpp shape)
-  q("q_catalog_tvf",
+  built("q_catalog_tvf",
     """SELECT 'ddl_cat_t' AS table_name, col AS column_name, idx AS column_index, t AS data_type
       |FROM (VALUES ('a', CAST(1 AS INT), 'INTEGER'), ('b', CAST(2 AS INT), 'VARCHAR'), ('c', CAST(3 AS INT), 'DECIMAL(4,2)'))
       |  v(col, idx, t)
@@ -153,7 +153,7 @@ object Ddl extends Pack {
   // join pg_class ⋈ pg_attribute on oid, projected engine-neutral
   // (OIDs themselves are engine-specific). atttypmod carries the
   // DECIMAL precision*1000+scale encoding like the reference view.
-  q("q_pg_catalog",
+  built("q_pg_catalog",
     """SELECT relname, relkind, attname, attnum, attnotnull, atttypmod
       |FROM (VALUES ('ddl_pg_t', 'r', 'a', 1, true, -1),
       |             ('ddl_pg_t', 'r', 'b', 2, false, 6002),

@@ -23,7 +23,7 @@ object DmlQueries extends Pack {
 
   // UPDATE .. FROM (unique-key join) + predicate DELETE, verified against
   // the declarative LEFT JOIN + filter spelling
-  q("q_dml_update_from",
+  built("q_dml_update_from",
     """SELECT c_custkey AS k,
       |       CAST(round((c_acctbal + COALESCE(d.delta, 0.0)) * 100) AS BIGINT) AS balc
       |FROM customer
@@ -47,7 +47,7 @@ object DmlQueries extends Pack {
 
   // MERGE INTO: conditional DELETE + UPDATE + NOT-MATCHED INSERT in one
   // statement, against the declarative outer-join spelling
-  q("q_dml_merge",
+  built("q_dml_merge",
     """WITH src AS (SELECT c_nationkey AS k, CAST(count(*) AS DOUBLE) AS total
       |             FROM customer GROUP BY c_nationkey),
       |     t AS (SELECT n_nationkey AS k, n_name AS name,
@@ -82,7 +82,7 @@ object DmlQueries extends Pack {
   // declarative LEFT JOIN + anti-join spelling. The PK on the scratch
   // view is registered through graft.functions.Constraints, the same
   // registry the SQL DDL path fills.
-  q("q_dml_upsert",
+  built("q_dml_upsert",
     """WITH src AS (SELECT c_nationkey AS k, count(*) AS total
       |             FROM customer GROUP BY c_nationkey),
       |     t AS (SELECT n_nationkey AS k, n_name AS name,
@@ -116,9 +116,5 @@ object DmlQueries extends Pack {
   // the COUNT is exact on both engines' native sampling operators
   q("q_sample_rows",
     """SELECT count(*) AS n
-      |FROM (SELECT * FROM lineitem USING SAMPLE 1000 ROWS (reservoir)) t""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql("""SELECT count(*) AS n
-            |FROM (SELECT * FROM lineitem TABLESAMPLE (1000 ROWS)) t""".stripMargin)
-  }
+      |FROM (SELECT * FROM lineitem USING SAMPLE 1000 ROWS (reservoir)) t""")
 }

@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.engine.{Sql, Tables}
-import graft.functions.{StringFunctions => SF}
-import Q._
 
 /** Scalar-function surface (SURVEY §2.8): string, similarity, math,
   * date/time, json, list/lambda, struct/map, regex, hash, conditional/cast
@@ -32,27 +30,7 @@ object Functions extends Pack {
       |  starts_with(p_name, 'a') AS sw,
       |  contains(p_name, 'ol') AS ct,
       |  translate(p_brand, 'aeiou', '12345') AS tl
-      |FROM part ORDER BY p_partkey""") { (s, dir) =>
-    Tables.part(s, dir).select(
-        col("p_partkey"),
-        upper(col("p_name")).as("up"), lower(col("p_brand")).as("lo"),
-        substring(col("p_name"), 3, 8).as("sub"),
-        expr("replace(p_name, 'a', '@')").as("repl"),
-        reverse(col("p_brand")).as("rev"),
-        substring(col("p_name"), 1, 4).as("l4"),
-        expr("right(p_name, 4)").as("r4"),
-        lpad(col("p_brand"), 12, "*").as("lp"), rpad(col("p_brand"), 12, "*").as("rp"),
-        trim(concat(lit("  "), col("p_brand"), lit(" "))).as("tr"),
-        repeat(col("p_brand"), 2).as("rep"),
-        instr(col("p_name"), "e").as("pos"),
-        ascii(col("p_name")).as("asc_first"),
-        length(col("p_name")).as("len"),
-        concat_ws("|", col("p_brand"), col("p_type")).as("cw"),
-        col("p_name").startsWith("a").as("sw"),
-        col("p_name").contains("ol").as("ct"),
-        translate(col("p_brand"), "aeiou", "12345").as("tl"))
-      .orderBy("p_partkey")
-  }
+      |FROM part ORDER BY p_partkey""")
 
   // ---- similarity metrics (reference jaccard/jaro_winkler/damerau/hamming) --
   q("q_fn_similarity",
@@ -62,17 +40,7 @@ object Functions extends Pack {
       |  CAST(damerau_levenshtein(substr(text, 1, 12), substr(text, 13, 12)) AS BIGINT) AS dl,
       |  round(jaccard(substr(text, 1, 12), substr(text, 13, 12)), 6) AS jac,
       |  CAST(hamming(substr(text, 1, 8), substr(text, 9, 8)) AS BIGINT) AS ham
-      |FROM documents WHERE length(text) >= 24 ORDER BY doc_id""") { (s, dir) =>
-    val d = Tables.documents(s, dir).filter(length(col("text")) >= 24)
-    d.select(
-        col("doc_id"),
-        levenshtein(col("source"), col("lang")).as("lev"),
-        round(SF.jaro_winkler(col("source"), col("lang")), 6).as("jw"),
-        SF.damerau_levenshtein(substring(col("text"), 1, 12), substring(col("text"), 13, 12)).as("dl"),
-        round(SF.jaccard_sim(substring(col("text"), 1, 12), substring(col("text"), 13, 12)), 6).as("jac"),
-        SF.hamming_distance(substring(col("text"), 1, 8), substring(col("text"), 9, 8)).as("ham"))
-      .orderBy("doc_id")
-  }
+      |FROM documents WHERE length(text) >= 24 ORDER BY doc_id""")
 
   // ---- reference-name scalar surface (SQL spellings pinned by the imported
   // sqllogictest corpus; here additionally oracle-gated through the driver) --
@@ -96,28 +64,10 @@ object Functions extends Pack {
       |  round(jaccard(p_name, p_brand), 6) AS jac,
       |  CAST(editdist3(p_brand, p_type) AS BIGINT) AS ed
       |FROM part WHERE p_partkey <= 500 AND length(p_name) >= 8
-      |ORDER BY p_partkey""") { (s, dir) =>
-    graft.engine.EngineSession.configure(s)
-    Tables.part(s, dir)
-      .filter(col("p_partkey") <= 500 && length(col("p_name")) >= 8)
-      .selectExpr("p_partkey",
-        "chr(CAST(35 + p_partkey % 90 AS INT)) AS ch_ascii",
-        "chr(CAST(945 + p_partkey % 25 AS INT)) AS ch_greek",
-        "CAST(unicode(p_name) AS BIGINT) AS uc",
-        "CAST(ord(p_brand) AS BIGINT) AS oc",
-        "to_base(p_partkey, 16) AS b16",
-        "to_base(p_partkey, 2, 12) AS b2",
-        "to_hex(p_partkey + 255) AS th",
-        "prefix(p_name, 'a') AS pre",
-        "suffix(p_name, 'e') AS suf",
-        "CAST(mismatches(substr(p_name, 1, 6), substr(p_name, 3, 6)) AS BIGINT) AS mm",
-        "round(jaccard(p_name, p_brand), 6) AS jac",
-        "CAST(editdist3(p_brand, p_type) AS BIGINT) AS ed")
-      .orderBy("p_partkey")
-  }
+      |ORDER BY p_partkey""")
 
   // ---- math (reference scalar/math) ---------------------------------------
-  q("q_fn_math",
+  built("q_fn_math",
     """SELECT l_orderkey, l_linenumber,
       |  abs(l_quantity - 25) AS a,
       |  CAST(ceil(l_discount * 100) AS BIGINT) AS c, CAST(floor(l_tax * 100) AS BIGINT) AS f,
@@ -190,7 +140,7 @@ object Functions extends Pack {
     !isnan(c) && abs(c) === lit(Double.PositiveInfinity)
 
   // ---- date/time (reference scalar/date, icu ext) --------------------------
-  q("q_fn_datetime",
+  built("q_fn_datetime",
     """SELECT o_orderkey,
       |  year(o_orderdate) AS y, quarter(o_orderdate) AS q,
       |  month(o_orderdate) AS mo, day(o_orderdate) AS d,
@@ -246,24 +196,7 @@ object Functions extends Pack {
       |  CAST(o_orderdate + to_days(45) AS DATE) AS plus45d,
       |  CAST(o_orderdate + to_weeks(3) AS DATE) AS plus3w,
       |  CAST(strptime(strftime(o_orderdate, '%Y-%m-%d'), '%Y-%m-%d') AS DATE) AS roundtrip
-      |FROM orders WHERE o_orderkey < 500 ORDER BY o_orderkey""") { (s, dir) =>
-    graft.engine.EngineSession.configure(s)
-    Tables.orders(s, dir).filter(col("o_orderkey") < 500)
-      .selectExpr("o_orderkey",
-        "decade(o_orderdate) AS dec_",
-        "century(o_orderdate) AS cent",
-        "millennium(o_orderdate) AS mil",
-        "epoch(o_orderdate) AS ep",
-        "isodow(o_orderdate) AS idow",
-        "yearweek(o_orderdate) AS yw",
-        "strftime(o_orderdate, '%Y/%m/%d %a') AS fmt",
-        "CAST(o_orderdate + to_years(2) AS DATE) AS plus2y",
-        "CAST(o_orderdate + to_months(7) AS DATE) AS plus7mo",
-        "CAST(o_orderdate + to_days(45) AS DATE) AS plus45d",
-        "CAST(o_orderdate + to_weeks(3) AS DATE) AS plus3w",
-        "CAST(strptime(strftime(o_orderdate, '%Y-%m-%d'), '%Y-%m-%d') AS DATE) AS roundtrip")
-      .orderBy("o_orderkey")
-  }
+      |FROM orders WHERE o_orderkey < 500 ORDER BY o_orderkey""")
 
   // ---- json (reference extension/json) -------------------------------------
   // even (round away from zero to the next even integer) + nextafter
@@ -275,18 +208,7 @@ object Functions extends Pack {
       |  even(-o_totalprice / 1000.0) AS ev_neg,
       |  nextafter(o_totalprice, 0.0) AS toward_zero,
       |  nextafter(o_totalprice, 1e9) AS toward_inf
-      |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""") { (s, dir) =>
-    // even(x) = sign(x) * 2 * ceil(|x|/2): SQL-expressible on both engines
-    def even(c: org.apache.spark.sql.Column) =
-      (signum(c) * lit(2) * ceil(abs(c) / 2)).cast("double")
-    Tables.orders(s, dir).filter(col("o_orderkey") <= 200)
-      .select(col("o_orderkey"),
-        even(col("o_totalprice") / 1000.0).as("ev"),
-        even(-col("o_totalprice") / 1000.0).as("ev_neg"),
-        expr("nextafter(o_totalprice, 0.0d)").as("toward_zero"),
-        expr("nextafter(o_totalprice, 1e9)").as("toward_inf"))
-      .orderBy("o_orderkey")
-  }
+      |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""")
 
   // json_merge_patch (RFC 7386, custom expression — deletion via null,
   // recursive object merge) + json_transform ↔ Spark's native from_json
@@ -294,7 +216,7 @@ object Functions extends Pack {
   // The transform output is projected to its scalar field (typed_k): the
   // driver's pandas comparator sorts cell values and cannot hash a dict, so
   // a raw struct column can never be oracle-green even when values agree.
-  q("q_fn_json2",
+  built("q_fn_json2",
     """SELECT event_id,
       |  json_merge_patch(CAST(props AS VARCHAR),
       |    CAST('{"extra": 7, "nested": {"a": 1}, "k": null}' AS VARCHAR)) AS patched,
@@ -316,16 +238,7 @@ object Functions extends Pack {
       |  json_valid(props) AS ok,
       |  json_array_length('[1,2,3]') AS alen,
       |  json_extract_string('{"a":{"b":"deep"}}', '$.a.b') AS nested
-      |FROM events WHERE event_id < 200 ORDER BY event_id""") { (s, dir) =>
-    Tables.events(s, dir).filter(col("event_id") < 200).select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").as("k_str"),
-        get_json_object(col("props"), "$.k").cast("bigint").as("k_int"),
-        get_json_object(col("props"), "$").isNotNull.as("ok"),
-        json_array_length(lit("[1,2,3]")).cast("bigint").as("alen"),
-        get_json_object(lit("""{"a":{"b":"deep"}}"""), "$.a.b").as("nested"))
-      .orderBy("event_id")
-  }
+      |FROM events WHERE event_id < 200 ORDER BY event_id""")
 
   // JSON long tail: json_keys (Spark native json_object_keys; path form
   // composes through get_json_object) and json_structure (custom
@@ -345,33 +258,14 @@ object Functions extends Pack {
       |  json_structure('[{"a":1,"b":[1.5]},{"a":-2,"c":"s"},{"b":[2],"a":null}]') AS lstruct,
       |  json_structure('[{"u":1},{"u":18446744073709551615},{"u":-1}]') AS hstruct,
       |  true AS pretty_ok
-      |FROM events WHERE event_id < 100 ORDER BY event_id""") { (s, dir) =>
-    val lj = """{"b":1,"a":{"x":2,"y":[3]},"c":null}"""
-    Tables.events(s, dir).filter(col("event_id") < 100)
-      .select(
-        col("event_id"),
-        array_join(json_object_keys(col("props")), ",").as("pkeys"),
-        expr("json_structure(props)").as("pstruct"),
-        array_join(json_object_keys(lit(lj)), ",").as("lkeys"),
-        array_join(json_object_keys(
-          get_json_object(lit("""{"b":1,"a":{"x":2,"y":[3]}}"""), "$.a")), ",").as("akeys"),
-        expr("""json_structure('[{"a":1,"b":[1.5]},{"a":-2,"c":"s"},{"b":[2],"a":null}]')""")
-          .as("lstruct"),
-        expr("""json_structure('[{"u":1},{"u":18446744073709551615},{"u":-1}]')""")
-          .as("hstruct"),
-        // pretty must round-trip: stripping its added whitespace recovers
-        // a parse-equal document
-        (get_json_object(expr("json_pretty(props)"), "$.k") ===
-          get_json_object(col("props"), "$.k")).as("pretty_ok"))
-      .orderBy("event_id")
-  }
+      |FROM events WHERE event_id < 100 ORDER BY event_id""")
 
   // JSON path wildcards (json_common.cpp GetWildcardPathInternal):
   // `$.*` / `$[*]` paths return a LIST of every match; serialized with
   // array_to_string for the row-sorting comparator. The recursive
   // `$.**` / `$..key` forms postdate the DuckDB-1.0 oracle and are
   // pinned by JsonWildcardSpec instead.
-  q("q_fn_json5",
+  built("q_fn_json5",
     """SELECT event_id,
       |  array_to_string(json_extract(props, '$.*'), ',') AS prop_vals,
       |  array_to_string(json_extract(
@@ -408,7 +302,7 @@ object Functions extends Pack {
   // round-trip + error-document behavior is pinned by ExpressionsSpec,
   // and the oracle-exact row here checks the parts both engines agree
   // on (deserialize∘serialize identity, error flag).
-  q("q_fn_json4",
+  built("q_fn_json4",
     """SELECT event_id,
       |  json_transform(props, '{"k": "BIGINT"}').k AS tk,
       |  json_transform(props, '{"k": "VARCHAR"}').k AS tks,
@@ -445,7 +339,7 @@ object Functions extends Pack {
   // array cells, and float→string formatting differs across engines while
   // round(x·1e5)→BIGINT is bit-identical (float→double cast is exact, both
   // engines round halves away from zero).
-  q("q_fn_list",
+  built("q_fn_list",
     """SELECT vec_id,
       |  len(embedding) AS n,
       |  embedding[1] AS first_el,
@@ -490,7 +384,7 @@ object Functions extends Pack {
 
   // ---- vector math (reference list_cosine_similarity / list_distance /
   //      list_inner_product — graft codegen'd expressions) ------------------
-  q("q_fn_vector",
+  built("q_fn_vector",
     """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
       |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 5) AS cos_sim,
       |  round(list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 5) AS dot,
@@ -510,7 +404,7 @@ object Functions extends Pack {
   }
 
   // ---- struct / map (reference struct_pack/map fns) ------------------------
-  q("q_fn_struct_map",
+  built("q_fn_struct_map",
     """SELECT n_nationkey,
       |  struct_pack(k := n_nationkey, nm := n_name).nm AS s_name,
       |  struct_pack(k := n_nationkey, nm := n_name).k + 100 AS s_key,
@@ -530,7 +424,7 @@ object Functions extends Pack {
 
   // ---- regex (reference scalar/string/regexp.cpp — RE2; Spark uses Java
   //      regex: queries stick to the common dialect subset) -----------------
-  q("q_fn_regex",
+  built("q_fn_regex",
     """SELECT p_partkey,
       |  regexp_matches(p_name, '[0-9]+') AS has_num,
       |  regexp_extract(p_name, '([a-z]+)', 1) AS first_word,
@@ -549,7 +443,7 @@ object Functions extends Pack {
   }
 
   // ---- hash / crypto (reference crypto fns) --------------------------------
-  q("q_fn_hash",
+  built("q_fn_hash",
     """SELECT doc_id,
       |  md5(text) AS m,
       |  sha256(text) AS s2,
@@ -567,7 +461,7 @@ object Functions extends Pack {
 
   // ---- conditional / cast (reference case/cast execs; DuckDB rounds on
   //      double→int cast while Spark ANSI truncates → mirrored w/ round) ----
-  q("q_fn_case_cast",
+  built("q_fn_case_cast",
     """SELECT c_custkey,
       |  CASE WHEN c_acctbal < 0 THEN 'neg' WHEN c_acctbal < 5000 THEN 'mid'
       |       ELSE 'high' END AS bucket,
@@ -605,7 +499,7 @@ object Functions extends Pack {
   // the hash; wall-clock results compare as naive timestamps directly.
   // The o_orderkey%24-hour sweep crosses multiple US DST transitions
   // (1992-1998), pinning the gap/overlap semantics row-by-row.
-  q("q_fn_timezone",
+  built("q_fn_timezone",
     """SELECT o_orderkey AS k,
       |  epoch_us((CAST(o_orderdate AS TIMESTAMP) + INTERVAL (o_orderkey % 24) HOUR)
       |           AT TIME ZONE 'America/Denver') AS denver_us,

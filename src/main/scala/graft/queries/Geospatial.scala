@@ -10,8 +10,9 @@ import graft.functions.Geo
   * planar GEOMETRY type; SURVEY §1.2 scopes this repo to its euclidean
   * subset (points + closed rings, ST_ distance/area/perimeter/centroid/
   * contains/WKT). `graft.functions.Geo` implements the surface with
-  * codegen'd builtins; the oracles spell the identical IEEE arithmetic in
-  * plain SQL so DuckDB verifies without its spatial extension. Every
+  * codegen'd builtins (GeoSpec tests it); the queries spell the identical
+  * IEEE arithmetic in plain SQL so DuckDB verifies without its spatial
+  * extension, and only q_geo_wkt keeps a hand-built body over Geo. Every
   * ST_ op is row-local → embarrassingly parallel at any scale; the only
   * shuffles below are the final per-nation aggregations.
   */
@@ -31,21 +32,7 @@ object Geospatial extends Pack {
        |  CAST(sum(CASE WHEN sqrt((px-50)*(px-50) + (py-45)*(py-45)) <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_within,
        |  min(sqrt((px-50)*(px-50) + (py-45)*(py-45))) AS d_min,
        |  max(sqrt((px-50)*(px-50) + (py-45)*(py-45))) AS d_max
-       |FROM pts GROUP BY c_nationkey ORDER BY c_nationkey""") { (s, dir) =>
-    val center = Geo.stPoint(lit(50.0), lit(45.0))
-    val pts = Tables.customer(s, dir).select(
-      col("c_nationkey"),
-      Geo.stPoint(col("c_custkey") % 97, (col("c_custkey") * 13) % 89).as("p"))
-    pts
-      .withColumn("d", Geo.stDistance(col("p"), center))
-      .groupBy("c_nationkey")
-      .agg(
-        count(lit(1)).as("n_pts"),
-        sum(when(Geo.stDWithin(col("p"), center, lit(30.0)), 1).otherwise(0)).as("n_within"),
-        min(col("d")).as("d_min"),
-        max(col("d")).as("d_max"))
-      .orderBy("c_nationkey")
-  }
+       |FROM pts GROUP BY c_nationkey ORDER BY c_nationkey""")
 
   // ---- ST_Contains: ray-cast over a non-convex (L-shaped) ring -----------
   // The oracle unrolls the identical per-edge crossing test, so boundary
@@ -66,17 +53,7 @@ object Geospatial extends Pack {
        |SELECT c_nationkey,
        |  CAST(sum(CASE WHEN (${edgeSql("px", "py")}) % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
        |  count(*) AS n_total
-       |FROM pts GROUP BY c_nationkey ORDER BY c_nationkey""") { (s, dir) =>
-    val poly = Geo.ringLit(ring)
-    Tables.customer(s, dir)
-      .select(col("c_nationkey"),
-        Geo.stPoint(col("c_custkey") % 97, (col("c_custkey") * 13) % 89).as("p"))
-      .groupBy("c_nationkey")
-      .agg(
-        sum(when(Geo.stContains(poly, col("p")), 1).otherwise(0)).as("n_inside"),
-        count(lit(1)).as("n_total"))
-      .orderBy("c_nationkey")
-  }
+       |FROM pts GROUP BY c_nationkey ORDER BY c_nationkey""")
 
   // ---- ST_Area / ST_Perimeter / ST_Centroid on per-row rings -------------
   // Right triangle (0,0)-(x,0)-(x,y): closed forms are exact in double
@@ -90,23 +67,10 @@ object Geospatial extends Pack {
       |         + CAST(1 + s_suppkey % 7 AS DOUBLE) * CAST(1 + s_suppkey % 7 AS DOUBLE)) AS perim,
       |  2 * CAST(1 + s_suppkey % 10 AS DOUBLE) / 3 AS cx,
       |  CAST(1 + s_suppkey % 7 AS DOUBLE) / 3 AS cy
-      |FROM supplier ORDER BY s_suppkey""") { (s, dir) =>
-    val x = (lit(1) + col("s_suppkey") % 10).cast("double")
-    val y = (lit(1) + col("s_suppkey") % 7).cast("double")
-    val tri = array(
-      Geo.stPoint(lit(0.0), lit(0.0)), Geo.stPoint(x, lit(0.0)),
-      Geo.stPoint(x, y), Geo.stPoint(lit(0.0), lit(0.0)))
-    Tables.supplier(s, dir)
-      .select(col("s_suppkey"),
-        Geo.stArea(tri).as("area"),
-        Geo.stPerimeter(tri).as("perim"),
-        Geo.stX(Geo.stCentroid(tri)).as("cx"),
-        Geo.stY(Geo.stCentroid(tri)).as("cy"))
-      .orderBy("s_suppkey")
-  }
+      |FROM supplier ORDER BY s_suppkey""")
 
   // ---- WKT round-trip ----------------------------------------------------
-  q("q_geo_wkt",
+  built("q_geo_wkt",
     """SELECT n_nationkey,
       |  concat('POINT (', CAST(CAST(n_nationkey * 3 AS DOUBLE) AS VARCHAR), ' ',
       |         CAST(CAST(n_nationkey + 1 AS DOUBLE) AS VARCHAR), ')') AS wkt,

@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.engine.Tables
-
 /** h2o.ai db-benchmark completion — the groupby and join questions the
   * reference ships (`/root/reference/benchmark/h2oai/group/queries/
   * q01-q10.sql`, `join/queries/q01-q05.sql`) not already covered by the
@@ -14,7 +11,9 @@ import graft.engine.Tables
   * same key-cardinality roles (low-card strings, high-card strings,
   * small ints, near-unique ints). Derivations are arithmetic/concat
   * only, so the DuckDB oracle computes identical relations and every
-  * question is gated oracle-exact. Nondeterministic-across-engines
+  * question is gated oracle-exact. Each question is one text, a WITH
+  * defining those tables and then the question, which the engine's front
+  * door runs as is. Nondeterministic-across-engines
   * float aggregates follow the repo conventions: sums/avgs/medians ride
   * exact 2-decimal mantissas, stddev/corr are rounded at 1e-6 (see
   * q_stats_agg).
@@ -50,29 +49,15 @@ object H2o extends Pack {
       "concat('w', CAST(o_orderkey % 97 AS STRING)) AS id6, " +
       "o_totalprice AS v2 FROM orders"
   private val rels = Seq(
-    "x_group" -> ("events", xgroupSql), "x" -> ("events", xSql),
-    "small" -> ("region", smallSql), "medium" -> ("customer", mediumSql),
-    "big" -> ("orders", bigSql))
+    "x_group" -> xgroupSql, "x" -> xSql, "small" -> smallSql,
+    "medium" -> mediumSql, "big" -> bigSql)
 
-  private val cte = rels.map { case (n, (_, s)) => s"$n AS ($s)" }.mkString(", ")
+  private val cte = rels.map { case (n, s) => s"$n AS ($s)" }.mkString(", ")
 
-  private def h2o(name: String)(body: String): Unit = {
-    val trimmed = body.stripMargin.trim
-    q(name, s"WITH $cte\n$trimmed") { (s, dir) =>
-      val suffix = Integer.toHexString(dir.hashCode).replace('-', 'm')
-      for ((n, (base, sql)) <- rels)
-        if (!s.catalog.tableExists(s"h2o_${n}_$suffix")) {
-          Tables.load(s, dir, base)
-            .createOrReplaceTempView(s"h2o_fx_${base}_$suffix")
-          s.sql(sql.replace(s"FROM $base", s"FROM h2o_fx_${base}_$suffix"))
-            .createOrReplaceTempView(s"h2o_${n}_$suffix")
-        }
-      var sql = trimmed
-      for ((n, _) <- rels)
-        sql = sql.replaceAll(s"(?i)\\b$n\\b", s"h2o_${n}_$suffix")
-      s.sql(sql)
-    }
-  }
+  /** Register one h2o question: `body` is SQL over the benchmark's table
+    * names, which a WITH over the fixtures defines. */
+  private def h2o(name: String)(body: String): Unit =
+    q(name, s"WITH $cte\n${body.stripMargin.trim}")
 
   // exact 2-decimal double sum/avg (see Q.fsum; v3 = events.value)
   private def m(e: String) = s"CAST(round(($e) * 100) AS BIGINT)"
@@ -98,25 +83,11 @@ object H2o extends Pack {
   // ---- groupby q06: median + sd per (id4, id5) ---------------------------
   // median rides the exact 2-decimal mantissa: both engines interpolate
   // integer middles, an exact double either way; sd rounds at 1e-6
-  private val q6med = s"(percentile(${m("v3")}, 0.5) / 100.0)"
   q("q_h2o_g06",
     s"""WITH $cte
        |SELECT id4, id5, (quantile_cont(${m("v3")}, 0.5) / 100.0) AS median_v3,
        |  round(stddev(v3), 6) AS sd_v3
-       |FROM x_group GROUP BY id4, id5 ORDER BY id4, id5""") { (s, dir) =>
-    val suffix = Integer.toHexString(dir.hashCode).replace('-', 'm')
-    for ((n, (base, sql)) <- rels)
-      if (!s.catalog.tableExists(s"h2o_${n}_$suffix")) {
-        Tables.load(s, dir, base)
-          .createOrReplaceTempView(s"h2o_fx_${base}_$suffix")
-        s.sql(sql.replace(s"FROM $base", s"FROM h2o_fx_${base}_$suffix"))
-          .createOrReplaceTempView(s"h2o_${n}_$suffix")
-      }
-    s.sql(
-      s"""SELECT id4, id5, $q6med AS median_v3, round(stddev(v3), 6) AS sd_v3
-         |FROM h2o_x_group_$suffix GROUP BY id4, id5 ORDER BY id4, id5"""
-        .stripMargin)
-  }
+       |FROM x_group GROUP BY id4, id5 ORDER BY id4, id5""")
 
   // ---- groupby q09: r² of (v1, v2) per (id2, id4) ------------------------
   // corr spelled explicitly with a NULLIF guard: zero-variance groups

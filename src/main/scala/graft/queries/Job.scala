@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.engine.Tables
-
 /** JOB (Join Order Benchmark) families 1-17 — all 63 variants the
   * reference ships for them (`/root/reference/benchmark/imdb/
   * 01a-17f.benchmark`, query texts under
@@ -14,7 +11,9 @@ import graft.engine.Tables
   * starts from the filtered dims stays small.
   *
   * The IMDB schema is re-created as derived projections of the
-  * fixtures, preserving every join key's role:
+  * fixtures, preserving every join key's role. Each query is one text: a
+  * WITH defining these relations over the fixtures, then the query, run
+  * as is by the engine's front door and by the DuckDB oracle:
   *   title           <- orders   (id, title, production_year, kind_id)
   *   movie_companies <- lineitem (movie_id, company_id, company_type_id, note)
   *   movie_info_idx  <- lineitem (movie_id, info_type_id, info)
@@ -50,7 +49,7 @@ import graft.engine.Tables
   */
 object Job extends Pack {
 
-  /** Derived-relation SQL, dialect-shared between Spark and DuckDB. */
+  /** Derived-relation SQL, the WITH prefix of every JOB query. */
   val rels: Seq[(String, String)] = Seq(
     "title" ->
       ("SELECT o_orderkey AS id, concat('Movie #', CAST(o_orderkey AS STRING)) AS title, " +
@@ -107,39 +106,8 @@ object Job extends Pack {
   private[queries] val cte: String =
     rels.map { case (n, s) => s"$n AS ($s)" }.mkString(", ")
 
-  /** Spark-side: register the derived relations as dir-keyed temp views
-    * once, then run the (shared) query body through Catalyst.
-    */
-  private[queries] def registerViews(s: SparkSession, dir: String): String = {
-    val suffix = Integer.toHexString(dir.hashCode).replace('-', 'm')
-    for ((n, _) <- rels)
-      if (!s.catalog.tableExists(s"job_${n}_$suffix")) {
-        val sql = rels.find(_._1 == n).get._2
-        // base fixture table = first word after FROM (a WHERE may follow)
-        val base = sql.split("FROM ").last.trim.split("\\s+").head
-        Tables.load(s, dir, base).createOrReplaceTempView(s"fx_${base}_$suffix")
-        s.sql(sql.replace(s"FROM $base", s"FROM fx_${base}_$suffix"))
-          .createOrReplaceTempView(s"job_${n}_$suffix")
-      }
-    suffix
-  }
-
-  /** Spark-side runner for a JOB query body: swap each derived-relation
-    * name for its dir-keyed temp view, then hand the text to Catalyst.
-    */
-  private[queries] def run(body: String): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      val suffix = registerViews(s, dir)
-      var sql = body
-      for ((n, _) <- rels)
-        sql = sql.replaceAll(s"(?i)\\b$n AS\\b", s"job_${n}_$suffix AS")
-      s.sql(sql)
-    }
-
-  private def job(name: String)(body: String): Unit = {
-    val trimmed = body.stripMargin.trim
-    q(name, s"WITH $cte\n$trimmed")(run(trimmed))
-  }
+  private def job(name: String)(body: String): Unit =
+    q(name, s"WITH $cte\n${body.stripMargin.trim}")
 
   // ---- family 1: ct ⋈ mc ⋈ t ⋈ mi_idx ⋈ it -------------------------------
   private def f1(name: String, itInfo: String, extra: String): Unit =

@@ -38,10 +38,8 @@ package graft.queries
   */
 object Job2 extends Pack {
 
-  private def job(name: String)(body: String): Unit = {
-    val trimmed = body.stripMargin.trim
-    q(name, s"WITH ${Job.cte}\n$trimmed")(Job.run(trimmed))
-  }
+  private def job(name: String)(body: String): Unit =
+    q(name, s"WITH ${Job.cte}\n${body.stripMargin.trim}")
 
   private val writerNotes =
     "('(role 1)', '(role 2)', '(role 3)', '(role 4)', '(role 5)')"

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 
@@ -226,7 +226,7 @@ object Ldbc extends Pack {
   // bi-1: posting summary — CASE bucketing + conditional shares vs a
   // scalar total (reference bi-1.sql). One scan, one hash agg; the
   // scalar total broadcasts.
-  q("q_ldbc_bi1", g(
+  built("q_ldbc_bi1", g(
     """SELECT CAST(day(m_creationdate) AS BIGINT) AS messageDay,
       |       m_c_replyof IS NOT NULL AS isComment,
       |       CASE WHEN m_length < 120 THEN 0 WHEN m_length < 240 THEN 1
@@ -263,7 +263,7 @@ object Ldbc extends Pack {
   // bi-2: tag evolution — conditional count-DISTINCT windows per tag,
   // |diff| ranking (reference bi-2.sql). message_tag shuffles once on
   // tagid; tag dim broadcasts.
-  q("q_ldbc_bi2", g(
+  built("q_ldbc_bi2", g(
     """SELECT t_name AS tag_name,
       |  count(DISTINCT CASE WHEN day(m_creationdate) BETWEEN 5 AND 9 THEN m_messageid END) AS countWindow1,
       |  count(DISTINCT CASE WHEN day(m_creationdate) BETWEEN 10 AND 14 THEN m_messageid END) AS countWindow2,
@@ -295,7 +295,7 @@ object Ldbc extends Pack {
   // tagclass→tag→message_tag→message→forum→moderator→city→country
   // (reference bi-3.sql). All dims broadcast; message_tag⋈message is
   // the one real shuffle.
-  q("q_ldbc_bi3", g(
+  built("q_ldbc_bi3", g(
     """SELECT f.f_forumid AS forum_id, f.f_title AS forum_title,
       |       f.f_creationdate AS forum_creationdate, f.f_moderatorid AS person_id,
       |       count(DISTINCT p.m_messageid) AS postCount
@@ -332,7 +332,7 @@ object Ldbc extends Pack {
   // bi-4: top posters in a country — top-100 CTE reused twice (member
   // expansion + IN-subquery post filter) with a LEFT join keeping
   // post-less members (reference bi-4.sql).
-  q("q_ldbc_bi4", g(
+  built("q_ldbc_bi4", g(
     """WITH top100_popular_forums AS (
       |  SELECT fp_forumid AS forumid
       |  FROM forum_person fp, person p, city ci, country co
@@ -392,7 +392,7 @@ object Ldbc extends Pack {
   // replies and likes, three count-DISTINCTs, weighted score (reference
   // bi-5.sql; the reference counts likes via a string-concat pair key —
   // here the (message, liker) pair is counted directly).
-  q("q_ldbc_bi5", g(
+  built("q_ldbc_bi5", g(
     """WITH detail AS (
       |  SELECT m.m_creatorid AS person_id,
       |         count(DISTINCT r.m_messageid) AS replyCount,
@@ -436,7 +436,7 @@ object Ldbc extends Pack {
   // bi-6: authoritative users — DISTINCT (poster, liker) pairs joined to
   // a global per-person popularity sub-aggregate (reference bi-6.sql).
   // The popularity agg is small (|person|) → broadcast to the pair side.
-  q("q_ldbc_bi6", g(
+  built("q_ldbc_bi6", g(
     """WITH poster_w_liker AS (
       |  SELECT DISTINCT m1.m_creatorid AS posterPersonid, l2.l_personid AS likerPersonid
       |  FROM tag t
@@ -481,7 +481,7 @@ object Ldbc extends Pack {
   // bi-7: related topics — replies to messages of a tag, counting the
   // replies' OTHER tags with a null-filtered LEFT anti self-join on
   // message_tag (reference bi-7.sql).
-  q("q_ldbc_bi7", g(
+  built("q_ldbc_bi7", g(
     """SELECT t2.t_name AS relatedTag_name, count(*) AS cnt
       |FROM tag t
       |  INNER JOIN message_tag pt ON t.t_tagid = pt.mt_tagid
@@ -524,7 +524,7 @@ object Ldbc extends Pack {
   // and a message-score CTE, then a knows expansion summing friends'
   // scores (reference bi-8.sql). person_score is |person|-bounded →
   // broadcast to both sides of the knows join.
-  q("q_ldbc_bi8", g(
+  built("q_ldbc_bi8", g(
     """WITH person_tag_interest AS (
       |  SELECT DISTINCT pt.pt_personid AS personid
       |  FROM person_tag pt, tag t
@@ -583,7 +583,7 @@ object Ldbc extends Pack {
   // through the reply forest, then per-initiator distinct thread/message
   // counts (reference bi-9.sql). Spark side runs the batched semi-naive
   // unionAll fixpoint; reply chains are depth ≤ 7 by construction.
-  q("q_ldbc_bi9", g(
+  built("q_ldbc_bi9", g(
     """WITH RECURSIVE post_all(psa_threadid, psa_thread_creatorid,
       |                        psa_messageid, psa_creationdate) AS (
       |  SELECT m_messageid, m_creatorid, m_messageid, m_creationdate
@@ -637,7 +637,7 @@ object Ldbc extends Pack {
   // fixpoint) from a start person, shortest hop per friend, country +
   // tagclass filters, per-(friend, tag) message counts (reference
   // bi-10-shortestpath.sql; hop bound 3, band 2..3).
-  q("q_ldbc_bi10", g(
+  built("q_ldbc_bi10", g(
     """WITH RECURSIVE friends(hopCount, friend) AS (
       |  SELECT 0, CAST(17 AS BIGINT)
       |  UNION
@@ -708,7 +708,7 @@ object Ldbc extends Pack {
   // three ways with id-ordering to count each triangle once (reference
   // bi-11.sql). The adjacency list is |country's persons|·deg → the
   // triangle probe joins shuffle on personid; no cartesian anywhere.
-  q("q_ldbc_bi11", g(
+  built("q_ldbc_bi11", g(
     """WITH pf AS (
       |  SELECT p.p_personid AS personid, k.k_person2id AS friendid
       |  FROM person p, city ci, country co, knows k
@@ -742,7 +742,7 @@ object Ldbc extends Pack {
   // (HAVING over a LEFT join), then their like-graph split by
   // zombie/non-zombie likers with a ratio (reference bi-13.sql; the
   // month arithmetic becomes day arithmetic on the one-month fixture).
-  q("q_ldbc_bi13", g(
+  built("q_ldbc_bi13", g(
     """WITH zombies AS (
       |  SELECT p.p_personid AS zombieid
       |  FROM country co, city ci, person p
@@ -809,7 +809,7 @@ object Ldbc extends Pack {
   // bi-14: international dialog — reply/like interactions between two
   // countries' members, per-case DISTINCT pair scoring, summed per pair
   // (reference bi-14.sql, the three-case core of its four-case union).
-  q("q_ldbc_bi14", g(
+  built("q_ldbc_bi14", g(
     """WITH person1_list AS (
       |  SELECT p.p_personid AS personid
       |  FROM country co, city ci, person p
@@ -898,17 +898,9 @@ object Ldbc extends Pack {
       .distinct()
   }
 
-  private val TwoHopSql =
-    """f AS (
-      |  SELECT k_person2id FROM knows WHERE k_person1id = 42
-      |  UNION
-      |  SELECT k2.k_person2id FROM knows k1, knows k2
-      |  WHERE k1.k_person1id = 42 AND k1.k_person2id = k2.k_person1id
-      |    AND k2.k_person2id <> 42)""".stripMargin
-
   // ic-2: recent messages of direct friends (reference
   // interactive-complex-2.sql) — knows edge filter + top-20 by time.
-  q("q_ldbc_ic2", g(
+  built("q_ldbc_ic2", g(
     """SELECT p.p_personid AS person_id, p.p_firstname AS person_firstname,
       |       p.p_lastname AS person_lastname, m.m_messageid AS message_id,
       |       m.m_length, m.m_creationdate
@@ -936,7 +928,7 @@ object Ldbc extends Pack {
   // count subqueries inner-joined on the two-hop friend set (reference
   // interactive-complex-3.sql; the city→country hop is collapsed to the
   // fixture's nation-level location ids).
-  q("q_ldbc_ic3", g(
+  built("q_ldbc_ic3", g(
     """WITH f AS (
       |  SELECT k_person2id FROM knows WHERE k_person1id = 42
       |  UNION
@@ -985,7 +977,7 @@ object Ldbc extends Pack {
   // ic-5: new forum activity of the social circle — membership since a
   // date, posts by members in those forums kept via LEFT join (reference
   // interactive-complex-5.sql).
-  q("q_ldbc_ic5", g(
+  built("q_ldbc_ic5", g(
     """WITH f AS (
       |  SELECT k_person2id FROM knows WHERE k_person1id = 42
       |  UNION
@@ -1021,7 +1013,7 @@ object Ldbc extends Pack {
   // ic-6: tag co-occurrence — posts by the two-hop circle carrying a
   // given tag (EXISTS semi-join), counting the co-tags (reference
   // interactive-complex-6.sql).
-  q("q_ldbc_ic6", g(
+  built("q_ldbc_ic6", g(
     """WITH f AS (
       |  SELECT k_person2id FROM knows WHERE k_person1id = 42
       |  UNION
@@ -1062,7 +1054,7 @@ object Ldbc extends Pack {
   // ic-7: most recent likers — per-liker max like time (top-20), joined
   // back to the liked message, friend-or-not flag via an EXISTS on knows
   // (reference interactive-complex-7.sql).
-  q("q_ldbc_ic7", g(
+  built("q_ldbc_ic7", g(
     """WITH recent AS (
       |  SELECT l_personid, max(l_creationdate) AS like_time
       |  FROM likes, message

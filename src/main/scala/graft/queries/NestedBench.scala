@@ -58,7 +58,7 @@ object NestedBench extends Pack {
     "WITH " + BlueskySql + "\n" + body.stripMargin.trim
 
   // jsonbench q1: events per collection (reference q01.sql)
-  q("q_jb1", jb(
+  built("q_jb1", jb(
     """SELECT json_extract_string(j, '$.commit.collection') AS event,
       |       count(*) AS cnt
       |FROM bluesky GROUP BY event ORDER BY cnt DESC, event""")) { (s, dir) =>
@@ -69,7 +69,7 @@ object NestedBench extends Pack {
   }
 
   // jsonbench q2: filtered counts + user count-distinct (reference q02.sql)
-  q("q_jb2", jb(
+  built("q_jb2", jb(
     """SELECT json_extract_string(j, '$.commit.collection') AS event,
       |       count(*) AS cnt,
       |       count(DISTINCT json_extract_string(j, '$.did')) AS users
@@ -88,7 +88,7 @@ object NestedBench extends Pack {
 
   // jsonbench q3: hour-of-day histogram over an IN-list of collections
   // (reference q03.sql)
-  q("q_jb3", jb(
+  built("q_jb3", jb(
     """SELECT json_extract_string(j, '$.commit.collection') AS event,
       |       hour(to_timestamp(CAST(json_extract(j, '$.time_us') AS BIGINT) / 1000000)) AS hour_of_day,
       |       count(*) AS cnt
@@ -110,7 +110,7 @@ object NestedBench extends Pack {
   }
 
   // jsonbench q4: earliest activity per user, top-3 (reference q04.sql)
-  q("q_jb4", jb(
+  built("q_jb4", jb(
     """SELECT json_extract_string(j, '$.did') AS user_id,
       |       make_timestamp(min(CAST(json_extract(j, '$.time_us') AS BIGINT))) AS first_post_date
       |FROM bluesky
@@ -129,7 +129,7 @@ object NestedBench extends Pack {
   }
 
   // jsonbench q5: longest activity span per user, top-3 (reference q05.sql)
-  q("q_jb5", jb(
+  built("q_jb5", jb(
     """SELECT json_extract_string(j, '$.did') AS user_id,
       |       (max(CAST(json_extract(j, '$.time_us') AS BIGINT))
       |        - min(CAST(json_extract(j, '$.time_us') AS BIGINT))) / 1000 AS activity_span_ms
@@ -171,7 +171,7 @@ object NestedBench extends Pack {
 
   // realnest micro 02/04: list_sort + list_transform + list_aggregate
   // (02_list_sort.benchmark, 04_list_transform_and_list_aggregate)
-  q("q_rn_transform_agg", rn(
+  built("q_rn_transform_agg", rn(
     """SELECT user_id,
       |       CAST(list_aggregate(list_transform(vs, x -> x * 2), 'sum') AS BIGINT) AS doubled_sum,
       |       vs[1] AS smallest, vs[len(vs)] AS largest
@@ -186,7 +186,7 @@ object NestedBench extends Pack {
   }
 
   // realnest micro 05: list_filter (05_list_filter.benchmark)
-  q("q_rn_filter", rn(
+  built("q_rn_filter", rn(
     """SELECT user_id, len(list_filter(vs, x -> x > 25000)) AS n_large,
       |       CAST(list_aggregate(list_filter(vs, x -> x > 25000), 'sum') AS BIGINT) AS sum_large
       |FROM user_lists ORDER BY user_id""")) { (s, dir) =>
@@ -202,7 +202,7 @@ object NestedBench extends Pack {
 
   // realnest micro 07: list_unique over a transformed list
   // (07_list_unique_on_transformed_and_aggregated_list.benchmark)
-  q("q_rn_unique", rn(
+  built("q_rn_unique", rn(
     """SELECT user_id, list_unique(list_transform(vs, x -> x % 100)) AS buckets
       |FROM user_lists ORDER BY user_id""")) { (s, dir) =>
     userLists(s, dir)
@@ -215,7 +215,7 @@ object NestedBench extends Pack {
   // realnest micro 10: list_intersect between adjacent users' bucket
   // sets (10_list_intersect_hashtags.benchmark) — a self-join on the
   // aggregated lists, intersect sizes ranked
-  q("q_rn_intersect", rn(
+  built("q_rn_intersect", rn(
     """SELECT a.user_id AS user_a, b.user_id AS user_b,
       |       len(list_intersect(list_distinct(list_transform(a.vs, x -> x % 50)),
       |                          list_distinct(list_transform(b.vs, x -> x % 50)))) AS shared
@@ -238,7 +238,7 @@ object NestedBench extends Pack {
   // are serialized with array_to_string/array_join so the driver's
   // pandas comparator can sort+hash them (raw list columns are
   // unhashable there) — same text in both engines.
-  q("q_rn_slice", rn(
+  built("q_rn_slice", rn(
     """SELECT user_id, array_to_string(vs[1:5], ',') AS bottom5,
       |       array_to_string(vs[len(vs)-4:len(vs)], ',') AS top5
       |FROM user_lists ORDER BY user_id LIMIT 50""")) { (s, dir) =>
@@ -255,7 +255,7 @@ object NestedBench extends Pack {
   // realnest micro 08/12: map ops — count keys / list the values
   // (08_count_map_keys, 12_map_list_values) on a derived
   // bucket→count map per user
-  q("q_rn_map", rn(
+  built("q_rn_map", rn(
     """SELECT user_id, cardinality(m) AS n_keys,
       |       CAST(list_aggregate(map_values(m), 'sum') AS BIGINT) AS total
       |FROM (SELECT user_id, map_from_entries(

@@ -4,14 +4,35 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ListBuffer
 
-/** A named set of (query, duckdb-oracle-SQL) pairs feeding SparkEntry. */
+/** A named set of queries feeding SparkEntry.
+  *
+  * A query is its DuckDB oracle text: `q(name, sql)` runs that text through
+  * the engine's front door (`graft.engine.Sql`) over the fixture tables,
+  * and the oracle gate runs the same text on DuckDB (exact match). Only a
+  * query the text cannot express as well is hand-built (`built`): an
+  * operator SQL cannot reach, a dialect gap of the front door, a plan the
+  * text makes worse, statements that must run before the query, or one of
+  * perfbench's analytic queries. EntrySpec allowlists each by reason.
+  */
 abstract class Pack {
   type QueryFn = (SparkSession, String) => DataFrame
   private val items = ListBuffer[(String, QueryFn, Option[String])]()
+  private val builtItems = ListBuffer[String]()
 
-  /** Register a query with a DuckDB oracle SQL (exact-match gate). */
-  protected def q(name: String, sql: String)(fn: QueryFn): Unit =
+  /** Register a query whose oracle text is also the engine's query. */
+  protected def q(name: String, sql: String): Unit = {
+    val text = sql.stripMargin.trim
+    items += ((name, { (s: SparkSession, dir: String) =>
+      graft.engine.Tables.registerAll(s, dir)
+      graft.engine.Sql.execute(s, text)
+    }, Some(text)))
+  }
+
+  /** Register a hand-built query checked against a DuckDB oracle text. */
+  protected def built(name: String, sql: String)(fn: QueryFn): Unit = {
     items += ((name, fn, Some(sql.stripMargin.trim)))
+    builtItems += name
+  }
 
   /** Register a query with only a rows>0 check (approx/nondeterministic ops). */
   protected def qRowsOnly(name: String)(fn: QueryFn): Unit =
@@ -36,6 +57,8 @@ abstract class Pack {
   }
 
   final def defs: Map[String, QueryFn] = items.map(i => (i._1, i._2)).toMap
+  /** Oracle-gated queries with a hand-built body rather than their text. */
+  final def builtNames: Set[String] = builtItems.toSet
   final def oracle: Map[String, String] =
     items.collect { case (n, _, Some(s)) => (n, s) }.toMap
 }
@@ -44,20 +67,13 @@ abstract class Pack {
   *
   * Doubles are summed via DECIMAL so that Spark's and DuckDB's different
   * accumulation orders cannot change the result (decimal addition is exact
-  * and associative); the final value is cast back to DOUBLE. The SQL
-  * mirrors must use the same construction.
+  * and associative); the final value is cast back to DOUBLE.
   */
 object Q {
   val S = "decimal(18,6)"
-  def dsum(c: Column): Column = sum(c.cast(S)).cast("double")
   def dsumSql(e: String): String = s"CAST(sum(CAST(($e) AS DECIMAL(18,6))) AS DOUBLE)"
-  def davg(c: Column): Column = sum(c.cast(S)).cast("double") / count(lit(1))
   def davgSql(e: String): String =
     s"(CAST(sum(CAST(($e) AS DECIMAL(18,6))) AS DOUBLE) / count(*))"
-  /** decimal product of two double expressions, for exact revenue sums */
-  def dmul(a: Column, b: Column): Column = a.cast(S) * b.cast(S)
-  def dmulSql(a: String, b: String): String =
-    s"(CAST(($a) AS DECIMAL(18,6)) * CAST(($b) AS DECIMAL(18,6)))"
   def ts(s: String): Column = lit(s).cast("timestamp")
 
   // -- fixed-point BIGINT accumulation -------------------------------------
@@ -83,8 +99,6 @@ object Q {
   def fsumSql(e: String, dp: Int): String =
     s"(CAST(sum(${fxSql(e, dp)}) AS DOUBLE) / ${math.pow(10, dp).toLong}.0)"
   /** Exact fixed-point average (sum/count in double at the end). */
-  def favg(c: Column, dp: Int): Column =
-    sum(fx(c, dp)).cast("double") / math.pow(10, dp) / count(lit(1))
   def favgSql(e: String, dp: Int): String =
     s"(${fsumSql(e, dp)} / count(*))"
 }

@@ -14,7 +14,7 @@ import Q._
 object Pipeline extends Pack {
 
   // exact dedup: one shuffle on the content hash
-  q("q_dedup_exact",
+  built("q_dedup_exact",
     """SELECT md5(lower(trim(text))) AS content_hash,
       |  min(doc_id) AS keeper, count(*) AS n_copies
       |FROM documents GROUP BY 1 ORDER BY content_hash""") { (s, dir) =>
@@ -35,7 +35,7 @@ object Pipeline extends Pack {
     s"md5(concat_ws('-', ${(1 to 4).map(r => duckMinhash((b - 1) * 4 + r)).mkString(", ")}))"
 
   // MinHash signatures: 8 hashes → 2 bands of 4 (shingle k=8)
-  q("q_dedup_minhash_sig",
+  built("q_dedup_minhash_sig",
     s"""WITH base AS (SELECT doc_id, $duckBases AS bases FROM documents)
        |SELECT doc_id, ${duckBand(1)} AS band_1, ${duckBand(2)} AS band_2
        |FROM base ORDER BY doc_id""") { (s, dir) =>
@@ -45,7 +45,7 @@ object Pipeline extends Pack {
   }
 
   // LSH candidate pairs + exact shingle-Jaccard verification
-  q("q_dedup_minhash_pairs",
+  built("q_dedup_minhash_pairs",
     s"""WITH base AS (SELECT doc_id, $duckBases AS bases FROM documents),
        |sig AS (
        |  SELECT doc_id, ${duckBand(1)} AS band_1, ${duckBand(2)} AS band_2
@@ -80,7 +80,7 @@ object Pipeline extends Pack {
   }
 
   // word-level n-gram Jaccard between consecutive documents
-  q("q_dedup_ngram_jaccard",
+  built("q_dedup_ngram_jaccard",
     """WITH t AS (SELECT doc_id,
       |  list_distinct(string_split_regex(lower(text), '\s+')) AS w FROM documents)
       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -101,7 +101,7 @@ object Pipeline extends Pack {
   // recomputes the exact bit-majority from first-16-hex-of-md5 token
   // hashes — rendered as hex strings on both sides so 64-bit signedness
   // never enters the comparison.
-  q("q_dedup_simhash",
+  built("q_dedup_simhash",
     """WITH t AS (
       |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS toks FROM documents),
       |h AS (
@@ -147,7 +147,7 @@ object Pipeline extends Pack {
   // rebuild the identical sign matrix in SQL; list_dot_product /
   // list_cosine_similarity accumulate in the same element order as the
   // codegen kernel, and cosines round to 5 places before the threshold
-  q("q_dedup_embedding",
+  built("q_dedup_embedding",
     """WITH pl AS (
       |  SELECT band, p, list_transform(generate_series(0, 63), d ->
       |    CASE WHEN CAST(concat('0x', substr(md5(
@@ -179,7 +179,7 @@ object Pipeline extends Pack {
   }
 
   // exact brute-force cosine top-k (queries broadcast; WindowGroupLimit)
-  q("q_sim_topk",
+  built("q_sim_topk",
     """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
       |           FROM embeddings WHERE vec_id < 5),
       |c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
@@ -200,7 +200,7 @@ object Pipeline extends Pack {
   // design, but DETERMINISTIC: the md5-parity sign matrix, the bucket
   // codes, the Hamming-1 multi-probe set, and the rounded-cosine re-rank
   // are all reproducible in SQL — same pattern as q_dedup_embedding)
-  q("q_sim_topk_lsh",
+  built("q_sim_topk_lsh",
     """WITH pl AS (
       |  SELECT p, list_transform(generate_series(0, 63), d ->
       |    CASE WHEN CAST(concat('0x', substr(md5(
@@ -241,7 +241,7 @@ object Pipeline extends Pack {
        |  / len($duckToks))""".stripMargin
 
   // heuristic language ID: stopword-ratio argmax
-  q("q_text_langid", {
+  built("q_text_langid", {
     val rs = Seq("en", "de", "es", "fr").map(l => l -> duckRatio(TextAnalysis.stopwords(l)))
     val best = s"greatest(${rs.map(_._2).mkString(", ")})"
     s"""SELECT doc_id, lang AS labeled_lang,
@@ -260,7 +260,7 @@ object Pipeline extends Pack {
   }
 
   // quality scoring (C4/Gopher-style heuristics)
-  q("q_text_quality", {
+  built("q_text_quality", {
     val nTok = s"len($duckToks)"
     val punct =
       s"""(CAST(length(text) - length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')) AS DOUBLE)
@@ -299,7 +299,7 @@ object Pipeline extends Pack {
   // oracle is the same closed-form composition in DuckDB. Topology: one
   // narrow scoring map, one dedup shuffle, one running-sum pass — three
   // stages at any corpus size, no driver loops.
-  q("q_pipeline_e2e", {
+  built("q_pipeline_e2e", {
     val rs = Seq("en", "de", "es", "fr").map(l => l -> duckRatio(TextAnalysis.stopwords(l)))
     val best = s"greatest(${rs.map(_._2).mkString(", ")})"
     val predLang = s"CASE ${rs.map { case (l, r) => s"WHEN $r >= $best AND $best > 0 THEN '$l'" }
@@ -357,7 +357,7 @@ object Pipeline extends Pack {
   }
 
   // token counting: whitespace + BPE-ish subword regex
-  q("q_text_tokens",
+  built("q_text_tokens",
     s"""SELECT doc_id,
        |  CAST(len($duckToks) AS BIGINT) AS ws_tokens,
        |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS bpe_tokens
@@ -370,7 +370,7 @@ object Pipeline extends Pack {
   }
 
   // order-insensitive document fingerprint
-  q("q_text_fingerprint",
+  built("q_text_fingerprint",
     s"""SELECT doc_id,
        |  md5(array_to_string(list_sort(list_distinct($duckToks)), ' ')) AS fp
        |FROM documents ORDER BY doc_id""") { (s, dir) =>
@@ -383,7 +383,7 @@ object Pipeline extends Pack {
   // (alternating large-star/small-star, O(log n) rounds); the oracle
   // computes the same components by recursive transitive closure over
   // the identical pair set
-  q("q_dedup_clusters",
+  built("q_dedup_clusters",
     s"""WITH RECURSIVE base AS (SELECT doc_id, $duckBases AS bases FROM documents),
        |sig AS (
        |  SELECT doc_id, ${duckBand(1)} AS band_1, ${duckBand(2)} AS band_2
@@ -415,7 +415,7 @@ object Pipeline extends Pack {
 
   // span-level dedup: duplicated 8-token windows across documents (the
   // distributed suffix-array-dedup shape — Dedup.duplicatedSpans)
-  q("q_dedup_span",
+  built("q_dedup_span",
     s"""WITH toks AS (SELECT doc_id, $duckToks AS ts FROM documents),
        |sh AS (
        |  SELECT doc_id, array_to_string(ts[i:i+7], ' ') AS span
@@ -430,7 +430,7 @@ object Pipeline extends Pack {
   // PII redaction over synthesized-in-engine emails/phones/IPs (the
   // fixture corpus carries none) — both engines build the identical
   // string, then apply the identical RE2-subset patterns
-  q("q_text_redact",
+  built("q_text_redact",
     s"""SELECT doc_id,
        |  regexp_replace(regexp_replace(regexp_replace(
        |    concat('contact user', doc_id, '@mail.example.org call 415-',
@@ -457,7 +457,7 @@ object Pipeline extends Pack {
   // repetition signals (Gopher quality filters): duplicated-bigram
   // fraction + top-bigram share. Per-row quadratic in bigram count —
   // fine at document grain; row-local, zero shuffles at any corpus size.
-  q("q_text_repetition",
+  built("q_text_repetition",
     """WITH t AS (
       |  SELECT doc_id,
       |    list_filter(
@@ -486,7 +486,7 @@ object Pipeline extends Pack {
   // via AudioSystem) over deterministically synthesized payloads — the
   // oracle computes the decoded stats from the closed-form pixel/sample
   // pattern, so any decode defect breaks the hash. Narrow map, no shuffle.
-  q("q_multimodal_features",
+  built("q_multimodal_features",
     """WITH m AS (
       |  SELECT doc_id, doc_id % 2 = 0 AS is_img,
       |    CAST(doc_id % 13 + 4 AS BIGINT) AS w, CAST(doc_id % 11 + 4 AS BIGINT) AS h,
@@ -534,20 +534,12 @@ object Pipeline extends Pack {
       |    least(8.0 / (doc_id % 13 + 4), 8.0 / (doc_id % 11 + 4)))) AS INT) AS width,
       |  CAST(ceil((doc_id % 11 + 4) * least(1.0,
       |    least(8.0 / (doc_id % 13 + 4), 8.0 / (doc_id % 11 + 4)))) AS INT) AS height
-      |FROM documents WHERE doc_id % 2 = 0 ORDER BY media_id""") { (s, dir) =>
-    val media = Multimodal.fromDocuments(Tables.documents(s, dir))
-      .where(col("modality") === "image")
-    Multimodal.resizeImages(media, maxW = 8, maxH = 8)
-      .select(col("media_id"), col("width"), col("height"))
-      // SmallTopSort single-partitions the terminal sort — no sampling
-      // double codec run, checkpoint removed (see q_multimodal_features)
-      .orderBy("media_id")
-  }
+      |FROM documents WHERE doc_id % 2 = 0 ORDER BY media_id""")
 
   // frame sampling over a raw frame container (honest demux stub — the
   // JDK ships no video codec): declarative substring slicing + posexplode,
   // per-frame byte stats oracle'd against the closed-form byte pattern
-  q("q_multimodal_frames",
+  built("q_multimodal_frames",
     """WITH m AS (
       |  SELECT doc_id,
       |    CAST(doc_id % 13 + 4 AS BIGINT) * CAST(doc_id % 11 + 4 AS BIGINT) AS fb
@@ -573,7 +565,7 @@ object Pipeline extends Pack {
   }
 
   // sessionization: 30-min-gap sessions per user (exact epoch-µs arithmetic)
-  q("q_sessionize",
+  built("q_sessionize",
     """WITH flags AS (
       |  SELECT user_id, event_id, ts,
       |    CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
@@ -610,11 +602,5 @@ object Pipeline extends Pack {
   q("q_stream_tumbling",
     s"""SELECT time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) AS bucket,
        |  event_type, count(*) AS n, ${dsumSql("value")} AS total_value
-       |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""") { (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy(window(col("ts"), "5 minutes").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-      .select(col("win.start").as("bucket"), col("event_type"), col("n"), col("total_value"))
-      .orderBy("bucket", "event_type")
-  }
+       |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""")
 }

@@ -16,15 +16,10 @@ object Relational extends Pack {
   q("q_scan_pushdown",
     """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
       |WHERE l_quantity < 3 AND l_shipdate >= TIMESTAMP '1997-01-01'
-      |ORDER BY l_orderkey, l_linenumber""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(col("l_quantity") < 3 && col("l_shipdate") >= ts("1997-01-01"))
-      .select("l_orderkey", "l_linenumber", "l_extendedprice")
-      .orderBy("l_orderkey", "l_linenumber")
-  }
+      |ORDER BY l_orderkey, l_linenumber""")
 
   // range/generate_series table function (reference src/function/table/range.cpp:390)
-  q("q_range_series",
+  built("q_range_series",
     """SELECT r.range AS id, r.range * 2 AS doubled FROM range(1, 101) r ORDER BY id""") { (s, _) =>
     s.range(1, 101).toDF("id")
       .withColumn("doubled", col("id") * 2)
@@ -34,7 +29,7 @@ object Relational extends Pack {
   // ---- joins (2.3) --------------------------------------------------------
 
   // inner hash join (reference src/execution/operator/join/physical_hash_join.cpp)
-  q("q_join_inner",
+  built("q_join_inner",
     """SELECT o_orderkey, c_name, o_totalprice FROM orders
       |JOIN customer ON o_custkey = c_custkey
       |WHERE o_totalprice > 400000
@@ -51,27 +46,13 @@ object Relational extends Pack {
   q("q_join_left",
     """SELECT c_custkey, c_name, count(o_orderkey) AS n_orders
       |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-      |GROUP BY c_custkey, c_name ORDER BY c_custkey""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left")
-      .groupBy(c("c_custkey"), c("c_name"))
-      .agg(count(o("o_orderkey")).as("n_orders"))
-      .orderBy("c_custkey")
-  }
+      |GROUP BY c_custkey, c_name ORDER BY c_custkey""")
 
   // right outer join (JoinType::RIGHT)
   q("q_join_right",
     """SELECT n_name, count(c_custkey) AS n_cust
       |FROM customer RIGHT JOIN nation ON c_nationkey = n_nationkey
-      |GROUP BY n_name ORDER BY n_name""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val n = Tables.nation(s, dir)
-    c.join(n, c("c_nationkey") === n("n_nationkey"), "right")
-      .groupBy(n("n_name"))
-      .agg(count(c("c_custkey")).as("n_cust"))
-      .orderBy("n_name")
-  }
+      |GROUP BY n_name ORDER BY n_name""")
 
   // full outer join (JoinType::OUTER)
   q("q_join_full",
@@ -79,54 +60,32 @@ object Relational extends Pack {
       |FROM (SELECT c_custkey FROM customer WHERE c_acctbal > 9000) a
       |FULL JOIN (SELECT c_custkey FROM customer WHERE c_acctbal < -500) b
       |  ON a.c_custkey = b.c_custkey
-      |ORDER BY big_cust NULLS LAST, poor_cust NULLS LAST""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val a = c.filter(col("c_acctbal") > 9000).select(col("c_custkey").as("big_cust"))
-    val b = c.filter(col("c_acctbal") < -500).select(col("c_custkey").as("poor_cust"))
-    a.join(b, a("big_cust") === b("poor_cust"), "full")
-      .orderBy(col("big_cust").asc_nulls_last, col("poor_cust").asc_nulls_last)
-  }
+      |ORDER BY big_cust NULLS LAST, poor_cust NULLS LAST""")
 
   // LEFT SEMI (EXISTS) — JoinType::SEMI, join_type.hpp:24
   q("q_join_semi",
     """SELECT o_orderkey, o_totalprice FROM orders
       |WHERE EXISTS (SELECT 1 FROM lineitem
       |              WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
-      |ORDER BY o_orderkey""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-    val l = Tables.lineitem(s, dir).filter(col("l_quantity") >= 49)
-    o.join(l, o("o_orderkey") === l("l_orderkey"), "left_semi")
-      .select("o_orderkey", "o_totalprice")
-      .orderBy("o_orderkey")
-  }
+      |ORDER BY o_orderkey""")
 
   // LEFT ANTI (NOT EXISTS) — JoinType::ANTI, join_type.hpp:25
   q("q_join_anti",
     """SELECT c_custkey, c_name FROM customer
       |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      |ORDER BY c_custkey""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-  }
+      |ORDER BY c_custkey""")
 
   // cross product (reference physical_cross_product.cpp)
   q("q_join_cross",
     """SELECT r_name, n_name FROM region CROSS JOIN nation
-      |ORDER BY r_name, n_name""") { (s, dir) =>
-    Tables.region(s, dir).crossJoin(Tables.nation(s, dir))
-      .select("r_name", "n_name")
-      .orderBy("r_name", "n_name")
-  }
+      |ORDER BY r_name, n_name""")
 
   // non-equi / range predicate join (reference piecewise merge join / IEJoin,
   // physical_piecewise_merge_join.cpp, physical_iejoin.cpp) — Spark's only
   // native plan is broadcast nested-loop, which dies when neither side
   // broadcasts; graft.operators.RangeJoin band-partitions both sides on the
   // inequality column instead (one shuffle each, B-way-parallel in-band NLJ).
-  q("q_join_range",
+  built("q_join_range",
     """SELECT s.s_suppkey, count(*) AS n_cheaper
       |FROM supplier s JOIN customer c
       |  ON c.c_acctbal < s.s_acctbal AND c.c_nationkey <> s.s_nationkey
@@ -148,44 +107,25 @@ object Relational extends Pack {
   q("q_in_subquery",
     """SELECT p_partkey, p_name FROM part
       |WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity >= 49)
-      |ORDER BY p_partkey""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql("""SELECT p_partkey, p_name FROM part
-            |WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity >= 49)
-            |ORDER BY p_partkey""".stripMargin)
-  }
+      |ORDER BY p_partkey""")
 
   q("q_scalar_subquery",
     """SELECT c_custkey, c_acctbal FROM customer
       |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
-      |ORDER BY c_custkey""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql("""SELECT c_custkey, c_acctbal FROM customer
-            |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
-            |ORDER BY c_custkey""".stripMargin)
-  }
+      |ORDER BY c_custkey""")
 
   // correlated scalar subquery → SINGLE join (reference join_type.hpp:28)
   q("q_correlated_scalar",
     """SELECT o_orderkey,
       |  (SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
       |   FROM lineitem WHERE l_orderkey = o_orderkey) AS order_revenue
-      |FROM orders WHERE o_totalprice > 450000 ORDER BY o_orderkey""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql("""SELECT o_orderkey,
-            |  (SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-            |   FROM lineitem WHERE l_orderkey = o_orderkey) AS order_revenue
-            |FROM orders WHERE o_totalprice > 450000 ORDER BY o_orderkey""".stripMargin)
-  }
+      |FROM orders WHERE o_totalprice > 450000 ORDER BY o_orderkey""")
 
   // Exact fixed-point revenue sum(l_extendedprice*(1-l_discount)): 2-dp
   // mantissas price_c×(100-disc_c) accumulate in BIGINT (units 1e-4) —
   // see Q's fixed-point notes; ≤1e11/row keeps sf-scale sums « 2^63.
   private val revenueSql =
     s"(CAST(sum(${fxSql("l_extendedprice", 2)} * (100 - ${fxSql("l_discount", 2)})) AS DOUBLE) / 10000.0)"
-  private def revenueAgg =
-    sum(fx(col("l_extendedprice"), 2) * (lit(100) - fx(col("l_discount"), 2)))
-      .cast("double") / 10000.0
 
   // TPC-H Q3 shape (reference extension/tpch/dbgen/queries/q03.sql):
   // 3-way join, filter both sides of the date, group, top-10 by revenue.
@@ -201,18 +141,7 @@ object Relational extends Pack {
        |  AND o_orderdate < TIMESTAMP '1998-03-15'
        |  AND l_shipdate > TIMESTAMP '1998-03-15'
        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-       |ORDER BY revenue DESC, o_orderkey LIMIT 10""") { (s, dir) =>
-    val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-    val o = Tables.orders(s, dir).filter(col("o_orderdate") < ts("1998-03-15"))
-    val l = Tables.lineitem(s, dir).filter(col("l_shipdate") > ts("1998-03-15"))
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .groupBy(o("o_orderkey"), o("o_orderdate"), o("o_orderpriority"))
-      .agg(revenueAgg.as("revenue"))
-      .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-      .orderBy(col("revenue").desc, col("o_orderkey"))
-      .limit(10)
-  }
+       |ORDER BY revenue DESC, o_orderkey LIMIT 10""")
 
   // TPC-H Q5 shape (reference q05.sql): 6-way snowflake join; all
   // dimensions broadcast, single shuffle for the final group-by.
@@ -228,24 +157,7 @@ object Relational extends Pack {
        |WHERE r_name = 'ASIA'
        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-       |GROUP BY n_name ORDER BY revenue DESC, n_name""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1998-01-01"))
-    val l = Tables.lineitem(s, dir)
-    val sup = Tables.supplier(s, dir)
-    val n = Tables.nation(s, dir)
-    val r = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(sup),
-        l("l_suppkey") === sup("s_suppkey") && c("c_nationkey") === sup("s_nationkey"))
-      .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy(n("n_name"))
-      .agg(revenueAgg.as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
-  }
+       |GROUP BY n_name ORDER BY revenue DESC, n_name""")
 
   // TPC-H Q10 shape (reference q10.sql): returned items by customer, 4-way
   // join, top-20 by revenue. Only the date-sliced orders and the R-flagged
@@ -260,21 +172,7 @@ object Relational extends Pack {
        |  AND o_orderdate < TIMESTAMP '1997-01-01'
        |  AND l_returnflag = 'R'
        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-       |ORDER BY revenue DESC, c_custkey LIMIT 20""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= ts("1996-10-01") && col("o_orderdate") < ts("1997-01-01"))
-    val l = Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-    val n = Tables.nation(s, dir)
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .groupBy(c("c_custkey"), c("c_name"), c("c_acctbal"), n("n_name"))
-      .agg(revenueAgg.as("revenue"))
-      .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-  }
+       |ORDER BY revenue DESC, c_custkey LIMIT 20""")
 
   // TPC-H Q18 shape (reference q18.sql): large-quantity orders via a
   // grouped HAVING semi-join back onto the fact table. The inner aggregate
@@ -289,23 +187,7 @@ object Relational extends Pack {
        |  SELECT l_orderkey FROM lineitem
        |  GROUP BY l_orderkey HAVING sum(CAST(round(l_quantity*100) AS BIGINT)) > 20000)
        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-       |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-    val l = Tables.lineitem(s, dir)
-    val big = l.groupBy("l_orderkey")
-      .agg(sum(fx(col("l_quantity"), 2)).as("q"))
-      .filter(col("q") > 20000)
-      .select(col("l_orderkey").as("big_orderkey"))
-    l.join(big, l("l_orderkey") === big("big_orderkey"), "left_semi")
-      .join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .groupBy(c("c_name"), c("c_custkey"), o("o_orderkey"), o("o_orderdate"), o("o_totalprice"))
-      .agg(fsum(col("l_quantity"), 2).as("total_qty"))
-      .select("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice", "total_qty")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(100)
-  }
+       |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""")
 
   // TPC-H Q4 shape (reference q04.sql, adapted to the fixture's columns):
   // correlated EXISTS → left-semi join on l_orderkey; the probe side is
@@ -319,18 +201,7 @@ object Relational extends Pack {
       |    SELECT 1 FROM lineitem
       |    WHERE l_orderkey = o_orderkey
       |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-      |GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql("""SELECT o_orderpriority, count(*) AS order_count
-            |FROM orders
-            |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-            |  AND o_orderdate < TIMESTAMP '1997-01-01'
-            |  AND EXISTS (
-            |    SELECT 1 FROM lineitem
-            |    WHERE l_orderkey = o_orderkey
-            |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-            |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-  }
+      |GROUP BY o_orderpriority ORDER BY o_orderpriority""")
 
   // TPC-H Q12 shape (reference q12.sql): join + CASE-bucketed counts.
   q("q12_priority_buckets",
@@ -342,18 +213,7 @@ object Relational extends Pack {
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
       |  AND l_shipdate < TIMESTAMP '1998-01-01'
-      |GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-    val l = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01"))
-    val isHigh = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .groupBy("l_returnflag")
-      .agg(
-        sum(when(isHigh, 1).otherwise(0)).cast("bigint").as("high_line_count"),
-        sum(when(!isHigh, 1).otherwise(0)).cast("bigint").as("low_line_count"))
-      .orderBy("l_returnflag")
-  }
+      |GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // TPC-H Q14 shape (reference q14.sql): promo revenue share — broadcast
   // part join, conditional/total fixed-point sums in one pass.
@@ -364,52 +224,26 @@ object Relational extends Pack {
        |  / CAST(sum(${fxSql("l_extendedprice", 2)} * (100 - ${fxSql("l_discount", 2)})) AS DOUBLE), 6) AS promo_share_pct
        |FROM lineitem JOIN part ON l_partkey = p_partkey
        |WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-       |  AND l_shipdate < TIMESTAMP '1997-10-01'""") { (s, dir) =>
-    val l = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= ts("1997-09-01") && col("l_shipdate") < ts("1997-10-01"))
-    val p = Tables.part(s, dir)
-    val rev = fx(col("l_extendedprice"), 2) * (lit(100) - fx(col("l_discount"), 2))
-    l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
-      .agg(round(lit(100.0) *
-          sum(when(col("p_type").like("PROMO%"), rev).otherwise(0)).cast("double") /
-          sum(rev).cast("double"), 6).as("promo_share_pct"))
-  }
+       |  AND l_shipdate < TIMESTAMP '1997-10-01'""")
 
   // ---- sort / limit / top-k (2.6) ----------------------------------------
 
   // TopN: ORDER BY + LIMIT → TakeOrderedAndProject (reference physical_top_n.cpp)
   q("q_topn",
     """SELECT o_orderkey, o_totalprice FROM orders
-      |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .select("o_orderkey", "o_totalprice")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(10)
-  }
+      |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""")
 
   // LIMIT + OFFSET (reference physical_limit.cpp)
   q("q_limit_offset",
     """SELECT o_orderkey, o_totalprice FROM orders
-      |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10 OFFSET 5""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .select("o_orderkey", "o_totalprice")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .offset(5)
-      .limit(10)
-  }
+      |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10 OFFSET 5""")
 
   // multi-key sort w/ NULLS FIRST/LAST + collation-style ordering
   q("q_orderby_nulls",
     """SELECT c_custkey,
       |       CASE WHEN c_acctbal < 0 THEN NULL ELSE c_acctbal END AS bal
       |FROM customer
-      |ORDER BY bal DESC NULLS FIRST, c_custkey LIMIT 50""") { (s, dir) =>
-    Tables.customer(s, dir)
-      .select(col("c_custkey"),
-        when(col("c_acctbal") < 0, lit(null)).otherwise(col("c_acctbal")).as("bal"))
-      .orderBy(col("bal").desc_nulls_first, col("c_custkey"))
-      .limit(50)
-  }
+      |ORDER BY bal DESC NULLS FIRST, c_custkey LIMIT 50""")
 
   // TABLESAMPLE BERNOULLI (reference sample_options.hpp): each row kept
   // independently with probability p. The coin is a deterministic Knuth
@@ -424,11 +258,7 @@ object Relational extends Pack {
   q("q_sample_bernoulli",
     """SELECT * FROM lineitem
       |WHERE ((l_orderkey * 7 + l_linenumber) % 100000007 * 2654435761)
-      |      % 4294967296 % 100 < 10""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(((col("l_orderkey") * 7 + col("l_linenumber")) % 100000007L * 2654435761L)
-        % 4294967296L % 100 < 10)
-  }
+      |      % 4294967296 % 100 < 10""")
 
   // Spark's OWN sampling operator (SampleExec over a seeded
   // XORShiftRandom): rows-only per contract — the kept set is
@@ -451,7 +281,7 @@ object Relational extends Pack {
   // RNG, one codegen'd comparison per row, embarrassingly parallel, and
   // data-derived (not partition-layout-derived) so the SAME rows are
   // kept on any cluster topology — which also makes it oracle-exact.
-  q("q_sample_system",
+  built("q_sample_system",
     """SELECT * FROM lineitem
       |WHERE ((l_orderkey // 128) % 100000007 * 2654435761)
       |      % 4294967296 % 100 < 50""") { (s, dir) =>
@@ -466,25 +296,16 @@ object Relational extends Pack {
     """SELECT c_nationkey AS nk FROM customer WHERE c_acctbal > 9990
       |UNION ALL
       |SELECT s_nationkey AS nk FROM supplier
-      |ORDER BY nk""") { (s, dir) =>
-    Tables.customer(s, dir).filter(col("c_acctbal") > 9990).select(col("c_nationkey").as("nk"))
-      .unionAll(Tables.supplier(s, dir).select(col("s_nationkey").as("nk")))
-      .orderBy("nk")
-  }
+      |ORDER BY nk""")
 
   q("q_union_distinct",
     """SELECT c_nationkey AS nk FROM customer
       |UNION
       |SELECT s_nationkey AS nk FROM supplier
-      |ORDER BY nk""") { (s, dir) =>
-    Tables.customer(s, dir).select(col("c_nationkey").as("nk"))
-      .union(Tables.supplier(s, dir).select(col("s_nationkey").as("nk")))
-      .distinct()
-      .orderBy("nk")
-  }
+      |ORDER BY nk""")
 
   // UNION BY NAME (reference plan_setop.cpp:77-85)
-  q("q_union_by_name",
+  built("q_union_by_name",
     """SELECT n_nationkey AS k, n_name AS name FROM nation
       |UNION ALL BY NAME
       |SELECT r_name AS name, r_regionkey AS k FROM region
@@ -498,61 +319,36 @@ object Relational extends Pack {
     """SELECT c_nationkey AS nk FROM customer
       |INTERSECT
       |SELECT s_nationkey AS nk FROM supplier
-      |ORDER BY nk""") { (s, dir) =>
-    Tables.customer(s, dir).select(col("c_nationkey").as("nk"))
-      .intersect(Tables.supplier(s, dir).select(col("s_nationkey").as("nk")))
-      .orderBy("nk")
-  }
+      |ORDER BY nk""")
 
   q("q_except",
     """SELECT c_nationkey AS nk FROM customer
       |EXCEPT
       |SELECT s_nationkey AS nk FROM supplier
-      |ORDER BY nk""") { (s, dir) =>
-    Tables.customer(s, dir).select(col("c_nationkey").as("nk"))
-      .except(Tables.supplier(s, dir).select(col("s_nationkey").as("nk")))
-      .orderBy("nk")
-  }
+      |ORDER BY nk""")
 
   q("q_intersect_all",
     """SELECT l_suppkey AS k FROM lineitem WHERE l_quantity > 49
       |INTERSECT ALL
       |SELECT l_suppkey AS k FROM lineitem WHERE l_discount > 0.09
-      |ORDER BY k""") { (s, dir) =>
-    val l = Tables.lineitem(s, dir)
-    l.filter(col("l_quantity") > 49).select(col("l_suppkey").as("k"))
-      .intersectAll(l.filter(col("l_discount") > 0.09).select(col("l_suppkey").as("k")))
-      .orderBy("k")
-  }
+      |ORDER BY k""")
 
   q("q_except_all",
     """SELECT l_suppkey AS k FROM lineitem WHERE l_quantity > 49
       |EXCEPT ALL
       |SELECT l_suppkey AS k FROM lineitem WHERE l_discount > 0.09
-      |ORDER BY k""") { (s, dir) =>
-    val l = Tables.lineitem(s, dir)
-    l.filter(col("l_quantity") > 49).select(col("l_suppkey").as("k"))
-      .exceptAll(l.filter(col("l_discount") > 0.09).select(col("l_suppkey").as("k")))
-      .orderBy("k")
-  }
+      |ORDER BY k""")
 
   // materialized CTE, referenced twice (reference physical_cte.cpp)
   q("q_cte_reuse",
     """WITH big AS (SELECT o_custkey, o_totalprice FROM orders WHERE o_totalprice > 300000)
       |SELECT a.o_custkey, count(*) AS n,
       |  (SELECT count(*) FROM big) AS total_big
-      |FROM big a GROUP BY a.o_custkey ORDER BY a.o_custkey""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(
-      """WITH big AS (SELECT o_custkey, o_totalprice FROM orders WHERE o_totalprice > 300000)
-        |SELECT a.o_custkey, count(*) AS n,
-        |  (SELECT count(*) FROM big) AS total_big
-        |FROM big a GROUP BY a.o_custkey ORDER BY a.o_custkey""".stripMargin)
-  }
+      |FROM big a GROUP BY a.o_custkey ORDER BY a.o_custkey""")
 
   // recursive CTE (reference physical_recursive_cte.cpp) — driver-side
   // fixpoint loop, see graft.operators.RecursiveCTE
-  q("q_recursive_cte",
+  built("q_recursive_cte",
     """WITH RECURSIVE t(n) AS (
       |  SELECT 1 AS n
       |  UNION ALL
@@ -566,37 +362,25 @@ object Relational extends Pack {
     result.withColumn("sq", col("n") * col("n")).orderBy("n")
   }
 
-  // salted skew join (SURVEY scale technique; AQE covers SMJ skew at
-  // runtime, salting is the explicit plan-level tool): events' power-law
-  // user activity joined to a per-user dimension, hot users spread over 8
-  // salts. Row-identical to the plain join — the oracle IS the plain join.
+  // skewed join: events' power-law user activity joined to a per-user
+  // dimension. AQE's skew-join handling splits hot partitions at runtime
+  // (operators.SkewJoin is the explicit salting alternative).
   q("q_skew_join",
     """WITH d AS (SELECT user_id, count(*) AS user_total FROM events GROUP BY user_id)
       |SELECT e.user_id, count(*) AS n_events, min(d.user_total) AS user_total
       |FROM events e JOIN d ON e.user_id = d.user_id
-      |GROUP BY e.user_id ORDER BY e.user_id""") { (s, dir) =>
-    val ev = Tables.events(s, dir).select("user_id", "event_id")
-    val dim = ev.groupBy("user_id").agg(count(lit(1)).as("user_total"))
-    graft.operators.SkewJoin.salted(ev, dim, "user_id", salts = 8, hotThreshold = 500)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), min("user_total").as("user_total"))
-      .orderBy("user_id")
-  }
+      |GROUP BY e.user_id ORDER BY e.user_id""")
 
   // limited DISTINCT (reference physical_limit + distinct early-out):
   // dedup feeds a top-N directly — TakeOrderedAndProject over the hash
   // aggregate, never a full sort of the distinct set.
   q("q_distinct_limit",
     """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-      |ORDER BY l_returnflag, l_linestatus LIMIT 3""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .select("l_returnflag", "l_linestatus").distinct()
-      .orderBy("l_returnflag", "l_linestatus").limit(3)
-  }
+      |ORDER BY l_returnflag, l_linestatus LIMIT 3""")
 
   // repeat / repeat_row table fns (reference src/function/table/repeat.cpp):
   // scalar string repeat + row multiplication via a range cross join.
-  q("q_repeat",
+  built("q_repeat",
     """SELECT r_regionkey, copy_i, repeat(r_name, 2) AS doubled
       |FROM region CROSS JOIN (SELECT range AS copy_i FROM range(3))
       |ORDER BY r_regionkey, copy_i""") { (s, dir) =>
@@ -618,16 +402,14 @@ object Relational extends Pack {
       |  UNION ALL
       |  SELECT n + 1 FROM t WHERE n < 100
       |) SELECT n, n * (n + 1) / 2 AS tri FROM t ORDER BY n""".stripMargin
-  q("q_recursive_sql", recSqlText) { (s, _) =>
-    s.sql(recSqlText)
-  }
+  q("q_recursive_sql", recSqlText)
 
   // recursive CTE USING KEY (the reference's keyed recursion: per-key
   // upsert state the recursive part can read) — shortest path over a
   // CYCLIC graph, which plain UNION ALL recursion cannot terminate on
   // without a bound. The oracle (DuckDB 1.0 predates USING KEY) spells
   // the same answer as a depth-bounded path enumeration + min.
-  q("q_recursive_key",
+  built("q_recursive_key",
     """WITH RECURSIVE edges(src, dst, w) AS (
       |  SELECT * FROM (VALUES (1,2,1),(2,3,1),(3,1,1),(1,3,5),(3,4,2),(4,5,1),(2,5,7)) t(src,dst,w)
       |), paths(node, dist) AS (
@@ -653,7 +435,7 @@ object Relational extends Pack {
   }
 
   // positional join (reference physical_positional_join.cpp)
-  q("q_join_positional",
+  built("q_join_positional",
     """SELECT a.r_name, b.n_name
       |FROM (SELECT r_name FROM region ORDER BY r_regionkey) a
       |POSITIONAL JOIN (SELECT n_name FROM nation ORDER BY n_nationkey LIMIT 5) b
@@ -665,7 +447,7 @@ object Relational extends Pack {
 
   // AS-OF join (reference physical_asof_join.cpp) — for each 'view' event,
   // the latest preceding 'click' of the same user.
-  q("q_join_asof",
+  built("q_join_asof",
     """WITH clicks AS (
       |  SELECT user_id, ts, max(value) AS click_value
       |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts

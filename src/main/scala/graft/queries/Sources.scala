@@ -21,7 +21,7 @@ object Sources extends Pack {
 
   // COPY TO csv + read_csv with header/schema inference
   // (reference src/function/table/read_csv.cpp + copy_csv.cpp)
-  q("q_csv_roundtrip",
+  built("q_csv_roundtrip",
     """SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey""") { (s, dir) =>
     val out = tmp("nation_csv")
     Tables.nation(s, dir)
@@ -36,7 +36,7 @@ object Sources extends Pack {
   // with NO dialect options — CsvSniffer must detect delimiter/quote/
   // header or the columns come back mangled and the hash diff fails
   // (reference csv_scanner/sniffer/dialect_detection.cpp)
-  q("q_csv_sniff",
+  built("q_csv_sniff",
     """SELECT s_suppkey, s_name, s_acctbal FROM supplier
       |WHERE s_suppkey <= 40 ORDER BY s_suppkey""") { (s, dir) =>
     val out = tmp("supplier_sniff_csv")
@@ -52,7 +52,7 @@ object Sources extends Pack {
   }
 
   // COPY TO json + read_json (NDJSON) — reference extension/json/read_json.cpp
-  q("q_json_roundtrip",
+  built("q_json_roundtrip",
     """SELECT c_custkey, c_name, c_mktsegment FROM customer
       |WHERE c_custkey <= 50 ORDER BY c_custkey""") { (s, dir) =>
     val out = tmp("customer_json")
@@ -68,7 +68,7 @@ object Sources extends Pack {
   // CSV dialect edges: values containing the delimiter AND the quote char
   // round-trip through quoting/escaping (reference read_csv sniffer +
   // copy_csv quote handling)
-  q("q_csv_quoted",
+  built("q_csv_quoted",
     """SELECT n_nationkey, concat(n_name, ',"', n_name, '"') AS tricky
       |FROM nation ORDER BY n_nationkey""") { (s, dir) =>
     val out = tmp("nation_quoted_csv")
@@ -84,7 +84,7 @@ object Sources extends Pack {
   // nested parquet: struct-of-(string, array-of-struct) written and read
   // back, then unnested with dot access — the nested-type round trip the
   // reference covers with its parquet-testing corpus
-  q("q_nested_parquet",
+  built("q_nested_parquet",
     """SELECT r.r_regionkey, n.n_name
       |FROM region r JOIN nation n ON n.n_regionkey = r.r_regionkey
       |ORDER BY r.r_regionkey, n.n_name""") { (s, dir) =>
@@ -105,20 +105,10 @@ object Sources extends Pack {
   // pruned read back via hive-style discovery
   q("q_partitioned_write",
     """SELECT o_orderstatus, count(*) AS n FROM orders
-      |WHERE o_orderstatus = 'F' GROUP BY o_orderstatus ORDER BY o_orderstatus""") { (s, dir) =>
-    val out = tmp("orders_part")
-    Tables.orders(s, dir)
-      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    // the filter prunes to the o_orderstatus=F directory — no full scan
-    s.read.parquet(out)
-      .filter(col("o_orderstatus") === "F")
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("o_orderstatus")
-  }
+      |WHERE o_orderstatus = 'F' GROUP BY o_orderstatus ORDER BY o_orderstatus""")
 
   // filename() / glob multi-file read (reference src/common/multi_file/)
-  q("q_filename_glob",
+  built("q_filename_glob",
     """SELECT CAST((SELECT count(*) FROM region) + (SELECT count(*) FROM nation)
       |  + (SELECT count(*) FROM customer) + (SELECT count(*) FROM supplier)
       |  + (SELECT count(*) FROM part) + (SELECT count(*) FROM orders)
@@ -135,7 +125,7 @@ object Sources extends Pack {
 
   // UNNEST aligned lists (reference physical_unnest.cpp — multiple unnests
   // stay row-aligned; Spark: posexplode + element_at)
-  q("q_unnest",
+  built("q_unnest",
     """SELECT vec_id, u.pos, u.val FROM (
       |  SELECT vec_id, unnest(array_slice(embedding, 1, 4)) AS val,
       |         unnest(generate_series(1, 4)) AS pos
@@ -153,19 +143,13 @@ object Sources extends Pack {
     s"""SELECT l_returnflag,
        |  ${dsumSql("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS F,
        |  ${dsumSql("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS O
-       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy("l_returnflag")
-      .pivot("l_linestatus")
-      .agg(dsum(col("l_quantity")))
-      .orderBy("l_returnflag")
-  }
+       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // Dynamic PIVOT — ON-values discovered at bind time (reference
   // bind_pivot.cpp enumerates the distinct values with a first scan;
   // Spark's valueless pivot() runs the same two-pass discovery). Missing
   // combinations: duckdb renders count 0, Spark null — na.fill aligns.
-  q("q_pivot_dynamic",
+  built("q_pivot_dynamic",
     """PIVOT (SELECT year(o_orderdate) AS yr, o_orderpriority FROM orders)
       |ON o_orderpriority USING count(*) GROUP BY yr ORDER BY yr""") { (s, dir) =>
     val pv = Tables.orders(s, dir)
@@ -182,13 +166,7 @@ object Sources extends Pack {
       |  SELECT c_custkey, c_acctbal AS balance, CAST(c_nationkey AS DOUBLE) AS nation
       |  FROM customer WHERE c_custkey <= 50)
       |UNPIVOT (val FOR attr IN (balance, nation))
-      |ORDER BY c_custkey, attr""") { (s, dir) =>
-    Tables.customer(s, dir)
-      .filter(col("c_custkey") <= 50)
-      .select(col("c_custkey"),
-        expr("stack(2, 'balance', c_acctbal, 'nation', CAST(c_nationkey AS DOUBLE)) AS (attr, val)"))
-      .orderBy("c_custkey", "attr")
-  }
+      |ORDER BY c_custkey, attr""")
 
   // SUMMARIZE-style per-column stats (reference bind_summarize.cpp)
   q("q_summarize",
@@ -201,16 +179,7 @@ object Sources extends Pack {
        |SELECT 'l_extendedprice', count(*), CAST(count(DISTINCT l_extendedprice) AS BIGINT),
        |  min(l_extendedprice), max(l_extendedprice), ${davgSql("l_extendedprice")}
        |FROM lineitem
-       |ORDER BY col_name""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    def one(c: String) = li.agg(
-      count(lit(1)).as("n"),
-      countDistinct(col(c)).as("approx_unique"),
-      min(col(c)).as("min_v"), max(col(c)).as("max_v"),
-      davg(col(c)).as("avg_v")).withColumn("col_name", lit(c))
-      .select("col_name", "n", "approx_unique", "min_v", "max_v", "avg_v")
-    one("l_quantity").unionAll(one("l_extendedprice")).orderBy("col_name")
-  }
+       |ORDER BY col_name""")
 
   // CREATE MACRO (reference macro_function.cpp) — registered as a native
   // Spark SQL function (inlined at analysis, codegens like the raw
@@ -218,14 +187,7 @@ object Sources extends Pack {
   // what both engines execute after bind-time expansion.
   q("q_macro",
     """SELECT o_orderkey, o_totalprice * (1 + 5 / 100.0) AS adj
-      |FROM orders WHERE o_orderkey <= 100 ORDER BY o_orderkey""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    graft.functions.Macros.create(s,
-      "CREATE OR REPLACE MACRO m_adj(price, pct) AS price * (1 + pct / 100.0)")
-    s.sql(
-      """SELECT o_orderkey, m_adj(o_totalprice, 5) AS adj
-        |FROM orders WHERE o_orderkey <= 100 ORDER BY o_orderkey""".stripMargin)
-  }
+      |FROM orders WHERE o_orderkey <= 100 ORDER BY o_orderkey""")
 
   // CREATE MACRO ... AS TABLE (reference table_macro_function.cpp) — a
   // parameterized view, expanded at bind time; scalar macros inside the
@@ -235,23 +197,12 @@ object Sources extends Pack {
       |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total
       |FROM orders JOIN customer ON c_custkey = o_custkey
       |WHERE o_totalprice > (20000)
-      |GROUP BY c_mktsegment ORDER BY c_mktsegment""") { (s, dir) =>
-    Tables.registerAll(s, dir)
-    graft.functions.Macros.createTable(s,
-      """CREATE OR REPLACE MACRO seg_sales(min_price) AS TABLE
-        |SELECT c_mktsegment, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM orders JOIN customer ON c_custkey = o_custkey
-        |WHERE o_totalprice > min_price
-        |GROUP BY c_mktsegment""".stripMargin)
-    graft.functions.Macros.callTable(s, "seg_sales(20000)")
-      .orderBy("c_mktsegment")
-  }
+      |GROUP BY c_mktsegment ORDER BY c_mktsegment""")
 
   // system-catalog introspection (reference src/function/table/system/*):
   // column metadata of registered tables, matched against the oracle's
   // information_schema.columns over the same fixture views.
-  q("q_catalog_columns",
+  built("q_catalog_columns",
     """SELECT table_name, column_name, CAST(ordinal_position AS INT) AS pos
       |FROM information_schema.columns
       |WHERE table_name IN ('nation', 'region', 'supplier')
@@ -271,7 +222,7 @@ object Sources extends Pack {
   // protocol guarantees. Single partition + in-partition sort pin the
   // hand-out order (nextval is stateful); CREATE OR REPLACE resets the
   // counter at query construction so the row is hermetic per run.
-  q("q_sequence",
+  built("q_sequence",
     """SELECT CAST(i AS BIGINT) AS n,
       |  CAST(100 + (i - 1) * 3 AS BIGINT) AS seq_val,
       |  CAST(100 + (i - 1) * 3 AS BIGINT) AS curr_val

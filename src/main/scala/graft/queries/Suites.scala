@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import Q._
@@ -29,37 +28,19 @@ object Suites extends Pack {
   // ---- h2o groupby: high-cardinality key, sum + count --------------------
   q("q_h2o_sum_by_user",
     s"""SELECT user_id, ${fsumSql("value", 2)} AS v, count(*) AS n
-       |FROM events GROUP BY user_id ORDER BY user_id""") { (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy("user_id")
-      .agg(fsum(col("value"), 2).as("v"), count(lit(1)).as("n"))
-      .orderBy("user_id")
-  }
+       |FROM events GROUP BY user_id ORDER BY user_id""")
 
   // ---- h2o groupby: derived bucket key, mean/min/max ---------------------
   q("q_h2o_bucket_stats",
     s"""SELECT user_id % 100 AS bucket,
        |  ${favgSql("value", 2)} AS mean_v,
        |  min(value) AS min_v, max(value) AS max_v
-       |FROM events GROUP BY 1 ORDER BY bucket""") { (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy((col("user_id") % 100).as("bucket"))
-      .agg(
-        favg(col("value"), 2).as("mean_v"),
-        min(col("value")).as("min_v"),
-        max(col("value")).as("max_v"))
-      .orderBy("bucket")
-  }
+       |FROM events GROUP BY 1 ORDER BY bucket""")
 
   // ---- h2o q5-style: range per low-card group ----------------------------
   q("q_h2o_range_by_type",
     """SELECT event_type, max(value) - min(value) AS value_range
-      |FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy("event_type")
-      .agg((max(col("value")) - min(col("value"))).as("value_range"))
-      .orderBy("event_type")
-  }
+      |FROM events GROUP BY event_type ORDER BY event_type""")
 
   // ---- h2o q7-style: top-2 rows per group (WindowGroupLimit) -------------
   q("q_h2o_top2_by_type",
@@ -68,41 +49,21 @@ object Suites extends Pack {
       |    row_number() OVER (PARTITION BY event_type
       |                       ORDER BY value DESC, event_id) AS rk
       |  FROM events) WHERE rk <= 2
-      |ORDER BY event_type, event_id""") { (s, dir) =>
-    val w = Window.partitionBy("event_type").orderBy(col("value").desc, col("event_id"))
-    Tables.events(s, dir)
-      .select(col("event_type"), col("event_id"), col("value"),
-        row_number().over(w).as("rk"))
-      .filter(col("rk") <= 2).drop("rk")
-      .orderBy("event_type", "event_id")
-  }
+      |ORDER BY event_type, event_id""")
 
   // ---- h2o join: fact to key-matched dim (broadcast) ---------------------
   q("q_h2o_join_dim",
     s"""SELECT c_mktsegment, count(*) AS n, ${fsumSql("value", 2)} AS v
        |FROM events JOIN customer ON c_custkey = user_id
-       |GROUP BY c_mktsegment ORDER BY c_mktsegment""") { (s, dir) =>
-    Tables.events(s, dir).select("user_id", "value")
-      .join(broadcast(Tables.customer(s, dir).select("c_custkey", "c_mktsegment")),
-        col("c_custkey") === col("user_id"))
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n"), fsum(col("value"), 2).as("v"))
-      .orderBy("c_mktsegment")
-  }
+       |GROUP BY c_mktsegment ORDER BY c_mktsegment""")
 
   // ---- ClickBench-style: JSON property extraction, re-group, top-k -------
   q("q_cb_json_prop_topk",
     """SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k, count(*) AS n
-      |FROM events GROUP BY 1 ORDER BY n DESC, k LIMIT 25""") { (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy(get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("k"))
-      .limit(25)
-  }
+      |FROM events GROUP BY 1 ORDER BY n DESC, k LIMIT 25""")
 
   // ---- ClickBench-style: regex extraction + top-k (the URL-domain shape) -
-  q("q_cb_regex_topk",
+  built("q_cb_regex_topk",
     """SELECT regexp_extract(concat('https://site', CAST(user_id % 37 AS VARCHAR),
       |    '.example.com/page/', CAST(event_id % 1000 AS VARCHAR)),
       |    '//([^/]+)/', 1) AS domain,
@@ -123,11 +84,5 @@ object Suites extends Pack {
   q("q_cb_like_uniq",
     """SELECT event_type, count(*) AS hits, count(DISTINCT user_id) AS uniq_users
       |FROM events WHERE props LIKE '%9%'
-      |GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
-    Tables.events(s, dir)
-      .filter(col("props").like("%9%"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("hits"), countDistinct(col("user_id")).as("uniq_users"))
-      .orderBy("event_type")
-  }
+      |GROUP BY event_type ORDER BY event_type""")
 }

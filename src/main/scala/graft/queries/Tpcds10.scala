@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 10
@@ -43,28 +41,7 @@ object Tpcds10 extends Pack {
        |  SELECT *, rank() OVER (PARTITION BY g_brand, brand
        |                         ORDER BY msum DESC, g_mo, mo) AS rnk
        |  FROM r)
-       |WHERE rnk <= 3 ORDER BY g_brand, brand, rnk""") { (s, dir) =>
-    val p = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
-    Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1995)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .select(col("p_brand"), month(col("l_shipdate")).as("mo"),
-        (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      .createOrReplaceTempView("ds67_base")
-    s.sql(s"""
-      WITH r AS (
-        SELECT p_brand AS brand, mo,
-          sum(${fxSql("rev", 4)}) AS msum,
-          grouping(p_brand) AS g_brand, grouping(mo) AS g_mo
-        FROM ds67_base GROUP BY ROLLUP (p_brand, mo))
-      SELECT brand, mo, g_brand, g_mo,
-        CAST(msum AS DOUBLE) / 10000.0 AS revenue, rnk
-      FROM (
-        SELECT *, rank() OVER (PARTITION BY g_brand, brand
-                               ORDER BY msum DESC, g_mo, mo) AS rnk
-        FROM r)
-      WHERE rnk <= 3 ORDER BY g_brand, brand, rnk""")
-  }
+       |WHERE rnk <= 3 ORDER BY g_brand, brand, rnk""")
 
   // ---- DS Q70: rollup restricted to rank-filtered dimension members ------
   q("q_ds70_ranked_states",
@@ -83,30 +60,7 @@ object Tpcds10 extends Pack {
        |WHERE year(o_orderdate) = 1995
        |  AND c_nationkey IN (SELECT nk FROM top_n)
        |GROUP BY ROLLUP (c_nationkey, c_mktsegment)
-       |ORDER BY c_nationkey NULLS FIRST, c_mktsegment NULLS FIRST""") { (s, dir) =>
-    // the rank-subquery semi-join re-reads the same (cached) fact/dim
-    // Datasets — shared attribute ids trip Dataset self-join ambiguity,
-    // so this query runs on the SQL surface (Catalyst binds the reuse
-    // naturally; the IN-subquery plans as a broadcast left-semi)
-    Tables.registerAll(s, dir)
-    s.sql(s"""
-      WITH top_n AS (
-        SELECT nk FROM (
-          SELECT c_nationkey AS nk,
-            rank() OVER (ORDER BY sum(${fxSql("o_totalprice", 2)}) DESC, c_nationkey) AS rnk
-          FROM orders JOIN customer ON o_custkey = c_custkey
-          WHERE year(o_orderdate) = 1995
-          GROUP BY c_nationkey)
-        WHERE rnk <= 5)
-      SELECT c_nationkey, c_mktsegment,
-        CAST(sum(${fxSql("o_totalprice", 2)}) AS DOUBLE) / 100.0 AS revenue,
-        count(*) AS n_orders
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      WHERE year(o_orderdate) = 1995
-        AND c_nationkey IN (SELECT nk FROM top_n)
-      GROUP BY ROLLUP (c_nationkey, c_mktsegment)
-      ORDER BY c_nationkey NULLS FIRST, c_mktsegment NULLS FIRST""")
-  }
+       |ORDER BY c_nationkey NULLS FIRST, c_mktsegment NULLS FIRST""")
 
   // ---- DS Q46: two-dimension-path mismatch per order ---------------------
   // Orders whose lineitems ship from a DIFFERENT nation than the
@@ -127,25 +81,5 @@ object Tpcds10 extends Pack {
        |  count(*) AS n_cross_orders,
        |  CAST(sum(msum) AS DOUBLE) / 10000.0 AS cross_revenue
        |FROM per_order WHERE n_mismatch > 0
-       |GROUP BY c_nationkey ORDER BY c_nationkey""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .filter(year(col("o_orderdate")) === 1995)
-      .select("o_orderkey", "o_custkey")
-    val c = Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-    val sup = Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")
-    val perOrder = Tables.lineitem(s, dir)
-      .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      .groupBy("o_orderkey", "c_nationkey")
-      .agg(sum(when(col("s_nationkey") =!= col("c_nationkey"), 1).otherwise(0))
-          .as("n_mismatch"),
-        sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("msum"))
-    perOrder.filter(col("n_mismatch") > 0)
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_cross_orders"),
-        (sum("msum").cast("double") / 10000.0).as("cross_revenue"))
-      .orderBy("c_nationkey")
-  }
+       |GROUP BY c_nationkey ORDER BY c_nationkey""")
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 11
@@ -35,20 +33,7 @@ object Tpcds11 extends Pack {
        |   OR EXISTS (SELECT 1 FROM orders
        |              WHERE o_custkey = c_custkey
        |                AND year(o_orderdate) = 1995 AND o_totalprice > 400000)
-       |GROUP BY c_nationkey ORDER BY c_nationkey""") { (s, dir) =>
-    // disjunctive membership must not scan customer twice: the SQL
-    // surface plans one ExistenceJoin whose flag feeds the OR
-    Tables.registerAll(s, dir)
-    s.sql(s"""
-      SELECT c_nationkey, count(*) AS n_cust,
-        ${fsumSql("c_acctbal", 2)} AS bal_sum
-      FROM customer
-      WHERE c_custkey % 97 IN (3, 17, 41, 59, 83)
-         OR EXISTS (SELECT 1 FROM orders
-                    WHERE o_custkey = c_custkey
-                      AND year(o_orderdate) = 1995 AND o_totalprice > 400000)
-      GROUP BY c_nationkey ORDER BY c_nationkey""")
-  }
+       |GROUP BY c_nationkey ORDER BY c_nationkey""")
 
   // ---- DS Q69: EXISTS AND NOT EXISTS -------------------------------------
   q("q_ds69_exists_not_exists",
@@ -58,18 +43,7 @@ object Tpcds11 extends Pack {
       |              WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)
       |  AND NOT EXISTS (SELECT 1 FROM orders
       |                  WHERE o_custkey = c_custkey AND year(o_orderdate) = 1996)
-      |GROUP BY c_mktsegment ORDER BY c_mktsegment""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(col("o_custkey"), year(col("o_orderdate")).as("yr"))
-    val have95 = o.filter(col("yr") === 1995).select(col("o_custkey").as("k95"))
-    val have96 = o.filter(col("yr") === 1996).select(col("o_custkey").as("k96"))
-    Tables.customer(s, dir)
-      .join(have95, col("c_custkey") === col("k95"), "left_semi")
-      .join(have96, col("c_custkey") === col("k96"), "left_anti")
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_cust"))
-      .orderBy("c_mktsegment")
-  }
+      |GROUP BY c_mktsegment ORDER BY c_mktsegment""")
 
   // ---- DS Q24: groups above a multiple of the all-groups average ---------
   // The HAVING compares each group's sum to a SCALAR SUBQUERY over the
@@ -85,18 +59,7 @@ object Tpcds11 extends Pack {
        |FROM g
        |WHERE CAST(100 AS DECIMAL(38,0)) * msum * (SELECT count(*) FROM g)
        |    > CAST(105 AS DECIMAL(38,0)) * (SELECT sum(msum) FROM g)
-       |ORDER BY sk""") { (s, dir) =>
-    val g = Tables.lineitem(s, dir)
-      .groupBy(col("l_suppkey").as("sk"))
-      .agg(sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("msum"))
-    val stats = g.agg(count(lit(1)).as("n_groups"), sum("msum").as("total"))
-    val d38 = "decimal(38,0)"
-    g.crossJoin(broadcast(stats))
-      .filter(lit(100).cast(d38) * col("msum") * col("n_groups") >
-        lit(105).cast(d38) * col("total"))
-      .select(col("sk"), (col("msum").cast("double") / 10000.0).as("revenue"))
-      .orderBy("sk")
-  }
+       |ORDER BY sk""")
 
   // ---- DS Q78: returns-netted year-over-year ratio -----------------------
   // Lines with a same-(order, linenumber) R-flagged "return record" drop
@@ -121,27 +84,5 @@ object Tpcds11 extends Pack {
        |  CAST(n2.msum AS DOUBLE) / n1.msum AS growth
        |FROM net n1 JOIN net n2 ON n1.pk = n2.pk
        |WHERE n1.yr = 1995 AND n2.yr = 1996 AND n1.msum > 0
-       |ORDER BY p_partkey""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    val ret = li.filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey").as("rk"), col("l_linenumber").as("rl"))
-    val net = li
-      .withColumn("yr", year(col("l_shipdate")))
-      .filter(col("yr").isin(1995, 1996))
-      .join(ret, col("l_orderkey") === col("rk") && col("l_linenumber") === col("rl"),
-        "left_anti")
-      .groupBy(col("l_partkey").as("pk"), col("yr"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("msum"))
-    val n1 = net.filter(col("yr") === 1995 && col("msum") > 0)
-      .select(col("pk"), col("cnt").as("cnt_y1"), col("msum").as("m1"))
-    val n2 = net.filter(col("yr") === 1996)
-      .select(col("pk").as("pk2"), col("cnt").as("cnt_y2"), col("msum").as("m2"))
-    n1.join(n2, col("pk") === col("pk2"))
-      .select(col("pk").as("p_partkey"), col("cnt_y1"), col("cnt_y2"),
-        (col("m1").cast("double") / 10000.0).as("rev_y1"),
-        (col("m2").cast("double") / 10000.0).as("rev_y2"),
-        (col("m2").cast("double") / col("m1")).as("growth"))
-      .orderBy("p_partkey")
-  }
+       |ORDER BY p_partkey""")
 }

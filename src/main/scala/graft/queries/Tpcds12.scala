@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 12
@@ -16,8 +14,8 @@ import Q._
   *
   * All gates cross-multiply exact mantissas. Weekday convention: the
   * graft registry shadows dayofweek() with the reference's Sunday=0..6
-  * numbering (r14), so the Column side shims +1 to match the oracle's
-  * duck-dayofweek+1 buckets.
+  * numbering (r14), so the text's dayofweek+1 buckets mean the same on
+  * both engines.
   */
 object Tpcds12 extends Pack {
 
@@ -36,29 +34,7 @@ object Tpcds12 extends Pack {
        |  AND CAST(100 AS DECIMAL(38,0)) * ${fxSql("p_retailprice", 2)} * cnt
        |    > CAST(103 AS DECIMAL(38,0)) * sp
        |GROUP BY c_nationkey HAVING count(*) >= 10
-       |ORDER BY c_nationkey""") { (s, dir) =>
-    val pa = Tables.part(s, dir)
-      .groupBy(col("p_type").as("cat"))
-      .agg(sum(fx(col("p_retailprice"), 2)).as("sp"), count(lit(1)).as("cnt"))
-    val d38 = "decimal(38,0)"
-    val costly = Tables.part(s, dir)
-      .join(broadcast(pa), col("p_type") === col("cat"))
-      .filter(lit(100).cast(d38) * fx(col("p_retailprice"), 2) * col("cnt") >
-        lit(103).cast(d38) * col("sp"))
-      .select("p_partkey")
-    val o = Tables.orders(s, dir)
-      .filter(year(col("o_orderdate")) === 1995 && month(col("o_orderdate")) === 3)
-      .select("o_orderkey", "o_custkey")
-    val c = Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-    Tables.lineitem(s, dir).select("l_orderkey", "l_partkey")
-      .join(broadcast(costly), col("l_partkey") === col("p_partkey"))
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_lines"))
-      .filter(col("n_lines") >= 10)
-      .orderBy("c_nationkey")
-  }
+       |ORDER BY c_nationkey""")
 
   // ---- DS Q43: weekday × group matrix ------------------------------------
   q("q_ds43_weekday_matrix",
@@ -67,18 +43,7 @@ object Tpcds12 extends Pack {
       |  CAST(sum(CASE WHEN dayofweek(l_shipdate) + 1 BETWEEN 2 AND 6 THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT) AS weekday_qty,
       |  CAST(sum(CASE WHEN dayofweek(l_shipdate) + 1 = 7 THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT) AS sat_qty
       |FROM lineitem WHERE year(l_shipdate) = 1995
-      |GROUP BY l_suppkey ORDER BY l_suppkey""") { (s, dir) =>
-    val qb = col("l_quantity").cast("bigint")
-    val dow = dayofweek(col("l_shipdate")) + 1 // registry dayofweek = duck 0-based
-    Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1995)
-      .groupBy("l_suppkey")
-      .agg(
-        sum(when(dow === 1, qb).otherwise(0)).cast("bigint").as("sun_qty"),
-        sum(when(dow.between(2, 6), qb).otherwise(0)).cast("bigint").as("weekday_qty"),
-        sum(when(dow === 7, qb).otherwise(0)).cast("bigint").as("sat_qty"))
-      .orderBy("l_suppkey")
-  }
+      |GROUP BY l_suppkey ORDER BY l_suppkey""")
 
   // ---- DS Q96: narrow multi-predicate count ------------------------------
   q("q_ds96_slot_count",
@@ -88,15 +53,5 @@ object Tpcds12 extends Pack {
       |JOIN supplier ON l_suppkey = s_suppkey
       |WHERE p_size BETWEEN 10 AND 20
       |  AND s_nationkey < 5
-      |  AND l_quantity BETWEEN 20 AND 30""") { (s, dir) =>
-    val p = Tables.part(s, dir)
-      .filter(col("p_size").between(10, 20)).select("p_partkey")
-    val sup = Tables.supplier(s, dir)
-      .filter(col("s_nationkey") < 5).select("s_suppkey")
-    Tables.lineitem(s, dir)
-      .filter(col("l_quantity").between(20, 30))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      .agg(count(lit(1)).as("n"))
-  }
+      |  AND l_quantity BETWEEN 20 AND 30""")
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 13
@@ -34,17 +32,7 @@ object Tpcds13 extends Pack {
        |FROM customer
        |WHERE c_custkey % 100 IN (SELECT pfx FROM dense)
        |  AND c_custkey % 100 IN (7, 19, 23, 37, 53, 71, 89, 97)
-       |GROUP BY c_nationkey ORDER BY c_nationkey""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val dense = c.groupBy((col("c_custkey") % 100).as("pfx"))
-      .agg(count(lit(1)).as("n")).filter(col("n") >= 12).select("pfx")
-    c.withColumn("cpfx", col("c_custkey") % 100)
-      .filter(col("cpfx").isin(7, 19, 23, 37, 53, 71, 89, 97))
-      .join(broadcast(dense), col("cpfx") === col("pfx"), "left_semi")
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_cust"), fsum(col("c_acctbal"), 2).as("bal_sum"))
-      .orderBy("c_nationkey")
-  }
+       |GROUP BY c_nationkey ORDER BY c_nationkey""")
 
   // ---- DS Q13: disjunctive multi-band predicate + exact averages ---------
   q("q_ds13_band_averages",
@@ -60,25 +48,7 @@ object Tpcds13 extends Pack {
        |   OR (c_mktsegment = 'MACHINERY' AND l_quantity BETWEEN 16 AND 35
        |       AND l_discount BETWEEN 0.04 AND 0.08)
        |   OR (c_mktsegment = 'HOUSEHOLD' AND l_quantity BETWEEN 36 AND 50
-       |       AND l_discount BETWEEN 0.00 AND 0.04)""") { (s, dir) =>
-    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-    val c = Tables.customer(s, dir).select("c_custkey", "c_mktsegment")
-    Tables.lineitem(s, dir)
-      .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .filter(
-        (col("c_mktsegment") === "BUILDING" && col("l_quantity").between(1, 15) &&
-          col("l_discount").between(0.02, 0.06)) ||
-        (col("c_mktsegment") === "MACHINERY" && col("l_quantity").between(16, 35) &&
-          col("l_discount").between(0.04, 0.08)) ||
-        (col("c_mktsegment") === "HOUSEHOLD" && col("l_quantity").between(36, 50) &&
-          col("l_discount").between(0.00, 0.04)))
-      .agg(count(lit(1)).as("n"),
-        favg(col("l_quantity"), 2).as("avg_qty"),
-        favg(col("l_extendedprice"), 2).as("avg_price"),
-        fsum(col("l_discount"), 2).as("sum_disc"))
-  }
+       |       AND l_discount BETWEEN 0.00 AND 0.04)""")
 
   // ---- DS Q15: rows above the 95th percentile ----------------------------
   // Spark percentile() and duckdb quantile_cont() use the same
@@ -92,16 +62,7 @@ object Tpcds13 extends Pack {
        |  FROM orders GROUP BY 1),
        |cut AS (SELECT quantile_cont(m, 0.95) AS p95 FROM ct)
        |SELECT ck, CAST(m AS DOUBLE) / 100.0 AS total
-       |FROM ct, cut WHERE m >= p95 ORDER BY ck""") { (s, dir) =>
-    val ct = Tables.orders(s, dir)
-      .groupBy(col("o_custkey").as("ck"))
-      .agg(sum(fx(col("o_totalprice"), 2)).as("m"))
-    val cut = ct.agg(expr("percentile(m, 0.95)").as("p95"))
-    ct.crossJoin(broadcast(cut))
-      .filter(col("m") >= col("p95"))
-      .select(col("ck"), (col("m").cast("double") / 100.0).as("total"))
-      .orderBy("ck")
-  }
+       |FROM ct, cut WHERE m >= p95 ORDER BY ck""")
 
   // ---- DS Q76: NULL-attribute channel counts -----------------------------
   // "null channel" = rows whose derived attribute is null (no matching
@@ -117,24 +78,5 @@ object Tpcds13 extends Pack {
        |FROM orders LEFT JOIN customer ON o_custkey = c_custkey AND c_acctbal > 9000
        |WHERE c_custkey IS NULL AND year(o_orderdate) IN (1995, 1996)
        |GROUP BY 2
-       |ORDER BY channel, yr""") { (s, dir) =>
-    val big = Tables.part(s, dir).filter(col("p_size") > 40).select("p_partkey")
-    val li = Tables.lineitem(s, dir)
-      .withColumn("yr", year(col("l_shipdate")))
-      .filter(col("yr").isin(1995, 1996))
-      .join(broadcast(big), col("l_partkey") === col("p_partkey"), "left")
-      .filter(col("p_partkey").isNull)
-      .groupBy("yr").agg(count(lit(1)).as("n"))
-      .select(lit("lineitem").as("channel"), col("yr"), col("n"))
-    val rich = Tables.customer(s, dir)
-      .filter(col("c_acctbal") > 9000).select("c_custkey")
-    val o = Tables.orders(s, dir)
-      .withColumn("yr", year(col("o_orderdate")))
-      .filter(col("yr").isin(1995, 1996))
-      .join(broadcast(rich), col("o_custkey") === col("c_custkey"), "left")
-      .filter(col("c_custkey").isNull)
-      .groupBy("yr").agg(count(lit(1)).as("n"))
-      .select(lit("orders").as("channel"), col("yr"), col("n"))
-    li.unionByName(o).orderBy("channel", "yr")
-  }
+       |ORDER BY channel, yr""")
 }

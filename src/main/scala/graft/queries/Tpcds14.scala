@@ -35,8 +35,8 @@ object Tpcds14 extends Pack {
 
   // ---- DS Q2: weekly day-of-week matrix, year-over-year ratios -----------
   // Channels = lineitem (ship) ∪ orders (order); weekday split via CASE on
-  // dayofweek (DuckDB Sunday=0, Spark Sunday=1 — each side spells its own
-  // convention); ratios render once as exact-int divisions (no rounding:
+  // dayofweek (Sunday=0, the reference's numbering, which the engine's
+  // Registry reproduces); ratios render once as exact-int divisions (no rounding:
   // round() half-cases differ across engines, raw division cannot).
   q("q_ds2_weekday_matrix_yoy",
     s"""WITH sales AS (
@@ -57,36 +57,14 @@ object Tpcds14 extends Pack {
        |  CAST(y1.fri AS DOUBLE) / y2.fri AS r_fri
        |FROM weekly y1 JOIN weekly y2 ON y1.wk = y2.wk
        |WHERE y1.yr = 1996 AND y2.yr = 1997
-       |ORDER BY wk""") { (s, dir) =>
-    val sales = Tables.lineitem(s, dir)
-      .select(col("l_shipdate").as("d"), fx(col("l_extendedprice"), 2).as("m"))
-      .unionAll(Tables.orders(s, dir)
-        .select(col("o_orderdate").as("d"), fx(col("o_totalprice"), 2).as("m")))
-    def dow(n: Int) = sum(when(dayofweek(col("d")) + 1 === (n + 1), col("m")))
-    val weekly = sales.filter(year(col("d")).isin(1996, 1997))
-      .groupBy(year(col("d")).as("yr"), weekofyear(col("d")).as("wk"))
-      .agg(dow(0).as("sun"), dow(1).as("mon"), dow(3).as("wed"), dow(5).as("fri"))
-    val y1 = weekly.filter(col("yr") === 1996)
-      .select(col("wk"), col("sun").as("s1"), col("mon").as("m1"),
-        col("wed").as("w1"), col("fri").as("f1"))
-    val y2 = weekly.filter(col("yr") === 1997)
-      .select(col("wk").as("wk2"), col("sun").as("s2"), col("mon").as("m2"),
-        col("wed").as("w2"), col("fri").as("f2"))
-    y1.join(y2, col("wk") === col("wk2"))
-      .select(col("wk"),
-        (col("s1").cast("double") / col("s2")).as("r_sun"),
-        (col("m1").cast("double") / col("m2")).as("r_mon"),
-        (col("w1").cast("double") / col("w2")).as("r_wed"),
-        (col("f1").cast("double") / col("f2")).as("r_fri"))
-      .orderBy("wk")
-  }
+       |ORDER BY wk""")
 
   // ---- DS Q11: two-channel year-over-year growth comparison --------------
   // year_total = per-customer yearly totals per channel (store = line
   // revenue, web = order totals). Keep customers whose web growth beats
   // their store growth: w2/w1 > s2/s1 ⟺ w2·s1 > s2·w1 (all mantissas
   // positive) — cross-multiplied in DECIMAL(38,0), never divided.
-  q("q_ds11_channel_growth",
+  built("q_ds11_channel_growth",
     s"""WITH store_yt AS (
        |  SELECT o_custkey AS ck, year(l_shipdate) AS yr,
        |    sum(${fxSql("l_extendedprice * (1 - l_discount)", 4)}) AS total
@@ -145,7 +123,7 @@ object Tpcds14 extends Pack {
   // ---- DS Q74: the q11 sibling (different measure/years, name output) ----
   // Store channel restricted to finished lines (l_linestatus = 'F'),
   // measure = raw extended price; years 1995/1996; output keyed by name.
-  q("q_ds74_yoy_names",
+  built("q_ds74_yoy_names",
     s"""WITH store_yt AS (
        |  SELECT o_custkey AS ck, year(l_shipdate) AS yr,
        |    sum(${fxSql("l_extendedprice", 2)}) AS total
@@ -201,7 +179,7 @@ object Tpcds14 extends Pack {
   // total > 1.2·avg ⟺ total·n·10 > sum·12 (n > 0) — exact mantissas in
   // DECIMAL(38,0). The per-nation stats INCLUDE the probe row (the
   // correlated subquery ranges over the full CTE), and broadcast back.
-  q("q_ds30_return_outliers",
+  built("q_ds30_return_outliers",
     s"""WITH ctr AS (
        |  SELECT o_custkey AS ck, c_nationkey AS nk,
        |    sum(${fxSql("l_extendedprice", 2)}) AS total
@@ -256,21 +234,7 @@ object Tpcds14 extends Pack {
        |FROM win w JOIN stats st ON w.pk = st.pk
        |JOIN part ON p_partkey = w.pk
        |WHERE p_size <= 10
-       |  AND CAST(w.amt AS DECIMAL(38,0)) * 10 * st.n > st.s * 13""") { (s, dir) =>
-    val win = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate").between("1996-01-01", "1996-03-31"))
-      .select(col("l_partkey").as("pk"),
-        fx(col("l_extendedprice") * col("l_discount"), 4).as("amt"))
-    val d38 = "decimal(38,0)"
-    val stats = win.groupBy("pk")
-      .agg(count(lit(1)).as("n"), sum("amt").cast(d38).as("s"))
-    win.join(stats, "pk")
-      .join(broadcast(Tables.part(s, dir).filter(col("p_size") <= 10)
-        .select("p_partkey")), col("pk") === col("p_partkey"))
-      .filter(col("amt").cast(d38) * 10 * col("n") > col("s") * 13)
-      .agg(sum("amt").cast("bigint").as("excess_mantissa"),
-        count(lit(1)).as("n_rows"))
-  }
+       |  AND CAST(w.amt AS DECIMAL(38,0)) * 10 * st.n > st.s * 13""")
 
   // ---- DS Q38: three-channel INTERSECT of DISTINCT (customer, day) -------
   // Channels = order placement / any shipment / returned shipment. Each
@@ -293,22 +257,5 @@ object Tpcds14 extends Pack {
       |  WHERE l_returnflag = 'R' AND year(l_shipdate) = 1996)
       |SELECT count(*) AS n FROM (
       |  SELECT * FROM ord INTERSECT SELECT * FROM shp
-      |  INTERSECT SELECT * FROM ret) t""") { (s, dir) =>
-    val c = Tables.customer(s, dir).select("c_custkey", "c_name")
-    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderdate")
-    val l = Tables.lineitem(s, dir)
-      .select("l_orderkey", "l_shipdate", "l_returnflag")
-    val ord = o.filter(year(col("o_orderdate")) === 1996)
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .select(col("c_name"), col("o_orderdate").as("d")).distinct()
-    def shipped(base: org.apache.spark.sql.DataFrame) = base
-      .filter(year(col("l_shipdate")) === 1996)
-      .join(o.select("o_orderkey", "o_custkey"), col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .select(col("c_name"), col("l_shipdate").as("d")).distinct()
-    val shp = shipped(l)
-    val ret = shipped(l.filter(col("l_returnflag") === "R"))
-    ord.intersect(shp).intersect(ret)
-      .agg(count(lit(1)).as("n"))
-  }
+      |  INTERSECT SELECT * FROM ret) t""")
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import Q._
@@ -31,27 +30,6 @@ import Q._
   */
 object Tpcds15 extends Pack {
 
-  // shared shape for DS q12/q20/q98: revenue + share-of-class window.
-  // The fixture has no ship-mode column, so the "channel" is the
-  // even/odd line split (deterministic, disjoint, covers all rows).
-  private def classShare(parity: Int, year: Int) = {
-    (s: org.apache.spark.sql.SparkSession, dir: String) =>
-      val grouped = Tables.lineitem(s, dir)
-        .filter(col("l_linenumber") % 2 === parity &&
-          col("l_shipdate").between(s"$year-02-01", s"$year-03-31"))
-        .join(broadcast(Tables.part(s, dir)
-          .select("p_partkey", "p_type", "p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_type", "p_brand", "p_partkey")
-        .agg(sum(fx(col("l_extendedprice"), 2)).as("m"))
-      val w = Window.partitionBy("p_brand")
-      grouped
-        .select(col("p_type"), col("p_brand"), col("p_partkey"),
-          (col("m").cast("double") / 100.0).as("itemrevenue"),
-          (col("m").cast("double") * 100.0 / sum("m").over(w)).as("revenueratio"))
-        .orderBy("p_type", "p_brand", "p_partkey")
-        .limit(100)
-  }
   private def classShareSql(parity: Int, year: Int): String =
     s"""WITH grouped AS (
        |  SELECT p_type, p_brand, p_partkey,
@@ -68,10 +46,10 @@ object Tpcds15 extends Pack {
        |ORDER BY p_type, p_brand, p_partkey LIMIT 100""".stripMargin
 
   // ---- DS Q12: web-channel item revenue + share of class -----------------
-  q("q_ds12_class_share_web", classShareSql(0, 1996))(classShare(0, 1996))
+  q("q_ds12_class_share_web", classShareSql(0, 1996))
 
   // ---- DS Q20: catalog-channel sibling (different channel + window) ------
-  q("q_ds20_class_share_catalog", classShareSql(1, 1997))(classShare(1, 1997))
+  q("q_ds20_class_share_catalog", classShareSql(1, 1997))
 
   // ---- DS Q16: distinct-order count gated by EXISTS / NOT EXISTS ---------
   q("q_ds16_multi_warehouse_noret",
@@ -89,34 +67,12 @@ object Tpcds15 extends Pack {
        |                AND l2.l_suppkey <> l1.l_suppkey)
        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
        |                  WHERE l3.l_orderkey = l1.l_orderkey
-       |                    AND l3.l_returnflag = 'R')""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    val l1 = li.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_tax",
-      "l_shipdate")
-    val l2 = li.select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2"))
-    val l3 = li.filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey").as("k3"))
-    l1.filter(col("l_shipdate").between("1996-02-01", "1996-04-02"))
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-        .filter(col("c_nationkey") < 10),
-        col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(l2, col("l_orderkey") === col("k2") &&
-        col("l_suppkey") =!= col("s2"), "left_semi")
-      .join(l3, col("l_orderkey") === col("k3"), "left_anti")
-      .agg(countDistinct("l_orderkey").as("order_count"),
-        fsum(col("l_extendedprice"), 2).as("total_price"),
-        sum(fx(col("l_extendedprice") * col("l_tax"), 4)).cast("bigint")
-          .as("tax_mantissa"))
-  }
+       |                    AND l3.l_returnflag = 'R')""")
 
   // ---- DS Q18: exact averages over ROLLUP with two demographic dims ------
   // dim1 = customer nation (gendered-demographic analog), dim2 = supplier
   // nation — two independent joins feeding averages of measures from
-  // three tables, rolled up over (brand, customer-nation). The SAME SQL
-  // text runs on both engines (Spark SQL surface — the Dataset API trips
-  // the ambiguous-self-join check on rollup outputs over shared scans).
+  // three tables, rolled up over (brand, customer-nation).
   private val ds18Sql =
     s"""SELECT p_brand, c_nationkey,
        |  ${favgSql("l_quantity", 2)} AS agg1,
@@ -136,10 +92,7 @@ object Tpcds15 extends Pack {
        |  AND p_size <= 15
        |GROUP BY ROLLUP(p_brand, c_nationkey)
        |ORDER BY p_brand NULLS FIRST, c_nationkey NULLS FIRST""".stripMargin
-  q("q_ds18_rollup_averages", ds18Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(ds18Sql)
-  }
+  q("q_ds18_rollup_averages", ds18Sql)
 
   // ---- DS Q22: average quantity over a 3-level part-attribute ROLLUP -----
   // (no inventory/mfgr/container columns in the fixture: type-word,
@@ -151,13 +104,10 @@ object Tpcds15 extends Pack {
        |FROM lineitem JOIN part ON p_partkey = l_partkey
        |WHERE l_shipdate >= DATE '1997-01-01'
        |GROUP BY ROLLUP(split_part(p_type, ' ', 1), p_brand, p_size)""".stripMargin
-  q("q_ds22_inventory_rollup", ds22Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(ds22Sql)
-  }
+  q("q_ds22_inventory_rollup", ds22Sql)
 
   // ---- DS Q81: tax-inclusive return outliers with geo output -------------
-  q("q_ds81_return_outliers_geo",
+  built("q_ds81_return_outliers_geo",
     s"""WITH ctr AS (
        |  SELECT o_custkey AS ck, c_nationkey AS nk,
        |    sum(${fxSql("l_extendedprice * (1 + l_tax)", 4)}) AS total

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import Q._
@@ -29,9 +28,6 @@ import Q._
   */
 object Tpcds16 extends Pack {
 
-  private def favgIf(cond: Column, c: Column, dp: Int): Column =
-    sum(when(cond, fx(c, dp))).cast("double") / math.pow(10, dp) /
-      count(when(cond, lit(1)))
   private def favgIfSql(cond: String, e: String, dp: Int): String =
     s"(CAST(sum(CASE WHEN $cond THEN ${fxSql(e, dp)} END) AS DOUBLE) / " +
       s"${math.pow(10, dp).toLong}.0 / count(CASE WHEN $cond THEN 1 END))"
@@ -50,25 +46,7 @@ object Tpcds16 extends Pack {
        |WHERE c_mktsegment = 'BUILDING'
        |  AND (o_orderpriority = '1-URGENT' OR o_orderpriority = '2-HIGH')
        |  AND year(o_orderdate) = 1996
-       |GROUP BY p_brand ORDER BY p_brand""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey",
-        "o_orderdate", "o_orderpriority"), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_mktsegment"),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.part(s, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .filter(col("c_mktsegment") === "BUILDING" &&
-        (col("o_orderpriority") === "1-URGENT" ||
-          col("o_orderpriority") === "2-HIGH") &&
-        year(col("o_orderdate")) === 1996)
-      .groupBy("p_brand")
-      .agg(favg(col("l_quantity"), 2).as("agg1"),
-        favg(col("l_extendedprice"), 2).as("agg2"),
-        favg(col("l_discount"), 2).as("agg3"),
-        favg(col("l_tax"), 2).as("agg4"))
-      .orderBy("p_brand")
-  }
+       |GROUP BY p_brand ORDER BY p_brand""")
 
   // ---- DS Q28: six band triples in one conditional-aggregate pass --------
   // The benchmark cross-joins six single-row scalar subqueries; the same
@@ -88,22 +66,7 @@ object Tpcds16 extends Pack {
          |    THEN ${fxSql("l_extendedprice", 2)} END) AS ${n}_cntd""".stripMargin
     }
     s"SELECT\n${cols.mkString(",\n")}\nFROM lineitem"
-  }) { (s, dir) =>
-    def band(qlo: Int, qhi: Int, dlo: Double, dhi: Double): Column =
-      col("l_quantity").between(qlo, qhi) &&
-        (col("l_discount").between(dlo, dhi) ||
-          col("l_tax").between(0.02, 0.05))
-    val bands = Seq(
-      ("b1", band(0, 5, 0.00, 0.04)),
-      ("b2", band(6, 10, 0.02, 0.06)),
-      ("b3", band(11, 15, 0.04, 0.08)))
-    val aggs = bands.flatMap { case (n, cond) =>
-      Seq(favgIf(cond, col("l_extendedprice"), 2).as(s"${n}_lp"),
-        count(when(cond, lit(1))).as(s"${n}_cnt"),
-        countDistinct(when(cond, fx(col("l_extendedprice"), 2))).as(s"${n}_cntd"))
-    }
-    Tables.lineitem(s, dir).agg(aggs.head, aggs.tail: _*)
-  }
+  })
 
   // ---- DS Q29: sold → returned → re-bought quantity chain ----------------
   q("q_ds29_return_rebuy_chain",
@@ -127,34 +90,7 @@ object Tpcds16 extends Pack {
        |JOIN part ON l_partkey = p_partkey
        |JOIN rebuy ON bk = o_custkey AND bp = l_partkey
        |WHERE year(o_orderdate) <= 1996
-       |GROUP BY 1, 2 ORDER BY 1, 2""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    val ret = li.filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey").as("rk"), col("l_partkey").as("rp"),
-        col("l_quantity").as("rq"), col("l_linenumber").as("rl"))
-    val rebuy = li.select(col("l_orderkey").as("lk2"), col("l_partkey").as("bp"),
-        col("l_quantity").as("q2"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey").as("ok2"),
-        col("o_custkey").as("bk"), col("o_orderdate").as("od2")),
-        col("lk2") === col("ok2"))
-      .filter(year(col("od2")) >= 1997)
-      .groupBy("bk", "bp")
-      .agg(sum(fx(col("q2"), 2)).cast("bigint").as("bq"))
-    li.join(ret, col("rk") === col("l_orderkey") && col("rl") === col("l_linenumber"))
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderdate"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.part(s, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .join(rebuy, col("bk") === col("o_custkey") && col("bp") === col("l_partkey"))
-      .filter(year(col("o_orderdate")) <= 1996)
-      .groupBy("p_brand", "c_nationkey")
-      .agg(sum(fx(col("l_quantity"), 2)).cast("bigint").as("sold_qty"),
-        sum(fx(col("rq"), 2)).cast("bigint").as("ret_qty"),
-        sum("bq").cast("bigint").as("rebuy_qty"))
-      .orderBy("p_brand", "c_nationkey")
-  }
+       |GROUP BY 1, 2 ORDER BY 1, 2""")
 
   // ---- DS Q40: before/after pivot with refunds LEFT-joined ---------------
   q("q_ds40_pivot_refunds",
@@ -173,23 +109,7 @@ object Tpcds16 extends Pack {
        |LEFT OUTER JOIN ref ON rk = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
        |WHERE o_orderdate BETWEEN DATE '1996-07-01' AND DATE '1997-06-30'
-       |GROUP BY c_nationkey ORDER BY c_nationkey""") { (s, dir) =>
-    val ref = Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-      .groupBy(col("l_orderkey").as("rk"))
-      .agg(sum(fx(col("l_extendedprice"), 2)).cast("bigint").as("refund"))
-    val net = fx(col("o_totalprice"), 2) - coalesce(col("refund"), lit(0L))
-    Tables.orders(s, dir)
-      .filter(col("o_orderdate").between("1996-07-01", "1997-06-30"))
-      .join(ref, col("rk") === col("o_orderkey"), "left_outer")
-      .join(Tables.customer(s, dir).select("c_custkey", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy("c_nationkey")
-      .agg(sum(when(col("o_orderdate") < "1997-01-01", net).otherwise(0L))
-          .cast("bigint").as("sales_before"),
-        sum(when(col("o_orderdate") >= "1997-01-01", net).otherwise(0L))
-          .cast("bigint").as("sales_after"))
-      .orderBy("c_nationkey")
-  }
+       |GROUP BY c_nationkey ORDER BY c_nationkey""")
 
   // ---- DS Q48: two AND-ed disjunctive band blocks ------------------------
   q("q_ds48_band_blocks",
@@ -205,29 +125,11 @@ object Tpcds16 extends Pack {
        |        AND o_totalprice BETWEEN 150000 AND 200000))
        |  AND ((c_nationkey IN (1, 3, 5) AND l_quantity BETWEEN 0 AND 25)
        |    OR (c_nationkey IN (7, 9, 11) AND l_quantity BETWEEN 10 AND 40)
-       |    OR (c_nationkey IN (2, 4, 6) AND l_quantity BETWEEN 25 AND 50))""") {
-    (s, dir) =>
-      Tables.lineitem(s, dir).select("l_orderkey", "l_quantity")
-        .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir).select("c_custkey", "c_mktsegment", "c_nationkey"),
-          col("o_custkey") === col("c_custkey"))
-        .filter(
-          ((col("c_mktsegment") === "MACHINERY" &&
-              col("o_totalprice").between(100000, 150000)) ||
-            (col("c_mktsegment") === "HOUSEHOLD" &&
-              col("o_totalprice").between(50000, 100000)) ||
-            (col("c_mktsegment") === "BUILDING" &&
-              col("o_totalprice").between(150000, 200000))) &&
-          ((col("c_nationkey").isin(1, 3, 5) && col("l_quantity").between(0, 25)) ||
-            (col("c_nationkey").isin(7, 9, 11) && col("l_quantity").between(10, 40)) ||
-            (col("c_nationkey").isin(2, 4, 6) && col("l_quantity").between(25, 50))))
-        .agg(sum(fx(col("l_quantity"), 2)).cast("bigint").as("qty_sum"))
-  }
+       |    OR (c_nationkey IN (2, 4, 6) AND l_quantity BETWEEN 25 AND 50))""")
 
   // ---- DS Q50: return-lag day buckets per nation -------------------------
   // lag = returned-line ship date minus its order's placement date
-  q("q_ds50_return_lag_buckets",
+  built("q_ds50_return_lag_buckets",
     """SELECT c_nationkey,
       |  CAST(sum(CASE WHEN lag <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS d30,
       |  CAST(sum(CASE WHEN lag > 30 AND lag <= 60 THEN 1 ELSE 0 END) AS BIGINT) AS d60,

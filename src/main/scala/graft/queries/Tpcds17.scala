@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 17
@@ -27,19 +24,6 @@ import Q._
 object Tpcds17 extends Pack {
 
   // ---- DS Q52 / Q55: brand revenue in a month window ---------------------
-  private def brandRevenue(yr: Int, sizeMax: Int) = {
-    (s: org.apache.spark.sql.SparkSession, dir: String) =>
-      Tables.lineitem(s, dir)
-        .filter(year(col("l_shipdate")) === yr &&
-          month(col("l_shipdate")) === 11)
-        .join(broadcast(Tables.part(s, dir)
-          .filter(col("p_size") <= sizeMax).select("p_partkey", "p_brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(fsum(col("l_extendedprice"), 2).as("ext_price"))
-        .orderBy(col("ext_price").desc, col("p_brand"))
-        .limit(100)
-  }
   private def brandRevenueSql(yr: Int, sizeMax: Int): String =
     s"""SELECT p_brand, ${fsumSql("l_extendedprice", 2)} AS ext_price
        |FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -47,51 +31,24 @@ object Tpcds17 extends Pack {
        |  AND p_size <= $sizeMax
        |GROUP BY p_brand ORDER BY ext_price DESC, p_brand LIMIT 100""".stripMargin
 
-  q("q_ds52_brand_revenue", brandRevenueSql(1996, 25))(brandRevenue(1996, 25))
-  q("q_ds55_brand_revenue_prior", brandRevenueSql(1995, 40))(brandRevenue(1995, 40))
+  q("q_ds52_brand_revenue", brandRevenueSql(1996, 25))
+  q("q_ds55_brand_revenue_prior", brandRevenueSql(1995, 40))
 
   // ---- DS Q56 / Q60: three-channel union re-aggregate with item gate -----
-  private def channelUnion(itemGateSql: String, itemGate: org.apache.spark.sql.Column,
-      yr: Int) = {
-    val fn = (s: org.apache.spark.sql.SparkSession, dir: String) => {
-      val items = broadcast(Tables.part(s, dir).filter(itemGate).select("p_partkey"))
-      def channel(parity: Int) = Tables.lineitem(s, dir)
-        .filter(col("l_linenumber") % 3 === parity &&
-          year(col("l_shipdate")) === yr &&
-          month(col("l_shipdate")) === 3)
-        .join(items, col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_partkey").as("pk"))
-        .agg(sum(fx(col("l_extendedprice"), 2)).as("m"))
-      channel(0).unionAll(channel(1)).unionAll(channel(2))
-        .groupBy("pk")
-        .agg((sum("m").cast("double") / 100.0).as("total_sales"))
-        .orderBy("pk")
-    }
-    val sql =
-      s"""WITH ch AS (
-         |  SELECT l_linenumber % 3 AS chan, l_partkey AS pk,
-         |    sum(${fxSql("l_extendedprice", 2)}) AS m
-         |  FROM lineitem
-         |  WHERE year(l_shipdate) = $yr AND month(l_shipdate) = 3
-         |    AND l_partkey IN (SELECT p_partkey FROM part WHERE $itemGateSql)
-         |  GROUP BY 1, 2)
-         |SELECT pk, (CAST(sum(m) AS DOUBLE) / 100.0) AS total_sales
-         |FROM ch GROUP BY pk ORDER BY pk""".stripMargin
-    (sql, fn)
-  }
+  private def channelUnionSql(itemGateSql: String, yr: Int): String =
+    s"""WITH ch AS (
+       |  SELECT l_linenumber % 3 AS chan, l_partkey AS pk,
+       |    sum(${fxSql("l_extendedprice", 2)}) AS m
+       |  FROM lineitem
+       |  WHERE year(l_shipdate) = $yr AND month(l_shipdate) = 3
+       |    AND l_partkey IN (SELECT p_partkey FROM part WHERE $itemGateSql)
+       |  GROUP BY 1, 2)
+       |SELECT pk, (CAST(sum(m) AS DOUBLE) / 100.0) AS total_sales
+       |FROM ch GROUP BY pk ORDER BY pk""".stripMargin
 
-  locally {
-    val (sql, fn) = channelUnion(
-      "p_name LIKE '%blue%' OR p_name LIKE '%green%' OR p_name LIKE '%red%'",
-      col("p_name").like("%blue%") || col("p_name").like("%green%") ||
-        col("p_name").like("%red%"), 1996)
-    q("q_ds56_color_channels", sql)(fn)
-  }
-  locally {
-    val (sql, fn) = channelUnion(
-      "p_type LIKE 'STANDARD%'", col("p_type").like("STANDARD%"), 1997)
-    q("q_ds60_category_channels", sql)(fn)
-  }
+  q("q_ds56_color_channels", channelUnionSql(
+    "p_name LIKE '%blue%' OR p_name LIKE '%green%' OR p_name LIKE '%red%'", 1996))
+  q("q_ds60_category_channels", channelUnionSql("p_type LIKE 'STANDARD%'", 1997))
 
   // ---- DS Q57: monthly sums vs yearly average + month rank ---------------
   // Deviation gate |sum − avg| > 0.1·avg on exact mantissas:
@@ -115,26 +72,7 @@ object Tpcds17 extends Pack {
        |  rn
        |FROM w
        |WHERE abs(CAST(msum AS DECIMAL(38,0)) * n - s) * 10 > s
-       |ORDER BY p_brand, cc, moy""") { (s, dir) =>
-    val m = Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1996)
-      .join(broadcast(Tables.part(s, dir).filter(col("p_size") <= 12)
-        .select("p_partkey", "p_brand")), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("p_brand"), col("s_nationkey").as("cc"),
-        month(col("l_shipdate")).as("moy"))
-      .agg(sum(fx(col("l_extendedprice"), 2)).as("msum"))
-    val part = Window.partitionBy("p_brand", "cc")
-    val d38 = "decimal(38,0)"
-    m.withColumn("s", sum("msum").over(part).cast(d38))
-      .withColumn("n", count(lit(1)).over(part))
-      .withColumn("rn", rank().over(part.orderBy("moy")))
-      .filter(abs(col("msum").cast(d38) * col("n") - col("s")) * 10 > col("s"))
-      .select(col("p_brand"), col("cc"), col("moy"),
-        (col("msum").cast("double") / 100.0).as("sum_sales"), col("rn"))
-      .orderBy("p_brand", "cc", "moy")
-  }
+       |ORDER BY p_brand, cc, moy""")
 
   // ---- DS Q63: manager-partition sums vs partition average ---------------
   q("q_ds63_manager_deviation",
@@ -152,22 +90,5 @@ object Tpcds17 extends Pack {
        |  FROM m)
        |SELECT mgr, moy, (CAST(msum AS DOUBLE) / 100.0) AS sum_sales
        |FROM w WHERE abs(CAST(msum AS DECIMAL(38,0)) * n - s) * 10 > s
-       |ORDER BY mgr, moy""") { (s, dir) =>
-    val m = Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1997)
-      .join(broadcast(Tables.part(s, dir)
-        .filter(col("p_brand").like("Brand#1%") || col("p_brand").like("Brand#2%"))
-        .select("p_partkey", "p_type")), col("l_partkey") === col("p_partkey"))
-      .groupBy(split_part(col("p_type"), lit(" "), lit(1)).as("mgr"),
-        month(col("l_shipdate")).as("moy"))
-      .agg(sum(fx(col("l_extendedprice"), 2)).as("msum"))
-    val part = Window.partitionBy("mgr")
-    val d38 = "decimal(38,0)"
-    m.withColumn("s", sum("msum").over(part).cast(d38))
-      .withColumn("n", count(lit(1)).over(part))
-      .filter(abs(col("msum").cast(d38) * col("n") - col("s")) * 10 > col("s"))
-      .select(col("mgr"), col("moy"),
-        (col("msum").cast("double") / 100.0).as("sum_sales"))
-      .orderBy("mgr", "moy")
-  }
+       |ORDER BY mgr, moy""")
 }

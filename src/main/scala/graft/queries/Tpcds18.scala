@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 18
@@ -43,26 +41,7 @@ object Tpcds18 extends Pack {
        |JOIN customer ON o_custkey = c_custkey
        |WHERE day(o_orderdate) BETWEEN 1 AND 2
        |  AND c_nationkey <> bought_nation
-       |ORDER BY orderkey""") { (s, dir) =>
-    val perOrder = Tables.lineitem(s, dir)
-      .filter(col("l_quantity") <= 10)
-      .join(broadcast(Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("l_orderkey").as("ok"))
-      .agg(min("s_nationkey").as("bought_nation"),
-        sum(fx(col("l_extendedprice"), 2)).cast("bigint").as("ext_price"),
-        sum(fx(col("l_extendedprice") * col("l_tax"), 4)).cast("bigint").as("ext_tax"))
-    perOrder
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderdate"),
-        col("ok") === col("o_orderkey"))
-      .filter(dayofmonth(col("o_orderdate")).between(1, 2))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_name", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .filter(col("c_nationkey") =!= col("bought_nation"))
-      .select(col("c_name"), col("c_nationkey"), col("bought_nation"),
-        col("ok").as("orderkey"), col("ext_price"), col("ext_tax"))
-      .orderBy("orderkey")
-  }
+       |ORDER BY orderkey""")
 
   // ---- DS Q71: brand × day-of-month revenue, three channels --------------
   q("q_ds71_brand_by_day_channels",
@@ -76,17 +55,7 @@ object Tpcds18 extends Pack {
        |FROM ch JOIN part ON p_partkey = pk
        |WHERE p_size <= 20
        |GROUP BY p_brand, dom
-       |ORDER BY p_brand, dom""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1996 && month(col("l_shipdate")) === 11)
-      .select(col("l_partkey").as("pk"), dayofmonth(col("l_shipdate")).as("dom"),
-        fx(col("l_extendedprice"), 2).as("m"))
-      .join(broadcast(Tables.part(s, dir).filter(col("p_size") <= 20)
-        .select("p_partkey", "p_brand")), col("pk") === col("p_partkey"))
-      .groupBy("p_brand", "dom")
-      .agg((sum("m").cast("double") / 100.0).as("ext_price"))
-      .orderBy("p_brand", "dom")
-  }
+       |ORDER BY p_brand, dom""")
 
   // ---- DS Q73: 1-5 line orders behind a ratio-CASE gate ------------------
   // the hd_dep_count/hd_vehicle_count > 1 gate maps to quantity/linenumber
@@ -102,24 +71,11 @@ object Tpcds18 extends Pack {
       |JOIN orders ON ok = o_orderkey
       |JOIN customer ON o_custkey = c_custkey
       |WHERE cnt BETWEEN 1 AND 5 AND day(o_orderdate) BETWEEN 1 AND 2
-      |ORDER BY orderkey""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(col("l_quantity") > col("l_linenumber"))
-      .groupBy(col("l_orderkey").as("ok"))
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt").between(1, 5))
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderdate"),
-        col("ok") === col("o_orderkey"))
-      .filter(dayofmonth(col("o_orderdate")).between(1, 2))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_name"),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_name"), col("ok").as("orderkey"), col("cnt"))
-      .orderBy("orderkey")
-  }
+      |ORDER BY orderkey""")
 
   // ---- DS Q79: per-(order, nation) sums on one weekday -------------------
-  // DuckDB dayofweek: Sunday=0 → Monday=1; Spark dayofweek: Sunday=1 →
-  // Monday=2. Each side spells its own convention.
+  // dayofweek numbers Sunday=0, so Monday=1 (the reference's numbering,
+  // which the engine's Registry reproduces).
   q("q_ds79_monday_profit",
     s"""WITH per_order AS (
        |  SELECT l_orderkey AS ok,
@@ -133,29 +89,10 @@ object Tpcds18 extends Pack {
        |JOIN customer ON o_custkey = c_custkey
        |JOIN nation ON c_nationkey = n_nationkey
        |WHERE dayofweek(o_orderdate) = 1 AND year(o_orderdate) = 1996
-       |ORDER BY orderkey""") { (s, dir) =>
-    val perOrder = Tables.lineitem(s, dir)
-      .groupBy(col("l_orderkey").as("ok"))
-      .agg(sum(fx(col("l_extendedprice") * col("l_discount"), 4))
-          .cast("bigint").as("amt"),
-        sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4))
-          .cast("bigint").as("profit"))
-    perOrder
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderdate"),
-        col("ok") === col("o_orderkey"))
-      .filter(dayofweek(col("o_orderdate")) + 1 === 2 && year(col("o_orderdate")) === 1996)
-      .join(Tables.customer(s, dir).select("c_custkey", "c_name", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, dir).select("n_nationkey", "n_name")),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_name"), substring(col("n_name"), 1, 10).as("city"),
-        col("ok").as("orderkey"), col("amt"), col("profit"))
-      .orderBy("orderkey")
-  }
+       |ORDER BY orderkey""")
 
   // ---- DS Q80: three channel P&L CTEs, union'd and ROLLUP'd --------------
-  // Same SQL text on both engines (rollup over the union of per-channel
-  // aggregates — the Dataset API trips ambiguous-self-join on shared scans)
+  // Rollup over the union of per-channel aggregates.
   private val ds80Sql =
     s"""WITH ret AS (
        |  SELECT l_orderkey AS rk, l_linenumber AS rl,
@@ -179,10 +116,7 @@ object Tpcds18 extends Pack {
        |FROM ch
        |GROUP BY ROLLUP(channel, id)
        |ORDER BY channel NULLS FIRST, id NULLS FIRST""".stripMargin
-  q("q_ds80_channel_pnl_rollup", ds80Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(ds80Sql)
-  }
+  q("q_ds80_channel_pnl_rollup", ds80Sql)
 
   // ---- DS Q82: price-band items with demand existence --------------------
   q("q_ds82_item_band_demand",
@@ -192,14 +126,5 @@ object Tpcds18 extends Pack {
       |  AND p_size IN (15, 25, 35, 45)
       |  AND p_partkey IN (
       |    SELECT l_partkey FROM lineitem WHERE l_quantity BETWEEN 20 AND 30)
-      |ORDER BY p_partkey""") { (s, dir) =>
-    Tables.part(s, dir)
-      .filter(col("p_retailprice").between(940, 970) &&
-        col("p_size").isin(15, 25, 35, 45))
-      .join(Tables.lineitem(s, dir)
-        .filter(col("l_quantity").between(20, 30)).select("l_partkey"),
-        col("p_partkey") === col("l_partkey"), "left_semi")
-      .select("p_partkey", "p_name", "p_retailprice")
-      .orderBy("p_partkey")
-  }
+      |ORDER BY p_partkey""")
 }

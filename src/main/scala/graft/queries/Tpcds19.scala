@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import Q._
@@ -32,7 +31,7 @@ import Q._
 object Tpcds19 extends Pack {
 
   // ---- DS Q84: dimension chain + income band + return activity -----------
-  q("q_ds84_income_band_chain",
+  built("q_ds84_income_band_chain",
     """SELECT c_custkey AS customer_id,
       |  concat(concat(coalesce(c_name, ''), ', '), coalesce(c_mktsegment, ''))
       |    AS customername
@@ -75,24 +74,7 @@ object Tpcds19 extends Pack {
        |    OR (c_mktsegment = 'MACHINERY' AND l_quantity BETWEEN 30 AND 50))
        |  AND ((c_nationkey < 8 AND o_totalprice BETWEEN 0 AND 150000)
        |    OR (c_nationkey >= 8 AND o_totalprice BETWEEN 100000 AND 400000))
-       |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-    Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey",
-        "o_orderpriority", "o_totalprice"), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_mktsegment", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .filter(
-        ((col("c_mktsegment") === "AUTOMOBILE" && col("l_quantity").between(1, 20)) ||
-          (col("c_mktsegment") === "FURNITURE" && col("l_quantity").between(15, 35)) ||
-          (col("c_mktsegment") === "MACHINERY" && col("l_quantity").between(30, 50))) &&
-        ((col("c_nationkey") < 8 && col("o_totalprice").between(0, 150000)) ||
-          (col("c_nationkey") >= 8 && col("o_totalprice").between(100000, 400000))))
-      .groupBy(substring(col("o_orderpriority"), 1, 20).as("reason"))
-      .agg(favg(col("l_quantity"), 2).as("avg1"),
-        favg(col("l_extendedprice"), 2).as("avg2"),
-        favg(col("l_tax"), 2).as("avg3"))
-      .orderBy("reason")
-  }
+       |GROUP BY 1 ORDER BY 1""")
 
   // ---- DS Q86: ROLLUP + GROUPING() hierarchy + rank within parent --------
   // Same SQL text on both engines (GROUPING() over rollup + rank windows
@@ -115,10 +97,7 @@ object Tpcds19 extends Pack {
        |               ORDER BY total_sum DESC, class) AS rank_within_parent
        |FROM base
        |ORDER BY lochierarchy DESC, parent NULLS FIRST, rank_within_parent""".stripMargin
-  q("q_ds86_rollup_rank_hierarchy", ds86Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(ds86Sql)
-  }
+  q("q_ds86_rollup_rank_hierarchy", ds86Sql)
 
   // ---- DS Q89: (category, brand, month) sums vs yearly average -----------
   q("q_ds89_monthly_vs_avg",
@@ -136,24 +115,7 @@ object Tpcds19 extends Pack {
        |  FROM m)
        |SELECT cat, p_brand, moy, (CAST(msum AS DOUBLE) / 100.0) AS sum_sales
        |FROM w WHERE abs(CAST(msum AS DECIMAL(38,0)) * n - s) * 10 > s
-       |ORDER BY cat, p_brand, moy""") { (s, dir) =>
-    val m = Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1996)
-      .join(broadcast(Tables.part(s, dir).filter(col("p_size") <= 25)
-        .select("p_partkey", "p_brand", "p_type")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(split_part(col("p_type"), lit(" "), lit(1)).as("cat"),
-        col("p_brand"), month(col("l_shipdate")).as("moy"))
-      .agg(sum(fx(col("l_extendedprice"), 2)).as("msum"))
-    val part = Window.partitionBy("cat", "p_brand")
-    val d38 = "decimal(38,0)"
-    m.withColumn("s", sum("msum").over(part).cast(d38))
-      .withColumn("n", count(lit(1)).over(part))
-      .filter(abs(col("msum").cast(d38) * col("n") - col("s")) * 10 > col("s"))
-      .select(col("cat"), col("p_brand"), col("moy"),
-        (col("msum").cast("double") / 100.0).as("sum_sales"))
-      .orderBy("cat", "p_brand", "moy")
-  }
+       |ORDER BY cat, p_brand, moy""")
 
   // ---- DS Q91: loss report behind paired demographic gates ---------------
   q("q_ds91_return_loss_report",
@@ -169,25 +131,7 @@ object Tpcds19 extends Pack {
        |  AND year(l_shipdate) = 1996 AND month(l_shipdate) = 11
        |  AND ((c_mktsegment = 'BUILDING' AND c_acctbal < 5000)
        |    OR (c_mktsegment = 'AUTOMOBILE' AND c_acctbal >= 5000))
-       |GROUP BY 1, 2 ORDER BY 1""") { (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(col("l_returnflag") === "R" &&
-        year(col("l_shipdate")) === 1996 && month(col("l_shipdate")) === 11)
-      .join(broadcast(Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(s, dir).select("n_nationkey", "n_name")),
-        col("s_nationkey") === col("n_nationkey"))
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_mktsegment", "c_acctbal"),
-        col("o_custkey") === col("c_custkey"))
-      .filter((col("c_mktsegment") === "BUILDING" && col("c_acctbal") < 5000) ||
-        (col("c_mktsegment") === "AUTOMOBILE" && col("c_acctbal") >= 5000))
-      .groupBy(col("s_nationkey").as("call_center"), col("n_name").as("center_name"))
-      .agg((sum(fx(col("l_extendedprice"), 2)).cast("double") / 100.0)
-        .as("returns_loss"))
-      .orderBy("call_center")
-  }
+       |GROUP BY 1, 2 ORDER BY 1""")
 
   // ---- DS Q94: the q16 web sibling (odd-line channel) --------------------
   q("q_ds94_web_multi_supplier_noret",
@@ -204,29 +148,10 @@ object Tpcds19 extends Pack {
        |                AND l2.l_suppkey <> l1.l_suppkey)
        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
        |                  WHERE l3.l_orderkey = l1.l_orderkey
-       |                    AND l3.l_returnflag = 'R')""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    val l2 = li.select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2"))
-    val l3 = li.filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey").as("k3"))
-    li.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_shipdate",
-        "l_linenumber")
-      .filter(col("l_linenumber") % 2 === 1 &&
-        col("l_shipdate").between("1997-02-01", "1997-04-02"))
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-        .filter(col("c_nationkey") >= 10),
-        col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(l2, col("l_orderkey") === col("k2") &&
-        col("l_suppkey") =!= col("s2"), "left_semi")
-      .join(l3, col("l_orderkey") === col("k3"), "left_anti")
-      .agg(countDistinct("l_orderkey").as("order_count"),
-        fsum(col("l_extendedprice"), 2).as("total_price"))
-  }
+       |                    AND l3.l_returnflag = 'R')""")
 
   // ---- DS Q99: ship-lag buckets per (nation prefix, status, priority) ----
-  q("q_ds99_ship_lag_buckets",
+  built("q_ds99_ship_lag_buckets",
     """SELECT substr(n_name, 1, 5) AS w_substr, l_linestatus, o_orderpriority,
       |  CAST(sum(CASE WHEN lag <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS d30,
       |  CAST(sum(CASE WHEN lag > 30 AND lag <= 60 THEN 1 ELSE 0 END) AS BIGINT) AS d60,

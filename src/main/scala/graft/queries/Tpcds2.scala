@@ -46,26 +46,7 @@ object Tpcds2 extends Pack {
        |JOIN supplier ON s_suppkey = supp
        |JOIN nation ON n_nationkey = s_nationkey
        |GROUP BY ROLLUP(n_name)
-       |ORDER BY n_name NULLS FIRST""") { (s, dir) =>
-    val l = Tables.lineitem(s, dir).select("l_suppkey", "l_extendedprice", "l_returnflag")
-    val sales = l.filter(col("l_returnflag") =!= "R")
-      .select(col("l_suppkey").as("supp"), fx(col("l_extendedprice"), 2).as("sales_amt"),
-        lit(0L).as("return_amt"))
-    val returns = l.filter(col("l_returnflag") === "R")
-      .select(col("l_suppkey").as("supp"), lit(0L).as("sales_amt"),
-        fx(col("l_extendedprice"), 2).as("return_amt"))
-    val sn = broadcast(Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")
-      .join(Tables.nation(s, dir).select("n_nationkey", "n_name"),
-        col("n_nationkey") === col("s_nationkey"))
-      .select("s_suppkey", "n_name"))
-    sales.unionAll(returns).as("sr")
-      .join(sn.as("sn"), col("sn.s_suppkey") === col("sr.supp"))
-      .rollup(col("sn.n_name").as("n_name"))
-      .agg(
-        (sum(col("sales_amt")).cast("double") / 100.0).as("sales"),
-        (sum(col("return_amt")).cast("double") / 100.0).as("returns_amt"))
-      .orderBy(asc_nulls_first("n_name"))
-  }
+       |ORDER BY n_name NULLS FIRST""")
 
   // ---- DS Q10: EXISTS AND (EXISTS OR EXISTS) prospect counting -----------
   private val q10Sql =
@@ -82,13 +63,7 @@ object Tpcds2 extends Pack {
       |      AND o.o_totalprice > 150000))
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
-  q("q_ds10_prospects", q10Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    // spark.sql so Catalyst plans the three correlated EXISTS as
-    // ExistenceJoins feeding one Filter (the MARK-join battery — the
-    // DataFrame API cannot express the OR of two semi-joins directly)
-    s.sql(q10Sql)
-  }
+  q("q_ds10_prospects", q10Sql)
 
   // ---- DS Q14: per-channel INTERSECT of dimension sets, joined back ------
   q("q_ds14_cross_channel",
@@ -107,24 +82,7 @@ object Tpcds2 extends Pack {
        |JOIN part p ON p.p_partkey = l.l_partkey
        |JOIN cross_items ci ON ci.p_brand = p.p_brand AND ci.p_type = p.p_type
        |GROUP BY p.p_brand, p.p_type
-       |ORDER BY rev DESC, p.p_brand, p.p_type LIMIT 100""") { (s, dir) =>
-    val l = Tables.lineitem(s, dir)
-    val p = Tables.part(s, dir)
-    def channel(status: String, maxSize: Int) =
-      l.filter(col("l_linestatus") === status)
-        .join(p.filter(col("p_size") <= maxSize).select("p_partkey", "p_brand", "p_type"),
-          col("p_partkey") === col("l_partkey"))
-        .select("p_brand", "p_type")
-    val crossItems = broadcast(channel("O", 10).intersect(channel("F", 5)))
-    l.select("l_partkey", "l_extendedprice")
-      .join(broadcast(p.select("p_partkey", "p_brand", "p_type")),
-        col("p_partkey") === col("l_partkey"))
-      .join(crossItems, Seq("p_brand", "p_type"))
-      .groupBy("p_brand", "p_type")
-      .agg(fsum(col("l_extendedprice"), 2).as("rev"))
-      .orderBy(col("rev").desc, col("p_brand"), col("p_type"))
-      .limit(100)
-  }
+       |ORDER BY rev DESC, p.p_brand, p.p_type LIMIT 100""")
 
   // ---- DS Q33: filtered per-channel aggs UNION ALL'd, re-aggregated ------
   // (three monthly "channels" of the same fact; mantissas flow through the
@@ -148,23 +106,7 @@ object Tpcds2 extends Pack {
        |SELECT p_brand, (CAST(sum(m) AS DOUBLE) / 100.0) AS total_rev
        |FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3)
        |GROUP BY p_brand
-       |ORDER BY total_rev DESC, p_brand LIMIT 100""") { (s, dir) =>
-    val p = broadcast(Tables.part(s, dir).select("p_partkey", "p_brand"))
-    def monthAgg(m: Int) = {
-      val o = Tables.orders(s, dir)
-        .filter(month(col("o_orderdate")) === m).select("o_orderkey")
-      Tables.lineitem(s, dir).select("l_orderkey", "l_partkey", "l_extendedprice")
-        .join(o, col("o_orderkey") === col("l_orderkey"))
-        .join(p, col("p_partkey") === col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(sum(fx(col("l_extendedprice"), 2)).as("m"))
-    }
-    monthAgg(3).unionAll(monthAgg(6)).unionAll(monthAgg(9))
-      .groupBy("p_brand")
-      .agg((sum(col("m")).cast("double") / 100.0).as("total_rev"))
-      .orderBy(col("total_rev").desc, col("p_brand"))
-      .limit(100)
-  }
+       |ORDER BY total_rev DESC, p_brand LIMIT 100""")
 
   // ---- DS Q37: price-band + IN-list dims, existence-grouped --------------
   q("q_ds37_part_bands",
@@ -174,26 +116,13 @@ object Tpcds2 extends Pack {
       |  AND p_size IN (3, 7, 11, 15)
       |  AND l_quantity BETWEEN 10 AND 30
       |GROUP BY p_brand, p_type, p_retailprice
-      |ORDER BY p_brand, p_type, p_retailprice LIMIT 100""") { (s, dir) =>
-    val p = broadcast(Tables.part(s, dir)
-      .filter(col("p_retailprice").between(920, 950) &&
-        col("p_size").isin(3, 7, 11, 15))
-      .select("p_partkey", "p_brand", "p_type", "p_retailprice"))
-    Tables.lineitem(s, dir)
-      .filter(col("l_quantity").between(10, 30))
-      .select("l_partkey")
-      .join(p, col("p_partkey") === col("l_partkey"))
-      .groupBy("p_brand", "p_type", "p_retailprice")
-      .agg(count(lit(1)).as("_n")).drop("_n")
-      .orderBy("p_brand", "p_type", "p_retailprice")
-      .limit(100)
-  }
+      |ORDER BY p_brand, p_type, p_retailprice LIMIT 100""")
 
   // ---- DS Q51: FULL OUTER join of two cumulative channel series ----------
   // (per-supplier monthly revenue per channel, each with a running
   // cumulative sum, stitched with a full outer join, then the rows where
   // the web cumulative overtakes the store cumulative)
-  q("q_ds51_cumulative_channels",
+  built("q_ds51_cumulative_channels",
     s"""WITH web AS (
        |  SELECT l_suppkey AS supp, month(o_orderdate) AS m,
        |    sum(${fxSql("l_extendedprice", 2)}) AS rev
@@ -262,24 +191,5 @@ object Tpcds2 extends Pack {
        |JOIN supplier ON s_suppkey = sc.supp
        |JOIN nation ON n_nationkey = sc.nk
        |WHERE CAST(sc.rev AS DOUBLE) <= 0.98 * sb.ave
-       |ORDER BY n_name, s_name LIMIT 100""") { (s, dir) =>
-    val sup = broadcast(Tables.supplier(s, dir).select("s_suppkey", "s_name", "s_nationkey"))
-    val sc = Tables.lineitem(s, dir).select("l_suppkey", "l_extendedprice")
-      .join(sup.select("s_suppkey", "s_nationkey"), col("s_suppkey") === col("l_suppkey"))
-      .groupBy(col("s_nationkey").as("nk"), col("l_suppkey").as("supp"))
-      .agg(sum(fx(col("l_extendedprice"), 2)).as("rev"))
-    val sb = sc.groupBy("nk")
-      .agg((sum(col("rev")).cast("double") / count(lit(1))).as("ave"))
-      .withColumnRenamed("nk", "b_nk")
-    sc.join(broadcast(sb), col("nk") === col("b_nk"))
-      .filter(col("rev").cast("double") <= lit(0.98) * col("ave"))
-      .join(sup.select(col("s_suppkey").as("j_suppkey"), col("s_name")),
-        col("j_suppkey") === col("supp"))
-      .join(broadcast(Tables.nation(s, dir).select("n_nationkey", "n_name")),
-        col("n_nationkey") === col("nk"))
-      .select(col("n_name"), col("s_name"),
-        (col("rev").cast("double") / 100.0).as("revenue"))
-      .orderBy("n_name", "s_name")
-      .limit(100)
-  }
+       |ORDER BY n_name, s_name LIMIT 100""")
 }

@@ -40,12 +40,7 @@ object Tpcds3 extends Pack {
        |  ${band(1, 15, 20000)} AS bucket1,
        |  ${band(16, 35, 20000)} AS bucket2,
        |  ${band(36, 50, 20000)} AS bucket3""".stripMargin
-  q("q_ds9_band_case", q9Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    // spark.sql: each scalar subquery plans as its own aggregate; the six
-    // of them share the cached lineitem scan
-    s.sql(q9Sql)
-  }
+  q("q_ds9_band_case", q9Sql)
 
   // ---- DS Q17: per-brand multi-channel quantity statistics ---------------
   q("q_ds17_channel_stats",
@@ -58,30 +53,13 @@ object Tpcds3 extends Pack {
       |  round(stddev_samp(l_quantity) FILTER (WHERE l_linestatus = 'F'), 6) AS store_sd
       |FROM lineitem JOIN part ON p_partkey = l_partkey
       |WHERE p_size <= 10
-      |GROUP BY p_brand ORDER BY p_brand""") { (s, dir) =>
-    val p = broadcast(Tables.part(s, dir).filter(col("p_size") <= 10)
-      .select("p_partkey", "p_brand"))
-    val web = col("l_linestatus") === "O"
-    val store = col("l_linestatus") === "F"
-    Tables.lineitem(s, dir)
-      .select("l_partkey", "l_linestatus", "l_quantity")
-      .join(p, col("p_partkey") === col("l_partkey"))
-      .groupBy("p_brand")
-      .agg(
-        count(when(web, 1)).as("web_cnt"),
-        round(avg(when(web, col("l_quantity"))), 6).as("web_avg"),
-        round(stddev_samp(when(web, col("l_quantity"))), 6).as("web_sd"),
-        count(when(store, 1)).as("store_cnt"),
-        round(avg(when(store, col("l_quantity"))), 6).as("store_avg"),
-        round(stddev_samp(when(store, col("l_quantity"))), 6).as("store_sd"))
-      .orderBy("p_brand")
-  }
+      |GROUP BY p_brand ORDER BY p_brand""")
 
   // ---- DS Q31: quarter-over-quarter growth, channel-compared -------------
   // (the per-(nation, quarter) channel aggregates self-joined across three
   // quarters; report groups where the web channel grew faster than the
   // store channel from Q1 to Q2 of 1995)
-  q("q_ds31_qoq_growth",
+  built("q_ds31_qoq_growth",
     s"""WITH ss AS (
        |  SELECT c_nationkey AS nk, quarter(o_orderdate) AS q,
        |    sum(${fxSql("l_extendedprice", 2)}) AS rev
@@ -163,30 +141,7 @@ object Tpcds3 extends Pack {
        |FROM lineitem
        |JOIN orders ON o_orderkey = l_orderkey
        |JOIN best ON best.o_custkey = orders.o_custkey
-       |JOIN freq ON freq.l_partkey = lineitem.l_partkey""") { (s, dir) =>
-    val perCust = Tables.orders(s, dir)
-      .groupBy("o_custkey")
-      .agg(sum(fx(col("o_totalprice"), 2)).as("spend"))
-    val thresh = perCust.select(
-      expr("percentile(CAST(spend AS DOUBLE), 0.95)").as("t"))
-    // best ≈ 5% of customers and freq is data-dependent — both UNBOUNDED
-    // fractions of their tables, so no broadcast hint: the planner's
-    // size-derived threshold broadcasts them at bench scale and shuffles
-    // them at 100 TB (forcing the hint would OOM the build side there)
-    val best = perCust.join(broadcast(thresh))
-      .filter(col("spend").cast("double") >= col("t"))
-      .select("o_custkey")
-    val freq = Tables.lineitem(s, dir).groupBy("l_partkey")
-      .agg(count(lit(1)).as("cnt")).filter(col("cnt") > 8)
-      .select(col("l_partkey").as("f_partkey"))
-    Tables.lineitem(s, dir).select("l_orderkey", "l_partkey", "l_extendedprice")
-      .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-        col("o_orderkey") === col("l_orderkey"))
-      .join(best, Seq("o_custkey"))
-      .join(freq, col("f_partkey") === col("l_partkey"))
-      .agg(fsum(col("l_extendedprice"), 2).as("revenue"),
-        count(lit(1)).as("n_items"))
-  }
+       |JOIN freq ON freq.l_partkey = lineitem.l_partkey""")
 
   // ---- DS Q54: customer revenue-band histogram (double aggregation) ------
   q("q_ds54_revenue_bands",
@@ -195,18 +150,10 @@ object Tpcds3 extends Pack {
        |  FROM orders GROUP BY o_custkey)
        |SELECT CAST(floor(CAST(spend AS DOUBLE) / 100.0 / 50000.0) AS BIGINT) AS band,
        |  count(*) AS n_customers
-       |FROM per_cust GROUP BY band ORDER BY band""") { (s, dir) =>
-    Tables.orders(s, dir)
-      .groupBy("o_custkey")
-      .agg(sum(fx(col("o_totalprice"), 2)).as("spend"))
-      .groupBy(floor(col("spend").cast("double") / 100.0 / 50000.0)
-        .cast("bigint").as("band"))
-      .agg(count(lit(1)).as("n_customers"))
-      .orderBy("band")
-  }
+       |FROM per_cust GROUP BY band ORDER BY band""")
 
   // ---- DS Q62: shipping-lag bucket counts (multi-CASE counting) ----------
-  q("q_ds62_ship_lag",
+  built("q_ds62_ship_lag",
     """SELECT month(o_orderdate) AS m, o_orderpriority,
       |  CAST(sum(CASE WHEN date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) <= 30
       |      THEN 1 ELSE 0 END) AS BIGINT) AS d30,

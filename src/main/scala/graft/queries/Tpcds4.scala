@@ -35,7 +35,7 @@ object Tpcds4 extends Pack {
   // cross-multiplication in DECIMAL(38,0) (no division, no rounding), and
   // rendered as a truncated 6-dp mantissa via integer division — a rounded
   // double avg flaps its last digit between engines on .5-boundary reps.
-  q("q_ds64_repeat_channel_price",
+  built("q_ds64_repeat_channel_price",
     s"""WITH sales AS (
        |  SELECT l_partkey AS pk, year(o_orderdate) AS yr,
        |    sum(${fxSql("l_extendedprice * (1 - l_discount)", 4)}) AS msum,
@@ -82,7 +82,7 @@ object Tpcds4 extends Pack {
   // ---- DS Q72: week-lagged supply join with shortage inequality ----------
   // Week index = floor(days since Mon 1995-01-02 / 7) — an INTEGER derived
   // join key, identical arithmetic in both engines (floor over exact ints).
-  q("q_ds72_lagged_fulfillment",
+  built("q_ds72_lagged_fulfillment",
     s"""WITH li AS (
        |  SELECT l_partkey AS pk, l_quantity,
        |    CAST(floor(datediff('day', DATE '1995-01-02',
@@ -128,19 +128,5 @@ object Tpcds4 extends Pack {
        |FROM orders
        |WHERE o_orderkey IN (SELECT l_orderkey FROM multi)
        |  AND o_orderkey NOT IN (SELECT l_orderkey FROM returned)
-       |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    val multi = li.groupBy("l_orderkey")
-      .agg(countDistinct(col("l_suppkey")).as("ns"))
-      .filter(col("ns") >= 2)
-      .select("l_orderkey")
-    val returned = li.filter(col("l_returnflag") === "R")
-      .select("l_orderkey").distinct()
-    Tables.orders(s, dir)
-      .join(multi, col("o_orderkey") === multi("l_orderkey"), "left_semi")
-      .join(returned, col("o_orderkey") === returned("l_orderkey"), "left_anti")
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"), fsum(col("o_totalprice"), 2).as("total"))
-      .orderBy("o_orderpriority")
-  }
+       |GROUP BY 1 ORDER BY 1""")
 }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.engine.Tables
 import Q._
 
@@ -53,30 +52,7 @@ object Tpcds5 extends Pack {
       |  sqrt(CAST(c2.n * c2.ss - c2.s * c2.s AS DOUBLE) / (CAST(c2.n AS DOUBLE) * (c2.n - 1)))
       |    / (CAST(c2.s AS DOUBLE) / c2.n) AS cov2
       |FROM c c1 JOIN c c2 ON c1.sk = c2.sk AND c2.mo = c1.mo + 1
-      |ORDER BY s_suppkey, mo1""") { (s, dir) =>
-    val qb = col("l_quantity").cast("bigint")
-    val m = Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1995)
-      .groupBy(col("l_suppkey").as("sk"), month(col("l_shipdate")).as("mo"))
-      .agg(count(lit(1)).as("n"), sum(qb).as("s"), sum(qb * qb).as("ss"))
-      .filter(col("n") > 1)
-    val d38 = "decimal(38,0)"
-    val c = m.filter(
-      lit(4).cast(d38) * col("n") * col("n") * (col("n") * col("ss") - col("s") * col("s")) >
-        col("n").cast(d38) * (col("n") - 1) * col("s") * col("s"))
-    def cov(n: String, ssum: String, sq: String) =
-      sqrt((col(n) * col(sq) - col(ssum) * col(ssum)).cast("double") /
-          (col(n).cast("double") * (col(n) - lit(1)))) /
-        (col(ssum).cast("double") / col(n))
-    val c1 = c.select(col("sk"), col("mo").as("mo1"), col("n").as("n1"),
-      col("s").as("s1"), col("ss").as("ss1"))
-    val c2 = c.select(col("sk").as("sk2"), col("mo").as("mo2"), col("n").as("n2"),
-      col("s").as("s2"), col("ss").as("ss2"))
-    c1.join(c2, col("sk") === col("sk2") && col("mo2") === col("mo1") + 1)
-      .select(col("sk").as("s_suppkey"), col("mo1"), col("mo2"),
-        cov("n1", "s1", "ss1").as("cov1"), cov("n2", "s2", "ss2").as("cov2"))
-      .orderBy("s_suppkey", "mo1")
-  }
+      |ORDER BY s_suppkey, mo1""")
 
   // ---- DS Q47: deviation from the brand's year-average ------------------
   // The >1.2·avg gate stays integer: 10·msum·cnt > 12·total (DECIMAL 38).
@@ -103,42 +79,14 @@ object Tpcds5 extends Pack {
        |  CAST(next_m AS DOUBLE) / 10000.0 AS next_sales
        |FROM w
        |WHERE CAST(10 AS DECIMAL(38,0)) * msum * cnt > CAST(12 AS DECIMAL(38,0)) * total
-       |ORDER BY brand, mo""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-      .select("l_orderkey", "l_partkey", "l_extendedprice", "l_discount")
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderkey"), month(col("o_orderdate")).as("mo"),
-        year(col("o_orderdate")).as("yr"))
-      .filter(col("yr") === 1995)
-    val p = Tables.part(s, dir).select(col("p_partkey"), col("p_brand").as("brand"))
-    val bm = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .groupBy("brand", "mo")
-      .agg(sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("msum"))
-    val byBrand = Window.partitionBy("brand")
-    val byMo = Window.partitionBy("brand").orderBy("mo")
-    val d38 = "decimal(38,0)"
-    bm.select(col("brand"), col("mo"), col("msum"),
-        sum("msum").over(byBrand).as("total"),
-        count(lit(1)).over(byBrand).as("cnt"),
-        lag("msum", 1).over(byMo).as("prev_m"),
-        lead("msum", 1).over(byMo).as("next_m"))
-      .filter(lit(10).cast(d38) * col("msum") * col("cnt") >
-        lit(12).cast(d38) * col("total"))
-      .select(col("brand"), col("mo"),
-        (col("msum").cast("double") / 10000.0).as("sales"),
-        (col("msum").cast("double") * col("cnt") / col("total")).as("ratio_to_avg"),
-        (col("prev_m").cast("double") / 10000.0).as("prev_sales"),
-        (col("next_m").cast("double") / 10000.0).as("next_sales"))
-      .orderBy("brand", "mo")
-  }
+       |ORDER BY brand, mo""")
 
   // ---- DS Q59: period-over-period revenue ratio --------------------------
   // DS q59 compares the same store-week across consecutive years; the
   // fixture's order density makes (nation, 4-week period) the equivalent
   // grain: period index = (dayofyear−1) div 28, identical integer
   // derivation in both engines — no ISO-week edge cases.
-  q("q_ds59_yoy_revenue",
+  built("q_ds59_yoy_revenue",
     s"""WITH wk AS (
        |  SELECT c_nationkey AS nk, year(o_orderdate) AS yr,
        |    (dayofyear(o_orderdate) - 1) // 28 AS widx,
@@ -178,7 +126,7 @@ object Tpcds5 extends Pack {
   // The "returns table" is the derived subset of lineitem rows flagged R
   // with late receipt; sales LEFT JOIN returns on the lineitem PK, the
   // null side coalesces to zero correction — then reaggregate.
-  q("q_ds93_returns_adjusted",
+  built("q_ds93_returns_adjusted",
     """WITH ret AS (
       |  SELECT l_orderkey AS rk, l_linenumber AS rl,
       |    CAST(l_quantity AS BIGINT) // 2 AS ret_qty
@@ -230,33 +178,5 @@ object Tpcds5 extends Pack {
        |  rank() OVER (
        |    PARTITION BY lochierarchy, CASE WHEN g_nation = 0 THEN seg END
        |    ORDER BY msum DESC) AS rnk
-       |FROM r ORDER BY lochierarchy DESC, seg, nation""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(col("o_custkey"), col("o_totalprice"))
-      .where(year(col("o_orderdate")) === 1995)
-    val c = Tables.customer(s, dir).select("c_custkey", "c_nationkey", "c_mktsegment")
-    val n = Tables.nation(s, dir).select("n_nationkey", "n_name")
-    // Dataset-column resolution can't disambiguate rollup grouping
-    // outputs under a window's CASE partition key; the SQL surface binds
-    // them naturally (and is the reference's own spelling of q36).
-    val base = o.join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_mktsegment").as("seg"), col("n_name").as("nation"),
-        col("o_totalprice"))
-    base.createOrReplaceTempView("ds36_base")
-    s.sql(s"""
-      WITH r AS (
-        SELECT seg, nation,
-          sum(${fxSql("o_totalprice", 2)}) AS msum,
-          grouping(seg) + grouping(nation) AS lochierarchy,
-          grouping(nation) AS g_nation
-        FROM ds36_base
-        GROUP BY ROLLUP (seg, nation))
-      SELECT seg, nation, lochierarchy,
-        CAST(msum AS DOUBLE) / 100.0 AS revenue,
-        rank() OVER (
-          PARTITION BY lochierarchy, CASE WHEN g_nation = 0 THEN seg END
-          ORDER BY msum DESC) AS rnk
-      FROM r ORDER BY lochierarchy DESC, seg, nation""")
-  }
+       |FROM r ORDER BY lochierarchy DESC, seg, nation""")
 }

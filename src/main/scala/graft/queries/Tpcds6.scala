@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 6
@@ -43,25 +40,7 @@ object Tpcds6 extends Pack {
        |SELECT ck, CAST(ret AS DOUBLE) / 10000.0 AS returned
        |FROM ctr JOIN st USING (nk)
        |WHERE CAST(10 AS DECIMAL(38,0)) * ret * cnt > CAST(12 AS DECIMAL(38,0)) * tot
-       |ORDER BY ck""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-      .filter(col("l_returnflag") === "R")
-      .select("l_orderkey", "l_extendedprice", "l_discount")
-    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-    val c = Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-    val ctr = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
-      .agg(sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("ret"))
-    val st = ctr.groupBy(col("nk").as("nk2"))
-      .agg(sum("ret").as("tot"), count(lit(1)).as("cnt"))
-    val d38 = "decimal(38,0)"
-    ctr.join(st, col("nk") === col("nk2"))
-      .filter(lit(10).cast(d38) * col("ret") * col("cnt") >
-        lit(12).cast(d38) * col("tot"))
-      .select(col("ck"), (col("ret").cast("double") / 10000.0).as("returned"))
-      .orderBy("ck")
-  }
+       |ORDER BY ck""")
 
   // ---- DS Q44: best-k / worst-k paired by rank ---------------------------
   // The global windows run over the per-part aggregate (bounded by part
@@ -81,22 +60,7 @@ object Tpcds6 extends Pack {
        |SELECT b.rb AS rnk, b.pk AS best_pk, w.pk AS worst_pk,
        |  b.avg_rev AS best_avg, w.avg_rev AS worst_avg
        |FROM rk b JOIN rk w ON b.rb = w.rw
-       |WHERE b.rb <= 10 ORDER BY rnk""") { (s, dir) =>
-    val pp = Tables.lineitem(s, dir)
-      .groupBy(col("l_partkey").as("pk"))
-      .agg(sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("msum"),
-        count(lit(1)).as("cnt"))
-    val avgRev = col("msum").cast("double") / col("cnt")
-    val rk = pp.select(col("pk"), avgRev.as("avg_rev"),
-      rank().over(Window.orderBy(avgRev.desc, col("pk"))).as("rb"),
-      rank().over(Window.orderBy(avgRev.asc, col("pk"))).as("rw"))
-    val b = rk.filter(col("rb") <= 10)
-      .select(col("rb").as("rnk"), col("pk").as("best_pk"), col("avg_rev").as("best_avg"))
-    val w = rk.select(col("rw"), col("pk").as("worst_pk"), col("avg_rev").as("worst_avg"))
-    b.join(w, col("rnk") === col("rw"))
-      .select(col("rnk"), col("best_pk"), col("worst_pk"), col("best_avg"), col("worst_avg"))
-      .orderBy("rnk")
-  }
+       |WHERE b.rb <= 10 ORDER BY rnk""")
 
   // ---- DS Q41: deep DNF over dimension attributes ------------------------
   q("q_ds41_dnf_dims",
@@ -107,16 +71,7 @@ object Tpcds6 extends Pack {
       |WHERE (p_size BETWEEN 1 AND 15 AND p_type IN ('ECONOMY', 'SMALL'))
       |   OR (p_size BETWEEN 20 AND 30 AND p_type LIKE '%TANDAR%')
       |   OR (p_retailprice > 980 AND p_type = 'PROMO')
-      |GROUP BY p_brand ORDER BY p_brand""") { (s, dir) =>
-    Tables.part(s, dir)
-      .filter(
-        (col("p_size").between(1, 15) && col("p_type").isin("ECONOMY", "SMALL")) ||
-        (col("p_size").between(20, 30) && col("p_type").like("%TANDAR%")) ||
-        (col("p_retailprice") > 980 && col("p_type") === "PROMO"))
-      .groupBy("p_brand")
-      .agg(countDistinct(col("p_name")).as("n_names"), count(lit(1)).as("n_parts"))
-      .orderBy("p_brand")
-  }
+      |GROUP BY p_brand ORDER BY p_brand""")
 
   // ---- DS Q35: EXISTS-gated per-group statistics -------------------------
   q("q_ds35_exists_stats",
@@ -128,17 +83,5 @@ object Tpcds6 extends Pack {
        |FROM customer
        |WHERE EXISTS (SELECT 1 FROM orders
        |              WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)
-       |GROUP BY 1, 2 ORDER BY 1, 2""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .filter(year(col("o_orderdate")) === 1995)
-      .select("o_custkey")
-    Tables.customer(s, dir)
-      .join(o, col("c_custkey") === col("o_custkey"), "left_semi")
-      .groupBy("c_nationkey", "c_mktsegment")
-      .agg(count(lit(1)).as("n_cust"),
-        min("c_acctbal").as("bal_min"),
-        max("c_acctbal").as("bal_max"),
-        fsum(col("c_acctbal"), 2).as("bal_sum"))
-      .orderBy("c_nationkey", "c_mktsegment")
-  }
+       |GROUP BY 1, 2 ORDER BY 1, 2""")
 }

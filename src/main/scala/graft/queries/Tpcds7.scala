@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 7
@@ -50,31 +48,7 @@ object Tpcds7 extends Pack {
        |FROM yt y1 JOIN yt y2 ON y1.ck = y2.ck
        |WHERE y1.yr = 1995 AND y2.yr = 1996
        |  AND CAST(y2.ml AS DECIMAL(38,0)) * y1.mo > CAST(y2.mo AS DECIMAL(38,0)) * y1.ml
-       |ORDER BY c_custkey""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        year(col("o_orderdate")).as("yr"))
-      .filter(col("yr").isin(1995, 1996))
-    val li = Tables.lineitem(s, dir)
-      .select("l_orderkey", "l_extendedprice", "l_discount")
-    val yt = o.join(li, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("ck"), col("yr"))
-      .agg(sum(fx(col("o_totalprice"), 2)).as("mo"),
-        sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("ml"))
-    val y1 = yt.filter(col("yr") === 1995)
-      .select(col("ck"), col("mo").as("mo1"), col("ml").as("ml1"))
-    val y2 = yt.filter(col("yr") === 1996)
-      .select(col("ck").as("ck2"), col("mo").as("mo2"), col("ml").as("ml2"))
-    val d38 = "decimal(38,0)"
-    y1.join(y2, col("ck") === col("ck2") &&
-        col("ml2").cast(d38) * col("mo1") > col("mo2").cast(d38) * col("ml1"))
-      .select(col("ck").as("c_custkey"),
-        (col("mo1").cast("double") / 100.0).as("ord_y1"),
-        (col("mo2").cast("double") / 100.0).as("ord_y2"),
-        (col("ml1").cast("double") / 10000.0).as("line_y1"),
-        (col("ml2").cast("double") / 10000.0).as("line_y2"))
-      .orderBy("c_custkey")
-  }
+       |ORDER BY c_custkey""")
 
   // ---- DS Q21: before/after pivot-date quantities from one scan ----------
   q("q_ds21_before_after",
@@ -90,18 +64,7 @@ object Tpcds7 extends Pack {
       |               THEN CAST(l_quantity AS BIGINT) ELSE 0 END) * 2
       |     < sum(CASE WHEN l_shipdate >= DATE '1996-01-01'
       |               THEN CAST(l_quantity AS BIGINT) ELSE 0 END) * 3
-      |ORDER BY l_suppkey""") { (s, dir) =>
-    val pivot = to_date(lit("1996-01-01"))
-    val qb = col("l_quantity").cast("bigint")
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate").between("1995-07-01", "1996-06-30"))
-      .groupBy("l_suppkey")
-      .agg(
-        sum(when(col("l_shipdate") < pivot, qb).otherwise(0)).cast("bigint").as("qty_before"),
-        sum(when(col("l_shipdate") >= pivot, qb).otherwise(0)).cast("bigint").as("qty_after"))
-      .filter(col("qty_before") * 2 < col("qty_after") * 3)
-      .orderBy("l_suppkey")
-  }
+      |ORDER BY l_suppkey""")
 
   // ---- DS Q90: am/pm activity ratio --------------------------------------
   q("q_ds90_ampm_ratio",
@@ -110,16 +73,7 @@ object Tpcds7 extends Pack {
       |  CAST(sum(CASE WHEN hour(ts) >= 12 THEN 1 ELSE 0 END) AS BIGINT) AS n_pm,
       |  CAST(sum(CASE WHEN hour(ts) < 12 THEN 1 ELSE 0 END) AS DOUBLE)
       |    / sum(CASE WHEN hour(ts) >= 12 THEN 1 ELSE 0 END) AS am_pm_ratio
-      |FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy("event_type")
-      .agg(
-        sum(when(hour(col("ts")) < 12, 1).otherwise(0)).cast("bigint").as("n_am"),
-        sum(when(hour(col("ts")) >= 12, 1).otherwise(0)).cast("bigint").as("n_pm"))
-      .select(col("event_type"), col("n_am"), col("n_pm"),
-        (col("n_am").cast("double") / col("n_pm")).as("am_pm_ratio"))
-      .orderBy("event_type")
-  }
+      |FROM events GROUP BY event_type ORDER BY event_type""")
 
   // ---- DS Q92: rows above 1.3× their group's average ---------------------
   // Per-part avg discount as exact mantissa moments; the >1.3× gate
@@ -134,17 +88,7 @@ object Tpcds7 extends Pack {
        |  ${fsumSql("l_extendedprice * l_discount", 4)} AS excess_revenue
        |FROM lineitem JOIN pa ON l_partkey = pk
        |WHERE CAST(10 AS DECIMAL(38,0)) * ${fxSql("l_discount", 2)} * cnt
-       |    > CAST(13 AS DECIMAL(38,0)) * sd""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    val pa = li.groupBy(col("l_partkey").as("pk"))
-      .agg(sum(fx(col("l_discount"), 2)).as("sd"), count(lit(1)).as("cnt"))
-    val d38 = "decimal(38,0)"
-    li.join(pa, col("l_partkey") === col("pk"))
-      .filter(lit(10).cast(d38) * fx(col("l_discount"), 2) * col("cnt") >
-        lit(13).cast(d38) * col("sd"))
-      .agg(count(lit(1)).as("n_excess"),
-        fsum(col("l_extendedprice") * col("l_discount"), 4).as("excess_revenue"))
-  }
+       |    > CAST(13 AS DECIMAL(38,0)) * sd""")
 
   // ---- DS Q97: channel-overlap counts via FULL OUTER ---------------------
   q("q_ds97_channel_overlap",
@@ -154,18 +98,5 @@ object Tpcds7 extends Pack {
       |  CAST(sum(CASE WHEN ch1.ck IS NOT NULL AND ch2.ck IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
       |  CAST(sum(CASE WHEN ch1.ck IS NOT NULL AND ch2.ck IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_only_1,
       |  CAST(sum(CASE WHEN ch1.ck IS NULL AND ch2.ck IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_only_2
-      |FROM ch1 FULL OUTER JOIN ch2 ON ch1.ck = ch2.ck""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(col("o_custkey"), year(col("o_orderdate")).as("yr"))
-    val ch1 = o.filter(col("yr") === 1995).select(col("o_custkey").as("ck1")).distinct()
-    val ch2 = o.filter(col("yr") === 1996).select(col("o_custkey").as("ck2")).distinct()
-    ch1.join(ch2, col("ck1") === col("ck2"), "full_outer")
-      .agg(
-        sum(when(col("ck1").isNotNull && col("ck2").isNotNull, 1).otherwise(0))
-          .cast("bigint").as("n_both"),
-        sum(when(col("ck1").isNotNull && col("ck2").isNull, 1).otherwise(0))
-          .cast("bigint").as("n_only_1"),
-        sum(when(col("ck1").isNull && col("ck2").isNotNull, 1).otherwise(0))
-          .cast("bigint").as("n_only_2"))
-  }
+      |FROM ch1 FULL OUTER JOIN ch2 ON ch1.ck = ch2.ck""")
 }

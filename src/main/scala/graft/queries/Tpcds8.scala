@@ -56,35 +56,12 @@ object Tpcds8 extends Pack {
        |  AND ret.d2 > sale.d1 AND ret.d2 <= sale.d1 + INTERVAL 90 DAY
        |JOIN rebuy ON sale.ck = rebuy.ck
        |  AND rebuy.d3 > ret.d2 AND rebuy.d3 <= ret.d2 + INTERVAL 90 DAY
-       |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-    def li(flag: String) = Tables.lineitem(s, dir)
-      .filter(col("l_returnflag") === flag)
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-    val m = fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
-    val sale = li("N")
-      .filter(year(col("l_shipdate")) === 1995 && month(col("l_shipdate")) === 1)
-      .select(col("o_custkey").as("ck"), col("l_shipdate").as("d1"), m.as("m1"))
-    val ret = li("R")
-      .select(col("o_custkey").as("rck"), col("l_shipdate").as("d2"))
-    val rebuy = li("N")
-      .select(col("o_custkey").as("bck"), col("l_shipdate").as("d3"), m.as("m3"))
-    sale
-      .join(ret, col("ck") === col("rck") &&
-        col("d2") > col("d1") && col("d2") <= col("d1") + expr("INTERVAL 90 DAY"))
-      .join(rebuy, col("ck") === col("bck") &&
-        col("d3") > col("d2") && col("d3") <= col("d2") + expr("INTERVAL 90 DAY"))
-      .groupBy(col("ck").as("c_custkey"))
-      .agg(count(lit(1)).as("n_chains"),
-        (min("m1").cast("double") / 10000.0).as("first_sale"),
-        (max("m3").cast("double") / 10000.0).as("max_rebuy"))
-      .orderBy("c_custkey")
-  }
+       |GROUP BY 1 ORDER BY 1""")
 
   // ---- DS Q49: worst return-ratio rankings per channel, unioned ----------
   // ratio orders by the identical double division of exact ints in both
   // engines; pk tiebreak makes the rank total.
-  q("q_ds49_return_rank",
+  built("q_ds49_return_rank",
     """WITH pr AS (
       |  SELECT year(l_shipdate) AS yr, l_partkey AS pk,
       |    sum(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS rq,
@@ -135,22 +112,7 @@ object Tpcds8 extends Pack {
        |FROM hy
        |WHERE CAST(9 AS DECIMAL(38,0)) * mb <= CAST(10 AS DECIMAL(38,0)) * ma
        |  AND CAST(10 AS DECIMAL(38,0)) * ma <= CAST(11 AS DECIMAL(38,0)) * mb
-       |ORDER BY pk""") { (s, dir) =>
-    val m = fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
-    val hy = Tables.lineitem(s, dir)
-      .filter(year(col("l_shipdate")) === 1995)
-      .groupBy(col("l_partkey").as("pk"))
-      .agg(sum(when(month(col("l_shipdate")) <= 6, m).otherwise(0)).as("ma"),
-        sum(when(month(col("l_shipdate")) > 6, m).otherwise(0)).as("mb"))
-      .filter(col("mb") > 0)
-    val d38 = "decimal(38,0)"
-    hy.filter(lit(9).cast(d38) * col("mb") <= lit(10).cast(d38) * col("ma") &&
-        lit(10).cast(d38) * col("ma") <= lit(11).cast(d38) * col("mb"))
-      .select(col("pk"),
-        (col("ma").cast("double") / 10000.0).as("rev_h1"),
-        (col("mb").cast("double") / 10000.0).as("rev_h2"))
-      .orderBy("pk")
-  }
+       |ORDER BY pk""")
 
   // ---- DS Q66: wide time-band conditional-aggregation matrix -------------
   q("q_ds66_time_bands",
@@ -161,21 +123,7 @@ object Tpcds8 extends Pack {
       |  CAST(sum(CASE WHEN month(l_shipdate) BETWEEN 10 AND 12 THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT) AS q4_qty,
       |  CAST(sum(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT) AS ret_qty
       |FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-      |GROUP BY 1, 2 ORDER BY 1, 2""") { (s, dir) =>
-    val qb = col("l_quantity").cast("bigint")
-    def band(lo: Int, hi: Int) =
-      sum(when(month(col("l_shipdate")).between(lo, hi), qb).otherwise(0))
-        .cast("bigint")
-    Tables.lineitem(s, dir)
-      .withColumn("yr", year(col("l_shipdate")))
-      .filter(col("yr").isin(1995, 1996))
-      .groupBy(col("l_suppkey"), col("yr"))
-      .agg(band(1, 3).as("q1_qty"), band(4, 6).as("q2_qty"),
-        band(7, 9).as("q3_qty"), band(10, 12).as("q4_qty"),
-        sum(when(col("l_returnflag") === "R", qb).otherwise(0))
-          .cast("bigint").as("ret_qty"))
-      .orderBy("l_suppkey", "yr")
-  }
+      |GROUP BY 1, 2 ORDER BY 1, 2""")
 
   // ---- DS Q75: prior-year delta per brand --------------------------------
   q("q_ds75_prior_year_delta",
@@ -191,22 +139,5 @@ object Tpcds8 extends Pack {
        |  CAST(y2.msum - y1.msum AS DOUBLE) / 10000.0 AS rev_delta
        |FROM by_yr y1 JOIN by_yr y2 ON y1.brand = y2.brand
        |WHERE y1.yr = 1995 AND y2.yr = 1996 AND y2.msum < y1.msum
-       |ORDER BY brand""") { (s, dir) =>
-    val p = Tables.part(s, dir).select(col("p_partkey"), col("p_brand").as("brand"))
-    val byYr = Tables.lineitem(s, dir)
-      .withColumn("yr", year(col("l_shipdate")))
-      .filter(col("yr").isin(1995, 1996))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .groupBy("brand", "yr")
-      .agg(count(lit(1)).as("cnt"),
-        sum(fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)).as("msum"))
-    val y1 = byYr.filter(col("yr") === 1995)
-      .select(col("brand"), col("cnt").as("c1"), col("msum").as("m1"))
-    val y2 = byYr.filter(col("yr") === 1996)
-      .select(col("brand").as("brand2"), col("cnt").as("c2"), col("msum").as("m2"))
-    y1.join(y2, col("brand") === col("brand2") && col("m2") < col("m1"))
-      .select(col("brand"), (col("c2") - col("c1")).as("cnt_delta"),
-        ((col("m2") - col("m1")).cast("double") / 10000.0).as("rev_delta"))
-      .orderBy("brand")
-  }
+       |ORDER BY brand""")
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** TPC-DS sample pack, batch 9
@@ -32,13 +30,7 @@ object Tpcds9 extends Pack {
       |  EXCEPT
       |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996
       |  EXCEPT
-      |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1997)""") { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .select(col("o_custkey"), year(col("o_orderdate")).as("yr"))
-    def yrSet(y: Int) = o.filter(col("yr") === y).select("o_custkey").distinct()
-    yrSet(1995).except(yrSet(1996)).except(yrSet(1997))
-      .agg(count(lit(1)).as("n_lapsed"))
-  }
+      |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1997)""")
 
   // ---- DS Q77: channel P&L full-outer stitch + grand total ---------------
   // sales channel = order totals per nation; returns channel = R-flagged
@@ -67,38 +59,7 @@ object Tpcds9 extends Pack {
        |SELECT -1 AS nk, CAST(sum(ms) AS DOUBLE) / 100.0,
        |  CAST(sum(mr) AS DOUBLE) / 100.0, CAST(sum(ms - mr) AS DOUBLE) / 100.0
        |FROM pl
-       |ORDER BY nk""") { (s, dir) =>
-    val c = Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-    val sales = Tables.orders(s, dir)
-      .filter(year(col("o_orderdate")) === 1995)
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_nationkey").as("nk"))
-      .agg(sum(fx(col("o_totalprice"), 2)).as("ms"))
-    val ret = Tables.lineitem(s, dir)
-      .filter(col("l_returnflag") === "R")
-      .select("l_orderkey", "l_extendedprice")
-      .join(Tables.orders(s, dir).filter(year(col("o_orderdate")) === 1995)
-          .select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_nationkey").as("rnk"))
-      .agg(sum(fx(col("l_extendedprice"), 2)).as("mr"))
-    val pl = sales.join(ret, col("nk") === col("rnk"), "full_outer")
-      .select(coalesce(col("nk"), col("rnk")).as("nk"),
-        coalesce(col("ms"), lit(0L)).as("ms"),
-        coalesce(col("mr"), lit(0L)).as("mr"))
-    val detail = pl.select(col("nk"),
-      (col("ms").cast("double") / 100.0).as("sales_total"),
-      (col("mr").cast("double") / 100.0).as("returns_total"),
-      ((col("ms") - col("mr")).cast("double") / 100.0).as("net"))
-    val total = pl.agg(sum("ms").as("tms"), sum("mr").as("tmr"),
-        sum(col("ms") - col("mr")).as("tnet"))
-      .select(lit(-1).cast("int").as("nk"),
-        (col("tms").cast("double") / 100.0).as("sales_total"),
-        (col("tmr").cast("double") / 100.0).as("returns_total"),
-        (col("tnet").cast("double") / 100.0).as("net"))
-    detail.unionByName(total).orderBy("nk")
-  }
+       |ORDER BY nk""")
 
   // ---- DS Q61: promotional-revenue ratio ---------------------------------
   q("q_ds61_promo_ratio",
@@ -122,26 +83,7 @@ object Tpcds9 extends Pack {
        |  CAST(ma AS DOUBLE) / 10000.0 AS total_rev,
        |  CAST(coalesce(mp, 0) AS DOUBLE) * 100 / ma AS promo_pct
        |FROM allrev LEFT JOIN promo ON allrev.nk = promo.nk
-       |ORDER BY nk""") { (s, dir) =>
-    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-    val c = Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-    val m = fx(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
-    val base = Tables.lineitem(s, dir)
-      .select("l_orderkey", "l_partkey", "l_extendedprice", "l_discount")
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-    val promoParts = Tables.part(s, dir)
-      .filter(col("p_type") === "PROMO").select("p_partkey")
-    val promo = base.join(broadcast(promoParts), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("c_nationkey").as("pnk")).agg(sum(m).as("mp"))
-    val allrev = base.groupBy(col("c_nationkey").as("nk")).agg(sum(m).as("ma"))
-    allrev.join(promo, col("nk") === col("pnk"), "left")
-      .select(col("nk"),
-        (coalesce(col("mp"), lit(0L)).cast("double") / 10000.0).as("promo_rev"),
-        (col("ma").cast("double") / 10000.0).as("total_rev"),
-        (coalesce(col("mp"), lit(0L)).cast("double") * 100 / col("ma")).as("promo_pct"))
-      .orderBy("nk")
-  }
+       |ORDER BY nk""")
 
   // ---- DS Q83: keys returned in every period, joined back ----------------
   q("q_ds83_returns_intersect",
@@ -157,18 +99,5 @@ object Tpcds9 extends Pack {
       |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS ret_qty
       |FROM lineitem JOIN allyrs ON l_partkey = pk
       |WHERE l_returnflag = 'R' AND year(l_shipdate) IN (1995, 1996, 1997)
-      |GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    def rset(y: Int) = li
-      .filter(col("l_returnflag") === "R" && year(col("l_shipdate")) === y)
-      .select(col("l_partkey").as("pk")).distinct()
-    val allyrs = rset(1995).intersect(rset(1996)).intersect(rset(1997))
-    li.filter(col("l_returnflag") === "R" &&
-        year(col("l_shipdate")).isin(1995, 1996, 1997))
-      .join(allyrs, col("l_partkey") === col("pk"))
-      .groupBy(year(col("l_shipdate")).as("yr"))
-      .agg(count(lit(1)).as("n_returns"),
-        sum(col("l_quantity").cast("bigint")).cast("bigint").as("ret_qty"))
-      .orderBy("yr")
-  }
+      |GROUP BY 1 ORDER BY 1""")
 }

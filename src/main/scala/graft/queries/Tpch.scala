@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-import graft.engine.Tables
 import Q._
 
 /** The 13 TPC-H query shapes not covered by the star-join pack in
@@ -14,18 +12,16 @@ import Q._
   * available columns. Money sums use the fixed-point BIGINT mantissas
   * from Q (exact + order-independent, hash-identical cross-engine).
   *
-  * Correlated-subquery shapes (Q2/Q11/Q17/Q22) run through spark.sql:
-  * Catalyst's decorrelation (the analog of the reference's flatten-
-  * dependent-join, src/planner/subquery/flatten_dependent_join.cpp) is
-  * the Spark-first way to execute them — hand-rewriting the correlation
-  * would bypass the machinery under test. Join-topology shapes
-  * (Q7/8/9/13/15/16/19/20/21) use the DataFrame API with explicit
-  * broadcasts for dimension sides.
+  * Each query is its oracle text, run through the engine's front door.
+  * Correlated-subquery shapes (Q2/Q11/Q17/Q22) exercise Catalyst's
+  * decorrelation (the analog of the reference's flatten-dependent-join,
+  * src/planner/subquery/flatten_dependent_join.cpp); join-topology shapes
+  * (Q7/8/9/13/15/16/19/20/21) rely on the optimizer to broadcast the
+  * dimension sides.
   */
 object Tpch extends Pack {
 
   private val volumeSql = s"${fxSql("l_extendedprice", 2)} * (100 - ${fxSql("l_discount", 2)})"
-  private def volume = fx(col("l_extendedprice"), 2) * (lit(100) - fx(col("l_discount"), 2))
 
   // ---- Q2: min-value supplier per part (correlated scalar MIN) -----------
   // partsupp's min ps_supplycost becomes min s_acctbal over the suppliers
@@ -44,10 +40,7 @@ object Tpch extends Pack {
       |      AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
       |      AND r_name = 'EUROPE')
       |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin
-  q("q2_min_cost_supp", q2Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(q2Sql)
-  }
+  q("q2_min_cost_supp", q2Sql)
 
   // ---- Q7: volume shipping between two nations (dual nation join) --------
   q("q7_volume_shipping",
@@ -67,28 +60,7 @@ object Tpch extends Pack {
        |    AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
        |) shipping
        |GROUP BY supp_nation, cust_nation, l_year
-       |ORDER BY supp_nation, cust_nation, l_year""") { (s, dir) =>
-    val l = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= ts("1996-01-01") && col("l_shipdate") < ts("1998-01-01"))
-    val o = Tables.orders(s, dir)
-    val c = Tables.customer(s, dir)
-    val sup = Tables.supplier(s, dir)
-    val n1 = Tables.nation(s, dir).select(
-      col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation"))
-    val n2 = Tables.nation(s, dir).select(
-      col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation"))
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(sup), l("l_suppkey") === sup("s_suppkey"))
-      .join(broadcast(n1), sup("s_nationkey") === col("n1_key"))
-      .join(broadcast(n2), c("c_nationkey") === col("n2_key"))
-      .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-              (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-      .withColumn("l_year", year(col("l_shipdate")))
-      .groupBy("supp_nation", "cust_nation", "l_year")
-      .agg((sum(volume).cast("double") / 10000.0).as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
-  }
+       |ORDER BY supp_nation, cust_nation, l_year""")
 
   // ---- Q8: national market share within a region (8-way snowflake) -------
   q("q8_market_share",
@@ -110,32 +82,7 @@ object Tpch extends Pack {
        |  WHERE r_name = 'ASIA' AND p_type = 'PROMO'
        |    AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
        |) all_nations
-       |GROUP BY o_year ORDER BY o_year""") { (s, dir) =>
-    val p = Tables.part(s, dir).filter(col("p_type") === "PROMO")
-    val l = Tables.lineitem(s, dir)
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1998-01-01"))
-    val c = Tables.customer(s, dir)
-    val sup = Tables.supplier(s, dir)
-    val n1 = Tables.nation(s, dir).select(
-      col("n_nationkey").as("n1_key"), col("n_regionkey").as("n1_region"))
-    val n2 = Tables.nation(s, dir).select(
-      col("n_nationkey").as("n2_key"), col("n_name").as("supp_nation"))
-    val r = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-    l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
-      .join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(sup), l("l_suppkey") === sup("s_suppkey"))
-      .join(broadcast(n1), c("c_nationkey") === col("n1_key"))
-      .join(broadcast(r), col("n1_region") === r("r_regionkey"))
-      .join(broadcast(n2), sup("s_nationkey") === col("n2_key"))
-      .select(year(col("o_orderdate")).as("o_year"), volume.as("volume"), col("supp_nation"))
-      .groupBy("o_year")
-      .agg(round(
-        sum(when(col("supp_nation") === "NATION_5", col("volume")).otherwise(0L)).cast("double") /
-        sum(col("volume")).cast("double"), 6).as("mkt_share"))
-      .orderBy("o_year")
-  }
+       |GROUP BY o_year ORDER BY o_year""")
 
   // ---- Q9: product-type profit by nation and year ------------------------
   // ps_supplycost*l_quantity becomes p_retailprice*l_quantity/10; the
@@ -154,24 +101,7 @@ object Tpch extends Pack {
        |  WHERE p_name LIKE '%red%'
        |) profit
        |GROUP BY nation, o_year
-       |ORDER BY nation, o_year DESC""") { (s, dir) =>
-    val p = Tables.part(s, dir).filter(col("p_name").like("%red%"))
-    val l = Tables.lineitem(s, dir)
-    val o = Tables.orders(s, dir)
-    val sup = Tables.supplier(s, dir)
-    val n = Tables.nation(s, dir)
-    val amount = lit(10) * fx(col("l_extendedprice"), 2) * (lit(100) - fx(col("l_discount"), 2)) -
-      fx(col("p_retailprice"), 2) * fx(col("l_quantity"), 2)
-    l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
-      .join(broadcast(sup), l("l_suppkey") === sup("s_suppkey"))
-      .join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"))
-      .select(n("n_name").as("nation"), year(col("o_orderdate")).as("o_year"),
-        amount.as("amount"))
-      .groupBy("nation", "o_year")
-      .agg((sum(col("amount")).cast("double") / 100000.0).as("sum_profit"))
-      .orderBy(col("nation"), col("o_year").desc)
-  }
+       |ORDER BY nation, o_year DESC""")
 
   // ---- Q11: important stock (HAVING vs global-scalar subquery) -----------
   // partsupp value becomes lineitem extendedprice×quantity per part for
@@ -190,10 +120,7 @@ object Tpch extends Pack {
        |   WHERE n_name = 'NATION_3')
        |ORDER BY value DESC, l_partkey""".stripMargin
   }
-  q("q11_important_stock", q11Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(q11Sql)
-  }
+  q("q11_important_stock", q11Sql)
 
   // ---- Q13: customer order-count distribution (left join + re-agg) -------
   q("q13_custdist",
@@ -205,16 +132,7 @@ object Tpch extends Pack {
       |  GROUP BY c_custkey
       |) c_orders
       |GROUP BY c_count
-      |ORDER BY custdist DESC, c_count DESC""") { (s, dir) =>
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir).filter(col("o_orderpriority") =!= "1-URGENT")
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_outer")
-      .groupBy(c("c_custkey"))
-      .agg(count(o("o_orderkey")).as("c_count"))
-      .groupBy("c_count")
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
+      |ORDER BY custdist DESC, c_count DESC""")
 
   // ---- Q15: top supplier via revenue view + scalar MAX -------------------
   q("q15_top_supplier",
@@ -227,26 +145,12 @@ object Tpch extends Pack {
        |SELECT s_suppkey, s_name, total_revenue
        |FROM supplier JOIN revenue ON s_suppkey = supplier_no
        |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-       |ORDER BY s_suppkey""") { (s, dir) =>
-    val rev = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1997-04-01"))
-      .groupBy(col("l_suppkey").as("supplier_no"))
-      .agg((sum(volume).cast("double") / 10000.0).as("total_revenue"))
-    // the revenue view is tiny (one row per supplier): max broadcasts back
-    // as a single-row join rather than a second scan of lineitem
-    val top = rev.agg(max(col("total_revenue")).as("max_rev"))
-    Tables.supplier(s, dir)
-      .join(rev, col("s_suppkey") === col("supplier_no"))
-      .join(broadcast(top), col("total_revenue") === col("max_rev"))
-      .select("s_suppkey", "s_name", "total_revenue")
-      .orderBy("s_suppkey")
-  }
+       |ORDER BY s_suppkey""")
 
   // ---- Q16: supplier count per part attribute (NOT IN + count distinct) --
-  // NOT IN goes through spark.sql so Catalyst plans its null-aware
-  // broadcast-hash anti join (NULL-poisoning semantics preserved: one NULL
-  // s_suppkey in the subquery would empty the result, exactly like the
-  // reference) — a plain left_anti DataFrame join would silently drop that.
+  // Catalyst plans NOT IN as its null-aware broadcast-hash anti join
+  // (NULL-poisoning semantics preserved: one NULL s_suppkey in the
+  // subquery would empty the result, exactly like the reference).
   private val q16Sql =
     """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
       |FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -255,10 +159,7 @@ object Tpch extends Pack {
       |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
       |GROUP BY p_brand, p_type, p_size
       |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin
-  q("q16_supplier_cnt", q16Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(q16Sql)
-  }
+  q("q16_supplier_cnt", q16Sql)
 
   // ---- Q17: small-quantity revenue (correlated AVG subquery) -------------
   private val q17Sql =
@@ -268,10 +169,7 @@ object Tpch extends Pack {
        |  AND l_quantity < (
        |    SELECT 0.2 * (CAST(sum(${fxSql("l_quantity", 2)}) AS DOUBLE) / 100.0 / count(*))
        |    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin
-  q("q17_small_qty_revenue", q17Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(q17Sql)
-  }
+  q("q17_small_qty_revenue", q17Sql)
 
   // ---- Q19: disjunctive pushdown (three OR'd conjunction blocks) ---------
   q("q19_disjunct_revenue",
@@ -279,17 +177,7 @@ object Tpch extends Pack {
        |FROM lineitem JOIN part ON p_partkey = l_partkey
        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-       |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""") { (s, dir) =>
-    val p = Tables.part(s, dir)
-    val l = Tables.lineitem(s, dir)
-    val cond =
-      (p("p_brand") === "Brand#12" && p("p_size").between(1, 5) && l("l_quantity").between(1, 11)) ||
-      (p("p_brand") === "Brand#23" && p("p_size").between(1, 10) && l("l_quantity").between(10, 20)) ||
-      (p("p_brand") === "Brand#34" && p("p_size").between(1, 15) && l("l_quantity").between(20, 30))
-    l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
-      .filter(cond)
-      .agg((sum(volume).cast("double") / 10000.0).as("revenue"))
-  }
+       |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""")
 
   // ---- Q20: part-promotion suppliers (nested IN + grouped HAVING) --------
   // availqty excess becomes shipped-quantity excess per (supplier, part).
@@ -303,24 +191,7 @@ object Tpch extends Pack {
        |  GROUP BY l_suppkey, l_partkey
        |  HAVING sum(${fxSql("l_quantity", 2)}) > 4000)
        |  AND n_name IN ('NATION_5', 'NATION_6', 'NATION_7', 'NATION_8', 'NATION_9')
-       |ORDER BY s_name""") { (s, dir) =>
-    val redParts = Tables.part(s, dir).filter(col("p_name").like("red%"))
-      .select(col("p_partkey").as("red_partkey"))
-    val heavy = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01"))
-      .join(broadcast(redParts), col("l_partkey") === col("red_partkey"), "left_semi")
-      .groupBy("l_suppkey", "l_partkey")
-      .agg(sum(fx(col("l_quantity"), 2)).as("q"))
-      .filter(col("q") > 4000)
-      .select("l_suppkey").distinct()
-    val n = Tables.nation(s, dir)
-      .filter(col("n_name").isin("NATION_5", "NATION_6", "NATION_7", "NATION_8", "NATION_9"))
-    Tables.supplier(s, dir)
-      .join(broadcast(n), col("s_nationkey") === n("n_nationkey"), "left_semi")
-      .join(broadcast(heavy), col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select("s_name", "s_acctbal")
-      .orderBy("s_name")
-  }
+       |ORDER BY s_name""")
 
   // ---- Q21: suppliers who kept multi-supplier orders waiting -------------
   // (EXISTS + NOT EXISTS self-joins on the fact table → semi + anti join;
@@ -341,30 +212,7 @@ object Tpch extends Pack {
       |      AND l3.l_returnflag = 'R')
       |  AND n_name IN ('NATION_4', 'NATION_5')
       |GROUP BY s_name
-      |ORDER BY numwait DESC, s_name LIMIT 100""") { (s, dir) =>
-    val li = Tables.lineitem(s, dir)
-    val l1 = li.select("l_orderkey", "l_suppkey", "l_returnflag")
-      .filter(col("l_returnflag") === "R").alias("l1")
-    val l2 = li.select("l_orderkey", "l_suppkey").alias("l2")
-    val l3 = li.select("l_orderkey", "l_suppkey", "l_returnflag")
-      .filter(col("l_returnflag") === "R").alias("l3")
-    val o = Tables.orders(s, dir).filter(col("o_orderstatus") === "F")
-    val n = Tables.nation(s, dir).filter(col("n_name").isin("NATION_4", "NATION_5"))
-    val sup = Tables.supplier(s, dir)
-    l1.join(l2,
-        col("l2.l_orderkey") === col("l1.l_orderkey") &&
-        col("l2.l_suppkey") =!= col("l1.l_suppkey"), "left_semi")
-      .join(l3,
-        col("l3.l_orderkey") === col("l1.l_orderkey") &&
-        col("l3.l_suppkey") =!= col("l1.l_suppkey"), "left_anti")
-      .join(o, col("l1.l_orderkey") === o("o_orderkey"), "left_semi")
-      .join(broadcast(sup), col("l1.l_suppkey") === sup("s_suppkey"))
-      .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"), "left_semi")
-      .groupBy("s_name")
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
-      .limit(100)
-  }
+      |ORDER BY numwait DESC, s_name LIMIT 100""")
 
   // ---- Q22: dormant high-balance customers (anti join + scalar AVG) ------
   // phone country code becomes a digit of the zero-padded customer name;
@@ -385,8 +233,5 @@ object Tpch extends Pack {
        |      SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 300000)
        |) custsale
        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin
-  q("q22_sales_opp", q22Sql) { (s, dir) =>
-    Tables.registerAll(s, dir)
-    s.sql(q22Sql)
-  }
+  q("q22_sales_opp", q22Sql)
 }

@@ -25,7 +25,7 @@ object Types extends Pack {
   // compares results through pandas, where the two engines' wide-decimal
   // objects stringify differently; rendering in-engine keeps the exactness
   // claim (every digit must agree) while making the comparison bitwise.
-  q("q_type_decimal38",
+  built("q_type_decimal38",
     """SELECT l_returnflag,
       |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) *
       |           CAST((1 - l_discount) AS DECIMAL(18,6))) AS DECIMAL(38,6))
@@ -41,7 +41,7 @@ object Types extends Pack {
 
   // ---- HUGEINT: sums beyond 64-bit range ---------------------------------
   // Rendered as canonical integer string for the same reason as rev38.
-  q("q_type_hugeint",
+  built("q_type_hugeint",
     """SELECT l_returnflag,
       |  CAST(CAST(sum(CAST(l_orderkey AS HUGEINT) * 1000000) AS DECIMAL(38,0))
       |    AS VARCHAR) AS big_sum
@@ -54,7 +54,7 @@ object Types extends Pack {
   }
 
   // ---- INTERVAL: month addition (end-of-month clamp) + epoch seconds -----
-  q("q_type_interval",
+  built("q_type_interval",
     """SELECT o_orderkey, o_orderdate + INTERVAL 3 MONTH AS due,
       |  CAST(epoch(TIMESTAMP '1996-01-01 00:00:00' - o_orderdate) AS DOUBLE) AS age_sec
       |FROM orders WHERE o_orderkey <= 200 ORDER BY o_orderkey""") { (s, dir) =>
@@ -69,7 +69,7 @@ object Types extends Pack {
   }
 
   // ---- TIME: time-of-day mapping (Spark has no TIME type) ----------------
-  q("q_type_time",
+  built("q_type_time",
     """SELECT event_id,
       |  CAST(CAST(date_trunc('second', ts) AS TIME) AS VARCHAR) AS tod
       |FROM events WHERE event_id <= 100 ORDER BY event_id""") { (s, dir) =>
@@ -87,7 +87,7 @@ object Types extends Pack {
   // ---- ENUM: definition-order collation, not lexicographic ---------------
   // The enum declares REVERSED priority order; both engines must sort by
   // member position (5-LOW first), proving the mapping carries ordering.
-  q("q_type_enum",
+  built("q_type_enum",
     """SELECT o_orderpriority AS priority, count(*) AS n
       |FROM orders GROUP BY o_orderpriority
       |ORDER BY CAST(o_orderpriority AS
@@ -103,7 +103,7 @@ object Types extends Pack {
   }
 
   // ---- UNION: tagged-struct mapping, tag + per-member extraction ---------
-  q("q_type_union",
+  built("q_type_union",
     """WITH u AS (
       |  SELECT event_id,
       |    CASE WHEN value > 50 THEN CAST(value AS UNION(num DOUBLE, txt VARCHAR))
@@ -137,7 +137,7 @@ object Types extends Pack {
   // from json_structure via CASE — same per-row discrimination, spelled in
   // each engine's own type-name dialect. to_json(parse_json(x)) checks the
   // binary-variant roundtrip against DuckDB's json() normalizer.
-  q("q_type_variant",
+  built("q_type_variant",
     """SELECT event_id,
       |  CAST(json_extract(props, '$.k') AS BIGINT) AS k_int,
       |  json_extract_string(props, '$.k') AS k_str,

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{Sql, Tables}
+import graft.engine.Tables
 import Q._
 
 /** Window-function coverage (SURVEY §2.5; reference
@@ -13,7 +13,7 @@ import Q._
 object Windows extends Pack {
 
   // ranking family: row_number/rank/dense_rank/percent_rank/cume_dist/ntile
-  q("q_window_ranking",
+  built("q_window_ranking",
     """SELECT c_custkey, c_mktsegment,
       |  row_number() OVER w AS rn,
       |  rank() OVER w AS rk,
@@ -45,15 +45,7 @@ object Windows extends Pack {
       |  lag(o_totalprice, 2, -1.0) OVER w AS prev2_price
       |FROM orders
       |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-      |ORDER BY o_custkey, o_orderkey""") { (s, dir) =>
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-    Tables.orders(s, dir).select(
-        col("o_custkey"), col("o_orderkey"),
-        lag("o_totalprice", 1).over(w).as("prev_price"),
-        lead("o_totalprice", 1).over(w).as("next_price"),
-        lag(col("o_totalprice"), 2, -1.0).over(w).as("prev2_price"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
+      |ORDER BY o_custkey, o_orderkey""")
 
   // aggregate over ROWS frame (running totals) — reference window_segment_tree.cpp
   // running sums on 2-dp fixed-point BIGINT mantissas (see Q's fixed-point
@@ -66,15 +58,7 @@ object Windows extends Pack {
        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0) AS running_total,
        |  count(*) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_so_far
-       |FROM orders ORDER BY o_custkey, o_orderkey""") { (s, dir) =>
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(s, dir).select(
-        col("o_custkey"), col("o_orderkey"),
-        (sum(fx(col("o_totalprice"), 2)).over(w).cast("double") / 100.0).as("running_total"),
-        count(lit(1)).over(w).as("n_so_far"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
+       |FROM orders ORDER BY o_custkey, o_orderkey""")
 
   // sliding ROWS frame with bounded preceding/following
   q("q_window_sliding",
@@ -85,50 +69,23 @@ object Windows extends Pack {
        |FROM lineitem WHERE l_suppkey <= 3
        |WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_orderkey, l_linenumber
        |             ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-       |ORDER BY l_suppkey, l_orderkey, l_linenumber""") { (s, dir) =>
-    val w = Window.partitionBy("l_suppkey").orderBy(col("l_orderkey"), col("l_linenumber"))
-      .rowsBetween(-2, 2)
-    Tables.lineitem(s, dir)
-      .filter(col("l_suppkey") <= 3)
-      .select(
-        col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        (sum(col("l_quantity").cast(S)).over(w).cast("double") /
-          count(lit(1)).over(w)).as("avg5"))
-      .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
-  }
+       |ORDER BY l_suppkey, l_orderkey, l_linenumber""")
 
   // RANGE frame with numeric bounds
   q("q_window_range_frame",
     """SELECT c_custkey, c_acctbal,
       |  count(*) OVER (ORDER BY c_acctbal RANGE BETWEEN 100 PRECEDING AND 100 FOLLOWING) AS n_near
-      |FROM customer ORDER BY c_custkey""") { (s, dir) =>
-    val w = Window.orderBy(col("c_acctbal")).rangeBetween(-100, 100)
-    Tables.customer(s, dir).select(
-        col("c_custkey"), col("c_acctbal"),
-        count(lit(1)).over(w).as("n_near"))
-      .orderBy("c_custkey")
-  }
+      |FROM customer ORDER BY c_custkey""")
 
-  // RANGE frame with INTERVAL bounds on a timestamp order key — Spark's
-  // rangeBetween only takes numerics (SURVEY §2.5 gap), so the documented
-  // rewrite orders by epoch seconds with the interval as a second count;
-  // inclusive bounds line up exactly with the reference's RANGE INTERVAL
+  // RANGE frame with INTERVAL bounds on a timestamp order key; inclusive
+  // bounds line up exactly with the reference's RANGE INTERVAL
   q("q_window_range_interval",
     s"""SELECT o_orderkey, o_custkey,
        |  (CAST(sum(${fxSql("o_totalprice", 2)}) OVER (
        |     PARTITION BY o_custkey ORDER BY o_orderdate
        |     RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW
        |   ) AS DOUBLE) / 100.0) AS trailing_7d
-       |FROM orders ORDER BY o_orderkey""") { (s, dir) =>
-    val w = Window.partitionBy("o_custkey")
-      .orderBy(unix_timestamp(col("o_orderdate")))
-      .rangeBetween(-7L * 86400, 0)
-    Tables.orders(s, dir).select(
-        col("o_orderkey"), col("o_custkey"),
-        (sum(fx(col("o_totalprice"), 2)).over(w).cast("double") / 100.0)
-          .as("trailing_7d"))
-      .orderBy("o_orderkey")
-  }
+       |FROM orders ORDER BY o_orderkey""")
 
   // first_value / last_value / nth_value over frames
   q("q_window_value_fns",
@@ -139,19 +96,10 @@ object Windows extends Pack {
       |  nth_value(o_orderkey, 2) OVER w AS second_ok
       |FROM orders
       |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-      |ORDER BY o_custkey, o_orderkey""") { (s, dir) =>
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-    val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.orders(s, dir).select(
-        col("o_custkey"), col("o_orderkey"),
-        first(col("o_orderkey")).over(w).as("first_ok"),
-        last(col("o_orderkey")).over(wFull).as("last_ok"),
-        nth_value(col("o_orderkey"), 2).over(w).as("second_ok"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
+      |ORDER BY o_custkey, o_orderkey""")
 
   // lag IGNORE NULLS (reference WindowBoundary + ignore_nulls)
-  q("q_window_ignore_nulls",
+  built("q_window_ignore_nulls",
     """SELECT event_id, user_id,
       |  lag(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
       |    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS last_purchase_value
@@ -172,21 +120,14 @@ object Windows extends Pack {
       |    row_number() OVER (PARTITION BY c_mktsegment
       |                       ORDER BY c_acctbal DESC, c_custkey) AS rn
       |  FROM customer) t WHERE rn <= 2
-      |ORDER BY c_mktsegment, c_custkey""") { (s, dir) =>
-    val w = Window.partitionBy("c_mktsegment").orderBy(col("c_acctbal").desc, col("c_custkey"))
-    Tables.customer(s, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2)
-      .select("c_mktsegment", "c_custkey", "c_acctbal")
-      .orderBy("c_mktsegment", "c_custkey")
-  }
+      |ORDER BY c_mktsegment, c_custkey""")
 
   // aggregate OVER () (global window, streaming fast path in the reference —
   // physical_streaming_window.cpp). A frameless global aggregate needs no
   // window at all: partial-aggregate to ONE scalar, broadcast it back —
   // fully parallel, where `Window.partitionBy()` would drag every row
   // through a single task.
-  q("q_window_global",
+  built("q_window_global",
     s"""SELECT o_orderkey,
        |  round(o_totalprice / CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) OVER () AS DOUBLE), 9) AS price_share
        |FROM orders WHERE o_totalprice > 400000 ORDER BY o_orderkey""") { (s, dir) =>
@@ -208,7 +149,7 @@ object Windows extends Pack {
   // at d=0.5 is lo*0.5 + hi*0.5 — bit-identical to (lo+hi)/2 for normal
   // doubles (halving is an exact exponent shift), so the single
   // averaged-middles op matches by construction, NOT just on the fixture.
-  q("q_window_median",
+  built("q_window_median",
     """SELECT event_id, user_id,
       |  median(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
       |                      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS med5
@@ -234,7 +175,7 @@ object Windows extends Pack {
   // (window_segment_tree.cpp:1-619). One hash shuffle on the partition
   // key; (ts, event_id) is a total order so the running prefix is
   // deterministic on both engines.
-  q("q_window_median_unbounded",
+  built("q_window_median_unbounded",
     """SELECT event_id, user_id,
       |  median(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
       |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -252,7 +193,7 @@ object Windows extends Pack {
   // window_merge_sort_tree.cpp): operators.RunningQuantile streams a
   // Fenwick tree over the group's coordinate-compressed values,
   // O(log m) insert + select per row. Same single hash exchange.
-  q("q_window_quantile_unbounded",
+  built("q_window_quantile_unbounded",
     """SELECT event_id, user_id,
       |  quantile_cont(value, 0.25) OVER (PARTITION BY user_id ORDER BY ts, event_id
       |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -266,12 +207,11 @@ object Windows extends Pack {
   }
 
   // GROUPS frames (SQL:2011; reference window_boundaries_state.cpp:333-367,
-  // test corpus test/sql/window/test_window_groups.test_slow). Spark lacks
-  // GROUPS mode; operators.GroupsFrame rewrites it as dense_rank() group
-  // index + numeric RANGE frame — identical peer boundaries by
-  // construction (spec-tested against a brute-force evaluation). The
-  // oracle DuckDB (1.0.0) predates GROUPS support ("not implemented
-  // yet"), so its SQL spells out the same index rewrite explicitly.
+  // test corpus test/sql/window/test_window_groups.test_slow). The oracle
+  // DuckDB (1.0.0) predates GROUPS support ("not implemented yet"), so
+  // the query spells out operators.GroupsFrame's rewrite: a dense_rank()
+  // group index + numeric RANGE frame, identical peer boundaries by
+  // construction.
   q("q_window_groups",
     s"""SELECT c_custkey, c_mktsegment, c_nationkey,
        |  (CAST(sum(${fxSql("c_acctbal", 2)}) OVER w AS DOUBLE) / 100.0) AS grp_sum,
@@ -281,15 +221,7 @@ object Windows extends Pack {
        |      FROM customer) t
        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY _g
        |             RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING)
-       |ORDER BY c_custkey""") { (s, dir) =>
-    graft.operators.GroupsFrame.frame(
-        Tables.customer(s, dir),
-        Seq("c_mktsegment"), Seq(col("c_nationkey")), -1L, 1L) { w =>
-      Seq((sum(fx(col("c_acctbal"), 2)).over(w).cast("double") / 100.0).as("grp_sum"),
-        count(lit(1)).over(w).as("grp_n"))
-    }.select("c_custkey", "c_mktsegment", "c_nationkey", "grp_sum", "grp_n")
-      .orderBy("c_custkey")
-  }
+       |ORDER BY c_custkey""")
 
   // EXCLUDE CURRENT ROW / GROUP / TIES on a RANGE frame (reference
   // window_expression.hpp:34 WindowExcludeMode; the aggregate rewrite is
@@ -299,7 +231,7 @@ object Windows extends Pack {
   // RANGE 0..0 frame over the SAME (partition, order) spec, so all four
   // windows share one exchange + sort. Empty post-exclusion frames must
   // yield NULL (sum over nothing), hence the frame/peer count guards.
-  q("q_window_exclude_modes",
+  built("q_window_exclude_modes",
     s"""SELECT c_custkey, c_mktsegment, c_nationkey,
        |  (CAST(sum(${fxSql("c_acctbal", 2)}) OVER (PARTITION BY c_mktsegment ORDER BY c_nationkey
        |     RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) AS DOUBLE) / 100.0) AS excl_cur,
@@ -330,7 +262,7 @@ object Windows extends Pack {
   // rewritten as last/next non-null + linear interpolation. The oracle
   // DuckDB (1.0.0) predates fill(), so the oracle spells out the same
   // interpolation independently.
-  q("q_window_fill",
+  built("q_window_fill",
     """WITH base AS (
       |  SELECT event_id, CASE WHEN event_type <> 'error' THEN value END AS v
       |  FROM events WHERE user_id = 1
@@ -385,7 +317,7 @@ object Windows extends Pack {
   // carries per range chunk in parallel, per-chunk boundary payloads
   // (one row per chunk) prefix-combined on the driver, broadcast back.
   // The (key, value) pair is carried as one struct so both stay row-atomic.
-  q("q_window_fill_global",
+  built("q_window_fill_global",
     """WITH base AS (
       |  SELECT event_id, CASE WHEN event_type <> 'error' THEN value END AS v
       |  FROM events
@@ -427,22 +359,13 @@ object Windows extends Pack {
 
   // QUALIFY clause (reference select.gram:148, planned as a filter over
   // the window-computed projection): per-customer top order by price.
-  // The Spark side runs the SAME QUALIFY text through the engine's SQL
-  // surface — graft.functions.QualifyRewrite lowers it pre-parse to a
+  // graft.functions.QualifyRewrite lowers the clause pre-parse to a
   // WHERE over a windowed subquery (`* EXCEPT` drops the marker), while
-  // the oracle executes the clause natively.
+  // the oracle executes it natively.
   q("q_qualify",
     """SELECT o_custkey, o_orderkey, o_totalprice
       |FROM orders
       |QUALIFY row_number() OVER (PARTITION BY o_custkey
       |  ORDER BY o_totalprice DESC, o_orderkey) = 1
-      |ORDER BY o_custkey LIMIT 100""") { (s, dir) =>
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    Sql.execute(s,
-      """SELECT o_custkey, o_orderkey, o_totalprice
-        |FROM orders
-        |QUALIFY row_number() OVER (PARTITION BY o_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey) = 1
-        |ORDER BY o_custkey LIMIT 100""".stripMargin)
-  }
+      |ORDER BY o_custkey LIMIT 100""")
 }

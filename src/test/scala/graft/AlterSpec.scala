@@ -216,4 +216,21 @@ class AlterSpec extends AnyFunSuite {
     exec("INSERT INTO alt_md (i) VALUES (2)")
     assert(rows("SELECT j FROM alt_md WHERE i = 2") == Seq(Seq(9)))
   }
+
+  test("ALTER TABLE on a view names the view, also when its name needs quoting") {
+    sql("CREATE OR REPLACE TEMPORARY VIEW `alt my v` AS SELECT 1 AS a")
+    sql("CREATE OR REPLACE TEMPORARY VIEW alt_v AS SELECT 1 AS a")
+    try {
+      for (v <- Seq("`alt my v`", "alt_v")) {
+        val e = err(s"ALTER TABLE $v ADD COLUMN b INT")
+        assert(e.startsWith("Catalog Error:") && e.contains("is a view") &&
+          e.contains("use ALTER VIEW"), e)
+      }
+      fresh("alt_tbl", "i INT")
+      assert(err("ALTER VIEW alt_tbl RENAME TO alt_tbl2").contains("of type Table"))
+    } finally {
+      sql("DROP VIEW IF EXISTS `alt my v`")
+      sql("DROP VIEW IF EXISTS alt_v")
+    }
+  }
 }

@@ -215,6 +215,23 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("TPC-H/TPC-DS queries that run their text: no cartesian, no BNLJ") {
+    import graft.queries._
+    val packs = Seq(Tpch, Tpcds, Tpcds2, Tpcds3, Tpcds4, Tpcds5, Tpcds6, Tpcds7,
+      Tpcds8, Tpcds9, Tpcds10, Tpcds11, Tpcds12, Tpcds13, Tpcds14, Tpcds15,
+      Tpcds16, Tpcds17, Tpcds18, Tpcds19)
+    val texts = packs.flatMap(p => p.oracle.keySet -- p.builtNames).sorted
+    assert(texts.size > 90, texts)
+    for (name <- texts) {
+      val p = planOf(name)
+      assert(!p.contains("CartesianProduct"), s"$name has a cartesian:\n$p")
+      // q15's threshold is a scalar percentile: its one BNLJ joins a
+      // single-row side
+      if (name != "q_ds15_top_percentile")
+        assert(!p.contains("BroadcastNestedLoopJoin"), s"$name plans NLJ:\n$p")
+    }
+  }
+
   test("dynamic partition pruning fires on a partitioned-table join") {
     import org.apache.spark.sql.functions._
     val dir = "/tmp/graft_dpp/orders_by_status"
