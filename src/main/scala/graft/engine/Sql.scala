@@ -13,6 +13,9 @@ import graft.functions._
   * everything else runs through spark.sql after the dialect pipeline
   * (macro expansion is a no-op when no macros are defined). Branch
   * order matters: earlier patterns shadow later ones.
+  *
+  * Comments are stripped once, before dispatch (Spark hints stay), so
+  * no statement pattern or rewrite pass downstream ever sees one.
   */
 object Sql {
 
@@ -22,7 +25,10 @@ object Sql {
 
   /** Run one statement. Engine-implemented statements execute eagerly;
     * a query returns its (lazy) result. */
-  def execute(spark: SparkSession, sql: String): DataFrame = sql match {
+  def execute(spark: SparkSession, sql: String): DataFrame =
+    dispatch(spark, SqlText.stripComments(sql))
+
+  private def dispatch(spark: SparkSession, sql: String): DataFrame = sql match {
     case MacroDdl() =>
       Macros.defineAny(spark, sql); spark.emptyDataFrame
     case MacroDrop() =>

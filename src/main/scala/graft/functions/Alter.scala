@@ -54,10 +54,10 @@ object Alter {
     val action = m.group(3).trim
     // one command per statement (alter_statement transformer)
     locally {
-      val (inQc, depth) = Dml.scanFull(action)
+      val t = SqlText(action)
       var i = 0
       while (i < action.length) {
-        if (action.charAt(i) == ',' && depth(i) == 0 && inQc(i) == ' ' &&
+        if (action.charAt(i) == ',' && t.depth(i) == 0 && t.code(i) &&
             """(?is)^\s*(ADD|DROP|ALTER|RENAME)\b""".r
               .findFirstIn(action.substring(i + 1)).isDefined)
           throw new IllegalArgumentException(
@@ -106,7 +106,7 @@ object Alter {
         StructAlter.rename(spark, table, splitPath(oldC), Dml.unq(newC))
       case RenameCol(oldC, newC) => renameColumn(spark, table, Dml.unq(oldC), Dml.unq(newC))
       case AddPk(colList) =>
-        addPrimaryKey(spark, table, Dml.splitTop(colList).map(Dml.unq))
+        addPrimaryKey(spark, table, SqlText.splitTop(colList).map(Dml.unq))
       case AddCol(ine, name, rest) if name.contains(".") =>
         StructAlter.add(spark, table, ine != null, splitPath(name), rest.trim)
       case AddCol(ine, name, rest) =>
@@ -309,15 +309,7 @@ object Alter {
         s"""Catalog Error: Column with name "$name" already exists!""")
     }
     // rest = type [DEFAULT expr]; split at a top-level DEFAULT keyword
-    val (inQ, depth) = Dml.scanFull(rest)
-    val lower = rest.toLowerCase
-    var defAt = -1
-    var i = 0
-    while (i < rest.length && defAt < 0) {
-      if (depth(i) == 0 && inQ(i) == ' ' &&
-          Dml.kwAt(lower, inQ.map(_ != ' '), i, "default")) defAt = i
-      i += 1
-    }
+    val (defAt, _) = SqlText(rest).findKw(0, "default")
     val tpe = (if (defAt < 0) rest else rest.substring(0, defAt)).trim
     val defTxt = if (defAt < 0) None
                  else Some(rest.substring(defAt + "default".length).trim)

@@ -74,7 +74,7 @@ object Analyze {
             })
             .map(_.name.toLowerCase).toSet
           val wanted = Option(cols).map(_.trim).filter(_.nonEmpty)
-            .map(c => Dml.splitTop(c).map(Dml.unq))
+            .map(c => SqlText.splitTop(c).map(Dml.unq))
             .getOrElse(spark.table(table).schema.fieldNames.toSeq)
             .filter(n => atomic.contains(n.toLowerCase))
           val colSql =

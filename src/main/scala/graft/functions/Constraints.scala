@@ -219,7 +219,7 @@ object Constraints {
       case Some(m) =>
         val idx = Dml.unq(m.group(1)).toLowerCase
         val table = m.group(2)
-        val cols = Dml.splitTop(m.group(3)).map(Dml.unq)
+        val cols = SqlText.splitTop(m.group(3)).map(Dml.unq)
         // existing contents must already be unique (art_index.cpp:106)
         val colSql = cols.map(Dml.q).mkString(", ")
         val nonNull = cols.map(c => s"${Dml.q(c)} IS NOT NULL").mkString(" AND ")
@@ -277,11 +277,7 @@ object Constraints {
     val table = m.group(3)
     // body = text between the opening paren and its matching close
     val openIdx = m.end - 1
-    val (_, depth) = Dml.scanFull(sql)
-    var close = openIdx + 1
-    while (close < sql.length && !(sql.charAt(close) == ')' && depth(close) == openDepth(depth, openIdx)))
-      close += 1
-    val body = sql.substring(openIdx + 1, close)
+    val body = sql.substring(openIdx + 1, SqlText(sql).close(openIdx))
 
     val cols = scala.collection.mutable.ArrayBuffer[ColDef]()
     val notNull = scala.collection.mutable.LinkedHashSet[String]()
@@ -293,7 +289,7 @@ object Constraints {
     // (fk cols, parent table text, parent cols or None = parent PK)
     val fks = scala.collection.mutable.ArrayBuffer[(Seq[String], String, Option[Seq[String]])]()
 
-    for (item0 <- Dml.splitTop(body)) {
+    for (item0 <- SqlText.splitTop(body)) {
       val item = item0.replaceFirst("(?is)^CONSTRAINT\\s+(\"[^\"]+\"|`[^`]+`|[\\w$]+)\\s+", "")
       val il = item.toLowerCase
       // keyword boundaries matter: a COLUMN named foreign_a / checksum /
@@ -321,8 +317,8 @@ object Constraints {
                   .findFirstIn(actions).isDefined)
               throw new IllegalArgumentException(
                 "Parser Error: FOREIGN KEY actions other than NO ACTION and RESTRICT are not supported")
-            fks += ((Dml.splitTop(fcols).map(Dml.unq),
-              ptab, Option(pcols).map(Dml.splitTop(_).map(Dml.unq))))
+            fks += ((SqlText.splitTop(fcols).map(Dml.unq),
+              ptab, Option(pcols).map(SqlText.splitTop(_).map(Dml.unq))))
           case _ => throw new IllegalArgumentException(
             s"Parser Error: cannot parse FOREIGN KEY clause: $item")
         }
@@ -513,15 +509,13 @@ object Constraints {
       case NameRe(n, r) => (Dml.unq(n), r)
       case _ => return None
     }
-    val (inQ0, depth) = Dml.scanFull(item)
-    val inQ = inQ0.map(_ != ' ')
-    val lower = item.toLowerCase
+    val t = SqlText(item)
     val nameEnd = item.length - rest.length
     // find a top-level AS keyword followed by '('
     var asAt = -1
     var i = nameEnd
     while (i < item.length && asAt < 0) {
-      if (depth(i) == 0 && !inQ(i) && Dml.kwAt(lower, inQ, i, "as")) {
+      if (t.depth(i) == 0 && t.kwAt(i, "as")) {
         var j = i + 2
         while (j < item.length && item.charAt(j).isWhitespace) j += 1
         if (j < item.length && item.charAt(j) == '(') asAt = i
@@ -583,11 +577,9 @@ object Constraints {
       d.withColumn(g.name, casted)
     }
 
-  private def openDepth(depth: Array[Int], openIdx: Int): Int = depth(openIdx)
-
   /** `PRIMARY KEY (a, b)` → Seq(a, b). */
   private def innerList(item: String): Seq[String] =
-    Dml.splitTop(innerParen(item)).map(Dml.unq)
+    SqlText.splitTop(innerParen(item)).map(Dml.unq)
 
   /** Text inside the item's first top-level parenthesis group. */
   private def innerParen(item: String): String = innerParenSpan(item)._1
@@ -597,13 +589,10 @@ object Constraints {
     * length reconstructed from the trimmed inner text (`CHECK ( i > 0 )`
     * trims two chars and would mis-offset the tail). */
   private def innerParenSpan(item: String): (String, Int) = {
-    val (_, depth) = Dml.scanFull(item)
     val open = item.indexOf('(')
     if (open < 0) throw new IllegalArgumentException(
       s"Parser Error: expected a parenthesized list in: $item")
-    var close = open + 1
-    while (close < item.length && !(item.charAt(close) == ')' && depth(close) == depth(open)))
-      close += 1
+    val close = SqlText(item).close(open)
     (item.substring(open + 1, close).trim, close)
   }
 
@@ -616,8 +605,6 @@ object Constraints {
       uniques: scala.collection.mutable.ArrayBuffer[UniqueSet],
       fks: scala.collection.mutable.ArrayBuffer[(Seq[String], String, Option[Seq[String]])] =
         scala.collection.mutable.ArrayBuffer.empty): ColDef = {
-    val (inQ, depth) = Dml.scanFull(item) match { case (q, d) => (q.map(_ != ' '), d) }
-    val lower = item.toLowerCase
     // first token = column name
     val NameRe = """(?s)^\s*("[^"]+"|`[^`]+`|[\w$]+)(.*)$""".r
     val (name, afterName) = item match {
@@ -627,13 +614,9 @@ object Constraints {
     }
     val nameEnd = item.length - afterName.length
     // type runs to the first top-level constraint keyword
-    var cut = item.length
-    var i = nameEnd
-    while (i < item.length) {
-      if (depth(i) == 0 && !inQ(i) &&
-          TailKws.exists(k => Dml.kwAt(lower, inQ, i, k)) && i < cut) {
-        cut = i; i = item.length
-      } else i += 1
+    val cut = SqlText(item).findKw(nameEnd, TailKws: _*) match {
+      case (-1, _) => item.length
+      case (at, _) => at
     }
     val tpe = item.substring(nameEnd, cut).trim
     if (tpe.isEmpty) throw new IllegalArgumentException(
@@ -662,17 +645,10 @@ object Constraints {
       else if (tl.startsWith("default")) {
         // DEFAULT expr runs to the next top-level constraint keyword
         val rest = t.substring(7)
-        val (q2, d2) = Dml.scanFull(rest)
-        val inQ2 = q2.map(_ != ' ')
-        val rl = rest.toLowerCase
-        var j = 0
-        var end = rest.length
-        while (j < rest.length) {
-          if (d2(j) == 0 && !inQ2(j) &&
-              Seq("not null", "primary key", "unique", "check", "references")
-                .exists(k => Dml.kwAt(rl, inQ2, j, k)) && j < end) {
-            end = j; j = rest.length
-          } else j += 1
+        val end = SqlText(rest).findKw(0,
+            "not null", "primary key", "unique", "check", "references") match {
+          case (-1, _) => rest.length
+          case (at, _) => at
         }
         default = Some(rest.substring(0, end).trim)
         tail = rest.substring(end)

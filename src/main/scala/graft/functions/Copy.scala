@@ -64,7 +64,7 @@ object Copy {
   private def parseOpts(text: String): Opts = {
     var o = Opts(None, None, None, None, None, None, None, Nil)
     if (text == null || text.trim.isEmpty) return o
-    for (item <- Dml.splitTop(text)) {
+    for (item <- SqlText.splitTop(text)) {
       val m = """(?s)^(\w+)\s*(.*)$""".r.findFirstMatchIn(item.trim).getOrElse(
         throw new IllegalArgumentException(s"Parser Error: cannot parse COPY option: $item"))
       val (k, v) = (m.group(1).toLowerCase, m.group(2).trim)
@@ -80,7 +80,7 @@ object Copy {
         case "null" | "nullstr" | "null_padding" => o = o.copy(nullStr = Some(unlit(v)))
         case "compression" => o = o.copy(compression = Some(unlit(v).toLowerCase))
         case "partition_by" =>
-          val cols = Dml.splitTop(v.stripPrefix("(").stripSuffix(")")).map(Dml.unq)
+          val cols = SqlText.splitTop(v.stripPrefix("(").stripSuffix(")")).map(Dml.unq)
           o = o.copy(partitionBy = cols)
         case "overwrite_or_ignore" | "overwrite" | "use_tmp_file" | "per_thread_output" |
              "allow_overwrite" | "auto_detect" | "dateformat" | "timestampformat" |
@@ -207,7 +207,7 @@ object Copy {
     val tr = Dml.parseTableRef(relText)
     val givenCols: Option[Seq[String]] =
       """(?s)^\s*\(([^)]*)\)""".r.findFirstMatchIn(tr.rest)
-        .map(mm => Dml.splitTop(mm.group(1)).map(Dml.unq))
+        .map(mm => SqlText.splitTop(mm.group(1)).map(Dml.unq))
     val target = spark.table(tr.name)
     val fields = target.schema.fields.toSeq
     val want = givenCols.getOrElse(fields.map(_.name))

@@ -41,11 +41,7 @@ object Describe {
     val t = sql.trim.stripSuffix(";").trim
     if (t.startsWith("(") && t.endsWith(")")) {
       // only strip when the parens wrap the WHOLE text
-      val (_, depth) = Dml.scanFull(t)
-      var i = 1
-      var ok = true
-      while (i < t.length - 1) { if (depth(i) == 0) ok = false; i += 1 }
-      if (ok) t.substring(1, t.length - 1).trim else t
+      if (SqlText(t).close(0) == t.length - 1) t.substring(1, t.length - 1).trim else t
     } else t
   }
 

@@ -48,75 +48,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   */
 object Dml {
 
-  // ------------------------------------------------------------------
-  // text scanning (quote/paren aware, same discipline as QualifyRewrite)
-  // ------------------------------------------------------------------
-
-  private[functions] def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '$'
-
-  /** Per-position active quote char (' ' when unquoted) + paren
-    * depth. Backticks count as quotes so keyword-named identifiers are
-    * masked from keyword detection (r11 ADVICE). */
-  private[functions] def scanFull(s: String): (Array[Char], Array[Int]) = {
-    val n = s.length
-    val qch = new Array[Char](n)
-    val depth = new Array[Int](n)
-    var q = false; var qc = ' '; var d = 0; var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (q) { qch(i) = qc; depth(i) = d; if (c == qc) q = false }
-      else if (c == '\'' || c == '"' || c == '`') { qch(i) = c; depth(i) = d; q = true; qc = c }
-      else if (c == '(') { qch(i) = ' '; depth(i) = d; d += 1 }
-      else if (c == ')') { qch(i) = ' '; d -= 1; depth(i) = d }
-      else { qch(i) = ' '; depth(i) = d }
-      i += 1
-    }
-    (qch, depth)
-  }
-
-  private[functions] def scan(s: String): (Array[Boolean], Array[Int]) = {
-    val (qch, depth) = scanFull(s)
-    (qch.map(_ != ' '), depth)
-  }
-
-  private[functions] def kwAt(lower: String, inQ: Array[Boolean], i: Int, kw: String): Boolean =
-    !inQ(i) && lower.startsWith(kw, i) &&
-      (i == 0 || !isIdent(lower.charAt(i - 1))) &&
-      (i + kw.length >= lower.length || !isIdent(lower.charAt(i + kw.length)))
-
-  /** First top-level (depth 0, unquoted) occurrence of any keyword in
-    * `kws`, at or after `from`. Returns (index, keyword) or (-1, null). */
-  private[functions] def findKw(lower: String, inQ: Array[Boolean], depth: Array[Int],
-      from: Int, kws: Seq[String]): (Int, String) = {
-    var i = math.max(from, 0)
-    while (i < lower.length) {
-      if (depth(i) == 0 && !inQ(i)) {
-        var k = 0
-        while (k < kws.length) {
-          if (kwAt(lower, inQ, i, kws(k))) return (i, kws(k))
-          k += 1
-        }
-      }
-      i += 1
-    }
-    (-1, null)
-  }
-
-  /** Split `s` on top-level commas. */
-  private[functions] def splitTop(s: String): Seq[String] = {
-    val (inQ, depth) = scan(s)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == ',' && depth(i) == 0 && !inQ(i)) {
-        out += s.substring(start, i); start = i + 1
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
+  import SqlText.{isIdent, splitTop}
 
   // ------------------------------------------------------------------
   // statement-head detection (handles a leading WITH prefix: the CTE
@@ -133,23 +65,22 @@ object Dml {
 
   /** (ctePrefix, head, bodyFromHead) — head is null for non-DML. */
   private def splitHead(sql: String): (String, String, String) = {
-    val lower = sql.toLowerCase
-    val (inQ, depth) = scan(sql)
+    val t = SqlText(sql)
     var i = 0
     while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
     if (i >= sql.length) return ("", null, sql)
-    if (kwAt(lower, inQ, i, "with")) {
+    if (t.kwAt(i, "with")) {
       // WITH-prefixed INSERT also routes here: Spark's INSERT grammar
       // has no leading-CTE form (reference: WITH t AS (...) INSERT ...)
-      val (j, kw) = findKw(lower, inQ, depth, i + 4, StmtKws)
+      val (j, kw) = t.findKw(i + 4, StmtKws: _*)
       if (j < 0 || (!DmlKws.contains(kw) && kw != "insert")) ("", null, sql)
       else (sql.substring(0, j).trim, kw, sql.substring(j))
     } else {
-      val (j, kw) = findKw(lower, inQ, depth, i, StmtKws)
+      val (j, kw) = t.findKw(i, StmtKws: _*)
       if (j == i && kw == "insert") {
         // plain INSERTs stay native; RETURNING, DEFAULT VALUES,
         // ON CONFLICT and OR REPLACE|IGNORE need the emulation
-        val (r, _) = findKw(lower, inQ, depth, j, Seq("returning"))
+        val (r, _) = t.findKw(j, "returning")
         val dv = """(?is)DEFAULT\s+VALUES\s*;?\s*$""".r.findFirstIn(sql).isDefined
         val oc = findOnConflictIdx(sql) >= 0
         val orm = """(?is)^\s*INSERT\s+OR\s+(REPLACE|IGNORE)\b""".r
@@ -281,18 +212,8 @@ object Dml {
     while (m.isDefined && guard < 32) {
       guard += 1
       val open = m.get.end - 1
-      var depth = 0
-      var close = open
-      var found = -1
-      while (close < t.length && found < 0) {
-        t.charAt(close) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) found = close
-          case _ =>
-        }
-        close += 1
-      }
-      if (found < 0) return t // unbalanced — let Spark report it
+      val found = SqlText(t).close(open)
+      if (found == t.length) return t // unbalanced — let Spark report it
       t = t.substring(0, open) + "<" + t.substring(open + 1, found) + ">" +
         t.substring(found + 1)
       m = StructOpen.findFirstMatchIn(t)
@@ -311,12 +232,11 @@ object Dml {
   /** True when the predicate text can contain a subquery (needs the
     * join-based row-id path instead of a projection CASE). */
   private[functions] def hasSubquery(s: String): Boolean = {
-    val lower = s.toLowerCase
-    val (inQ, _) = scan(s)
-    var i = lower.indexOf("select")
+    val t = SqlText(s)
+    var i = t.lower.indexOf("select")
     while (i >= 0) {
-      if (kwAt(lower, inQ, i, "select")) return true
-      i = lower.indexOf("select", i + 1)
+      if (t.kwAt(i, "select")) return true
+      i = t.lower.indexOf("select", i + 1)
     }
     false
   }
@@ -465,15 +385,14 @@ object Dml {
     if (hasSubquery(retText))
       throw new IllegalArgumentException(
         "Binder Error: SUBQUERY is not supported in returning statements")
-    val lower = retText.toLowerCase
-    val (inQ, _) = scan(retText)
+    val t = SqlText(retText)
     var i = 0
     while (i < retText.length) {
       val c = retText.charAt(i)
-      if (!inQ(i) && (c.isLetter || c == '_')) {
+      if (t.code(i) && (c.isLetter || c == '_')) {
         var j = i
         while (j < retText.length && isIdent(retText.charAt(j))) j += 1
-        val tok = lower.substring(i, j)
+        val tok = t.lower.substring(i, j)
         var k = j
         while (k < retText.length && retText.charAt(k).isWhitespace) k += 1
         if (k < retText.length && retText.charAt(k) == '(' && AggFnNames.contains(tok))
@@ -524,11 +443,11 @@ object Dml {
       }
     }
     splitTop(setText).flatMap { item =>
-      val (inQ, depth) = scan(item)
+      val t = SqlText(item)
       var eq = -1
       var i = 0
       while (eq < 0 && i < item.length) {
-        if (item.charAt(i) == '=' && depth(i) == 0 && !inQ(i) &&
+        if (item.charAt(i) == '=' && t.depth(i) == 0 && t.code(i) &&
             (i == 0 || "<>!".indexOf(item.charAt(i - 1)) < 0) &&
             (i + 1 >= item.length || item.charAt(i + 1) != '=')) eq = i
         i += 1
@@ -556,13 +475,12 @@ object Dml {
     val tr = parseTableRef(after)
     rejectView(spark, tr.name, "update")
     val fields = schemaOf(spark, tr.name)
-    val lower = tr.rest.toLowerCase
-    val (inQ, depth) = scan(tr.rest)
-    val (setIdx, _) = findKw(lower, inQ, depth, 0, Seq("set"))
+    val t = SqlText(tr.rest)
+    val (setIdx, _) = t.findKw(0, "set")
     if (setIdx < 0) throw new IllegalArgumentException("Parser Error: UPDATE requires a SET clause")
-    val (fromIdx, _) = findKw(lower, inQ, depth, setIdx + 3, Seq("from"))
-    val (whereIdx, _) = findKw(lower, inQ, depth, setIdx + 3, Seq("where"))
-    val (retIdx, _) = findKw(lower, inQ, depth, setIdx + 3, Seq("returning"))
+    val (fromIdx, _) = t.findKw(setIdx + 3, "from")
+    val (whereIdx, _) = t.findKw(setIdx + 3, "where")
+    val (retIdx, _) = t.findKw(setIdx + 3, "returning")
     def seg(from: Int, ends: Seq[Int]): String = {
       val end = ends.filter(_ > from).sorted.headOption.getOrElse(tr.rest.length)
       tr.rest.substring(from, end)
@@ -670,11 +588,10 @@ object Dml {
     val tr = parseTableRef(after)
     rejectView(spark, tr.name, "delete from")
     val fields = schemaOf(spark, tr.name)
-    val lower = tr.rest.toLowerCase
-    val (inQ, depth) = scan(tr.rest)
-    val (usingIdx, _) = findKw(lower, inQ, depth, 0, Seq("using"))
-    val (whereIdx, _) = findKw(lower, inQ, depth, 0, Seq("where"))
-    val (retIdx, _) = findKw(lower, inQ, depth, 0, Seq("returning"))
+    val t = SqlText(tr.rest)
+    val (usingIdx, _) = t.findKw(0, "using")
+    val (whereIdx, _) = t.findKw(0, "where")
+    val (retIdx, _) = t.findKw(0, "returning")
     def seg(from: Int, ends: Seq[Int]): String = {
       val end = ends.filter(_ > from).sorted.headOption.getOrElse(tr.rest.length)
       tr.rest.substring(from, end)
@@ -744,16 +661,14 @@ object Dml {
 
   /** Start index of the first top-level `ON CONFLICT`, or -1. */
   private def findOnConflictIdx(rest: String): Int = {
-    val lower = rest.toLowerCase
-    val (inQ, depth) = scan(rest)
+    val t = SqlText(rest)
     var i = 0
     while (i >= 0 && i < rest.length) {
-      val (j, _) = findKw(lower, inQ, depth, i, Seq("conflict"))
+      val (j, _) = t.findKw(i, "conflict")
       if (j < 0) return -1
       var p = j - 1
       while (p >= 0 && rest.charAt(p).isWhitespace) p -= 1
-      if (p >= 1 && !inQ(p) && lower.charAt(p) == 'n' && lower.charAt(p - 1) == 'o' &&
-          (p - 1 == 0 || !isIdent(lower.charAt(p - 2))))
+      if (p >= 1 && t.kwAt(p - 1, "on"))
         return p - 1
       i = j + 8
     }
@@ -768,9 +683,7 @@ object Dml {
     var t = text0.replaceFirst("(?is)^\\s*ON\\s+CONFLICT\\b", "").trim
     var target: Option[Seq[String]] = None
     if (t.startsWith("(")) {
-      val (_, d) = scanFull(t)
-      var close = 1
-      while (close < t.length && !(t.charAt(close) == ')' && d(close) == d(0))) close += 1
+      val close = SqlText(t).close(0)
       target = Some(splitTop(t.substring(1, close)).map(unq))
       t = t.substring(close + 1).trim
     }
@@ -781,8 +694,7 @@ object Dml {
     if (tl.startsWith("nothing")) Conflict(target, None)
     else if (tl.startsWith("update")) {
       var rest = t.substring(6).trim.replaceFirst("(?is)^SET\\b", "").trim
-      val (inQ, depth) = scan(rest)
-      val (wIdx, _) = findKw(rest.toLowerCase, inQ, depth, 0, Seq("where"))
+      val (wIdx, _) = SqlText(rest).findKw(0, "where")
       val setText = if (wIdx < 0) rest else rest.substring(0, wIdx)
       val whText = if (wIdx < 0) "" else rest.substring(wIdx + 5).trim
       Conflict(target, Some((parseAssigns(setText, "", fields), whText)))
@@ -793,15 +705,14 @@ object Dml {
   /** Rewrite `alias.`-qualified references (any name in `from`) to the
     * internal alias `to`, quote/ident aware. */
   private def requalify(e: String, from: Seq[String], to: String): String = {
-    val lower = e.toLowerCase
-    val (inQ, _) = scan(e)
+    val t = SqlText(e)
     val aliases = from.map(_.toLowerCase).distinct.filter(_.nonEmpty)
     val sb = new StringBuilder
     var i = 0
     while (i < e.length) {
       var hit = false
       for (al <- aliases if !hit) {
-        if (kwAt(lower, inQ, i, al)) {
+        if (t.kwAt(i, al)) {
           var j = i + al.length
           while (j < e.length && e.charAt(j).isWhitespace) j += 1
           var p = i - 1
@@ -843,8 +754,7 @@ object Dml {
     val colList = fields.map(f => q(f.name)).mkString(", ")
     var rest = tr.rest.trim
     // RETURNING tail
-    val (inQ0, depth0) = scan(rest)
-    val (retIdx, _) = findKw(rest.toLowerCase, inQ0, depth0, 0, Seq("returning"))
+    val (retIdx, _) = SqlText(rest).findKw(0, "returning")
     val retText = if (retIdx < 0) "" else rest.substring(retIdx + 9).trim.stripSuffix(";")
     rejectAggregates(retText)
     if (retIdx >= 0) rest = rest.substring(0, retIdx).trim
@@ -864,9 +774,7 @@ object Dml {
       val head = inner.takeWhile(c => c != ')' && c != '(').toLowerCase
       if (!head.trim.startsWith("select") && !head.trim.startsWith("from") &&
           !head.trim.startsWith("values") && !head.trim.startsWith("with")) {
-        val (_, d) = scan(rest)
-        var close = 1
-        while (close < rest.length && !(rest.charAt(close) == ')' && d(close) == 0)) close += 1
+        val close = SqlText(rest).close(0)
         givenCols = Some(splitTop(rest.substring(1, close)).map(unq))
         rest = rest.substring(close + 1).trim
       }
@@ -1152,15 +1060,14 @@ object Dml {
 
   /** First depth-0 THEN not inside a CASE .. END. */
   private def findThen(text: String): Int = {
-    val lower = text.toLowerCase
-    val (inQ, depth) = scan(text)
+    val t = SqlText(text)
     var caseDepth = 0
     var i = 0
     while (i < text.length) {
-      if (depth(i) == 0 && !inQ(i)) {
-        if (kwAt(lower, inQ, i, "case")) caseDepth += 1
-        else if (kwAt(lower, inQ, i, "end") && caseDepth > 0) caseDepth -= 1
-        else if (caseDepth == 0 && kwAt(lower, inQ, i, "then")) return i
+      if (t.depth(i) == 0) {
+        if (t.kwAt(i, "case")) caseDepth += 1
+        else if (t.kwAt(i, "end") && caseDepth > 0) caseDepth -= 1
+        else if (caseDepth == 0 && t.kwAt(i, "then")) return i
       }
       i += 1
     }
@@ -1193,13 +1100,7 @@ object Dml {
         // [(c1, c2)] VALUES (e1, e2)
         val (cols, afterCols) =
           if (rest.startsWith("(")) {
-            val (_, d) = scan(rest)
-            var close = 0
-            var i = 1
-            while (close == 0 && i < rest.length) {
-              if (rest.charAt(i) == ')' && d(i) == 0) close = i
-              i += 1
-            }
+            val close = SqlText(rest).close(0)
             (Some(splitTop(rest.substring(1, close)).map(unq)),
               rest.substring(close + 1).trim)
           } else (None, rest)
@@ -1221,33 +1122,17 @@ object Dml {
       "named_struct(" + names.zipWithIndex.map { case (c, i) =>
         s"'${G}f$i', ${q(alias)}.${q(c)}"
       }.mkString(", ") + ")"
-    val lower = cond.toLowerCase
-    val (inQ, _) = scan(cond)
+    val t = SqlText(cond)
     // a bare alias INSIDE a subquery is that subquery's own relation
     // reference (FROM Buy), never a row value of the outer merge
-    val inSub = {
-      val arr = new Array[Boolean](cond.length)
-      val stack = scala.collection.mutable.ArrayBuffer[Boolean]()
-      var i = 0
-      while (i < cond.length) {
-        val c = cond.charAt(i)
-        if (!inQ(i) && c == '(') {
-          var k = i + 1
-          while (k < cond.length && cond.charAt(k).isWhitespace) k += 1
-          stack += (k < cond.length && kwAt(lower, inQ, k, "select"))
-        } else if (!inQ(i) && c == ')' && stack.nonEmpty) stack.remove(stack.length - 1)
-        arr(i) = stack.contains(true)
-        i += 1
-      }
-      arr
-    }
+    val inSub = t.inSubquery
     val sb = new StringBuilder
     var i = 0
     while (i < cond.length) {
       var replaced = false
       for ((alias, names) <- Seq(ta -> tfields.map(_.name), sa -> scols) if !replaced) {
         val al = alias.toLowerCase
-        if (!inSub(i) && kwAt(lower, inQ, i, al)) {
+        if (!inSub(i) && t.kwAt(i, al)) {
           var j = i + al.length
           while (j < cond.length && cond.charAt(j).isWhitespace) j += 1
           val prevNonWs = {
@@ -1276,35 +1161,19 @@ object Dml {
     * already-qualified names pass through. */
   private[functions] def scopeExpr(text: String, bindAlias: String, bindCols: Seq[String],
       rejectAlias: Option[String]): String = {
-    val lower = text.toLowerCase
-    val (qch, _) = scanFull(text)
-    val inQ = qch.map(_ != ' ')
+    val t = SqlText(text)
+    val lower = t.lower
     val colSet = bindCols.map(_.toLowerCase).toSet
     // positions inside a (SELECT ...) subquery keep their OWN scope —
     // binding an unqualified inner column to the merge alias would
     // corrupt correlation (merge_into_subquery.test)
-    val inSub = {
-      val arr = new Array[Boolean](text.length)
-      val stack = scala.collection.mutable.ArrayBuffer[Boolean]()
-      var i = 0
-      while (i < text.length) {
-        val c = text.charAt(i)
-        if (!inQ(i) && c == '(') {
-          var k = i + 1
-          while (k < text.length && text.charAt(k).isWhitespace) k += 1
-          stack += (k < text.length && kwAt(lower, inQ, k, "select"))
-        } else if (!inQ(i) && c == ')' && stack.nonEmpty) stack.remove(stack.length - 1)
-        arr(i) = stack.contains(true)
-        i += 1
-      }
-      arr
-    }
+    val inSub = t.inSubquery
     val rej = rejectAlias.map(_.toLowerCase)
     val sb = new StringBuilder
     var i = 0
     while (i < text.length) {
       val c = text.charAt(i)
-      if (qch(i) == '`' && !inSub(i) && c == '`' && text.indexOf('`', i + 1) > 0) {
+      if (t.quote(i) == '`' && !inSub(i) && c == '`' && text.indexOf('`', i + 1) > 0) {
         // backtick-quoted identifier: one token (`id` = id)
         val end = text.indexOf('`', i + 1)
         val tok = text.substring(i + 1, end).toLowerCase
@@ -1318,7 +1187,7 @@ object Dml {
           sb.append(q(bindAlias)).append('.').append(text.substring(i, end + 1))
         else sb.append(text.substring(i, end + 1))
         i = end + 1
-      } else if (!inQ(i) && !inSub(i) && (c.isLetter || c == '_')) {
+      } else if (t.code(i) && !inSub(i) && (c.isLetter || c == '_')) {
         var j = i
         while (j < text.length && isIdent(text.charAt(j))) j += 1
         val tok = lower.substring(i, j)
@@ -1346,25 +1215,24 @@ object Dml {
     rejectView(spark, tr.name, "merge into")
     val tfields = schemaOf(spark, tr.name)
     val rest = tr.rest
-    val lower = rest.toLowerCase
-    val (inQ, depth) = scan(rest)
-    val (usingIdx, _) = findKw(lower, inQ, depth, 0, Seq("using"))
+    val t = SqlText(rest)
+    val (usingIdx, _) = t.findKw(0, "using")
     if (usingIdx < 0) throw new IllegalArgumentException("Parser Error: MERGE INTO requires USING")
     // source text runs to the next top-level ON / USING / WHEN
-    val (specIdx, specKw) = findKw(lower, inQ, depth, usingIdx + 5, Seq("on", "using", "when"))
+    val (specIdx, specKw) = t.findKw(usingIdx + 5, "on", "using", "when")
     if (specIdx < 0) throw new IllegalArgumentException("Parser Error: MERGE INTO requires a join condition")
     val sourceText = rest.substring(usingIdx + 5, specIdx).trim
     var joinOn: String = null
     var joinUsing: String = null
     var whenStart = specIdx
     if (specKw == "on") {
-      val (w, _) = findKw(lower, inQ, depth, specIdx + 2, Seq("when"))
+      val (w, _) = t.findKw(specIdx + 2, "when")
       if (w < 0) throw new IllegalArgumentException(
         "Parser Error: MERGE INTO must have at least one WHEN clause")
       joinOn = rest.substring(specIdx + 2, w).trim
       whenStart = w
     } else if (specKw == "using") {
-      val (w, _) = findKw(lower, inQ, depth, specIdx + 5, Seq("when"))
+      val (w, _) = t.findKw(specIdx + 5, "when")
       if (w < 0) throw new IllegalArgumentException(
         "Parser Error: MERGE INTO must have at least one WHEN clause")
       joinUsing = rest.substring(specIdx + 5, w).trim.stripPrefix("(").stripSuffix(")").trim
@@ -1372,7 +1240,7 @@ object Dml {
     } else throw new IllegalArgumentException(
       "Parser Error: MERGE INTO must have at least one WHEN clause")
 
-    val (retIdx, _) = findKw(lower, inQ, depth, whenStart, Seq("returning"))
+    val (retIdx, _) = t.findKw(whenStart, "returning")
     val retText = if (retIdx < 0) "" else rest.substring(retIdx + 9).trim.stripSuffix(";")
     rejectAggregates(retText)
     val whenText = rest.substring(whenStart,
@@ -1419,12 +1287,11 @@ object Dml {
 
     // parse WHEN clauses
     val clauseTexts = {
-      val (inQ2, depth2) = scan(whenText)
-      val lower2 = whenText.toLowerCase
+      val wt = SqlText(whenText)
       val starts = scala.collection.mutable.ArrayBuffer[Int]()
       var i = 0
       while (i >= 0 && i < whenText.length) {
-        val (j, _) = findKw(lower2, inQ2, depth2, i, Seq("when"))
+        val (j, _) = wt.findKw(i, "when")
         if (j < 0) i = -1 else { starts += j; i = j + 4 }
       }
       starts.zipAll(starts.drop(1), 0, whenText.length).map { case (s, e) =>

@@ -80,16 +80,12 @@ object FileTables {
 
   def rewrite(spark: SparkSession, sql: String): String = {
     if (!mightHaveFiles(sql)) return sql
-    var out = rewriteReadFns(spark, sql)
-    out = FromPathRe.replaceAllIn(out, m => {
+    SqlText.replaceUnquoted(rewriteReadFns(spark, sql), FromPathRe) { m =>
       val path = m.group(2)
-      val l = path.toLowerCase
-      if (DataExt.exists(l.endsWith) && exists(path))
-        java.util.regex.Matcher.quoteReplacement(
-          s"${m.group(1)} ${autoView(spark, path)}")
+      if (DataExt.exists(path.toLowerCase.endsWith) && exists(path))
+        s"${m.group(1)} ${autoView(spark, path)}"
       else m.matched
-    })
-    out
+    }
   }
 
   private def exists(path: String): Boolean =
@@ -129,49 +125,22 @@ object FileTables {
   }
 
   private def rewriteReadFns(spark: SparkSession, sql: String): String = {
+    val ms = ReadFnRe.findAllMatchIn(sql)
+    if (!ms.hasNext) return sql
+    val t = SqlText(sql)
     val sb = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      ReadFnRe.findFirstMatchIn(sql.substring(i)) match {
-        case None => sb.append(sql.substring(i)); i = sql.length
-        case Some(m) =>
-          sb.append(sql.substring(i, i + m.start))
-          val fn = m.group(1).toLowerCase
-          val open = i + m.end - 1
-          val (_, depth) = Dml.scanFull(sql)
-          var close = open + 1
-          while (close < sql.length &&
-            !(sql.charAt(close) == ')' && depth(close) == depth(open))) close += 1
-          val args = sql.substring(open + 1, close)
-          sb.append(readFnView(spark, fn, args))
-          i = close + 1
+    var pos = 0
+    ms.foreach { m =>
+      if (m.start >= pos && t.code(m.start)) {
+        val (args, after) = t.argsAt(m.end - 1)
+        sb.append(sql.substring(pos, m.start)).append(readFnView(spark, m.group(1).toLowerCase, args))
+        pos = after
       }
     }
-    sb.toString
+    sb.append(sql.substring(pos)).toString
   }
 
-  /** Top-level comma split tracking (), {} and [] — read_csv options
-    * carry struct/list literals whose commas Dml.splitTop (paren-only)
-    * would split. */
-  private def splitArgs(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0; var q = false; var qc = ' '; var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q) { if (c == qc) q = false }
-      else if (c == '\'' || c == '"') { q = true; qc = c }
-      else if (c == '(' || c == '{' || c == '[') depth += 1
-      else if (c == ')' || c == '}' || c == ']') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  private def readFnView(spark: SparkSession, fn: String, argText: String): String = {
-    val args = splitArgs(argText)
+  private def readFnView(spark: SparkSession, fn: String, args: Seq[String]): String = {
     if (args.isEmpty) throw new IllegalArgumentException(
       s"Binder Error: $fn requires a file path")
     val path = {
@@ -239,7 +208,7 @@ object FileTables {
           if (t.toLowerCase.startsWith("named_struct")) {
             val o = t.indexOf('('); t.substring(o + 1, t.lastIndexOf(')'))
           } else t.stripPrefix("{").stripSuffix("}")
-        val parts = Dml.splitTop(inner)
+        val parts = SqlText.splitTop(inner)
         val pairs =
           if (t.toLowerCase.startsWith("named_struct"))
             parts.grouped(2).map(g => (unq(g(0)), sparkType(unq(g(1))))).toSeq
@@ -252,7 +221,7 @@ object FileTables {
         columns = Some(pairs)
       case "names" | "column_names" =>
         val inner = v.trim.stripPrefix("[").stripSuffix("]")
-        names = Some(Dml.splitTop(inner).map(unq))
+        names = Some(SqlText.splitTop(inner).map(unq))
       case other => throw new IllegalArgumentException(
         s"Binder Error: unsupported named argument for read_csv: $other")
     }

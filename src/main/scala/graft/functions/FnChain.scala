@@ -24,20 +24,7 @@ private[functions] object FnChain {
   private val Schemas = Set("main", "system", "pg_catalog",
     "information_schema", "temp", "spark_catalog", "default")
 
-  private def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '$'
-
-  private def quoteMask(s: String): Array[Boolean] = {
-    val n = s.length
-    val inQ = new Array[Boolean](n)
-    var q = false; var qc = ' '; var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (q) { inQ(i) = true; if (c == qc) q = false }
-      else if (c == '\'' || c == '"' || c == '`') { inQ(i) = true; q = true; qc = c }
-      i += 1
-    }
-    inQ
-  }
+  import SqlText.isIdent
 
   def apply(spark: org.apache.spark.sql.SparkSession, sql: String): String = {
     if (!sql.contains("(")) return sql
@@ -60,10 +47,10 @@ private[functions] object FnChain {
 
   /** One leftmost innermost rewrite, or null when nothing matches. */
   private def rewriteOne(s: String, skip: Set[String]): String = {
-    val inQ = quoteMask(s)
+    val t = SqlText(s)
     var i = 0
     while (i < s.length) {
-      if (s.charAt(i) == '.' && !inQ(i) && i > 0) {
+      if (s.charAt(i) == '.' && t.code(i) && i > 0) {
         // method-name + '(' must follow
         var j = i + 1
         while (j < s.length && s.charAt(j).isWhitespace) j += 1
@@ -74,7 +61,7 @@ private[functions] object FnChain {
         while (k < s.length && s.charAt(k).isWhitespace) k += 1
         if (name.nonEmpty && !name.head.isDigit && k < s.length && s.charAt(k) == '(') {
           val baseEnd = i // exclusive
-          val baseStart = scanBase(s, inQ, i - 1)
+          val baseStart = scanBase(t, i - 1)
           if (baseStart >= 0) {
             val base = s.substring(baseStart, baseEnd).trim
             // a pure dotted identifier path whose FIRST segment names a
@@ -85,19 +72,8 @@ private[functions] object FnChain {
               skip.contains(base.split('.').head.toLowerCase)
             // skip float-literal bases and schema-qualified calls
             if (!isSchema && base.nonEmpty && !base.head.isDigit) {
-              // args region
-              var depth = 0
-              var m = k
-              var close = -1
-              while (m < s.length && close < 0) {
-                val c = s.charAt(m)
-                if (!inQ(m)) {
-                  if (c == '(') depth += 1
-                  else if (c == ')') { depth -= 1; if (depth == 0) close = m }
-                }
-                m += 1
-              }
-              if (close > 0) {
+              val close = t.close(k)
+              if (close < s.length) {
                 val args = s.substring(k + 1, close).trim
                 val call =
                   if (args.isEmpty) s"$name($base)" else s"$name($base, $args)"
@@ -116,7 +92,8 @@ private[functions] object FnChain {
     * a dotted identifier path, a string literal, or a completed call
     * `ident(...)` (itself possibly dot-prefixed). Returns the start
     * index, or -1 when the context is not a chainable base. */
-  private def scanBase(s: String, inQ: Array[Boolean], end: Int): Int = {
+  private def scanBase(t: SqlText, end: Int): Int = {
+    val s = t.text
     var p = end
     while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
     if (p < 0) return -1
@@ -124,22 +101,12 @@ private[functions] object FnChain {
     if (c == '\'') {
       // string literal: scan to its opening quote
       var q = p - 1
-      while (q >= 0 && !(s.charAt(q) == '\'' && (q == 0 || !inQ(q - 1)))) q -= 1
+      while (q >= 0 && !(s.charAt(q) == '\'' && (q == 0 || t.code(q - 1)))) q -= 1
       if (q < 0) -1 else q
     } else if (c == ')') {
       // completed call: balance to '(' then take the function name +
       // any dotted prefix before it
-      var depth = 0
-      var q = p
-      var open = -1
-      while (q >= 0 && open < 0) {
-        val ch = s.charAt(q)
-        if (!inQ(q) || ch == '\'' || ch == '"') {
-          if (ch == ')') depth += 1
-          else if (ch == '(') { depth -= 1; if (depth == 0) open = q }
-        }
-        q -= 1
-      }
+      val open = t.open(p)
       if (open < 0) return -1
       var r = open - 1
       while (r >= 0 && s.charAt(r).isWhitespace) r -= 1

@@ -77,10 +77,11 @@ object Macros {
       throw new IllegalArgumentException(
         s"Binder Error: Cannot create entry in system catalog schema ${schema.get}")
     val sigs = scala.collection.mutable.ArrayBuffer[Sig]()
-    var pos = m.end // just past '('
+    val t = SqlText(ddl)
+    var open = m.end - 1
     var done = false
     while (!done) {
-      val (params, afterParams) = scanArgs(ddl, pos)
+      val (params, afterParams) = t.argsAt(open)
       val asM = """(?is)^\s*AS\s+""".r.findPrefixMatchOf(ddl.substring(afterParams))
         .getOrElse(throw new IllegalArgumentException(
           s"not a CREATE MACRO statement: $ddl"))
@@ -90,36 +91,26 @@ object Macros {
       // followed by another `(params) AS` signature
       val isTable = """(?is)^TABLE\b""".r
         .findPrefixMatchOf(ddl.substring(bodyStart)).isDefined
+      val asPat = if (isTable) """(?is)^\s*AS\s+TABLE\b""".r
+                  else """(?is)^\s*AS\s""".r
+      val bodyDepth = if (bodyStart < ddl.length) t.depth(bodyStart) else 0
       var i = bodyStart
-      var depth = 0
-      var inQuote = false
       var bodyEnd = -1
       var nextSig = -1
       while (i < ddl.length && bodyEnd < 0) {
-        val ch = ddl.charAt(i)
-        if (inQuote) { if (ch == '\'') inQuote = false }
-        else ch match {
-          case '\'' => inQuote = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case ',' if depth == 0 =>
-            // overload separator iff the remainder is `(args) AS …`
-            // (for TABLE macros: `(args) AS TABLE …`, so a top-level
-            // `SELECT a, (b) AS c` list comma can never false-split)
-            val rest = ddl.substring(i + 1)
-            """(?s)^\s*\(""".r.findPrefixMatchOf(rest).foreach { pm =>
-              val openAt = i + 1 + pm.end
-              try {
-                val (_, afterA) = scanArgs(ddl, openAt)
-                val asPat = if (isTable) """(?is)^\s*AS\s+TABLE\b""".r
-                            else """(?is)^\s*AS\s""".r
-                if (asPat.findPrefixMatchOf(ddl.substring(afterA)).isDefined) {
-                  bodyEnd = i
-                  nextSig = openAt
-                }
-              } catch { case _: IllegalArgumentException => }
+        if (ddl.charAt(i) == ',' && t.code(i) && t.depth(i) == bodyDepth) {
+          // overload separator iff the remainder is `(args) AS …`
+          // (for TABLE macros: `(args) AS TABLE …`, so a top-level
+          // `SELECT a, (b) AS c` list comma can never false-split)
+          """(?s)^\s*\(""".r.findPrefixMatchOf(ddl.substring(i + 1)).foreach { pm =>
+            val openAt = i + pm.end
+            val close = t.close(openAt)
+            if (close < ddl.length &&
+                asPat.findPrefixMatchOf(ddl.substring(close + 1)).isDefined) {
+              bodyEnd = i
+              nextSig = openAt
             }
-          case _ =>
+          }
         }
         i += 1
       }
@@ -133,7 +124,7 @@ object Macros {
           s"macro $name: star expressions are not supported in macro bodies")
       validateDefaults(name, params)
       sigs += ((params, body))
-      if (bodyEnd < 0) done = true else pos = nextSig
+      if (bodyEnd < 0) done = true else open = nextSig
     }
     // two overloads with the same shape can never be told apart at a
     // call site (test_macro_overloads.test "Ambiguity in macro
@@ -188,36 +179,6 @@ object Macros {
               s"(references ${nonConst.get})")
       case _ =>
     }
-  }
-
-  /** Scan a balanced, quote-aware argument list starting just past the
-    * opening '('; returns (top-level-comma-split args, index past ')').
-    */
-  private def scanArgs(s: String, from: Int): (Seq[String], Int) = {
-    val args = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 1
-    var inQuote = false
-    var i = from
-    var argStart = from
-    while (i < s.length && depth > 0) {
-      val ch = s.charAt(i)
-      if (inQuote) {
-        if (ch == '\'') inQuote = false
-      } else ch match {
-        case '\'' => inQuote = true
-        case '('  => depth += 1
-        case ')'  =>
-          depth -= 1
-          if (depth == 0) args += s.substring(argStart, i).trim
-        case ',' if depth == 1 =>
-          args += s.substring(argStart, i).trim; argStart = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (depth != 0)
-      throw new IllegalArgumentException(s"unbalanced parentheses in: $s")
-    (args.filter(_.nonEmpty).toSeq, i)
   }
 
   /** Register the macro as a native Spark SQL temporary function (first
@@ -518,7 +479,7 @@ object Macros {
     val m = """(?s)\s*(\w+)\s*\(""".r.findPrefixMatchOf(call).getOrElse(
       throw new IllegalArgumentException(s"not a macro call: $call"))
     val name = m.group(1).toLowerCase
-    val (args, _) = scanArgs(call, m.end)
+    val (args, _) = SqlText(call).argsAt(m.end - 1)
     val sigs = Option(tableRegistry.get(spark).get(name)).getOrElse(
       throw new IllegalArgumentException(s"unknown table macro: $name"))
     val (sig, bound) = bindOverload(name, sigs, args)
@@ -561,10 +522,8 @@ object Macros {
   /** `duckdb_databases()` — attached-catalog TVF, inlined as a VALUES
     * relation over the live Spark catalog (graft.functions.Attach). */
   private def rewriteDuckdbDatabases(spark: SparkSession, sql: String): String = {
-    val re = """(?i)\bduckdb_databases\s*\(\s*\)""".r
-    if (re.findFirstIn(sql).isEmpty) sql
-    else re.replaceAllIn(sql, java.util.regex.Matcher.quoteReplacement(
-      Attach.databasesRelation(spark)))
+    lazy val rel = Attach.databasesRelation(spark)
+    SqlText.replaceUnquoted(sql, """(?i)\bduckdb_databases\s*\(\s*\)""".r)(_ => rel)
   }
 
   /** `tvf(args) WITH ORDINALITY [AS t(c, o)]` (reference
@@ -579,7 +538,7 @@ object Macros {
     val kwStop = """(?!(?:WHERE|GROUP|ORDER|HAVING|LIMIT|UNION|INTERSECT|EXCEPT|JOIN|ON|USING|CROSS|LEFT|RIGHT|INNER|FULL|OUTER|SEMI|ANTI|NATURAL|LATERAL|QUALIFY|WINDOW|OFFSET|FETCH|WITH)\b)"""
     val Re = ("""(?i)\b(range|generate_series|repeat|unnest|explode)\s*\(((?:[^()]|\([^()]*\))*)\)\s+WITH\s+ORDINALITY""" +
       s"""(?:\\s+(?:AS\\s+)?$kwStop(\\w+)\\s*(?:\\(([^)]*)\\))?)?""").r
-    Re.replaceAllIn(sql, m => {
+    SqlText.replaceUnquoted(sql, Re) { m =>
       val fname = m.group(1).toLowerCase
       val args = m.group(2)
       val tbl = Option(m.group(3)).getOrElse("_ord")
@@ -589,7 +548,7 @@ object Macros {
       val c1 = names.headOption.filter(_.nonEmpty).getOrElse(defaultC1)
       val c2 = names.drop(1).headOption.filter(_.nonEmpty).getOrElse("ordinality")
       val g = Dml.G
-      val parts = Dml.splitTop(args)
+      val parts = SqlText.splitTop(args)
       def big(e: String) = s"CAST(($e) AS BIGINT)"
       val empty = "CAST(array() AS ARRAY<BIGINT>)"
       // sequence-based array (not the range() TVF) so LATERAL-correlated
@@ -622,8 +581,8 @@ object Macros {
       val inner =
         s"SELECT ${g}c AS `$c1`, CAST(${g}p + 1 AS BIGINT) AS `$c2` " +
           s"FROM (SELECT posexplode($arr) AS (${g}p, ${g}c))"
-      java.util.regex.Matcher.quoteReplacement(s"($inner) $tbl")
-    })
+      s"($inner) $tbl"
+    }
   }
 
   /** `(DESCRIBE ...)`, `(SUMMARIZE ...)`, `(SHOW ...)` in FROM position
@@ -633,35 +592,20 @@ object Macros {
   private val descSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private def rewriteDescribeSubqueries(spark: SparkSession, sql: String): String = {
     val HeadRe = """(?i)\(\s*(DESCRIBE|SUMMARIZE|SHOW)\b""".r
+    if (HeadRe.findFirstIn(sql).isEmpty) return sql
     var out = sql
-    def liveMatch(txt: String): Option[scala.util.matching.Regex.Match] = {
-      // skip matches inside string literals (a data string may contain
-      // "(describe" — quote-state from Dml.scanFull decides)
-      val (inQ, _) = Dml.scanFull(txt)
-      HeadRe.findAllMatchIn(txt).find(mm => inQ(mm.start) == ' ')
-    }
-    var m = liveMatch(out)
+    // skip matches inside string literals (a data string may contain
+    // "(describe")
+    def liveMatch(t: SqlText): Option[scala.util.matching.Regex.Match] =
+      HeadRe.findAllMatchIn(t.text).find(mm => t.code(mm.start))
+    var t = SqlText(out)
+    var m = liveMatch(t)
     var guard = 0
     while (m.isDefined && guard < 16) {
       guard += 1
       val open = m.get.start
-      // matching close paren (quote-aware scan)
-      var depth = 0
-      var inQ = ' '
-      var close = -1
-      var i = open
-      while (i < out.length && close < 0) {
-        val ch = out.charAt(i)
-        if (inQ != ' ') { if (ch == inQ) inQ = ' ' }
-        else ch match {
-          case '\'' | '"' => inQ = ch
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
-      if (close < 0) return out
+      val close = t.close(open)
+      if (close == out.length) return out
       val inner = out.substring(open + 1, close).trim
       val name = Dml.G + "desc_" + descSeq.incrementAndGet()
       // (DESCRIBE TABLE cte) inside a WITH statement: the enclosing CTE
@@ -672,7 +616,8 @@ object Macros {
       Describe.execute(spark, inner, ctePrefix).createOrReplaceTempView(name)
       out = out.substring(0, open) + s"(SELECT * FROM $name)" +
         out.substring(close + 1)
-      m = liveMatch(out)
+      t = SqlText(out)
+      m = liveMatch(t)
     }
     out
   }
@@ -681,36 +626,23 @@ object Macros {
     * catalog TVFs inlined as VALUES relations over the live Spark
     * catalog (graft.functions.Attach). */
   private def rewriteDuckdbCatalog(spark: SparkSession, sql: String): String = {
-    var out = sql
     // both spellings resolve: duckdb_tables() and the bare table-name
     // form `FROM duckdb_tables` (the reference accepts both)
-    val tablesRe = """(?i)\bduckdb_tables\b(\s*\(\s*\))?""".r
-    if (tablesRe.findFirstIn(out).isDefined)
-      out = tablesRe.replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(
-        Attach.tablesRelation(spark)))
-    val viewsRe = """(?i)\bduckdb_views\b(\s*\(\s*\))?""".r
-    if (viewsRe.findFirstIn(out).isDefined)
-      out = viewsRe.replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(
-        Attach.viewsRelation(spark)))
-    val colsRe = """(?i)\bduckdb_columns\b(\s*\(\s*\))?""".r
-    if (colsRe.findFirstIn(out).isDefined)
-      out = colsRe.replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(
-        Attach.columnsRelation(spark)))
-    val varsRe = """(?i)\bduckdb_variables\b(\s*\(\s*\))?""".r
-    if (varsRe.findFirstIn(out).isDefined)
-      out = varsRe.replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(
-        Variables.relation(spark)))
-    val consRe = """(?i)\bduckdb_constraints\b(\s*\(\s*\))?""".r
-    if (consRe.findFirstIn(out).isDefined)
-      out = consRe.replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(
-        Attach.constraintsRelation(spark)))
-    // information_schema.columns as a RELATION (FROM position); leave
-    // other information_schema entries to Spark
-    val isColsRe = """(?i)\binformation_schema\s*\.\s*columns\b""".r
-    if (isColsRe.findFirstIn(out).isDefined)
-      out = isColsRe.replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(
-        Attach.infoSchemaColumnsRelation(spark)))
-    out
+    def tvf(name: String) = ("""(?i)\b""" + name + """\b(\s*\(\s*\))?""").r
+    Seq[(scala.util.matching.Regex, () => String)](
+      tvf("duckdb_tables") -> (() => Attach.tablesRelation(spark)),
+      tvf("duckdb_views") -> (() => Attach.viewsRelation(spark)),
+      tvf("duckdb_columns") -> (() => Attach.columnsRelation(spark)),
+      tvf("duckdb_variables") -> (() => Variables.relation(spark)),
+      tvf("duckdb_constraints") -> (() => Attach.constraintsRelation(spark)),
+      // information_schema.columns as a RELATION (FROM position); leave
+      // other information_schema entries to Spark
+      """(?i)\binformation_schema\s*\.\s*columns\b""".r ->
+        (() => Attach.infoSchemaColumnsRelation(spark))
+    ).foldLeft(sql) { case (out, (re, relation)) =>
+      lazy val rel = relation()
+      SqlText.replaceUnquoted(out, re)(_ => rel)
+    }
   }
 
   private def rewriteDuckdbFunctions(spark: SparkSession, sql: String): String = {
@@ -744,7 +676,7 @@ object Macros {
         s"(SELECT * FROM VALUES ${rows.mkString(", ")} AS t(schema_name, " +
           "function_name, function_type, description, return_type, " +
           "parameters, parameter_types, varargs, macro_definition))"
-    re.replaceAllIn(sql, java.util.regex.Matcher.quoteReplacement(rel))
+    SqlText.replaceUnquoted(sql, re)(_ => rel)
   }
 
   /** The one `DISTINCT ON` shape a table-macro body can reach after
@@ -753,19 +685,21 @@ object Macros {
     * test_table_macro_args.test sc3). Anything else is left for Spark
     * to reject. */
   private def rewriteDistinctOn(sql: String): String = {
-    val m = """(?i)\bDISTINCT\s+ON\s*\(""".r.findFirstMatchIn(sql)
-      .getOrElse(return sql)
+    val DistinctOnRe = """(?i)\bDISTINCT\s+ON\s*\(""".r
+    if (DistinctOnRe.findFirstIn(sql).isEmpty) return sql
+    val t = SqlText(sql)
+    def first(re: scala.util.matching.Regex, from: Int) =
+      re.findAllMatchIn(sql).find(m => m.start >= from && t.code(m.start))
+    val m = first(DistinctOnRe, 0).getOrElse(return sql)
     val open = m.end - 1
-    val (_, close) = try { val (_, c) = scanArgs(sql, open + 1); (0, c - 1) }
-      catch { case _: IllegalArgumentException => return sql }
+    val close = t.close(open)
+    if (close == sql.length) return sql
     val key = sql.substring(open + 1, close).trim
-    val fromM = """(?i)\bFROM\b""".r.findFirstMatchIn(sql.substring(close + 1))
-      .getOrElse(return sql)
-    val selectList = sql.substring(close + 1, close + 1 + fromM.start).trim
+    val from = first("""(?i)\bFROM\b""".r, close + 1).getOrElse(return sql).start
+    val selectList = sql.substring(close + 1, from).trim
     if (selectList != key) return sql
     rewriteDistinctOn(
-      sql.substring(0, m.start) + s"DISTINCT $selectList " +
-        sql.substring(close + 1 + fromM.start))
+      sql.substring(0, m.start) + s"DISTINCT $selectList " + sql.substring(from))
   }
 
   /** The reference's `system.main.f(…)` names the BUILTIN catalog — its
@@ -774,7 +708,7 @@ object Macros {
     * qualifier maps to Spark's builtin namespace by dropping it. */
   private def stripBuiltinCatalog(sql: String): String =
     if (sql.indexOf('.') < 0) sql
-    else """(?i)\bsystem\.main\.(\w+\s*\()""".r.replaceAllIn(sql, "$1")
+    else SqlText.replaceUnquoted(sql, """(?i)\bsystem\.main\.(\w+\s*\()""".r)(_.group(1))
 
   /** Reference star-minus projection `* EXCLUDE (…)` / parenless
     * `* EXCLUDE col` → Spark's `* EXCEPT (…)` (same binder expansion;
@@ -788,51 +722,20 @@ object Macros {
       ("""(?i)(\*\s*)(?:EXCLUDE|EXCEPT)\s+""" +
         """(?!(?:SELECT|VALUES|TABLE|ALL|DISTINCT|FROM)\b)""" +
         """((?:"[^"]+"|`[^`]+`|[\w$]+)(?:\.(?:"[^"]+"|`[^`]+`|[\w$]+))*)(?![\w$(])""").r
-    val sql1 =
-      if (BareRe.findFirstIn(sql).isEmpty) sql
-      else {
-        val (qch, _) = Dml.scanFull(sql)
-        val sb = new StringBuilder
-        var pos = 0
-        BareRe.findAllMatchIn(sql).filter(m => qch(m.start) == ' ').foreach { m =>
-          if (m.start >= pos) {
-            sb.append(sql.substring(pos, m.start))
-            sb.append(m.group(1)).append("EXCEPT (").append(m.group(2)).append(")")
-            pos = m.end
-          }
-        }
-        sb.append(sql.substring(pos))
-        sb.toString
-      }
+    val sql1 = SqlText.replaceUnquoted(sql, BareRe)(m =>
+      m.group(1) + "EXCEPT (" + m.group(2) + ")")
     val Re = """(?i)(\*\s*)EXCLUDE(\s*\()""".r
-    val sql2 =
-      if (Re.findFirstIn(sql1).isEmpty) sql1
-      else {
-        val (qch, _) = Dml.scanFull(sql1)
-        val sb = new StringBuilder
-        var pos = 0
-        Re.findAllMatchIn(sql1).filter(m => qch(m.start) == ' ').foreach { m =>
-          if (m.start >= pos) {
-            sb.append(sql1.substring(pos, m.start))
-            sb.append(m.group(1)).append("EXCEPT").append(m.group(2))
-            pos = m.end
-          }
-        }
-        sb.append(sql1.substring(pos))
-        sb.toString
-      }
+    val sql2 = SqlText.replaceUnquoted(sql1, Re)(m => m.group(1) + "EXCEPT" + m.group(2))
     // the reference accepts STRING-literal entries in the exclusion
     // list (`* EXCLUDE ('i')`, select_star_exclude.test) — normalize
     // to quoted identifiers
     val LitRe = """(?i)(\*\s*EXCEPT\s*\()([^()]*)(\))""".r
-    if (LitRe.findFirstIn(sql2).isEmpty) sql2
-    else LitRe.replaceAllIn(sql2, m => java.util.regex.Matcher.quoteReplacement(
-      m.group(1) + Dml.splitTop(m.group(2)).map { e =>
-        val t = e.trim
+    SqlText.replaceUnquoted(sql2, LitRe)(m =>
+      m.group(1) + SqlText.splitTop(m.group(2)).map { t =>
         if (t.length >= 2 && t.head == '\'' && t.last == '\'')
           "`" + t.substring(1, t.length - 1).replace("''", "'") + "`"
         else t
-      }.mkString(", ") + m.group(3)))
+      }.mkString(", ") + m.group(3))
   }
 
   private def expandLoop(sql: String,
@@ -931,54 +834,35 @@ object Macros {
     * end of the enclosing argument (top-level `,` or closing `)`). */
   private def lambdaScopes(body: String): Seq[(Int, Int, Set[String])] = {
     val out = scala.collection.mutable.ArrayBuffer[(Int, Int, Set[String])]()
+    val t = SqlText(body)
     var i = 0
-    var inQuote = false
     while (i < body.length - 1) {
-      val ch = body.charAt(i)
-      if (inQuote) { if (ch == '\'') inQuote = false; i += 1 }
-      else if (ch == '\'') { inQuote = true; i += 1 }
-      else if (ch == '-' && body.charAt(i + 1) == '>') {
+      if (t.code(i) && body.charAt(i) == '-' && body.charAt(i + 1) == '>') {
         // variables: backward over `ident` or `(ident, ident…)`
         var j = i - 1
         while (j >= 0 && body.charAt(j).isWhitespace) j -= 1
         val vars = scala.collection.mutable.Set[String]()
         var headStart = i // span must cover the head vars too — they are
         //                  binders, not parameter references
-        if (j >= 0 && body.charAt(j) == ')') {
-          var depth = 1; var k = j - 1
-          while (k >= 0 && depth > 0) {
-            if (body.charAt(k) == ')') depth += 1
-            else if (body.charAt(k) == '(') depth -= 1
-            k -= 1
+        if (j >= 0 && body.charAt(j) == ')' && t.open(j) >= 0) {
+          SqlText.splitTop(body.substring(t.open(j) + 1, j)).foreach { v =>
+            if (v.matches("\\w+")) vars += v.toLowerCase
           }
-          body.substring(k + 2, j).split(",").foreach { v =>
-            val t = v.trim.toLowerCase
-            if (t.matches("\\w+")) vars += t
-          }
-          headStart = k + 1
+          headStart = t.open(j)
         } else {
           val end = j + 1
           while (j >= 0 && (body.charAt(j).isLetterOrDigit || body.charAt(j) == '_')) j -= 1
-          val t = body.substring(j + 1, end).toLowerCase
-          if (t.nonEmpty) vars += t
+          val v = body.substring(j + 1, end).toLowerCase
+          if (v.nonEmpty) vars += v
           headStart = j + 1
         }
-        // body span: after `->` until the enclosing group ends
-        var k = i + 2
-        var depth = 0
-        var q = false
-        var stop = -1
-        while (k < body.length && stop < 0) {
-          val c = body.charAt(k)
-          if (q) { if (c == '\'') q = false }
-          else if (c == '\'') q = true
-          else if (c == '(') depth += 1
-          else if (c == ')') { depth -= 1; if (depth < 0) stop = k }
-          else if (c == ',' && depth == 0) stop = k
-          k += 1
-        }
-        if (vars.nonEmpty)
-          out += ((headStart, if (stop < 0) body.length else stop, vars.toSet))
+        // body span: after `->` until the enclosing group ends (its
+        // close bracket, or a comma of that group)
+        val d = t.depth(i)
+        var stop = i + 2
+        while (stop < body.length && !(t.code(stop) &&
+            (t.depth(stop) < d || body.charAt(stop) == ',' && t.depth(stop) == d))) stop += 1
+        if (vars.nonEmpty) out += ((headStart, stop, vars.toSet))
         i += 2
       } else i += 1
     }
@@ -999,16 +883,12 @@ object Macros {
       params.map(_.toLowerCase).zip(args.map(a =>
         if ("""(?is)^\s*DISTINCT\b.*""".r.matches(a)) a else s"($a)")).toMap
     val scopes = lambdaScopes(body)
+    val t = SqlText(body)
     val out = new StringBuilder
     var i = 0
-    var inQuote = false
     while (i < body.length) {
       val ch = body.charAt(i)
-      if (inQuote) {
-        out.append(ch); if (ch == '\'') inQuote = false; i += 1
-      } else if (ch == '\'') {
-        out.append(ch); inQuote = true; i += 1
-      } else if (ch.isLetter || ch == '_') {
+      if (t.code(i) && (ch.isLetter || ch == '_')) {
         var j = i
         while (j < body.length && (body.charAt(j).isLetterOrDigit || body.charAt(j) == '_')) j += 1
         val word = body.substring(i, j)
@@ -1039,19 +919,12 @@ object Macros {
 
   private def expandOne(sql: String, name: String, sigs: Seq[Sig],
       table: Boolean): String = {
+    if (!sql.toLowerCase.contains(name + "(")) return sql
+    val t = SqlText(sql)
     val out = new StringBuilder
-    val lower = sql.toLowerCase
     var i = 0
-    var inQuote = false
     while (i < sql.length) {
-      val ch = sql.charAt(i)
-      if (inQuote) {
-        out.append(ch)
-        if (ch == '\'') inQuote = false
-        i += 1
-      } else if (ch == '\'') {
-        out.append(ch); inQuote = true; i += 1
-      } else if (lower.startsWith(name + "(", i) &&
+      if (t.code(i) && t.lower.startsWith(name + "(", i) &&
           // boundary: not mid-identifier, and not `.`-qualified — a
           // qualified call (system.main.sum(x)) targets the BUILTIN,
           // the reference's escape hatch out of macro recursion
@@ -1065,12 +938,12 @@ object Macros {
               w == "from" || w == "join" }
             fromCtx == table
           }) {
-        val (args, after) = scanArgs(sql, i + name.length + 1)
+        val (args, after) = t.argsAt(i + name.length)
         val (sig, bound) = bindOverload(name, sigs, args)
         out.append(s"(${substitute(sig._2, sig._1.map(paramName), bound)})")
         i = after
       } else {
-        out.append(ch); i += 1
+        out.append(sql.charAt(i)); i += 1
       }
     }
     out.toString

@@ -185,34 +185,13 @@ object PgCatalog {
   }
 
   def rewrite(spark: SparkSession, sql: String): String = {
-    val lower = sql.toLowerCase
-    if (!lower.contains("pg_")) return sql
+    if (!sql.toLowerCase.contains("pg_")) return sql
     val TzNamesRe = """(?i)\bpg_timezone_names\s*\(\s*\)""".r
-    val sql1 =
-      if (TzNamesRe.findFirstIn(sql).isEmpty) sql
-      else TzNamesRe.replaceAllIn(sql,
-        java.util.regex.Matcher.quoteReplacement(timezoneNamesRelation()))
-    return rewriteViews(spark, sql1)
-  }
-
-  private def rewriteViews(spark: SparkSession, sql: String): String = {
-    val (qch, _) = Dml.scanFull(sql)
-    val ms = TokenRe.findAllMatchIn(sql)
-      .filter(m => qch(m.start) == ' ').toList
-    if (ms.isEmpty) return sql
-    val sb = new StringBuilder
-    var pos = 0
-    ms.foreach { m =>
-      if (m.start >= pos) {
-        val name = m.group(1).toLowerCase
-        viewSql(spark, name).foreach { v =>
-          sb.append(sql.substring(pos, m.start))
-          sb.append(s"($v) AS $name")
-          pos = m.end
-        }
-      }
+    lazy val tzNames = timezoneNamesRelation()
+    val sql1 = SqlText.replaceUnquoted(sql, TzNamesRe)(_ => tzNames)
+    SqlText.replaceUnquoted(sql1, TokenRe) { m =>
+      val name = m.group(1).toLowerCase
+      viewSql(spark, name).map(v => s"($v) AS $name").getOrElse(m.matched)
     }
-    sb.append(sql.substring(pos))
-    sb.toString
   }
 }

@@ -41,57 +41,19 @@ object Prepared {
     templates.keySet.removeIf(_.startsWith(prefix))
   }
 
-  /** Split a top-level comma list (quote/paren/bracket aware). */
-  private def splitArgs(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var depth = 0
-    var i = 0
-    var q: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q != 0) {
-        sb.append(c)
-        if (c == q) {
-          // doubled quote = escaped
-          if (i + 1 < s.length && s.charAt(i + 1) == q) { sb.append(q); i += 1 }
-          else q = 0
-        }
-      } else c match {
-        case '\'' | '"' => q = c; sb.append(c)
-        case '(' | '[' | '{' => depth += 1; sb.append(c)
-        case ')' | ']' | '}' => depth -= 1; sb.append(c)
-        case ',' if depth == 0 => out += sb.toString; sb.clear()
-        case _ => sb.append(c)
-      }
-      i += 1
-    }
-    if (sb.nonEmpty || out.nonEmpty) out += sb.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Rewrite `?` / `?n` / `$n` / `$name` markers (outside string/quoted
     * identifiers) to named parameters `:gpN` / `:name`, returning the
     * rewritten text and the positional marker names in occurrence order.
     */
   private def lowerMarkers(tmpl: String): (String, Seq[String]) = {
+    val t = SqlText(tmpl)
     val sb = new StringBuilder
     val positional = scala.collection.mutable.ArrayBuffer.empty[String]
     var nextPos = 0
     var i = 0
-    var q: Char = 0
     while (i < tmpl.length) {
       val c = tmpl.charAt(i)
-      if (q != 0) {
-        sb.append(c)
-        if (c == q) {
-          if (i + 1 < tmpl.length && tmpl.charAt(i + 1) == q) { sb.append(q); i += 1 }
-          else q = 0
-        }
-        i += 1
-      } else if (c == '\'' || c == '"') {
-        q = c; sb.append(c); i += 1
-      } else if (c == '?' || c == '$') {
+      if (t.code(i) && (c == '?' || c == '$')) {
         var j = i + 1
         while (j < tmpl.length && (tmpl.charAt(j).isLetterOrDigit || tmpl.charAt(j) == '_')) j += 1
         val tail = tmpl.substring(i + 1, j)
@@ -123,7 +85,7 @@ object Prepared {
       if (tmpl == null)
         throw new IllegalArgumentException(
           s"Catalog Error: Prepared statement with name $name does not exist!")
-      val args = if (argText == null) Seq.empty else splitArgs(argText)
+      val args = if (argText == null) Seq.empty else SqlText.splitTop(argText)
       val named = args.collect {
         case a if a.matches("(?s)^\\w+\\s*:=.*") =>
           val Array(n, v) = a.split(":=", 2)

@@ -40,44 +40,14 @@ private[functions] object QualifyRewrite {
     cur
   }
 
-  private def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  /** Quote mask + paren depth for every index (quote-aware like the
-    * WindowRelocate scanner). */
-  private def scan(s: String): (Array[Boolean], Array[Int]) = {
-    val n = s.length
-    val inQ = new Array[Boolean](n)
-    val depth = new Array[Int](n)
-    var q = false
-    var qc = ' '
-    var d = 0
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (q) { inQ(i) = true; depth(i) = d; if (c == qc) q = false }
-      else if (c == '\'' || c == '"') { inQ(i) = true; depth(i) = d; q = true; qc = c }
-      else if (c == '(') { depth(i) = d; d += 1 } // '(' sits at the outer depth
-      else if (c == ')') { d -= 1; depth(i) = d } // ')' too
-      else depth(i) = d
-      i += 1
-    }
-    (inQ, depth)
-  }
-
-  /** Keyword token at position i (identifier-boundary, not quoted). */
-  private def kwAt(lower: String, inQ: Array[Boolean], i: Int, kw: String): Boolean =
-    !inQ(i) && lower.startsWith(kw, i) &&
-      (i == 0 || !isIdent(lower.charAt(i - 1))) &&
-      (i + kw.length >= lower.length || !isIdent(lower.charAt(i + kw.length)))
-
   private def rewriteOne(sql: String): String = {
-    val lower = sql.toLowerCase
-    val (inQ, depth) = scan(sql)
+    val t = SqlText(sql)
+    import t.{code, depth, kwAt}
 
     var qi = -1
     var i = 0
     while (qi < 0 && i < sql.length) {
-      if (kwAt(lower, inQ, i, "qualify")) qi = i
+      if (kwAt(i, "qualify")) qi = i
       i += 1
     }
     if (qi < 0) return sql
@@ -87,7 +57,7 @@ private[functions] object QualifyRewrite {
     var s0 = -1
     var j = qi - 1
     while (s0 < 0 && j >= 0) {
-      if (depth(j) == d && kwAt(lower, inQ, j, "select")) s0 = j
+      if (depth(j) == d && kwAt(j, "select")) s0 = j
       j -= 1
     }
     if (s0 < 0) return sql // malformed; leave for Spark's parse error
@@ -100,9 +70,9 @@ private[functions] object QualifyRewrite {
     var end = sql.length
     var k = qi + "qualify".length
     while (k < end) {
-      if (!inQ(k) && depth(k) < d) { end = k }
-      else if (depth(k) == d && tailKws.exists(kwAt(lower, inQ, k, _))) end = k
-      else if (!inQ(k) && sql.charAt(k) == ';') end = k
+      if (code(k) && depth(k) < d) { end = k }
+      else if (depth(k) == d && tailKws.exists(kwAt(k, _))) end = k
+      else if (code(k) && sql.charAt(k) == ';') end = k
       else k += 1
     }
     val pred = sql.substring(qi + "qualify".length, end).trim
@@ -113,15 +83,15 @@ private[functions] object QualifyRewrite {
     var selStart = s0 + "select".length
     while (selStart < qi && sql.charAt(selStart).isWhitespace) selStart += 1
     var distinct = false
-    if (kwAt(lower, inQ, selStart, "distinct")) {
+    if (kwAt(selStart, "distinct")) {
       distinct = true
       selStart += "distinct".length
-    } else if (kwAt(lower, inQ, selStart, "all")) selStart += "all".length
+    } else if (kwAt(selStart, "all")) selStart += "all".length
 
     var fromIdx = -1
     var f = selStart
     while (fromIdx < 0 && f < qi) {
-      if (depth(f) == d && kwAt(lower, inQ, f, "from")) fromIdx = f
+      if (depth(f) == d && kwAt(f, "from")) fromIdx = f
       f += 1
     }
 
@@ -134,9 +104,8 @@ private[functions] object QualifyRewrite {
     // SELECT list or the QUALIFY predicate
     // (bind_select_node.cpp:752-755)
     def hasOver(s: String): Boolean = {
-      val (iq, _) = scan(s)
-      val ls = s.toLowerCase
-      (0 until s.length).exists(x => kwAt(ls, iq, x, "over"))
+      val st = SqlText(s)
+      (0 until s.length).exists(st.kwAt(_, "over"))
     }
     if (!hasOver(selectList) && !hasOver(pred))
       throw new IllegalArgumentException(
@@ -152,44 +121,29 @@ private[functions] object QualifyRewrite {
     val obAliases = scala.collection.mutable.ArrayBuffer[String]()
     var tailStart = end
     var obText = ""
-    if (!distinct && end < sql.length && kwAt(lower, inQ, end, "order")) {
+    if (!distinct && end < sql.length && kwAt(end, "order")) {
       var b = end + "order".length
       while (b < sql.length && sql.charAt(b).isWhitespace) b += 1
-      if (b < sql.length && kwAt(lower, inQ, b, "by")) {
+      if (b < sql.length && kwAt(b, "by")) {
         var obEnd = sql.length
         var m = b + 2
         while (m < obEnd) {
-          if (!inQ(m) && depth(m) < d) obEnd = m
+          if (code(m) && depth(m) < d) obEnd = m
           else if (depth(m) == d && Seq("limit", "offset", "fetch",
-              "union", "intersect", "except").exists(kwAt(lower, inQ, m, _)))
+              "union", "intersect", "except").exists(kwAt(m, _)))
             obEnd = m
-          else if (!inQ(m) && sql.charAt(m) == ';') obEnd = m
+          else if (code(m) && sql.charAt(m) == ';') obEnd = m
           else m += 1
         }
-        val obBody = sql.substring(b + 2, obEnd)
-        // split order items on same-depth commas (quote/paren aware)
-        val items = scala.collection.mutable.ArrayBuffer[String]()
-        var dep = 0; var q = false; var st = 0
-        for (x <- 0 until obBody.length) {
-          val c = obBody.charAt(x)
-          if (q) { if (c == '\'' || c == '"') q = false }
-          else if (c == '\'' || c == '"') q = true
-          else if (c == '(') dep += 1
-          else if (c == ')') dep -= 1
-          else if (c == ',' && dep == 0) { items += obBody.substring(st, x); st = x + 1 }
-        }
-        items += obBody.substring(st)
+        val items = SqlText.splitTop(sql.substring(b + 2, obEnd))
         val sufRe = """(?is)^(.*?)((\s+(ASC|DESC))?(\s+NULLS\s+(FIRST|LAST))?)\s*$""".r
-        val rewrittenItems = items.map { it =>
-          it.trim match {
-            case t if t.isEmpty || t.matches("\\d+") ||
-              t.matches("(?i)all") => t // ordinals / ALL stay
-            case sufRe(core, suffix, _, _, _, _) =>
-              val name = s"__qob${obAliases.length + 1}"
-              obAliases += s"($core) AS $name"
-              name + suffix
-            case t => t
-          }
+        val rewrittenItems = items.map {
+          case it if it.matches("\\d+") || it.matches("(?i)all") => it // ordinals / ALL stay
+          case sufRe(core, suffix, _, _, _, _) =>
+            val name = s"__qob${obAliases.length + 1}"
+            obAliases += s"($core) AS $name"
+            name + suffix
+          case it => it
         }
         obText = " ORDER BY " + rewrittenItems.mkString(", ")
         tailStart = obEnd

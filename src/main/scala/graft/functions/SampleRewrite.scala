@@ -48,43 +48,21 @@ private[functions] object SampleRewrite {
   private val TsPctRe =
     """(?is)\bTABLESAMPLE\s*\(\s*(\d+(?:\.\d+)?)\s*%\s*\)""".r
 
-  /** True when position `i` of `s` sits inside a '/"/` quoted region —
-    * sampling text inside string literals must not be rewritten
-    * (r11 ADVICE). */
-  private def quoteMask(s: String): Array[Boolean] = {
-    val mask = new Array[Boolean](s.length)
-    var q = false; var qc = ' '; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q) { mask(i) = true; if (c == qc) q = false }
-      else if (c == '\'' || c == '"' || c == '`') { mask(i) = true; q = true; qc = c }
-      i += 1
-    }
-    mask
-  }
-
-  private def sub(s: String, re: scala.util.matching.Regex,
-      f: scala.util.matching.Regex.Match => String): String = {
-    val mask = quoteMask(s)
-    re.replaceAllIn(s, m => java.util.regex.Matcher.quoteReplacement(
-      if (mask(m.start)) m.matched else f(m)))
-  }
-
   def apply(sql: String): String = {
     if (!sql.toLowerCase.contains("sample")) return sql
+    // sampling text inside string literals is not rewritten
+    import SqlText.replaceUnquoted
     var out = sql
-    out = sub(out, UsingMethodRe, m =>
+    out = replaceUnquoted(out, UsingMethodRe)(m =>
       render(m.group(1), m.group(2), m.group(3), None))
-    out = sub(out, TsMethodRe, m =>
+    out = replaceUnquoted(out, TsMethodRe)(m =>
       render(m.group(1), m.group(2), m.group(3), Option(m.group(5))))
-    out = sub(out, UsingRe, m =>
+    out = replaceUnquoted(out, UsingRe)(m =>
       render(Option(m.group(6)).getOrElse("reservoir"),
         Option(m.group(1)).getOrElse(m.group(3)),
         Option(m.group(2)).getOrElse(m.group(4)),
         Option(m.group(7))))
-    out = sub(out, TsPctRe, m =>
-      s"TABLESAMPLE (${m.group(1)} PERCENT)")
-    out
+    replaceUnquoted(out, TsPctRe)(m => s"TABLESAMPLE (${m.group(1)} PERCENT)")
   }
 
   private def render(method0: String, size: String, unit0: String,

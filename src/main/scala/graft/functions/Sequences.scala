@@ -178,7 +178,7 @@ object Sequences {
         s"(SELECT * FROM VALUES ${rows.mkString(", ")} AS t(schema_name, " +
           "sequence_name, temporary, start_value, min_value, max_value, " +
           "increment_by, cycle, last_value))"
-    re.replaceAllIn(sql, java.util.regex.Matcher.quoteReplacement(rel))
+    SqlText.replaceUnquoted(sql, re)(_ => rel)
   }
 
   // the quoted alternative carries the same qualified continuation as the

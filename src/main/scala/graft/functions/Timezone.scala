@@ -19,6 +19,7 @@ import org.apache.spark.sql.graft.TzUtil
   *    inlined over the live session conf.
   */
 object Timezone {
+  import SqlText.isIdent
 
   // ------------------------------------------------------------------
   // SET TimeZone / SET Calendar
@@ -90,43 +91,20 @@ object Timezone {
   def rewriteSettings(spark: SparkSession, sql: String): String = {
     var out = sql
     val LocalRe = """(?i)\b(localtimestamp|localtime)\b(?!\s*\()""".r
-    if (LocalRe.findFirstIn(out).isDefined)
-      out = replaceUnquoted(out, LocalRe)(m =>
-        Some(if (m.group(1).equalsIgnoreCase("localtimestamp"))
-          "localtimestamp()" else "current_localtime()"))
+    out = SqlText.replaceUnquoted(out, LocalRe)(m =>
+      if (m.group(1).equalsIgnoreCase("localtimestamp"))
+        "localtimestamp()" else "current_localtime()")
     val SettingsRe = """(?i)\bduckdb_settings\s*\(\s*\)""".r
-    if (SettingsRe.findFirstIn(out).isDefined)
-      out = replaceUnquoted(out, SettingsRe)(_ =>
-        Some(settingsRelation(spark)))
+    out = SqlText.replaceUnquoted(out, SettingsRe)(_ => settingsRelation(spark))
     val CurRe = """(?i)\bcurrent_setting\s*\(\s*'([^']*)'\s*\)""".r
-    if (CurRe.findFirstIn(out).isDefined)
-      out = replaceUnquoted(out, CurRe) { m =>
-        val name = m.group(1)
-        val v = settingsRows(spark).find(_._1.equalsIgnoreCase(name)).map(_._2)
-          .orElse(spark.conf.getOption(name))
-          .getOrElse(throw new IllegalArgumentException(
-            s"Catalog Error: unrecognized configuration parameter \"$name\""))
-        Some(s"'${esc(v)}'")
-      }
-    out
-  }
-
-  private def replaceUnquoted(sql: String, re: scala.util.matching.Regex)(
-      f: scala.util.matching.Regex.Match => Option[String]): String = {
-    val (qch, _) = Dml.scanFull(sql)
-    val ms = re.findAllMatchIn(sql).filter(m => qch(m.start) == ' ').toList
-    if (ms.isEmpty) return sql
-    val sb = new StringBuilder
-    var pos = 0
-    ms.foreach { m =>
-      if (m.start >= pos) {
-        sb.append(sql.substring(pos, m.start))
-        sb.append(f(m).getOrElse(m.matched))
-        pos = m.end
-      }
+    SqlText.replaceUnquoted(out, CurRe) { m =>
+      val name = m.group(1)
+      val v = settingsRows(spark).find(_._1.equalsIgnoreCase(name)).map(_._2)
+        .orElse(spark.conf.getOption(name))
+        .getOrElse(throw new IllegalArgumentException(
+          s"Catalog Error: unrecognized configuration parameter \"$name\""))
+      s"'${esc(v)}'"
     }
-    sb.append(sql.substring(pos))
-    sb.toString
   }
 
   // ------------------------------------------------------------------
@@ -134,7 +112,6 @@ object Timezone {
   // ------------------------------------------------------------------
 
   private val AtRe = """(?i)\bAT\s+TIME\s+ZONE\b""".r
-  private def identChar(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '$'
 
   // type-keyword prefixes absorbed into the operand so `TIMESTAMP '…'
   // AT TIME ZONE z` keeps its typed-literal spelling
@@ -144,41 +121,35 @@ object Timezone {
 
   /** End (exclusive) of one primary expression starting at i (postfix
     * `::type` casts absorbed). Returns -1 when unparsable. */
-  private def primaryEnd(s: String, qch: Array[Char], i0: Int): Int = {
+  private def primaryEnd(t: SqlText, i0: Int): Int = {
+    val s = t.text
     var i = i0
     if (i >= s.length) return -1
     def skipParens(from: Int): Int = {
-      var d = 0; var k = from
-      while (k < s.length) {
-        if (qch(k) == ' ') {
-          if (s.charAt(k) == '(') d += 1
-          else if (s.charAt(k) == ')') { d -= 1; if (d == 0) return k + 1 }
-        }
-        k += 1
-      }
-      -1
+      val close = t.close(from)
+      if (close < s.length) close + 1 else -1
     }
     val c = s.charAt(i)
-    if (qch(i) != ' ') { // string literal / quoted identifier
-      val q = qch(i)
+    if (t.quote(i) != ' ') { // string literal / quoted identifier
+      val q = t.quote(i)
       var k = i
-      while (k < s.length && qch(k) == q) k += 1
+      while (k < s.length && t.quote(k) == q) k += 1
       i = k
     } else if (c == '(') {
       i = skipParens(i); if (i < 0) return -1
-    } else if (identChar(c)) {
+    } else if (isIdent(c)) {
       var k = i
-      while (k < s.length && (identChar(s.charAt(k)) || s.charAt(k) == '.')) k += 1
+      while (k < s.length && (isIdent(s.charAt(k)) || s.charAt(k) == '.')) k += 1
       // typed literal (TIMESTAMP '…') or function call f(args)
       var p = k
       while (p < s.length && s.charAt(p).isWhitespace) p += 1
       if (p < s.length && s.charAt(p) == '(') {
         i = skipParens(p); if (i < 0) return -1
-      } else if (p < s.length && qch(p) != ' ' &&
+      } else if (p < s.length && t.quote(p) != ' ' &&
           TypedLiteralKw.contains(s.substring(i, k).toLowerCase)) {
-        val q = qch(p)
+        val q = t.quote(p)
         var e = p
-        while (e < s.length && qch(e) == q) e += 1
+        while (e < s.length && t.quote(e) == q) e += 1
         i = e
       } else i = k
     } else return -1
@@ -193,7 +164,7 @@ object Timezone {
         val st = k
         // single-token type name (multi-word TIMESTAMP WITH TIME ZONE
         // spellings stay out of the absorbed postfix)
-        while (k < s.length && identChar(s.charAt(k))) k += 1
+        while (k < s.length && isIdent(s.charAt(k))) k += 1
         if (k == st) done = true
         else {
           var p2 = k
@@ -210,34 +181,27 @@ object Timezone {
   /** Start of the operand expression ending just before `end` (scans
     * backwards over `primary (:: type)*` chains). Returns -1 when
     * unparsable. */
-  private def exprStart(s: String, qch: Array[Char], end0: Int): Int = {
+  private def exprStart(t: SqlText, end0: Int): Int = {
+    val s = t.text
     var p = end0 - 1
     while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
     if (p < 0) return -1
     def primaryStart(at: Int): Int = {
       var k = at
       if (k < 0) return -1
-      if (qch(k) != ' ') { // string literal / quoted identifier
-        val q = qch(k)
-        while (k >= 0 && qch(k) == q) k -= 1
+      if (t.quote(k) != ' ') { // string literal / quoted identifier
+        val q = t.quote(k)
+        while (k >= 0 && t.quote(k) == q) k -= 1
         k + 1
       } else if (s.charAt(k) == ')') {
-        var d = 0
-        while (k >= 0) {
-          if (qch(k) == ' ') {
-            if (s.charAt(k) == ')') d += 1
-            else if (s.charAt(k) == '(') { d -= 1; if (d == 0) {
-              // preceding function name, if any
-              var j = k - 1
-              while (j >= 0 && (identChar(s.charAt(j)) || s.charAt(j) == '.')) j -= 1
-              return j + 1
-            } }
-          }
-          k -= 1
-        }
-        -1
-      } else if (identChar(s.charAt(k))) {
-        while (k >= 0 && (identChar(s.charAt(k)) || s.charAt(k) == '.')) k -= 1
+        val open = t.open(k)
+        if (open < 0) return -1
+        // preceding function name, if any
+        var j = open - 1
+        while (j >= 0 && (isIdent(s.charAt(j)) || s.charAt(j) == '.')) j -= 1
+        j + 1
+      } else if (isIdent(s.charAt(k))) {
+        while (k >= 0 && (isIdent(s.charAt(k)) || s.charAt(k) == '.')) k -= 1
         k + 1
       } else -1
     }
@@ -247,12 +211,12 @@ object Timezone {
       start = primaryStart(p)
       if (start < 0) return -1
       // `TYPE '…'` typed literal: absorb the keyword
-      if (qch(p) != ' ') {
+      if (t.quote(p) != ' ') {
         var j = start - 1
         while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-        if (j >= 0 && identChar(s.charAt(j))) {
+        if (j >= 0 && isIdent(s.charAt(j))) {
           var k = j
-          while (k >= 0 && identChar(s.charAt(k))) k -= 1
+          while (k >= 0 && isIdent(s.charAt(k))) k -= 1
           if (TypedLiteralKw.contains(s.substring(k + 1, j + 1).toLowerCase))
             start = k + 1
         }
@@ -279,13 +243,13 @@ object Timezone {
     while (changed && guard < 32) {
       guard += 1
       changed = false
-      val (qch, _) = Dml.scanFull(out)
-      val mOpt = AtRe.findAllMatchIn(out).find(m => qch(m.start) == ' ')
+      val t = SqlText(out)
+      val mOpt = AtRe.findAllMatchIn(out).find(m => t.code(m.start))
       mOpt.foreach { m =>
         var j = m.end
         while (j < out.length && out.charAt(j).isWhitespace) j += 1
-        val rhsEnd = primaryEnd(out, qch, j)
-        val lhsStart = exprStart(out, qch, m.start)
+        val rhsEnd = primaryEnd(t, j)
+        val lhsStart = exprStart(t, m.start)
         if (rhsEnd > j && lhsStart >= 0 && lhsStart < m.start) {
           val lhs = out.substring(lhsStart, m.start).trim
           val rhs = out.substring(j, rhsEnd).trim

@@ -64,50 +64,27 @@ object Variables {
       s"not a SET/RESET VARIABLE statement: $sql")
   }
 
-  /** Replace only matches that start OUTSIDE string/identifier quotes
-    * (Dml.scanFull state) — a data string like 'price: $total' must
-    * survive substitution untouched. */
-  private def replaceUnquoted(sql: String, re: scala.util.matching.Regex)(
-      f: scala.util.matching.Regex.Match => Option[String]): String = {
-    val (qch, _) = Dml.scanFull(sql)
-    // the getvariable('name') pattern itself CONTAINS a quoted literal,
-    // so only the match START position must be unquoted
-    val ms = re.findAllMatchIn(sql).filter(m => qch(m.start) == ' ').toList
-    if (ms.isEmpty) return sql
-    val sb = new StringBuilder
-    var pos = 0
-    ms.foreach { m =>
-      if (m.start >= pos) {
-        sb.append(sql.substring(pos, m.start))
-        sb.append(f(m).getOrElse(m.matched))
-        pos = m.end
-      }
-    }
-    sb.append(sql.substring(pos))
-    sb.toString
-  }
-
   /** getvariable('x') → the stored literal (NULL when unset). Runs after
     * macro expansion in Macros.expandAll. */
   def rewrite(spark: SparkSession, sql: String): String = {
     // (extra parens appear when PREPARE substitutes a parameter:
     // GETVARIABLE(('animal')))
-    var out = sql
+    // only matches that start outside quotes are rewritten: a data
+    // string like 'price: $total' survives untouched (the pattern itself
+    // contains a quoted literal, so only the match start counts)
     val Re2 = """(?i)\bgetvariable\s*\(\s*\(?\s*'([^']*)'\s*\)?\s*\)""".r
-    if (Re2.findFirstIn(out).isDefined)
-      out = replaceUnquoted(out, Re2)(m => Some(
-        Option(registry.get(key(spark, m.group(1))))
-          .map(v => s"(${v._1})").getOrElse("NULL")))
+    val out = SqlText.replaceUnquoted(sql, Re2)(m =>
+      Option(registry.get(key(spark, m.group(1))))
+        .map(v => s"(${v._1})").getOrElse("NULL"))
     // $name references an existing variable (test_variable_syntax.test);
     // numeric $1 stays for the PREPARE layer, unknown names stay too.
     // DDL keeps its parameters verbatim — the reference REJECTS
     // variables in DEFAULT/CHECK clauses (create_table_parameters.test)
     val DollarRe = """\$([A-Za-z_][\w$]*)""".r
     if ("""(?is)^\s*CREATE\b""".r.findFirstIn(out).isDefined) return out
-    if (DollarRe.findFirstIn(out).isDefined)
-      out = replaceUnquoted(out, DollarRe)(m =>
-        Option(registry.get(key(spark, m.group(1)))).map(v => s"(${v._1})"))
-    out
+    SqlText.replaceUnquoted(out, DollarRe)(m =>
+      Option(registry.get(key(spark, m.group(1)))).map(v => s"(${v._1})")
+        .getOrElse(m.matched))
   }
 
   /** duckdb_variables() rows: (name, value, type). */

@@ -14,41 +14,11 @@ package graft.functions
   */
 private[functions] object WindowRefs {
 
-  private def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  private def scan(s: String): (Array[Boolean], Array[Int], Array[Int]) = {
-    val n = s.length
-    val inQ = new Array[Boolean](n)
-    val closeOf = Array.fill(n)(-1)
-    val stack = new java.util.ArrayDeque[Integer]()
-    var q = false
-    var qc = ' '
-    val depth = new Array[Int](n)
-    var d = 0
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (q) { inQ(i) = true; depth(i) = d; if (c == qc) q = false }
-      else if (c == '\'' || c == '"') { inQ(i) = true; depth(i) = d; q = true; qc = c }
-      else if (c == '(') { depth(i) = d; d += 1; stack.push(i) }
-      else if (c == ')') {
-        d -= 1; depth(i) = d
-        if (!stack.isEmpty) closeOf(stack.pop()) = i
-      } else depth(i) = d
-      i += 1
-    }
-    (inQ, closeOf, depth)
-  }
-
-  private def kwAt(lower: String, inQ: Array[Boolean], i: Int, kw: String): Boolean =
-    i < lower.length && !inQ(i) && lower.startsWith(kw, i) &&
-      (i == 0 || !isIdent(lower.charAt(i - 1))) &&
-      (i + kw.length >= lower.length || !isIdent(lower.charAt(i + kw.length)))
+  import SqlText.isIdent
 
   def apply(sql: String): String = {
     if (!sql.toLowerCase.contains("window")) return sql
-    val (inQ, closeOf, _) = scan(sql)
-    val lower = sql.toLowerCase
+    val st = SqlText(sql)
 
     // collect WINDOW <name> AS (<def>) [, <name> AS (<def>)]* clauses
     // (with body spans, so name-chained defs can be spliced in place —
@@ -57,7 +27,7 @@ private[functions] object WindowRefs {
     val spans = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
     var i = 0
     while (i < sql.length) {
-      if (kwAt(lower, inQ, i, "window")) {
+      if (st.kwAt(i, "window")) {
         var j = i + "window".length
         var more = true
         var consumedAny = false
@@ -68,19 +38,20 @@ private[functions] object WindowRefs {
           while (j < sql.length && isIdent(sql.charAt(j))) j += 1
           val name = sql.substring(ns, j).toLowerCase
           while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-          if (name.nonEmpty && kwAt(lower, inQ, j, "as")) {
+          if (name.nonEmpty && st.kwAt(j, "as")) {
             j += 2
             while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-            if (j < sql.length && sql.charAt(j) == '(' && closeOf(j) > 0) {
+            if (j < sql.length && sql.charAt(j) == '(' && st.close(j) < sql.length) {
+              val close = st.close(j)
               // duplicate names in one clause are the reference's parse
               // error (case-insensitive; transform_select.cpp:294)
               if (!clauseNames.add(name))
                 throw new IllegalArgumentException(
                   s"""Parser Error: window "$name" is already defined""")
-              defs(name) = sql.substring(j + 1, closeOf(j)).trim
-              spans += ((j + 1, closeOf(j), name))
+              defs(name) = sql.substring(j + 1, close).trim
+              spans += ((j + 1, close, name))
               consumedAny = true
-              j = closeOf(j) + 1
+              j = close + 1
               while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
               if (j < sql.length && sql.charAt(j) == ',') { j += 1 }
               else more = false
@@ -126,22 +97,16 @@ private[functions] object WindowRefs {
       val m = """(?is)\b(ROWS|RANGE|GROUPS)\b""".r.findFirstMatchIn(d)
       m.map(x => d.substring(0, x.start).trim).getOrElse(d)
     }
-    def callerOf(s: String, overAt: Int): String = {
+    def callerOf(t: SqlText, overAt: Int): String = {
+      val s = t.text
       var j = overAt - 1
       while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-      if (j < 0 || s.charAt(j) != ')') return ""
-      var depth = 0
-      while (j >= 0) {
-        val c = s.charAt(j)
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) { j -= 1
-          while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-          val e2 = j + 1
-          while (j >= 0 && isIdent(s.charAt(j))) j -= 1
-          return s.substring(j + 1, e2).toLowerCase } }
-        j -= 1
-      }
-      ""
+      if (j < 0 || s.charAt(j) != ')' || t.open(j) < 0) return ""
+      j = t.open(j) - 1
+      while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
+      val e2 = j + 1
+      while (j >= 0 && isIdent(s.charAt(j))) j -= 1
+      s.substring(j + 1, e2).toLowerCase
     }
 
     // splice OVER (<name> [extras]) and bare OVER <name> — repeat until
@@ -152,15 +117,14 @@ private[functions] object WindowRefs {
     while (changed && rounds < 64) {
       changed = false
       rounds += 1
-      val (iq, co, _) = scan(cur)
-      val lo = cur.toLowerCase
+      val ct = SqlText(cur)
       var k = 0
       while (!changed && k < cur.length) {
-        if (kwAt(lo, iq, k, "over")) {
+        if (ct.kwAt(k, "over")) {
           var p = k + 4
           while (p < cur.length && cur.charAt(p).isWhitespace) p += 1
-          if (p < cur.length && cur.charAt(p) == '(' && co(p) > 0) {
-            val inner = cur.substring(p + 1, co(p))
+          if (p < cur.length && cur.charAt(p) == '(' && ct.close(p) < cur.length) {
+            val inner = cur.substring(p + 1, ct.close(p))
             val t = inner.trim
             var e = 0
             while (e < t.length && isIdent(t.charAt(e))) e += 1
@@ -174,7 +138,7 @@ private[functions] object WindowRefs {
                   s"""Parser Error: cannot copy window "$head" because it has a frame clause""")
               val extra = t.substring(e).trim
               val spliced = (resolved(head) + " " + extra).trim
-              cur = cur.substring(0, p + 1) + spliced + cur.substring(co(p))
+              cur = cur.substring(0, p + 1) + spliced + cur.substring(ct.close(p))
               changed = true
             }
           } else if (p < cur.length && isIdent(cur.charAt(p))) {
@@ -184,7 +148,7 @@ private[functions] object WindowRefs {
             var e = p
             while (e < cur.length && isIdent(cur.charAt(e))) e += 1
             val head = cur.substring(p, e).toLowerCase
-            if (resolved.contains(head) && rankFamily(callerOf(cur, k)) &&
+            if (resolved.contains(head) && rankFamily(callerOf(ct, k)) &&
                 """(?is).*\b(ROWS|RANGE|GROUPS)\b.*""".r.matches(resolved(head))) {
               cur = cur.substring(0, p) + "(" + stripFrame(resolved(head)) +
                 ")" + cur.substring(e)

@@ -73,29 +73,7 @@ private[functions] object WindowRelocate {
     cur
   }
 
-  /** Forward pass: quote mask + paren matching for the whole string. */
-  private def parenMaps(s: String): (Array[Boolean], Array[Int], Array[Int]) = {
-    val n = s.length
-    val inQ = new Array[Boolean](n)
-    val closeOf = Array.fill(n)(-1) // '(' index -> its ')' index
-    val openOf = Array.fill(n)(-1)  // ')' index -> its '(' index
-    val stack = new java.util.ArrayDeque[Integer]()
-    var q = false
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (q) { inQ(i) = true; if (c == '\'') q = false }
-      else if (c == '\'') { inQ(i) = true; q = true }
-      else if (c == '(') stack.push(i)
-      else if (c == ')' && !stack.isEmpty) {
-        val o = stack.pop(); closeOf(o) = i; openOf(i) = o
-      }
-      i += 1
-    }
-    (inQ, closeOf, openOf)
-  }
-
-  private def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_'
+  import SqlText.isIdent
 
   /** Identifier ending just before `i` (exclusive), skipping whitespace;
     * returns (startIndex, word) — word empty when none. */
@@ -108,17 +86,14 @@ private[functions] object WindowRelocate {
   }
 
   private def rewriteOnce(sql: String): String = {
-    val (inQ, closeOf, openOf) = parenMaps(sql)
-    val lower = sql.toLowerCase
+    val t = SqlText(sql)
     var i = 0
     while (i < sql.length) {
-      if (!inQ(i) && lower.startsWith("over", i) &&
-          (i == 0 || !isIdent(sql.charAt(i - 1))) &&
-          (i + 4 >= sql.length || !isIdent(sql.charAt(i + 4)))) {
+      if (t.kwAt(i, "over")) {
         var k = i + 4
         while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k < sql.length && sql.charAt(k) == '(' && closeOf(k) >= 0) {
-          val out = tryRewriteAt(sql, lower, openOf, closeOf, i, k, closeOf(k))
+        if (k < sql.length && sql.charAt(k) == '(' && t.close(k) < sql.length) {
+          val out = tryRewriteAt(t, i, k, t.close(k))
           if (out != null) return out
         }
       }
@@ -129,8 +104,8 @@ private[functions] object WindowRelocate {
 
   /** Attempt the rewrite for one `<expr-group> [FILTER (…)]* OVER (w)`
     * occurrence; null = leave this occurrence alone. */
-  private def tryRewriteAt(sql: String, lower: String, openOf: Array[Int],
-      closeOf: Array[Int], overAt: Int, wOpen: Int, wClose: Int): String = {
+  private def tryRewriteAt(t: SqlText, overAt: Int, wOpen: Int, wClose: Int): String = {
+    val sql = t.text
     val window = sql.substring(wOpen, wClose + 1)
     // walk back over call-site FILTER (WHERE p) groups to the expression
     var pe = { // position of ')' closing the group before OVER
@@ -143,8 +118,8 @@ private[functions] object WindowRelocate {
     var fn = ""
     var loop = true
     while (loop) {
-      if (pe < 0 || sql.charAt(pe) != ')' || openOf(pe) < 0) return null
-      val ps = openOf(pe)
+      if (pe < 0 || sql.charAt(pe) != ')' || t.open(pe) < 0) return null
+      val ps = t.open(pe)
       val (ws, w) = wordBefore(sql, ps)
       if (w.equalsIgnoreCase("filter")) {
         val content = sql.substring(ps + 1, pe)
@@ -162,7 +137,7 @@ private[functions] object WindowRelocate {
     }
     val exprEnd = pe + 1
     val expr = sql.substring(es, exprEnd)
-    val exprOpen = openOf(pe) // '(' of the outermost group of expr
+    val exprOpen = t.open(pe) // '(' of the outermost group of expr
 
     // standard windowed call — nothing to do unless a FILTER is attached
     // or the aggregate carries a top-level DISTINCT
@@ -176,7 +151,7 @@ private[functions] object WindowRelocate {
       // multi-arg holistic calls (binned histogram(x, bins)) can't take
       // the collect_list relocation — the extra arg would be swallowed
       // into collect_list's arity; leave for Spark's own analysis error
-      if (topLevelComma(argsText)) return null
+      if (SqlText.splitTop(argsText).length > 1) return null
       val inner =
         if (preds.isEmpty) argsText
         else s"CASE WHEN ${preds.map(p => s"($p)").mkString(" AND ")} " +
@@ -221,16 +196,15 @@ private[functions] object WindowRelocate {
   /** Aggregate call sites inside `e` (quote-aware, identifier-boundary,
     * unqualified). Returns (nameStart, openParen) pairs. */
   private def aggSites(e: String): Seq[(Int, Int)] = {
-    val (inQ, _, _) = parenMaps(e)
-    val lower = e.toLowerCase
+    val t = SqlText(e)
     val out = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
     var i = 0
     while (i < e.length) {
-      if (!inQ(i) && (isIdent(e.charAt(i)) &&
+      if (t.code(i) && (isIdent(e.charAt(i)) &&
           (i == 0 || (!isIdent(e.charAt(i - 1)) && e.charAt(i - 1) != '.')))) {
         var j = i
         while (j < e.length && isIdent(e.charAt(j))) j += 1
-        val name = lower.substring(i, j)
+        val name = t.lower.substring(i, j)
         var k = j
         while (k < e.length && e.charAt(k).isWhitespace) k += 1
         if (k < e.length && e.charAt(k) == '(' && Aggs(name)) out += ((i, k))
@@ -250,9 +224,9 @@ private[functions] object WindowRelocate {
     if (sites.length != 1)
       throw new IllegalArgumentException(bodyError)
     val (nameStart, open) = sites.head
-    val (_, closeOf, _) = parenMaps(expr)
-    val close = closeOf(open)
-    if (close < 0) throw new IllegalArgumentException(bodyError)
+    val t = SqlText(expr)
+    val close = t.close(open)
+    if (close == expr.length) throw new IllegalArgumentException(bodyError)
     val name = expr.substring(nameStart, open).trim.toLowerCase
     val argsText = expr.substring(open + 1, close)
 
@@ -263,8 +237,8 @@ private[functions] object WindowRelocate {
     val tail = expr.substring(close + 1)
     """(?is)^\s*FILTER\s*\(""".r.findPrefixMatchOf(tail).foreach { fm =>
       val fOpen = close + 1 + fm.end - 1
-      val fClose = closeOf(fOpen)
-      if (fClose > 0) {
+      val fClose = t.close(fOpen)
+      if (fClose < expr.length) {
         val content = expr.substring(fOpen + 1, fClose)
         """(?is)^\s*WHERE\b(.*)$""".r.findFirstMatchIn(content).foreach { m =>
           preds += m.group(1).trim
@@ -286,7 +260,7 @@ private[functions] object WindowRelocate {
         // COUNT(DISTINCT x) over a window: distinct count of the frame.
         // Multi-arg distinct counts tuple-wise (struct packs the tuple).
         val rest0 = dm.get.group(1).trim
-        val rest = if (topLevelComma(rest0)) s"struct($rest0)" else rest0
+        val rest = if (SqlText.splitTop(rest0).length > 1) s"struct($rest0)" else rest0
         val inner = if (preds.isEmpty) rest
                     else s"CASE WHEN $pred THEN $rest END"
         s"size(collect_set($inner) OVER $window)"
@@ -298,22 +272,5 @@ private[functions] object WindowRelocate {
       } else s"$name($argsText) OVER $window"
 
     expr.substring(0, nameStart) + core + expr.substring(removeEnd)
-  }
-
-  private def topLevelComma(s: String): Boolean = {
-    var depth = 0; var q = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q) { if (c == '\'') q = false }
-      else c match {
-        case '\'' => q = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => return true
-        case _ =>
-      }
-      i += 1
-    }
-    false
   }
 }

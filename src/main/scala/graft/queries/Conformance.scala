@@ -11,8 +11,8 @@ import Q._
   * sampling/limit variants, §2.3 IEJoin-class predicates, §2.1 whole-file
   * reads, §2.4 remaining aggregates).
   *
-  * GROUPS window frames are implemented in Windows.scala via
-  * graft.operators.GroupsFrame (the reference executes them:
+  * GROUPS window frames are in Windows.scala (`q_window_groups`, a
+  * dense_rank() group index + RANGE frame; the reference executes them:
   * window_boundaries_state.cpp:333-367).
   */
 object Conformance extends Pack {

@@ -363,8 +363,7 @@ object Relational extends Pack {
   }
 
   // skewed join: events' power-law user activity joined to a per-user
-  // dimension. AQE's skew-join handling splits hot partitions at runtime
-  // (operators.SkewJoin is the explicit salting alternative).
+  // dimension. AQE's skew-join handling splits hot partitions at runtime.
   q("q_skew_join",
     """WITH d AS (SELECT user_id, count(*) AS user_total FROM events GROUP BY user_id)
       |SELECT e.user_id, count(*) AS n_events, min(d.user_total) AS user_total

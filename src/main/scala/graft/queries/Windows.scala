@@ -209,9 +209,8 @@ object Windows extends Pack {
   // GROUPS frames (SQL:2011; reference window_boundaries_state.cpp:333-367,
   // test corpus test/sql/window/test_window_groups.test_slow). The oracle
   // DuckDB (1.0.0) predates GROUPS support ("not implemented yet"), so
-  // the query spells out operators.GroupsFrame's rewrite: a dense_rank()
-  // group index + numeric RANGE frame, identical peer boundaries by
-  // construction.
+  // the query spells out the GROUPS rewrite: a dense_rank() group index
+  // + numeric RANGE frame, identical peer boundaries by construction.
   q("q_window_groups",
     s"""SELECT c_custkey, c_mktsegment, c_nationkey,
        |  (CAST(sum(${fxSql("c_acctbal", 2)}) OVER w AS DOUBLE) / 100.0) AS grp_sum,

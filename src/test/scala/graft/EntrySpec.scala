@@ -67,6 +67,27 @@ class EntrySpec extends AnyFunSuite {
       "spark.graft.configured", "spark.graft.timezone.display"))
   }
 
+  // The dialect layer reads quotes, comments and brackets through one
+  // scanner, graft.functions.SqlText. A private copy of its helpers
+  // elsewhere fails here. (CsvSniffer lexes CSV, not SQL.)
+  test("SQL text scanning helpers are defined only in SqlText") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val helper = ("""\bdef\s+(scan|scanFull|quoteMask|parenMaps|splitArgs|scanArgs|""" +
+      """splitTop|replaceUnquoted|kwAt|isIdent|identChar|topLevelComma)\b""").r
+    val found = files(root)
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "CsvSniffer.scala")
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        helper.findAllMatchIn(text).map(m => f.getName -> m.group(1))
+      }
+    assert(found.nonEmpty)
+    assert(found.forall(_._1 == "SqlText.scala"),
+      s"outside SqlText.scala: ${found.filter(_._1 != "SqlText.scala")}")
+  }
+
   // Oracle-gated queries that keep a hand-built body instead of running
   // their oracle text through the front door, by reason. A query leaves
   // this list when its text returns the same rows with a plan no worse;

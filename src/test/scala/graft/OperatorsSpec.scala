@@ -116,30 +116,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rows(2).getString(0) == "z" && rows(2).isNullAt(1))
   }
 
-  test("salted skew join is row-identical to the plain join and spreads hot keys") {
-    import spark.implicits._
-    // one mega-hot key (900 rows of k=1) + a cold tail
-    // IDENTICAL duplicate rows — the archetypal hot key; a content-only
-    // salt would put all 900 in one bucket
-    val left = ((1 to 900).map(_ => (1L, 0)) ++ (1 to 50).map(i => (i.toLong + 1, i)))
-      .toDF("k", "v")
-    val right = (1L to 51L).map(k => (k, s"dim_$k")).toDF("k", "name")
-    val plain = left.join(right, "k").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
-    val salted = graft.operators.SkewJoin
-      .salted(left, right, "k", salts = 8, hotThreshold = 100)
-    val got = salted.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
-    assert(got == plain)
-    // the duplicate hot rows spread across multiple salt values
-    import org.apache.spark.sql.functions._
-    val spread = left.filter(col("k") === 1)
-      .withColumn("_salt", pmod(hash(
-        struct(left.columns.map(col): _*), monotonically_increasing_id()), lit(8)))
-      .select("_salt").distinct().count()
-    assert(spread > 1, "hot key not spread across salts")
-  }
-
   test("chunked window matches the single-task global window exactly") {
     import spark.implicits._
     val df = (1 to 97).map(i => (i.toLong, (i * 37 % 19).toDouble)).toDF("k", "v")
@@ -243,38 +219,6 @@ class OperatorsSpec extends AnyFunSuite {
     val out = RecursiveCTE.unionAllFixpoint(Seq(1L).toDF("n"),
       f => f.filter(col("n") < 10).select((col("n") + 1).as("n")))
     assert(out.collect().map(_.getLong(0)).sorted.toSeq == (1L to 10L))
-  }
-
-  test("GROUPS frame matches a brute-force peer-group evaluation") {
-    import spark.implicits._
-    // ties in the order key are the whole point of GROUPS mode
-    val rows = Seq(
-      ("a", 1, 10.0), ("a", 1, 20.0), ("a", 3, 30.0), ("a", 7, 40.0),
-      ("a", 7, 50.0), ("a", 9, 60.0), ("b", 2, 1.0), ("b", 2, 2.0),
-      ("b", 5, 3.0))
-    val df = rows.zipWithIndex
-      .map { case ((p, k, x), i) => (i.toLong, p, k, x) }
-      .toDF("id", "p", "k", "x")
-    for ((pre, fol) <- Seq((1, 1), (0, 2), (2, 0))) {
-      val got = graft.operators.GroupsFrame
-        .frame(df, Seq("p"), Seq(col("k")), -pre.toLong, fol.toLong) { w =>
-          Seq(sum("x").over(w).as("s"), count(lit(1)).over(w).as("n"))
-        }
-        .collect().map(r => r.getAs[Long]("id") ->
-          ((r.getAs[Double]("s"), r.getAs[Long]("n")))).toMap
-      // brute force straight from the SQL:2011 definition: the frame spans
-      // all rows whose peer-group index is within [g-pre, g+fol]
-      val expected = rows.zipWithIndex.map { case ((p, k, _), i) =>
-        val part = rows.zipWithIndex.filter(_._1._1 == p)
-        val groups = part.map(_._1._2).distinct.sorted
-        val g = groups.indexOf(k)
-        val inFrame = part.filter { case ((_, k2, _), _) =>
-          val g2 = groups.indexOf(k2); g2 >= g - pre && g2 <= g + fol
-        }
-        i.toLong -> ((inFrame.map(_._1._3).sum, inFrame.size.toLong))
-      }.toMap
-      assert(got == expected, s"GROUPS $pre PRECEDING $fol FOLLOWING")
-    }
   }
 
   test("unbounded carry matches the single-task global window exactly") {
