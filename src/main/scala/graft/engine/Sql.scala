@@ -24,9 +24,21 @@ object Sql {
   private val MacroDrop = """(?is)\s*DROP\s+(?:MACRO|FUNCTION)\b.*""".r
 
   /** Run one statement. Engine-implemented statements execute eagerly;
-    * a query returns its (lazy) result. */
+    * a query returns its (lazy) result.
+    *
+    * A statement nested too deeply for the stack fails with an ordinary
+    * error. Spark's parser reports its own overflow that way
+    * (FAILED_TO_PARSE_TOO_COMPLEX), but once JIT compilation shrinks the
+    * parser's frames the statement parses and overflows in the analyzer,
+    * and the fatal StackOverflowError escapes callers' NonFatal handling.
+    */
   def execute(spark: SparkSession, sql: String): DataFrame =
-    dispatch(spark, SqlText.stripComments(sql))
+    try dispatch(spark, SqlText.stripComments(sql))
+    catch {
+      case _: StackOverflowError =>
+        throw new IllegalArgumentException(
+          "Parser Error: Max expression depth exceeded: the statement is nested too deeply")
+    }
 
   private def dispatch(spark: SparkSession, sql: String): DataFrame = sql match {
     case MacroDdl() =>
