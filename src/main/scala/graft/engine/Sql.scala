@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import graft.functions._
 
 /** The statement front door: every SQL statement enters the engine here,
@@ -31,14 +33,39 @@ object Sql {
     * (FAILED_TO_PARSE_TOO_COMPLEX), but once JIT compilation shrinks the
     * parser's frames the statement parses and overflows in the analyzer,
     * and the fatal StackOverflowError escapes callers' NonFatal handling.
+    * A statement that analyzes is held to the reference's expression
+    * depth limit, since the code generator overflows sooner still.
     */
-  def execute(spark: SparkSession, sql: String): DataFrame =
-    try dispatch(spark, SqlText.stripComments(sql))
-    catch {
-      case _: StackOverflowError =>
-        throw new IllegalArgumentException(
-          "Parser Error: Max expression depth exceeded: the statement is nested too deeply")
+  def execute(spark: SparkSession, sql: String): DataFrame = {
+    val df =
+      try dispatch(spark, SqlText.stripComments(sql))
+      catch {
+        case _: StackOverflowError =>
+          throw new IllegalArgumentException(
+            "Parser Error: Max expression depth exceeded: the statement is nested too deeply")
+      }
+    if (expressionDepth(df.queryExecution.analyzed) > MaxExpressionDepth)
+      throw new IllegalArgumentException(
+        s"Parser Error: Max expression depth limit of $MaxExpressionDepth exceeded")
+    df
+  }
+
+  /** The reference's default `max_expression_depth`. A 2,000-term
+    * `x + x + …` can analyze and then overflow in `doGenCode` when the
+    * query runs, outside this method. */
+  private val MaxExpressionDepth = 1000
+
+  /** Depth of the deepest expression of any operator, level by level so
+    * that the walk itself does not recurse. */
+  private def expressionDepth(plan: LogicalPlan): Int = {
+    var level: Seq[Expression] = plan.flatMap(_.expressions)
+    var depth = 0
+    while (level.nonEmpty && depth <= MaxExpressionDepth) {
+      level = level.flatMap(_.children)
+      depth += 1
     }
+    depth
+  }
 
   private def dispatch(spark: SparkSession, sql: String): DataFrame = sql match {
     case MacroDdl() =>

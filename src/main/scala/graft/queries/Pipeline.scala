@@ -483,9 +483,11 @@ object Pipeline extends Pack {
   }
 
   // multimodal features: REAL JDK codec roundtrip (PNG via ImageIO, WAV
-  // via AudioSystem) over deterministically synthesized payloads — the
-  // oracle computes the decoded stats from the closed-form pixel/sample
-  // pattern, so any decode defect breaks the hash. Narrow map, no shuffle.
+  // via the JDK's WAV writer and reader, resolved once per JVM rather than
+  // by an `AudioSystem` provider scan per row) over deterministically
+  // synthesized payloads — the oracle computes the decoded stats from the
+  // closed-form pixel/sample pattern, so any decode defect breaks the
+  // hash. Narrow map, no shuffle.
   built("q_multimodal_features",
     """WITH m AS (
       |  SELECT doc_id, doc_id % 2 = 0 AS is_img,

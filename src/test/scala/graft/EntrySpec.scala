@@ -88,6 +88,24 @@ class EntrySpec extends AnyFunSuite {
       s"outside SqlText.scala: ${found.filter(_._1 != "SqlText.scala")}")
   }
 
+  // Each AudioSystem/MidiSystem call scans the classpath for sound
+  // providers under a JVM-wide lock; once per row, that was about half of
+  // the multimodal feature query. Multimodal resolves its WAV writer and
+  // reader once, and calls AudioSystem only for a payload that reader
+  // rejects.
+  test("sound providers are looked up only in Multimodal's fallback") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val call = """\b(?:AudioSystem|MidiSystem)\.(\w+)\s*\(""".r
+    val found = files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      call.findAllMatchIn(text).map(m => f.getName -> m.group(1))
+    }
+    assert(found == Seq("Multimodal.scala" -> "getAudioInputStream"), found)
+  }
+
   // Oracle-gated queries that keep a hand-built body instead of running
   // their oracle text through the front door, by reason. A query leaves
   // this list when its text returns the same rows with a plan no worse;

@@ -234,6 +234,93 @@ class PipelineSpec extends AnyFunSuite {
     assert(f.getAs[Double]("mean_val") == mean)
   }
 
+  // the WAV bytes of audio docId as AudioSystem writes them
+  private def systemWav(id: Long): Array[Byte] = {
+    import javax.sound.sampled._
+    val n = Multimodal.wavN(id)
+    val data = (0 until n).flatMap { i =>
+      val s = Multimodal.pcm(id, i); Seq((s & 0xff).toByte, ((s >> 8) & 0xff).toByte)
+    }.toArray
+    val fmt = new AudioFormat(Multimodal.WavRate.toFloat, 16, 1, true, false)
+    val bos = new java.io.ByteArrayOutputStream()
+    AudioSystem.write(new AudioInputStream(new java.io.ByteArrayInputStream(data), fmt, n.toLong),
+      AudioFileFormat.Type.WAVE, bos)
+    bos.toByteArray
+  }
+
+  // (n, mean, std) of the closed-form values, summed as the decoder sums
+  private def closedStats(vals: Seq[Int]): (Long, Double, Double) = {
+    val n = vals.size.toLong
+    val mean = vals.map(_.toLong).sum.toDouble / n
+    (n, mean, math.sqrt(vals.map(v => v.toLong * v).sum.toDouble / n - mean * mean))
+  }
+
+  test("multimodal: the engine's WAV writer writes AudioSystem's bytes") {
+    for (id <- Seq(1L, 7L, 99L, 399L, 1234L))
+      assert(Multimodal.synthWav(id).sameElements(systemWav(id)), id)
+  }
+
+  test("multimodal: the resolved WAV reader decodes AudioSystem's WAV") {
+    import javax.sound.sampled.AudioSystem
+    for (id <- Seq(3L, 250L)) {
+      val wav = systemWav(id)
+      val ours = Multimodal.wavReader.getAudioInputStream(new java.io.ByteArrayInputStream(wav))
+      val theirs = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(wav))
+      assert(ours.getFormat.matches(theirs.getFormat), ours.getFormat)
+      assert(ours.getFormat.getSampleRate == Multimodal.WavRate)
+      assert(ours.readAllBytes().sameElements(theirs.readAllBytes()), id)
+    }
+  }
+
+  test("multimodal: a WAV the resolved reader rejects decodes through AudioSystem") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    // the same PCM16 samples under a WAVE_FORMAT_EXTENSIBLE header
+    val id = 11L
+    val n = Multimodal.wavN(id)
+    val b = ByteBuffer.allocate(68 + 2 * n).order(ByteOrder.LITTLE_ENDIAN)
+    b.put("RIFF".getBytes).putInt(60 + 2 * n).put("WAVEfmt ".getBytes).putInt(40)
+    b.putShort(0xfffe.toShort).putShort(1.toShort).putInt(Multimodal.WavRate)
+    b.putInt(2 * Multimodal.WavRate).putShort(2.toShort).putShort(16.toShort)
+    b.putShort(22.toShort).putShort(16.toShort).putInt(4)
+    // KSDATAFORMAT_SUBTYPE_PCM
+    b.putInt(1).putShort(0.toShort).putShort(0x10.toShort)
+    b.put(Array(0x80, 0x00, 0x00, 0xaa, 0x00, 0x38, 0x9b, 0x71).map(_.toByte))
+    b.put("data".getBytes).putInt(2 * n)
+    (0 until n).foreach(i => b.putShort(Multimodal.pcm(id, i).toShort))
+    val payload = b.array()
+    intercept[javax.sound.sampled.UnsupportedAudioFileException](
+      Multimodal.wavReader.getAudioInputStream(new java.io.ByteArrayInputStream(payload)))
+    val f = Multimodal.decodeWav(payload)
+    val (cn, mean, std) = closedStats((0 until n).map(i => Multimodal.pcm(id, i)))
+    assert(f.sample_rate.contains(Multimodal.WavRate))
+    assert(f.n_units == cn && f.mean_val == mean && f.std_val == std)
+  }
+
+  test("multimodal: every decoded row matches its closed form across partitions") {
+    val docs = spark.range(0, 240).toDF("doc_id").repartition(4)
+    val media = Multimodal.fromDocuments(docs)
+    assert(media.rdd.getNumPartitions >= 4)
+    val rows = Multimodal.extractFeatures(media).collect()
+    assert(rows.map(_.getAs[Long]("media_id")).sorted.toSeq == (0L until 240L))
+    for (r <- rows) {
+      val id = r.getAs[Long]("media_id")
+      val (n, mean, std) =
+        if (id % 2 == 0) {
+          val (w, h) = (Multimodal.imgW(id), Multimodal.imgH(id))
+          assert(r.getAs[String]("modality") == "image", id)
+          assert(r.getAs[Int]("width") == w && r.getAs[Int]("height") == h, id)
+          closedStats(for (y <- 0 until h; x <- 0 until w) yield Multimodal.pix(id, x, y))
+        } else {
+          assert(r.getAs[String]("modality") == "audio", id)
+          assert(r.getAs[Int]("sample_rate") == Multimodal.WavRate, id)
+          closedStats((0 until Multimodal.wavN(id)).map(i => Multimodal.pcm(id, i)))
+        }
+      assert(r.getAs[Long]("n_units") == n, id)
+      assert(r.getAs[Double]("mean_val") == mean, id)
+      assert(r.getAs[Double]("std_val") == std, id)
+    }
+  }
+
   test("multimodal: real Graphics2D resize fits the box, dims from re-decode") {
     import spark.implicits._
     val docs = Seq((12L, "x", "en", "src", 1L), (2L, "y", "en", "src", 1L))

@@ -78,23 +78,11 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
-  // Spark logs each missing path with a stack trace before it fails the
-  // read; that expected warning is held back here so a real one stays
-  // visible in the suite's tail
-  private def withoutSinkWarnings[A](body: => A): A = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.config.Configurator
-    val sink = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
-    val saved = LogManager.getLogger(sink).getLevel
-    Configurator.setLevel(sink, Level.ERROR)
-    try body finally Configurator.setLevel(sink, saved)
-  }
-
   test("a missing table fails warm and registerAll with its own error") {
     val dir = copyFixtures(except = Set("events"))
     val d = dir.toString
     val path = s"$d/events.parquet"
-    try withoutSinkWarnings {
+    try {
       val load = intercept[AnalysisException](Tables.registerAll(spark, d))
       assert(load.getMessage.contains(path), load.getMessage)
       assert(helperThreads.isEmpty, helperThreads)
