@@ -27,9 +27,9 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField, Struc
   *    rewrite. On a v2 lakehouse catalog these become metadata-only too;
   *    the rebuild is the v1 fallback.
   *  - constraint-registry actions (SET/DROP NOT NULL, ADD PRIMARY KEY)
-  *    verify existing contents with one aggregate probe, then update
-  *    the session registry graft.functions.Constraints reads at DML
-  *    time.
+  *    verify existing contents with Constraints.verifyExisting (one
+  *    aggregate), then update the session registry
+  *    graft.functions.Constraints reads at DML time.
   */
 object Alter {
 
@@ -532,11 +532,7 @@ object Alter {
   private def setNotNull(spark: SparkSession, table: String, name: String): DataFrame = {
     requireCol(spark, table, name): Unit
     rejectGenerated(spark, table, name, "add NOT NULL to")
-    // existing contents must satisfy the new constraint (one narrow probe)
-    if (Dml.gsql(spark,
-        s"SELECT 1 FROM $table WHERE `$name` IS NULL LIMIT 1").collect().nonEmpty)
-      throw new IllegalArgumentException(
-        s"Constraint Error: NOT NULL constraint failed: ${Dml.unq(table.split('.').last)}.$name")
+    Constraints.verifyExisting(spark, table, Seq(name), Nil)
     val tc = Constraints.of(spark, table).getOrElse(
       Constraints.TableConstraints(
         Dml.unq(table.split('.').last).toLowerCase, Nil, Nil, Nil))
@@ -572,24 +568,15 @@ object Alter {
         case _ => ()
       }
     }
+    // existing contents must be non-NULL and unique on the key; the
+    // reference reports duplicates before a second primary key
+    Constraints.verifyExisting(spark, table, pkCols, pkCols)
     val tc = Constraints.of(spark, table).getOrElse(
       Constraints.TableConstraints(
         Dml.unq(table.split('.').last).toLowerCase, Nil, Nil, Nil))
     if (tc.uniques.exists(_.isPk))
       throw new IllegalArgumentException(
         "Catalog Error: table already has a primary key")
-    // existing contents must be unique and non-NULL on the key
-    val colSql = pkCols.map(c => s"`$c`").mkString(", ")
-    val anyNull = pkCols.map(c => s"`$c` IS NULL").mkString(" OR ")
-    if (Dml.gsql(spark,
-        s"SELECT 1 FROM $table WHERE $anyNull LIMIT 1").collect().nonEmpty)
-      throw new IllegalArgumentException(
-        s"Constraint Error: NOT NULL constraint failed: ${Dml.unq(table.split('.').last)}")
-    if (Dml.gsql(spark,
-        s"""SELECT $colSql FROM $table GROUP BY $colSql
-           |HAVING count(*) > 1 LIMIT 1""".stripMargin).collect().nonEmpty)
-      throw new IllegalArgumentException(
-        "Constraint Error: PRIMARY KEY or UNIQUE constraint violation: duplicate key")
     Constraints.registerAt(spark, table, tc.copy(
       notNull = (tc.notNull ++ pkCols.filterNot(c =>
         tc.notNull.exists(_.equalsIgnoreCase(c)))),

@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import scala.util.control.NonFatal
 
 /** CREATE TABLE constraint capture + DML-time enforcement.
   *
@@ -15,23 +17,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark has no enforced constraints, so the engine keeps the declared
   * constraint set in a session registry (the DDL executes with the
   * constraint syntax stripped) and the DML layer (graft.functions.Dml)
-  * verifies every batch of new rows — one declarative aggregate per
-  * constraint — before swapping contents in. At 100 TB the NOT
-  * NULL/CHECK probes are narrow scans of the new rows only; the
-  * PK/UNIQUE probe is one hash-shuffle (groupBy count) of the key
-  * columns, the same cost class as the reference's ART-index build. A
-  * real warehouse deployment would keep a persistent key index; the
-  * declarative probe is the engine-native equivalent with identical
-  * accept/reject semantics.
+  * verifies every relation of new rows before it reaches the table, with
+  * four probes, each written once:
+  *  1. one aggregate over the new rows answers every NOT NULL, CHECK and
+  *     in-relation UNIQUE constraint together (a narrow scan plus one
+  *     hash shuffle of the keys, the cost class of the reference's ART
+  *     index build);
+  *  2. one anti-join per FOREIGN KEY finds an orphan, from the child side
+  *     or the parent side;
+  *  3. a GROUP BY names a repeated key, once probe 1 has found one;
+  *  4. on append, a join finds a new key an existing row already holds.
+  * Errors win in declared order: NOT NULL, CHECK, FOREIGN KEY, UNIQUE.
   *
   * Error surfaces mirrored exactly:
   *  - "NOT NULL constraint failed: table.col" (data_table.cpp:594)
   *  - "CHECK constraint failed on table t with expression expr"
   *    (data_table.cpp:632)
-  *  - append: "PRIMARY KEY or UNIQUE constraint violation: duplicate
-  *    key \"col: v\"" (art.cpp:570)
-  *  - rewrite (UPDATE/upsert DO UPDATE): "Duplicate key \"col: v\"
-  *    violates primary key|unique constraint." (art.cpp:839)
+  *  - a key a row already in the table holds (on a rewrite, an old row
+  *    the statement left unchanged): "Duplicate key \"col: v\" violates
+  *    primary key|unique constraint." (art.cpp:839)
+  *  - a key repeated among the statement's own new rows: "PRIMARY KEY or
+  *    UNIQUE constraint violation: duplicate key \"col: v\"" (art.cpp:570)
+  *  - existing contents at ADD PRIMARY KEY / CREATE UNIQUE INDEX: "Data
+  *    contains duplicates on indexed column(s)" (art_index.cpp:106)
   */
 object Constraints {
 
@@ -87,7 +95,7 @@ object Constraints {
 
   private def currentDb(spark: SparkSession): String =
     try spark.catalog.currentDatabase.toLowerCase
-    catch { case _: Throwable => "default" }
+    catch { case NonFatal(_) => "default" }
 
   /** Registry names are db-qualified: a CREATE/DROP of `otherdb.t` must
     * not touch the constraints of `default.t` (the multi-database
@@ -220,14 +228,7 @@ object Constraints {
         val idx = Dml.unq(m.group(1)).toLowerCase
         val table = m.group(2)
         val cols = SqlText.splitTop(m.group(3)).map(Dml.unq)
-        // existing contents must already be unique (art_index.cpp:106)
-        val colSql = cols.map(Dml.q).mkString(", ")
-        val nonNull = cols.map(c => s"${Dml.q(c)} IS NOT NULL").mkString(" AND ")
-        if (firstRow(spark,
-            s"""SELECT $colSql FROM $table WHERE $nonNull
-               |GROUP BY $colSql HAVING count(*) > 1 LIMIT 1""".stripMargin).nonEmpty)
-          throw new IllegalArgumentException(
-            "Constraint Error: Data contains duplicates on indexed column(s)")
+        verifyExisting(spark, table, Nil, cols)
         val tc = of(spark, table).getOrElse(
           TableConstraints(bare(table), Nil, Nil, Nil))
         registerAt(spark, table, tc.copy(
@@ -382,7 +383,7 @@ object Constraints {
         try Some(Dml.gsql(spark,
           s"SELECT ($exprTxt) AS ${G_PROBE} FROM ($withGens)")
           .schema.head.dataType.sql)
-        catch { case _: Throwable => None }
+        catch { case NonFatal(_) => None }
       }
       // two waves: expressions over physical columns, then expressions
       // that additionally reference wave-one generated columns
@@ -401,7 +402,7 @@ object Constraints {
         val err =
           try { Dml.gsql(spark,
             s"SELECT (${g._3}) AS ${G_PROBE} FROM (SELECT $baseProbe)").collect(); "" }
-          catch { case e: Throwable => Option(e.getMessage).getOrElse("") }
+          catch { case NonFatal(e) => Option(e.getMessage).getOrElse("") }
         if (err.contains("UNRESOLVED_ROUTINE") || err.contains("Undefined function"))
           throw new IllegalArgumentException(
             s"Catalog Error: Scalar Function referenced in generated column does not exist: ${err.take(160)}")
@@ -422,7 +423,7 @@ object Constraints {
       val bound = stripSelfQualifier(ck, table)
       try spark.sql(s"SELECT count(*) FROM (SELECT $probe) WHERE coalesce(($bound), true)").collect()
       catch {
-        case e: Throwable => throw new IllegalArgumentException(
+        case NonFatal(e) => throw new IllegalArgumentException(
           s"Binder Error: invalid CHECK constraint expression ($ck): ${e.getMessage}")
       }
     }
@@ -570,7 +571,7 @@ object Constraints {
       // under ANSI the probe cast itself throws, which maps the same way
       val bad =
         try d.where(raw.isNotNull && casted.isNull).limit(1).collect().nonEmpty
-        catch { case _: Throwable => true }
+        catch { case NonFatal(_) => true }
       if (bad)
         throw new IllegalArgumentException(
           s"""Constraint Error: Incorrect value for generated column "${g.name}" of type ${g.tpe}""")
@@ -683,68 +684,124 @@ object Constraints {
   }
 
   // ------------------------------------------------------------------
-  // enforcement
+  // enforcement: four probes, each written once
   // ------------------------------------------------------------------
 
-  private def firstRow(spark: SparkSession, sql: String): Option[org.apache.spark.sql.Row] =
-    Dml.gsql(spark, sql).collect().headOption
+  private val Missing = "does not exist in the referenced table"
+  private val Referenced = "is still referenced by a foreign key in a different table"
 
-  private def keyMsg(cols: Seq[String], row: org.apache.spark.sql.Row): String =
+  private def keyMsg(cols: Seq[String], row: Row): String =
     cols.zipWithIndex.map { case (c, i) =>
       val v = row.get(i)
       s"$c: ${if (v == null) "NULL" else v.toString}"
     }.mkString(", ")
 
-  /** NOT NULL + CHECK over a relation of new rows (view or subquery
-    * text usable in FROM position). */
-  private def verifyRowChecks(spark: SparkSession, tc: TableConstraints,
-      rel: String): Unit = {
-    for (c <- tc.notNull) {
-      if (firstRow(spark,
-          s"SELECT 1 FROM $rel WHERE ${Dml.q(c)} IS NULL LIMIT 1").nonEmpty)
-        throw new IllegalArgumentException(
-          s"Constraint Error: NOT NULL constraint failed: ${tc.table}.$c")
-    }
-    for (ck <- tc.checks) {
-      if (firstRow(spark,
-          s"SELECT 1 FROM $rel WHERE NOT coalesce(($ck), true) LIMIT 1").nonEmpty)
-        throw new IllegalArgumentException(
-          s"Constraint Error: CHECK constraint failed on table ${tc.table} with expression ($ck)")
-    }
-  }
-
   private def quotedName(resolved: String): String =
     resolved.split('.').map(p => s"`$p`").mkString(".")
 
-  /** FOREIGN KEY probes for candidate child rows in relation `rel`
-    * (test/sql/constraints/foreignkey): each non-NULL key must exist in
-    * the referenced table. One anti-join aggregate per FK — at scale a
+  private def keyCols(cols: Seq[String], alias: String = ""): String =
+    cols.map(c => alias + Dml.q(c)).mkString(", ")
+
+  private def keyNotNull(cols: Seq[String], alias: String = ""): String =
+    cols.map(c => s"$alias${Dml.q(c)} IS NOT NULL").mkString(" AND ")
+
+  private def keyEq(cols: Seq[String], a: String, bCols: Seq[String], b: String): String =
+    cols.zip(bCols).map { case (c, bc) => s"$a.${Dml.q(c)} = $b.${Dml.q(bc)}" }
+      .mkString(" AND ")
+
+  /** Probe 1: one aggregate over `rel` answers every NOT NULL and CHECK
+    * constraint of `tc`, and for each of `uniques` whether a non-NULL key
+    * repeats inside `rel` (non-NULL keys against distinct keys: a key
+    * with a NULL part never clashes). Throws the first NOT NULL failure,
+    * then the first CHECK failure, in declared order; returns the sets
+    * whose keys repeat. */
+  private def rowViolations(spark: SparkSession, tc: TableConstraints,
+      rel: String, uniques: Seq[UniqueSet]): Seq[UniqueSet] = {
+    val nulls = tc.notNull.map(c => s"count_if(${Dml.q(c)} IS NULL)")
+    val checks = tc.checks.map(ck => s"count_if(NOT coalesce(($ck), true))")
+    val repeats = uniques.map(u =>
+      s"count_if(${keyNotNull(u.cols)}) - count(DISTINCT ${keyCols(u.cols)})")
+    val counts = nulls ++ checks ++ repeats
+    if (counts.isEmpty) return Nil
+    val r = Dml.gsql(spark, s"SELECT ${counts.mkString(", ")} FROM $rel").head()
+    def hit(i: Int) = r.getLong(i) > 0
+    tc.notNull.indices.find(hit).foreach(i => throw new IllegalArgumentException(
+      s"Constraint Error: NOT NULL constraint failed: ${tc.table}.${tc.notNull(i)}"))
+    tc.checks.indices.find(i => hit(nulls.length + i)).foreach(i =>
+      throw new IllegalArgumentException(
+        s"Constraint Error: CHECK constraint failed on table ${tc.table} with expression (${tc.checks(i)})"))
+    uniques.indices.filter(i => hit(nulls.length + checks.length + i)).map(uniques)
+  }
+
+  /** Probe 2: a row of `childRel` whose non-NULL `fk.cols` key no row of
+    * `parentRel` holds in `fk.parentCols` (test/sql/constraints/
+    * foreignkey) fails, worded by `why`: `Missing` from the child side,
+    * `Referenced` from the parent side. One anti-join — at scale a
     * broadcast of the (small) parent key set or one hash shuffle, the
-    * same cost class as the reference's index probe. `selfExtra` adds
-    * the batch itself to a self-referencing FK's parent relation (an
-    * appended row may reference a key arriving in the same batch). */
-  private def verifyForeignKeys(spark: SparkSession, tc: TableConstraints,
-      rel: String, table: String): Unit = {
-    for (fk <- tc.foreignKeys) {
-      val pcolSql = fk.parentCols.map(Dml.q).mkString(", ")
-      // self-referencing FKs check the CURRENT contents only — the
-      // reference's eager checking rejects a row referencing a key
-      // arriving in the same statement (test_fk_self_referencing.test)
-      val parentRel = s"(SELECT $pcolSql FROM ${quotedName(fk.parentTable)})"
-      val nonNull = fk.cols.map(c => s"${Dml.G}b.${Dml.q(c)} IS NOT NULL").mkString(" AND ")
-      val eq = fk.cols.zip(fk.parentCols).map { case (c, pc) =>
-        s"${Dml.G}p.${Dml.q(pc)} = ${Dml.G}b.${Dml.q(c)}"
-      }.mkString(" AND ")
-      firstRow(spark,
-        s"""SELECT ${fk.cols.map(c => s"${Dml.G}b.${Dml.q(c)}").mkString(", ")}
-           |FROM $rel AS ${Dml.G}b WHERE $nonNull AND NOT EXISTS (
-           |  SELECT 1 FROM $parentRel AS ${Dml.G}p WHERE $eq) LIMIT 1""".stripMargin)
-        .foreach { r =>
-          throw new IllegalArgumentException(
-            "Constraint Error: Violates foreign key constraint because key " +
-              s""""${keyMsg(fk.parentCols, r)}" does not exist in the referenced table""")
-        }
+    * cost class of the reference's index probe. */
+  private def rejectOrphans(spark: SparkSession, childRel: String,
+      parentRel: String, fk: ForeignKey, why: String): Unit = {
+    val (b, p) = (Dml.G + "b", Dml.G + "p")
+    Dml.gsql(spark,
+      s"""SELECT ${keyCols(fk.cols, b + ".")} FROM $childRel AS $b
+         |WHERE ${keyNotNull(fk.cols, b + ".")} AND NOT EXISTS (
+         |  SELECT 1 FROM $parentRel AS $p WHERE ${keyEq(fk.parentCols, p, fk.cols, b)})
+         |LIMIT 1""".stripMargin).collect().headOption.foreach { r =>
+      throw new IllegalArgumentException("Constraint Error: Violates foreign key " +
+        s"""constraint because key "${keyMsg(fk.parentCols, r)}" $why""")
     }
+  }
+
+  /** A key clash, worded by where it happens (art.cpp): a key a row
+    * already in the table holds, or a key repeated among the statement's
+    * own new rows. */
+  private def keyClash(u: UniqueSet, key: String, existing: Boolean): Nothing =
+    throw new IllegalArgumentException(
+      if (existing) s"""Constraint Error: Duplicate key "$key" violates """ +
+        s"${if (u.isPk) "primary key" else "unique"} constraint."
+      else "Constraint Error: PRIMARY KEY or UNIQUE constraint violation: " +
+        s"""duplicate key "$key"""")
+
+  /** Probe 3: name a non-NULL key of `u` repeated in `rel`; runs once
+    * probe 1 has found one. `held` (rows that were already in the table)
+    * decides the wording, and a key one of them holds is named first. */
+  private def rejectRepeatedKey(spark: SparkSession, rel: String, u: UniqueSet,
+      held: Option[String]): Nothing = {
+    val dups = s"""SELECT ${keyCols(u.cols)} FROM $rel WHERE ${keyNotNull(u.cols)}
+                  |GROUP BY ${keyCols(u.cols)} HAVING count(*) > 1""".stripMargin
+    val (d, h) = (Dml.G + "d", Dml.G + "h")
+    val r = Dml.gsql(spark, held match {
+      case None => s"SELECT *, false FROM ($dups) LIMIT 1"
+      case Some(rows) =>
+        s"""SELECT $d.*, $h.${Dml.q(u.cols.head)} IS NOT NULL AS ${Dml.G}held
+           |FROM ($dups) AS $d LEFT JOIN $rows AS $h ON ${keyEq(u.cols, d, u.cols, h)}
+           |ORDER BY ${Dml.G}held DESC LIMIT 1""".stripMargin
+    }).head()
+    keyClash(u, keyMsg(u.cols, r), existing = r.getBoolean(u.cols.length))
+  }
+
+  /** Probe 4 (append): a new row of `batch` whose key of `u` a row of
+    * `table` already holds. */
+  private def rejectExistingKey(spark: SparkSession, batch: String, table: String,
+      u: UniqueSet): Unit = {
+    val (b, t) = (Dml.G + "b", Dml.G + "t")
+    Dml.gsql(spark,
+      s"""SELECT ${keyCols(u.cols, b + ".")} FROM $batch AS $b
+         |JOIN $table AS $t ON ${keyEq(u.cols, b, u.cols, t)} LIMIT 1""".stripMargin)
+      .collect().headOption.foreach(r => keyClash(u, keyMsg(u.cols, r), existing = true))
+  }
+
+  /** Existing contents of `table` must satisfy constraints about to be
+    * declared (ALTER TABLE … SET NOT NULL / ADD PRIMARY KEY, CREATE UNIQUE
+    * INDEX): no NULL in `notNull`, no repeated non-NULL `key`
+    * (art_index.cpp:106). */
+  def verifyExisting(spark: SparkSession, table: String, notNull: Seq[String],
+      key: Seq[String]): Unit = {
+    val tc = TableConstraints(Dml.unq(table.split('.').last), notNull, Nil, Nil)
+    if (rowViolations(spark, tc, table,
+        if (key.isEmpty) Nil else Seq(UniqueSet(key, isPk = false))).nonEmpty)
+      throw new IllegalArgumentException(
+        "Constraint Error: Data contains duplicates on indexed column(s)")
   }
 
   /** Parent-side FK enforcement: before `table`'s contents are replaced
@@ -757,23 +814,8 @@ object Constraints {
     if (kids.isEmpty) return
     val vn = Dml.G + "fk_parent_verify"
     df.createOrReplaceTempView(vn)
-    for ((childName, ctc, fk) <- kids) {
-      val nonNull = fk.cols.map(c => s"${Dml.G}b.${Dml.q(c)} IS NOT NULL").mkString(" AND ")
-      val eq = fk.cols.zip(fk.parentCols).map { case (c, pc) =>
-        s"${Dml.G}p.${Dml.q(pc)} = ${Dml.G}b.${Dml.q(c)}"
-      }.mkString(" AND ")
-      firstRow(spark,
-        s"""SELECT ${fk.cols.map(c => s"${Dml.G}b.${Dml.q(c)}").mkString(", ")}
-           |FROM ${quotedName(childName)} AS ${Dml.G}b
-           |WHERE $nonNull AND NOT EXISTS (
-           |  SELECT 1 FROM $vn AS ${Dml.G}p WHERE $eq) LIMIT 1""".stripMargin)
-        .foreach { r =>
-          val _ = ctc
-          throw new IllegalArgumentException(
-            "Constraint Error: Violates foreign key constraint because key " +
-              s""""${keyMsg(fk.parentCols, r)}" is still referenced by a foreign key in a different table""")
-        }
-    }
+    for ((childName, _, fk) <- kids)
+      rejectOrphans(spark, quotedName(childName), vn, fk, Referenced)
   }
 
   /** DROP TABLE guard: a parent with registered children cannot drop
@@ -788,90 +830,61 @@ object Constraints {
   }
 
   /** Verify a batch of to-be-appended rows (full target width) in a
-    * view named `batch`: NOT NULL + CHECK on the batch, PK/UNIQUE
-    * within the batch and against the existing table
-    * (data_table.cpp VerifyAppendConstraints). `skipSets` excludes the
-    * unique sets an ON CONFLICT clause already resolved. */
+    * view named `batch` before any is appended (data_table.cpp
+    * VerifyAppendConstraints): NOT NULL, CHECK, FOREIGN KEY, then keys —
+    * clashes with `table`'s rows before repeats inside the batch.
+    * `skipSets` excludes the unique sets an ON CONFLICT clause already
+    * resolved. A self-referencing FK checks the current contents only:
+    * the reference's eager check rejects a row referencing a key that
+    * arrives in the same statement (test_fk_self_referencing.test). */
   def verifyAppend(spark: SparkSession, tc: TableConstraints, batch: String,
       table: String, skipSets: Set[Seq[String]] = Set.empty): Unit = {
-    verifyRowChecks(spark, tc, batch)
-    verifyForeignKeys(spark, tc, batch, table)
-    for (u <- tc.uniques if !skipSets.contains(u.cols.map(_.toLowerCase))) {
-      val colSql = u.cols.map(Dml.q).mkString(", ")
-      val nonNull = u.cols.map(c => s"${Dml.q(c)} IS NOT NULL").mkString(" AND ")
-      val inner = firstRow(spark,
-        s"""SELECT $colSql FROM $batch WHERE $nonNull
-           |GROUP BY $colSql HAVING count(*) > 1 LIMIT 1""".stripMargin)
-      val dup = inner.orElse {
-        val eq = u.cols.map(c =>
-          s"${Dml.G}b.${Dml.q(c)} = ${Dml.G}t.${Dml.q(c)}").mkString(" AND ")
-        firstRow(spark,
-          s"""SELECT ${u.cols.map(c => s"${Dml.G}b.${Dml.q(c)}").mkString(", ")}
-             |FROM $batch AS ${Dml.G}b JOIN $table AS ${Dml.G}t ON $eq LIMIT 1""".stripMargin)
-      }
-      dup.foreach { r =>
-        throw new IllegalArgumentException(
-          "Constraint Error: PRIMARY KEY or UNIQUE constraint violation: " +
-            s"""duplicate key "${keyMsg(u.cols, r)}"""")
-      }
-    }
+    val uniques = tc.uniques.filterNot(u => skipSets.contains(u.cols.map(_.toLowerCase)))
+    val repeated = rowViolations(spark, tc, batch, uniques)
+    for (fk <- tc.foreignKeys)
+      rejectOrphans(spark, batch, quotedName(fk.parentTable), fk, Missing)
+    uniques.foreach(rejectExistingKey(spark, batch, table, _))
+    repeated.headOption.foreach(rejectRepeatedKey(spark, batch, _, held = None))
   }
 
   /** Verify the FULL new contents of a rewritten table (UPDATE / MERGE /
-    * upsert DO UPDATE) before the swap. */
+    * upsert DO UPDATE / TRUNCATE) before the swap; `selfTable` (default
+    * `tc.table`) still holds the old contents. A rewritten child
+    * re-verifies its keys; a self-referencing FK checks against the new
+    * contents. */
   def verifyContents(spark: SparkSession, tc: TableConstraints,
       df: DataFrame, selfTable: String = ""): Unit = {
     val vn = Dml.G + "verify_" + tc.table
     df.createOrReplaceTempView(vn)
-    verifyRowChecks(spark, tc, vn)
-    // a rewritten child re-verifies its keys; a self-referencing FK
-    // checks against the NEW contents (vn is the full table).
-    // Self-reference compares db-QUALIFIED names: a child whose FK
-    // points at a same-named table in a different database is NOT
-    // self-referencing (r13 ADVICE)
-    val selfResolved =
-      resolvedName(spark, if (selfTable.nonEmpty) selfTable else tc.table)
-    if (tc.foreignKeys.nonEmpty) {
-      for (fk <- tc.foreignKeys) {
-        val selfRef = fk.parentTable == selfResolved
-        val nonNull = fk.cols.map(c => s"${Dml.G}b.${Dml.q(c)} IS NOT NULL").mkString(" AND ")
-        val eq = fk.cols.zip(fk.parentCols).map { case (c, pc) =>
-          s"${Dml.G}p.${Dml.q(pc)} = ${Dml.G}b.${Dml.q(c)}"
-        }.mkString(" AND ")
-        def probe(childRel: String, parentRel: String, msg: String): Unit =
-          firstRow(spark,
-            s"""SELECT ${fk.cols.map(c => s"${Dml.G}b.${Dml.q(c)}").mkString(", ")}
-               |FROM $childRel AS ${Dml.G}b WHERE $nonNull AND NOT EXISTS (
-               |  SELECT 1 FROM $parentRel AS ${Dml.G}p WHERE $eq) LIMIT 1""".stripMargin)
-            .foreach { r =>
-              throw new IllegalArgumentException(
-                "Constraint Error: Violates foreign key constraint because key " +
-                  s""""${keyMsg(fk.parentCols, r)}" $msg""")
-            }
-        if (selfRef) {
-          // new rows must reference surviving keys…
-          probe(vn, vn, "does not exist in the referenced table")
-          // …and the OLD rows' keys must survive too: the reference's
-          // eager delete checks every removed key against the live
-          // index, which still holds the other rows of the same
-          // statement (TRUNCATE of a self-referencing table rejects)
-          probe(quotedName(fk.parentTable), vn,
-            "is still referenced by a foreign key in a different table")
-        } else probe(vn, quotedName(fk.parentTable),
-          "does not exist in the referenced table")
-      }
+    val old = if (selfTable.nonEmpty) selfTable else tc.table
+    val repeated = rowViolations(spark, tc, vn, tc.uniques)
+    // self-reference compares db-qualified names: an FK to a same-named
+    // table in a different database is not self-referencing
+    val selfResolved = resolvedName(spark, old)
+    for (fk <- tc.foreignKeys) {
+      if (fk.parentTable == selfResolved) {
+        // new rows must reference surviving keys, and the old rows' keys
+        // must survive too: the reference's eager delete checks every
+        // removed key against the live index, which still holds the
+        // other rows of the statement (TRUNCATE of a self-referencing
+        // table rejects)
+        rejectOrphans(spark, vn, vn, fk, Missing)
+        rejectOrphans(spark, quotedName(fk.parentTable), vn, fk, Referenced)
+      } else rejectOrphans(spark, vn, quotedName(fk.parentTable), fk, Missing)
     }
-    for (u <- tc.uniques) {
-      val colSql = u.cols.map(Dml.q).mkString(", ")
-      val nonNull = u.cols.map(c => s"${Dml.q(c)} IS NOT NULL").mkString(" AND ")
-      firstRow(spark,
-        s"""SELECT $colSql FROM $vn WHERE $nonNull
-           |GROUP BY $colSql HAVING count(*) > 1 LIMIT 1""".stripMargin)
-        .foreach { r =>
-          val kind = if (u.isPk) "primary key" else "unique"
-          throw new IllegalArgumentException(
-            s"""Constraint Error: Duplicate key "${keyMsg(u.cols, r)}" violates $kind constraint.""")
-        }
+    repeated.headOption.foreach { u =>
+      // rows already in the table: old rows the statement left unchanged
+      // (set operations cannot compare MAP values)
+      def hasMap(t: DataType): Boolean = t match {
+        case _: MapType => true
+        case a: ArrayType => hasMap(a.elementType)
+        case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+        case _ => false
+      }
+      val cols = df.schema.fields.filterNot(f => hasMap(f.dataType))
+        .map(f => Dml.q(f.name)).mkString(", ")
+      val held = s"(SELECT $cols FROM $old INTERSECT SELECT $cols FROM $vn)"
+      rejectRepeatedKey(spark, vn, u, Some(held))
     }
   }
 }

@@ -172,11 +172,13 @@ class AlterSpec extends AnyFunSuite {
     fresh("alt_pk", "i INT, j INT")
     exec("INSERT INTO alt_pk VALUES (1, 1), (2, 2)")
     exec("ALTER TABLE alt_pk ADD PRIMARY KEY (i)")
-    assert(err("INSERT INTO alt_pk VALUES (1, 9)").contains("constraint violation"))
+    assert(err("INSERT INTO alt_pk VALUES (1, 9)")
+      .contains("Duplicate key \"i: 1\" violates primary key constraint."))
     assert(err("ALTER TABLE alt_pk ADD PRIMARY KEY (j)").contains("already has a primary key"))
     fresh("alt_pk2", "i INT")
     exec("INSERT INTO alt_pk2 VALUES (1), (1)")
-    assert(err("ALTER TABLE alt_pk2 ADD PRIMARY KEY (i)").contains("constraint violation"))
+    assert(err("ALTER TABLE alt_pk2 ADD PRIMARY KEY (i)")
+      .contains("Data contains duplicates on indexed column(s)"))
     fresh("alt_pk3", "i INT")
     exec("INSERT INTO alt_pk3 VALUES (NULL)")
     assert(err("ALTER TABLE alt_pk3 ADD PRIMARY KEY (i)").contains("NOT NULL"))
@@ -193,7 +195,8 @@ class AlterSpec extends AnyFunSuite {
     assert(rows("SELECT i FROM alt_rt2") == Seq(Seq(1)))
     assert(Constraints.of(spark, "alt_rt").isEmpty)
     assert(Constraints.of(spark, "alt_rt2").get.uniques.head.isPk)
-    assert(err("INSERT INTO alt_rt2 VALUES (1)").contains("constraint violation"))
+    assert(err("INSERT INTO alt_rt2 VALUES (1)")
+      .contains("Duplicate key \"i: 1\" violates primary key constraint."))
     sql("DROP TABLE IF EXISTS alt_rt2")
   }
 

@@ -82,7 +82,7 @@ class CatalogOpsSpec extends AnyFunSuite {
       // the import re-registered the constraints: duplicate PK rejects
       val e = intercept[Exception](
         graft.functions.Dml.execute(spark, "INSERT INTO t_exp VALUES (1, 'dup')"))
-      assert(e.getMessage.contains("duplicate key"))
+      assert(e.getMessage.contains("Duplicate key \"i: 1\" violates primary key constraint."))
     } finally {
       spark.catalog.setCurrentDatabase("default")
       cleanup()

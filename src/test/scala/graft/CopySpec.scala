@@ -56,7 +56,7 @@ class CopySpec extends AnyFunSuite {
       s"COPY (SELECT 1 AS i, 'dup' AS s) TO '$dir/dup.csv'")
     val e = intercept[Exception](
       Copy.execute(spark, s"COPY cp_in FROM '$dir/dup.csv'"))
-    assert(e.getMessage.contains("duplicate key"))
+    assert(e.getMessage.contains("Duplicate key \"i: 1\" violates primary key constraint."))
     assert(sql("SELECT count(*) FROM cp_in").head.getLong(0) == 3)
   }
 
@@ -106,7 +106,7 @@ class CopySpec extends AnyFunSuite {
     // the UNIQUE constraint rides along
     val e = intercept[Exception](graft.functions.Dml.execute(spark,
       "INSERT INTO cpdb_b.cp_items VALUES (1, 'dup')"))
-    assert(e.getMessage.contains("duplicate key"))
+    assert(e.getMessage.contains("Duplicate key \"id: 1\" violates unique constraint."))
     // self-copy and read-only targets reject
     assert(intercept[Exception](
       Copy.execute(spark, "COPY FROM DATABASE cpdb_a TO cpdb_a"))

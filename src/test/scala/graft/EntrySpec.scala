@@ -88,6 +88,23 @@ class EntrySpec extends AnyFunSuite {
       s"outside SqlText.scala: ${found.filter(_._1 != "SqlText.scala")}")
   }
 
+  // Constraint probes are written once, in graft.functions.Constraints:
+  // one aggregate answers NOT NULL, CHECK and in-relation UNIQUE, and one
+  // GROUP BY names a repeated key. A private probe elsewhere (a per-column
+  // `IS NULL LIMIT 1`, another duplicate-key GROUP BY) fails here.
+  test("constraint probes are written only in Constraints") {
+    val probe = """(?i)HAVING\s+count\(\*\)\s*>\s*1|IS\s+NULL\s+LIMIT\s+1""".r
+    val found = Seq("functions", "engine").flatMap { d =>
+      val dir = new java.io.File(s"src/main/scala/graft/$d")
+      assert(dir.isDirectory, dir.getAbsolutePath)
+      dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        probe.findAllMatchIn(text).map(m => f.getName -> m.matched)
+      }
+    }
+    assert(found.map(_._1) == Seq("Constraints.scala"), found)
+  }
+
   // Each AudioSystem/MidiSystem call scans the classpath for sound
   // providers under a JVM-wide lock; once per row, that was about half of
   // the multimodal feature query. Multimodal resolves its WAV writer and

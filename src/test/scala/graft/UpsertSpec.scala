@@ -77,7 +77,7 @@ class UpsertSpec extends AnyFunSuite {
       .contains("PRIMARY KEY or UNIQUE constraint violation: duplicate key"))
     dml("INSERT INTO ups_pk VALUES (1, 2, 3), (1, 4, 5)")
     assert(err("INSERT INTO ups_pk VALUES (1, 2, 9)")
-      .contains("duplicate key"))
+      .contains("Duplicate key \"a: 1, b: 2\" violates primary key constraint."))
     assert(err("INSERT INTO ups_pk VALUES (NULL, 2, 9)")
       .contains("NOT NULL constraint failed"))
     assert(rows("SELECT count(*) FROM ups_pk") == Seq(Seq(2L)))
@@ -88,7 +88,8 @@ class UpsertSpec extends AnyFunSuite {
     dml("INSERT INTO ups_uq VALUES (3, 2), (1, 3)")
     dml("INSERT INTO ups_uq VALUES (NULL, 5)")
     dml("INSERT INTO ups_uq VALUES (NULL, 6)") // NULL never conflicts
-    assert(err("INSERT INTO ups_uq VALUES (3, 9)").contains("duplicate key"))
+    assert(err("INSERT INTO ups_uq VALUES (3, 9)")
+      .contains("Duplicate key \"a: 3\" violates unique constraint."))
     assert(rows("SELECT count(*) FROM ups_uq") == Seq(Seq(4L)))
   }
 
