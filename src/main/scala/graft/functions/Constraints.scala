@@ -65,8 +65,9 @@ object Constraints {
       foreignKeys: Seq[ForeignKey] = Nil)
 
   /** Children referencing `parentTable` via a FOREIGN KEY, as
-    * (child resolved name, constraints, the FK). Self-references are
-    * excluded (a self-FK never blocks its own table's drop). */
+    * (child resolved name, constraints, the FK), in the order the children
+    * were first registered. Self-references are excluded (a self-FK never
+    * blocks its own table's drop). */
   def childrenOf(spark: SparkSession, parentTable: String)
       : Seq[(String, TableConstraints, ForeignKey)] = {
     val target = resolvedName(spark, parentTable)
@@ -81,9 +82,12 @@ object Constraints {
   }
 
   // session-scoped registry (same WeakHashMap+UUID keying discipline as
-  // graft.functions.Sequences — see the rationale there)
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, TableConstraints]()
+  // graft.functions.Sequences — see the rationale there), iterated in
+  // first-registration order so that a blocked DROP names the
+  // first-created child, as the reference does (a hash map's order would
+  // follow the random per-session key prefix)
+  private val registry = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, TableConstraints]())
   private val sessionIds =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * count/boundary job and the window job (observed ~200-row drift on a
   * 10k-row parquet scan), silently mis-assigning carry state. Instead the
   * chunk id is a pure EXPRESSION of the row: one deterministic
-  * approxQuantile pass derives equi-depth cut points, and a codegen'd fold
-  * over the literal cut array assigns `chunk = #cuts <= orderCol`. Every
+  * approxQuantile pass derives equi-depth cut points, and a binary search
+  * over the literal cuts assigns `chunk = #cuts <= orderCol`. Every
   * re-execution of the plan then sees the identical row→chunk mapping, so
   * the cheap metadata jobs (per-chunk counts / boundary payloads) agree
   * with the window pass by construction. The order column must be numeric
@@ -32,16 +32,27 @@ object ChunkedWindow {
   /** Deterministic equi-depth chunk id for `orderCol`: (expr, chunkCount).
     * Cuts collapse under heavy duplication; the id count degrades
     * gracefully (1 chunk = the plain single-task shape, still exact).
+    *
+    * The id is a CASE tree that binary-searches the sorted cuts (depth
+    * log2 of the cut count; a NULL key lands in chunk 0), not a
+    * higher-order function over a cut array: Catalyst canonicalizes a
+    * lambda's variables to small expression ids and checks an inferred
+    * constraint's references on that canonical form, so when the order
+    * column's own id was one of them, the `_chunk` join key's constraint
+    * lost the column and landed as a filter on the carry side, which has
+    * no such column (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in a task).
     */
   private def chunkExpr(df: DataFrame, orderCol: String, n: Int): (Column, Int) = {
     val cuts = Banding.cuts(df, orderCol, n, 0.001)
-    val e =
-      if (cuts.isEmpty) lit(0)
-      else aggregate(
-        array(cuts.map(lit(_)).toSeq: _*),
-        lit(0),
-        (acc, cut) => acc + when(col(orderCol).cast("double") >= cut, 1).otherwise(0))
-    (e, cuts.length + 1)
+    val key = col(orderCol).cast("double")
+    // #cuts <= key, known to lie in [lo, hi]
+    def count(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi) / 2
+        when(key >= cuts(mid), count(mid + 1, hi)).otherwise(count(lo, mid))
+      }
+    (count(0, cuts.length), cuts.length + 1)
   }
 
   /** Append the window columns produced by `build` (from a WindowSpec whose

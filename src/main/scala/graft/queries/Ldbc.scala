@@ -793,7 +793,9 @@ object Ldbc extends Pack {
         col("l_personid") === col("p_personid"))
       .join(broadcast(zl), col("p_personid") === col("zl_id"), "left")
       .select(col("m_creatorid"), col("l_personid"), col("zl_id"))
-    broadcast(zombies)
+    // zombies is the preserved side of this LEFT join, which Spark
+    // cannot broadcast: no hint here
+    zombies
       .join(likesToMsgs, col("zombieid") === col("m_creatorid"), "left")
       .groupBy(col("zombieid").as("zombie_id"))
       .agg(count(col("zl_id")).as("zombieLikeCount"),

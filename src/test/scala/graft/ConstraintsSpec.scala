@@ -125,6 +125,26 @@ class ConstraintsSpec extends AnyFunSuite {
     assert(rows("SELECT k, u FROM cv_oc ORDER BY k") == Seq(Seq(1, 10), Seq(2, 12)))
   }
 
+  test("a blocked DROP names the first-registered child in every session") {
+    import Constraints.{ForeignKey, TableConstraints, UniqueSet}
+    def child(name: String) = TableConstraints(name, Nil, Nil, Nil,
+      foreignKeys = Seq(ForeignKey(Seq("r"), "default.fk_par", Seq("r"))))
+    // registry keys start with a random per-session id, so fresh sessions
+    // place the same names differently in a hash map
+    for (_ <- 1 to 8; kids <- Seq(Seq("fk_a", "fk_b"), Seq("fk_b", "fk_a"))) {
+      val s = spark.newSession()
+      try {
+        Constraints.register(s, TableConstraints("fk_par", Nil, Nil,
+          Seq(UniqueSet(Seq("r"), isPk = true))))
+        kids.foreach(k => Constraints.register(s, child(k)))
+        assert(Constraints.childrenOf(s, "fk_par").map(_._1) == kids.map("default." + _))
+        val msg = intercept[IllegalArgumentException](
+          Constraints.rejectDropIfParent(s, "fk_par")).getMessage
+        assert(msg.endsWith(s"""main key table of the table "${kids.head}""""), msg)
+      } finally Constraints.clear(s)
+    }
+  }
+
   test("a clean verification of a primary-key table runs one aggregate") {
     fresh("cv_jobs", "k BIGINT PRIMARY KEY, v DOUBLE")
     exec("INSERT INTO cv_jobs SELECT id, id * 0.5 FROM range(2000)")

@@ -252,6 +252,41 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("chunked carries plan and run whatever expression id the order column has") {
+    import org.apache.spark.sql.expressions.Window
+    // Catalyst canonicalizes a lambda's variables to small expression ids,
+    // and constraint inference checks references on that canonical form: a
+    // chunk id written as a higher-order function over an order column
+    // whose own id was one of them lost the column from its references, and
+    // the inferred chunk predicate landed on the carry side, which has no
+    // such column (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in a task)
+    val rows = (1 to 60).map(i => Seq(i.toLong, (i % 3).toLong, (i * 7 % 11).toLong))
+    def longs(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect()
+        .map(r => cols.indices.map(i => Option(r.get(i)))).toSet
+    for (id <- 0L to 8L) {
+      // the repartition keeps the optimizer from folding the chunk id into
+      // the local rows
+      val df = org.apache.spark.sql.graft.PinnedIds
+        .longs(spark, id, Seq("k", "g", "v"), rows).repartition(2)
+      val before = Window.partitionBy("g").orderBy("k")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val summed = graft.operators.ChunkedWindow
+        .keyedRunningSum(df, Seq("g"), "k", col("v"), "s", chunks = 4)
+      assert(longs(summed, "k", "s") == longs(
+        df.withColumn("s", coalesce(sum("v").over(before), lit(0L))), "k", "s"), s"id $id")
+      val w = Window.orderBy("k")
+      val carried = graft.operators.ChunkedWindow
+        .unboundedCarry(df, "k", when(col("v") > 5, col("v")), "b", "f", chunks = 4)
+      val expected = df
+        .withColumn("b", last(when(col("v") > 5, col("v")), ignoreNulls = true)
+          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        .withColumn("f", first(when(col("v") > 5, col("v")), ignoreNulls = true)
+          .over(w.rowsBetween(0, Window.unboundedFollowing)))
+      assert(longs(carried, "k", "b", "f") == longs(expected, "k", "b", "f"), s"id $id")
+    }
+  }
+
   test("unbounded carry keeps struct payloads row-atomic") {
     import spark.implicits._
     // two value columns that are null on DIFFERENT rows: carrying them as
